@@ -129,12 +129,14 @@ object Bench {
         graft.ivf.VectorTopK.Options(nprobe = 16))
       .toDF()
     def sq8SearchK100() = graft.ivf.VectorTopK
-      .searchQuantized(spark, path, "embedding", query, 100,
-        graft.ivf.VectorTopK.Options(nprobe = 16), oversample = 4)
+      .search(spark, path, "embedding", query, 100,
+        graft.ivf.VectorTopK.Options(
+          nprobe = 16, tier = graft.ivf.VectorTopK.Tier.Sq8, oversample = Some(4)))
       .toDF()
     def pqSearchK100() = graft.ivf.VectorTopK
-      .searchPq(spark, path, "embedding", query, 100,
-        graft.ivf.VectorTopK.Options(nprobe = 16), oversample = 4)
+      .search(spark, path, "embedding", query, 100,
+        graft.ivf.VectorTopK.Options(
+          nprobe = 16, tier = graft.ivf.VectorTopK.Tier.Pq(), oversample = Some(4)))
       .toDF()
     // MRL operating point: coarse rank on the leading 16 of 64 dims
     // (vq26 gates exactness at covering oversample; this times os=4)

@@ -307,24 +307,21 @@ object Queries {
        |  ORDER BY list_cosine_similarity(embedding::FLOAT[], $duckVecLit) DESC LIMIT 10)
        |ORDER BY vec_id""".stripMargin
 
-  /** Programmatic twin of vq8: `VectorTopK.indexedCosine` (angular probe +
-    * winner-first payload fetch) at exhaustive probe — exact, so it shares
-    * vq8's DuckDB cosine oracle.
-    */
-  /** Programmatic angular quantized twins ([[VectorTopK
-    * .indexedQuantizedCosine]] / [[VectorTopK.indexedPqCosine]]): the API
-    * forms of the vq20/vq21 SQL tiers, exhaustive probe + covering
-    * oversample ⇒ exact, sharing vq8's oracle.
+  /** Programmatic angular quantized twins (`VectorTopK.indexed` with
+    * `metric = Cosine` and `tier = Sq8` / `Pq()`): the API forms of the
+    * vq20/vq21 SQL tiers, exhaustive probe + covering oversample ⇒ exact,
+    * sharing vq8's oracle.
     */
   def vq22QuantizedCosineApi(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/embeddings.parquet"
     val ti = IndexManager.ensure(spark, path, "embedding")
     graft.ivf.Sq8Sidecar.ensure(spark, path, "embedding")
     VectorTopK
-      .indexedQuantizedCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters),
-        oversample = coveringOversample(spark, path, 10))
+        VectorTopK.Options(
+          nprobe = ti.nClusters, metric = VectorTopK.Metric.Cosine,
+          tier = VectorTopK.Tier.Sq8, oversample = Some(coveringOversample(spark, path, 10))))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
@@ -334,21 +331,26 @@ object Queries {
     val ti = IndexManager.ensure(spark, path, "embedding")
     graft.ivf.PqSidecar.ensure(spark, path, "embedding", m = 8)
     VectorTopK
-      .indexedPqCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters),
-        oversample = coveringOversample(spark, path, 10))
+        VectorTopK.Options(
+          nprobe = ti.nClusters, metric = VectorTopK.Metric.Cosine,
+          tier = VectorTopK.Tier.Pq(), oversample = Some(coveringOversample(spark, path, 10))))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
 
+  /** Programmatic twin of vq8: `VectorTopK.indexed` with
+    * `metric = Cosine` (angular probe + winner-first payload fetch) at
+    * exhaustive probe — exact, so it shares vq8's DuckDB cosine oracle.
+    */
   def vq14CosineApi(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/embeddings.parquet"
     val ti = IndexManager.ensure(spark, path, "embedding")
     VectorTopK
-      .indexedCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters))
+        VectorTopK.Options(nprobe = ti.nClusters, metric = VectorTopK.Metric.Cosine))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
@@ -638,8 +640,9 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedQuantized(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(
+          nprobe = ti.nClusters, tier = VectorTopK.Tier.Sq8, oversample = Some(oversample)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }
@@ -659,8 +662,9 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedPq(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(
+          nprobe = ti.nClusters, tier = VectorTopK.Tier.Pq(), oversample = Some(oversample)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }
@@ -678,9 +682,10 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedPq(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample,
-        residual = true)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(
+          nprobe = ti.nClusters, tier = VectorTopK.Tier.Pq(residual = true),
+          oversample = Some(oversample)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }

@@ -118,7 +118,7 @@ object IndexManager {
     }
 
   /** [[cachedPeek]] with ERROR FIDELITY for the must-be-indexed validation
-    * paths (VectorTopK's searchByFiles/quantized/pq feeds): a memoized
+    * paths (VectorTopK's winner feed, every tier): a memoized
     * None re-probes UNCACHED and un-swallowed, so a real IO failure
     * (EACCES on the index dir, a truncated sidecar) surfaces as itself
     * instead of the misleading "no IVF index — build one" (which would

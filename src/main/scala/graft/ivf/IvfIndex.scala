@@ -80,10 +80,6 @@ final case class IvfIndex(
     (0 until nClusters).sortBy(negSims).take(k).toArray
   }
 
-  /** Union of the cosine-probed centroids' inverted lists. */
-  def candidateRowsCosine(query: Array[Float], nprobe: Int): Array[Int] =
-    findClosestCentroidsCosine(query, nprobe).flatMap(invertedLists)
-
   /** Cells that can possibly hold a member within `radius` (true L2) of
     * `query`, by the triangle inequality: every member x of cell i satisfies
     * `d(q, x) >= d(q, c_i) − radius_i`, so a cell with
@@ -131,9 +127,13 @@ final case class IvfIndex(
     * at `nprobe < nClusters`; identical at exhaustive probe).
     */
   def candidateCount(query: Array[Float], nprobe: Int, cosine: Boolean = false): Long =
-    (if (cosine) findClosestCentroidsCosine(query, nprobe)
-     else findClosestCentroids(query, nprobe))
-      .map(invertedLists(_).length.toLong).sum
+    probeCells(query, nprobe, cosine).map(invertedLists(_).length.toLong).sum
+
+  /** The metric's probe order: [[findClosestCentroidsCosine]] when
+    * `cosine`, else [[findClosestCentroids]].
+    */
+  def probeCells(query: Array[Float], nprobe: Int, cosine: Boolean): Array[Int] =
+    if (cosine) findClosestCentroidsCosine(query, nprobe) else findClosestCentroids(query, nprobe)
 
   def numRows: Long = invertedLists.iterator.map(_.length.toLong).sum
 

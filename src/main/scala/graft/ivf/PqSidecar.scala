@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * for O(1) random access, with the table-shared codebook embedded so each
   * sidecar is self-contained.
   *
-  * Storage half of IVF-PQ search ([[VectorTopK.searchPq]]): coarse ranking
-  * reads `m` bytes per candidate and scores them with ADC table lookups;
+  * Storage half of IVF-PQ search ([[VectorTopK.search]] with `tier = Pq`):
+  * coarse ranking reads `m` bytes per candidate and scores them with ADC
+  * table lookups;
   * full-precision floats are touched only for the `k·oversample` refine
   * survivors. At dim=64, m=8 this is a 32× coarse-IO reduction over floats
   * (8× over SQ8).

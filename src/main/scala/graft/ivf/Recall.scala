@@ -85,10 +85,10 @@ object Recall {
     }
 
     val files = IndexManager.listFiles(spark, path)
+    val metric = if (cosine) VectorTopK.Metric.Cosine else VectorTopK.Metric.L2
     val winners = VectorTopK
-      .searchByFiles(
-        spark, files, column, query, VectorTopK.Options(nprobe = nprobe), store,
-        cosine = cosine)
+      .winnerFeed(
+        spark, files, column, query, k, VectorTopK.Options(nprobe, metric = metric), store)
       .orderBy(col("_dist").asc_nulls_last) // cosine feed emits 1 − cos
       .limit(k)
       .select(col("_file"), col("_ri"))
@@ -100,10 +100,8 @@ object Recall {
 
     val q = query.toArray
     val candidates = files.flatMap { f =>
-      scala.util.Try(IndexManager.loadIndex(store, f, column)).toOption.map { idx =>
-        if (cosine) idx.candidateRowsCosine(q, nprobe).length.toLong
-        else idx.candidateRows(q, nprobe).length.toLong
-      }
+      scala.util.Try(IndexManager.loadIndex(store, f, column)).toOption
+        .map(_.candidateCount(q, nprobe, cosine))
     }.sum
     Result(k, nprobe, (exact & approx).size.toDouble / k, candidates)
   }

@@ -13,7 +13,8 @@ import graft.functions.Sq8
   * stored dense in row-ordinal order so candidate codes are O(1) random
   * access (`offset = header + ordinal·dim`).
   *
-  * This is the storage half of IVF-SQ8 search ([[VectorTopK.searchQuantized]]):
+  * This is the storage half of IVF-SQ8 search ([[VectorTopK.search]] with
+  * `tier = Sq8`):
   * the coarse ranking reads `dim` BYTES per candidate instead of `4·dim`
   * (and instead of a row-group-granular parquet read); full-precision
   * floats are touched only for the `k·oversample` refine survivors.

@@ -1,9 +1,10 @@
 package graft.ivf
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{array_distance, float_vector}
+import graft.functions.{array_distance, float_vector, Sq8, VectorKernels}
 
 /** Top-k vector search: brute-force and IVF-index-accelerated paths.
   *
@@ -15,15 +16,15 @@ import graft.functions.{array_distance, float_vector}
   *    `TakeOrderedAndProjectExec`, a per-partition bounded heap + driver
   *    merge, i.e. exactly the reference's heap re-rank, but distributed;
   *  - indexed, no residual filter = TWO-PHASE (the reference's access
-  *    plan): phase 1 probes per-file indexes executor-side and reads only
-  *    the embedding column of candidate row groups (`SelectiveFetch`) to
-  *    rank candidates; phase 2 materializes the k winners eagerly (the
-  *    reference TopkBuilder's shape) and fetches their payload rows from
-  *    ONLY the files that hold them — payload IO is ≤ k files of the
-  *    projected columns, not a table scan. (The SQL rewrite keeps a fully
-  *    LAZY plan, so its phase-2 stays a broadcast semi-join over the
-  *    column-pruned scan — lazy plans cannot prune files they have not
-  *    executed yet.);
+  *    plan): phase 1 is [[winnerFeed]], which probes per-file indexes
+  *    executor-side and ranks candidates reading only the embedding column
+  *    of candidate row groups (`SelectiveFetch`) or the tier's code
+  *    sidecar; phase 2 materializes the k winners eagerly (the reference
+  *    TopkBuilder's shape) and fetches their payload rows from ONLY the
+  *    files that hold them — payload IO is ≤ k files of the projected
+  *    columns, not a table scan. (The SQL rewrite keeps a fully LAZY plan,
+  *    so its phase-2 stays a broadcast semi-join over the column-pruned
+  *    scan — lazy plans cannot prune files they have not executed yet.);
   *  - indexed with a residual filter = one-phase: a semi-join of the scan
   *    against the candidate (file, row ordinal) feed emitted by
   *    `IvfCandidateScanExec` (the reference's per-scan-file
@@ -34,6 +35,11 @@ import graft.functions.{array_distance, float_vector}
   *    fewer than k rows, and the filter must see full candidate rows
   *    BEFORE the top-k, which rules out the winner-first shortcut.
   *
+  * There are two entry points, [[search]] (the reference's `SearchResult`
+  * rows) and [[indexed]] (payload rows); what differs by metric and tier is
+  * carried by [[Options]], and the one piece of code that really differs
+  * per tier is its [[CoarseScorer]].
+  *
   * Scale: the driver only peeks index HEADERS (dim/k, a ~26-byte read per
   * file) for validation and estimates candidate volume from one file;
   * probing — footer reads and posting-list decodes — happens on executors.
@@ -43,17 +49,148 @@ import graft.functions.{array_distance, float_vector}
   */
 object VectorTopK {
 
-  /** Reference defaults: `/root/reference/src/df_vector/options.rs:3-19`. */
-  final case class Options(nprobe: Int = 5, maxCandidates: Option[Int] = None) {
+  /** The distance a top-k ranks by. */
+  sealed trait Metric
+  object Metric {
+    /** True (sqrt'd) L2, ascending. */
+    case object L2 extends Metric
+    /** Cosine similarity, most similar first; feeds and [[SearchResult]]
+      * carry `1 − cos(vec, query)` ascending. Exact at
+      * `nprobe >= nClusters` on any index; below that, recall is best over
+      * indexes built on unit-normalized embeddings (angular and L2 cell
+      * geometry coincide there).
+      */
+    case object Cosine extends Metric
+  }
+
+  /** What ranks the probed candidates before the exact re-rank; `name` is
+    * the `spark.graft.ivf.tier` spelling.
+    */
+  sealed abstract class Tier(val name: String)
+  object Tier {
+    /** Exact distances on selectively read float embeddings; no refine. */
+    case object Float extends Tier("float")
+    /** Integer code-space distances on the int8 [[Sq8Sidecar]] codes,
+      * exact float refine of the `k·oversample` survivors (the IVF-SQ8,
+      * faiss `IndexIVFScalarQuantizer`-style asymptotic: float IO is
+      * `k·oversample` rows regardless of candidate volume).
+      */
+    case object Sq8 extends Tier("sq8")
+    /** ADC on `m`-byte [[PqSidecar]] product codes, exact float refine of
+      * the survivors; `residual` reads the IVF-ADC variant whose codes
+      * quantize `vec − cellCentroid`.
+      */
+    final case class Pq(residual: Boolean = false) extends Tier(if (residual) "pqr" else "pq")
+
+    private val byName: Map[String, Tier] =
+      Seq(Float, Sq8, Pq(), Pq(residual = true)).map(t => t.name -> t).toMap
+
+    /** Resolves a requested tier name (`float|sq8|pq|pqr|auto`) against the
+      * files a query scans, returning the tier and WHY it resolved that way.
+      * Falls back to float when a `maxCandidates` cap is set (the fairness
+      * cap is a float-feed construct) or when ANY file lacks a usable code
+      * sidecar (absent, stale data-file binding, or — residual variant — a
+      * dead centroid epoch). `auto` encodes the MEASURED envelope
+      * (TierIoProbe, BENCHNOTES r10/r11): on a warm local page cache float
+      * selective wins everywhere, so auto only leaves float when the
+      * `storageProfile` is DECLARED cold (remote/bandwidth-capped storage,
+      * where coarse bytes/query rule: pq 44 MB < sq8 74 MB < float 115 MB on
+      * the point-read layout), and then picks the best tier whose sidecars
+      * cover every file (pqr > pq > sq8). Unknown names are refused loudly —
+      * a typo silently running float would defeat the point of asking.
+      *
+      * Every float fallback is logged and its reason returned, so a cold
+      * profile silently running float because no sidecar covers the scan is
+      * visible, not inferred from timings.
+      */
+    private[graft] def resolve(
+        requested: String,
+        storageProfile: String,
+        capped: Boolean,
+        files: Seq[String],
+        column: String,
+        store: IndexStore): (Tier, String) = {
+      import graft.plans.VectorTopKRule.{StorageProfileKey, TierKey}
+      require(
+        byName.contains(requested) || requested == "auto",
+        s"$TierKey must be one of float|sq8|pq|pqr|auto, got '$requested'")
+      def silent(reason: String): (Tier, String) = {
+        val msg = s"requested=$requested resolved=float ($reason)"
+        if (requested != "float") log.info(s"graft tier resolution: $msg")
+        (Float, msg)
+      }
+      if (requested == "float") return silent("exact float feed is the default")
+      if (capped) return silent("maxCandidates fairness cap is a float-feed construct")
+      // every check is a table-level dir-identity memo: repeat plans over an
+      // unchanged table answer in O(1) stats regardless of file count
+      def usable(t: Tier): Boolean = t match {
+        case Pq(residual) =>
+          IndexStore.memoizedTableProbe(
+            s"table-pq-usable-$residual", column, files, store.dir)(
+            IndexStore.forallFiles(files)(PqSidecar.usable(store, _, column, residual)))
+        case _ =>
+          IndexStore.memoizedTableProbe("table-sq8-usable", column, files, store.dir)(
+            IndexStore.forallFiles(files)(Sq8Sidecar.usable(store, _, column)))
+      }
+      def resolved(t: Tier): (Tier, String) = (t, s"requested=$requested resolved=${t.name}")
+      if (requested != "auto") {
+        val tier = byName(requested)
+        if (usable(tier)) resolved(tier)
+        else silent(
+          s"requested ${tier.name} sidecar absent/stale on some of ${files.size} scan files")
+      } else {
+        val profile = storageProfile.trim.toLowerCase
+        require(
+          Set("warm", "cold").contains(profile),
+          s"$StorageProfileKey must be warm|cold, got '$profile'")
+        if (profile != "cold")
+          silent(s"profile=$profile — warm storage prefers float selective reads")
+        else
+          Seq(Pq(residual = true), Pq(), Sq8).find(usable).map(resolved).getOrElse(silent(
+            s"profile=cold but no usable quantized sidecar covers all ${files.size} " +
+              "scan files — build PqSidecar/Sq8Sidecar (or check binding staleness)"))
+      }
+    }
+  }
+
+  /** The search spec. Reference defaults for `nprobe` / `maxCandidates`:
+    * `/root/reference/src/df_vector/options.rs:3-19`. `oversample` is the
+    * quantized tiers' refine width (`k·oversample` survivors are re-ranked
+    * exactly); unset, it is 4 for sq8 and 8 for pq/pqr. Exact when
+    * `nprobe >= nClusters` and `k·oversample` covers the candidate volume;
+    * otherwise approximate, with recall governed by (nprobe, oversample,
+    * code fit). The `maxCandidates` fairness cap needs the float tier.
+    */
+  final case class Options(
+      nprobe: Int = 5,
+      maxCandidates: Option[Int] = None,
+      metric: Metric = Metric.L2,
+      tier: Tier = Tier.Float,
+      oversample: Option[Int] = None) {
     require(nprobe > 0, "nprobe must be > 0")
     maxCandidates.foreach(m => require(m > 0, "max_candidates must be > 0"))
+    oversample.foreach(o => require(o >= 1, "oversample must be >= 1"))
+    require(
+      maxCandidates.isEmpty || tier == Tier.Float,
+      s"maxCandidates fairness cap is a float-feed construct — tier ${tier.name} " +
+        "cannot honor it")
+
+    private[ivf] def cosine: Boolean = metric == Metric.Cosine
+
+    /** Quantized survivor count `k·oversample`, clamped to an Int. */
+    private[ivf] def keep(k: Int): Int = {
+      val os = oversample.getOrElse(if (tier == Tier.Sq8) 4 else 8)
+      math.min(k.toLong * os, Int.MaxValue.toLong).toInt
+    }
   }
 
   /** Programmatic search row, the reference's `SearchResult`
     * (`/root/reference/src/ivf/search.rs:40-45`): file-local row ordinal +
-    * true (sqrt'd) L2 distance.
+    * distance in the query's metric (true sqrt'd L2, or 1 − cos).
     */
   final case class SearchResult(row_idx: Long, distance: Float)
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def distanceCol(column: String, query: Seq[Float]): Column =
     array_distance(col(column), float_vector(query))
@@ -93,8 +230,57 @@ object VectorTopK {
     perFile.zipWithIndex.map { case ((file, _), i) => (file, out(i).result().toArray) }
   }
 
-  /** Candidate-pruned scan with `_file`/`_ri` metadata columns retained —
-    * the plan-integrated (semi-join) fetch behind [[indexed]].
+  /** Rank order of the query's metric over payload rows: an angular winner
+    * set ordered by L2 would hand callers the wrong head row on
+    * non-unit-norm data (the SQL path never hits this — its own Sort stays
+    * above the rewritten leaf).
+    */
+  private def rankOrder(column: String, query: Seq[Float], metric: Metric): Column =
+    metric match {
+      case Metric.L2 => distanceCol(column, query).asc_nulls_last
+      case Metric.Cosine =>
+        graft.functions.array_cosine_similarity(col(column), float_vector(query)).desc_nulls_last
+    }
+
+  private def tableFiles(spark: SparkSession, path: String): Seq[String] = {
+    val files = IndexManager.listFiles(spark, path)
+    require(files.nonEmpty, s"no parquet files under $path")
+    files
+  }
+
+  /** One task per slice of files, at most the default parallelism. */
+  private def overFiles[T: scala.reflect.ClassTag](
+      spark: SparkSession, items: Seq[T]): RDD[T] = {
+    val sc = spark.sparkContext
+    sc.parallelize(items, math.max(1, math.min(items.size, sc.defaultParallelism)))
+  }
+
+  /** Driver-side validation, header peeks only (O(files) tiny reads —
+    * posting lists are probed executor-side): every file has an index of
+    * the query's dim and a sidecar the scorer can read. Table-level
+    * dir-identity memo: repeat calls over an unchanged table validate in
+    * O(1) stats (IndexStore.memoizedTableProbe); a throwing validation is
+    * never cached, so error paths re-check every time.
+    */
+  private def validate(
+      files: Seq[String],
+      column: String,
+      q: Array[Float],
+      store: IndexStore,
+      scorer: CoarseScorer = FloatScorer): Unit =
+    IndexStore.memoizedTableProbe(
+      s"validate-${scorer.tag}-${q.length}", column, files, store.dir) {
+      files.foreach { file =>
+        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
+          .getOrElse(throw new IllegalStateException(
+            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
+        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
+        scorer.requireSidecar(store, file, column)
+      }
+    }
+
+  /** Candidate-pruned scan — the plan-integrated (semi-join) fetch behind
+    * the filtered [[indexed]].
     */
   private def candidateScan(
       spark: SparkSession,
@@ -104,56 +290,17 @@ object VectorTopK {
       options: Options,
       store: IndexStore): DataFrame = {
     val base = spark.read.parquet(path)
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
+    val files = tableFiles(spark, path)
     val q = query.toArray
-
-    // driver-side validation is header-peek only (O(files) tiny reads);
-    // posting lists are probed executor-side by IvfCandidateScanExec
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(
-          dim == q.length,
-          s"query dim ${q.length} != index dim $dim for $file")
-      }
-    }
-    val est = estimateCandidates(store, files, column, q, options)
-
+    validate(files, column, q, store)
     graft.Graft.installStrategy(spark)
-    val candDf = graft.plans.IvfCandidateScan
-      .df(spark, column, query, options.nprobe, options.maxCandidates,
-        files, store.dir, est)
-      .toDF("_file", "_ri")
-    val estBytes = est * graft.plans.IvfCandidateScan.estRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    // threshold < 0 = auto-broadcast disabled by the user: never force it
-    // (shuffle join instead); 2x safety factor on the one-file estimate
-    val candSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf
-
+    val candSide = graft.plans.IvfCandidateScan.feed(
+      spark, column, q, options.nprobe, options.maxCandidates, files, store, options.cosine)
     base
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_ri", col("_metadata.row_index"))
-      .join(candSide, Seq("_file", "_ri"), "left_semi")
-  }
-
-  /** One full index load (the first file) scaled by file count — an O(1)
-    * driver estimate feeding broadcast-vs-shuffle selection.
-    */
-  private def estimateCandidates(
-      store: IndexStore,
-      files: Seq[String],
-      column: String,
-      q: Array[Float],
-      options: Options): Long = {
-    val first = scala.util.Try(IndexManager.loadIndex(store, files.head, column)).toOption
-    val perFile = first.map(_.candidateCount(q, options.nprobe)).getOrElse(0L)
-    val total = perFile * files.size
-    options.maxCandidates.fold(total)(c => math.min(c.toLong, total))
+      .withColumn("__file", col("_metadata.file_path"))
+      .withColumn("__ri", col("_metadata.row_index"))
+      .join(candSide, Seq("__file", "__ri"), "left_semi")
+      .drop("__file", "__ri")
   }
 
   /** Wrap in the fetch-metering node (`embeddings_fetched` /
@@ -204,38 +351,9 @@ object VectorTopK {
       .drop("_file", "_ri")
   }
 
-  /** Shared eager phase-2: rank the winner feed, keep k, fetch their
-    * payload rows from only their files, re-rank exactly.
-    */
-  private def winnersThenFetch(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      winnerFeed: DataFrame,
-      cosine: Boolean = false): DataFrame = {
-    val winners = winnerFeed
-      .orderBy(col("_dist").asc_nulls_last)
-      .limit(k)
-      .select(col("_file"), col("_ri"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val fetched = fetchWinnersPayload(spark, path, winners)
-    // final re-rank must use the QUERY's metric: an angular winner set
-    // ordered by L2 would hand callers the wrong head row on
-    // non-unit-norm data (the SQL path never hits this — its own Sort
-    // stays above the rewritten leaf)
-    val ordering =
-      if (cosine)
-        graft.functions
-          .array_cosine_similarity(col(column), graft.functions.float_vector(query))
-          .desc_nulls_last
-      else distanceCol(column, query).asc_nulls_last
-    meterFetch(spark, fetched).orderBy(ordering).limit(k)
-  }
-
-  /** Index-accelerated top-k over a Parquet table.
+  /** Index-accelerated top-k over a Parquet table: full payload rows of the
+    * k nearest vectors, ordered by the query's metric (cosine similarity
+    * DESCENDING for [[Metric.Cosine]]).
     *
     * Filter-free queries run phase 1 EAGERLY (the reference TopkBuilder's
     * shape): the k winners are materialized at call time so the payload
@@ -249,7 +367,8 @@ object VectorTopK {
     * which keeps the lazy semi-join shape.
     *
     * @param filter residual predicate applied AFTER candidate pruning
-    *               (post-filter semantics, like the reference).
+    *               (post-filter semantics, like the reference); needs the
+    *               float tier, which hands the filter every candidate row.
     */
   def indexed(
       spark: SparkSession,
@@ -261,36 +380,41 @@ object VectorTopK {
       filter: Option[Column] = None,
       store: IndexStore = IndexStore.default): DataFrame = {
     require(k > 0, "k must be > 0")
+    val ordering = rankOrder(column, query, options.metric)
     filter match {
       case Some(residual) =>
+        require(
+          options.tier == Tier.Float,
+          s"a residual filter must see every candidate row before the top-k, so it " +
+            s"runs the exact float feed — tier ${options.tier.name} would cap the rows it sees")
         // post-filter semantics: the residual prunes candidates BEFORE the
         // top-k, so full candidate rows must be fetched — one-phase plan
         val scan = candidateScan(spark, path, column, query, options, store)
-          .drop("_file", "_ri")
-        bruteForce(meterFetch(spark, scan.where(residual)), column, query, k)
+        meterFetch(spark, scan.where(residual)).orderBy(ordering).limit(k)
       case None =>
-        // two-phase (the reference's access plan): phase 1 ranks candidates
-        // reading ONLY the embedding column of candidate row groups
-        // (SelectiveFetch — IO proportional to candidates); phase 2 fetches
-        // full payload rows for just the k winners from ONLY their files.
-        winnersThenFetch(
-          spark, path, column, query, k,
-          searchByFile(spark, path, column, query, options, store))
+        // two-phase: rank the winner feed, keep k, fetch their payload rows
+        // from only their files, re-rank exactly
+        val winners = winnerFeed(spark, tableFiles(spark, path), column, query, k, options, store)
+          .orderBy(col("_dist").asc_nulls_last)
+          .limit(k)
+          .select(col("_file"), col("_ri"))
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+        meterFetch(spark, fetchWinnersPayload(spark, path, winners)).orderBy(ordering).limit(k)
     }
   }
 
   /** Programmatic search returning the reference's `SearchResult` shape —
-    * (file-local row ordinal, true L2 distance), distance ascending
+    * (file-local row ordinal, distance), distance ascending
     * (`/root/reference/src/ivf/search.rs:129-141`; the reference sqrt's the
-    * squared-L2 heap key before returning, as `array_distance` does).
+    * squared-L2 heap key before returning, as `array_distance` does; under
+    * [[Metric.Cosine]] `distance` is `1 − cos`, most similar first).
     *
-    * This is the reference's Rust-API pipeline end to end, distributed:
-    * each executor task probes its files' indexes and SELECTIVELY reads
-    * only the embedding column of only the row groups holding candidates
-    * ([[SelectiveFetch]]) — IO proportional to candidates, not file size —
-    * then `orderBy(distance).limit(k)` bounded-heap merges across files.
-    * For multi-file tables `row_idx` is file-local, like the reference's
-    * per-file API; use [[indexed]] when full rows are needed.
+    * This is the reference's Rust-API pipeline end to end, distributed
+    * ([[winnerFeed]]) and then `orderBy(distance).limit(k)` bounded-heap
+    * merges across files. For multi-file tables `row_idx` is file-local,
+    * like the reference's per-file API; use [[indexed]] when full rows are
+    * needed.
     */
   def search(
       spark: SparkSession,
@@ -302,155 +426,78 @@ object VectorTopK {
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     require(k > 0, "k must be > 0")
     import spark.implicits._
-    searchByFile(spark, path, column, query, options, store)
+    winnerFeed(spark, tableFiles(spark, path), column, query, k, options, store)
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
       .orderBy(col("distance").asc_nulls_last)
       .limit(k)
       .as[SearchResult]
   }
 
-  /** Programmatic ANGULAR search — the API twin of the SQL path's
-    * `ORDER BY array_cosine_similarity(col, lit) DESC LIMIT k` rewrite:
-    * cells probed by centroid cosine, candidates selectively read, and
-    * `distance` is `1 − cos(vec, query)` ascending (most similar first),
-    * so the [[SearchResult]] shape carries over unchanged. Exact at
-    * `nprobe >= nClusters` on any index; below that, recall is best over
-    * indexes built on unit-normalized embeddings (angular and L2 cell
-    * geometry coincide there).
-    */
-  def searchCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    require(k > 0, "k must be > 0")
-    import spark.implicits._
-    searchByFile(spark, path, column, query, options, store, cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** Plan-integrated angular top-k: full payload rows of the k most
-    * cosine-similar vectors, ordered by cosine similarity DESCENDING —
-    * [[indexed]]'s two-phase shape on the angular winner feed.
-    */
-  def indexedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      store: IndexStore = IndexStore.default): DataFrame = {
-    require(k > 0, "k must be > 0")
-    winnersThenFetch(
-      spark, path, column, query, k,
-      searchByFile(spark, path, column, query, options, store, cosine = true),
-      cosine = true)
-  }
-
-  /** The probe + selective-read pipeline as a lazy DataFrame of
-    * `(_file, _ri, _dist)`: each executor task probes its files' indexes
-    * and reads ONLY the embedding column of only the row groups holding
-    * candidates ([[SelectiveFetch]]) — the shared phase-1 of [[search]]
-    * and the two-phase [[indexed]].
-    */
-  private def searchByFile(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      options: Options,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    searchByFiles(spark, files, column, query, options, store, cosine)
-  }
-
-  /** Files-list form of the phase-1 pipeline — also the winner feed for
-    * [[graft.plans.VectorTopKRule]]'s filter-free SQL rewrite.
+  /** The one top-k pipeline, as a lazy `(_file, _ri, _dist)` feed with
+    * EXACT `_dist` in the query's metric (`1 − cos` for cosine, so one
+    * ascending winner selection serves both metrics) — phase 1 of [[search]]
+    * and [[indexed]], and the winner feed of
+    * [[graft.plans.VectorTopKRule]]:
     *
-    * `cosine = true` switches to the angular metric: cells are probed by
-    * centroid cosine ([[IvfIndex.findClosestCentroidsCosine]]) and `_dist`
-    * is `1 − cos(vec, query)` — ascending-sortable, so the same
-    * `orderBy(_dist).limit(k)` winner selection serves both metrics
-    * (descending cosine ≡ ascending 1 − cos). Exact at
-    * `nprobe >= nClusters` like the L2 path; below that, recall is best
-    * over indexes built on unit-normalized vectors, where angular and L2
-    * cell geometry coincide.
+    *  1. validate — driver-side header peeks plus the tier's sidecar check;
+    *  2. score — each task scores its files' probed candidates with the
+    *     tier's [[CoarseScorer]]. Float reads ONLY the embedding column of
+    *     only the row groups holding candidates ([[SelectiveFetch]]) and is
+    *     done; sq8/pq rank on code sidecars, a per-file bounded heap keeping
+    *     the `k·oversample` best, so no full candidate list leaves a task;
+    *  3. survive — the coarse keys merge through `orderBy(key, file, ri)
+    *     .limit(k·oversample)`, a distributed TakeOrdered;
+    *  4. refine — the survivors regroup per file and only THEIR floats are
+    *     read for the exact distance.
+    *
+    * A `maxCandidates` cap swaps steps 2–3 for the in-plan round-robin cap
+    * ([[cappedCandidates]]) ahead of the same refine.
     */
-  private[graft] def searchByFiles(
+  private[graft] def winnerFeed(
       spark: SparkSession,
       files: Seq[String],
       column: String,
       query: Seq[Float],
+      k: Int,
       options: Options,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
+      store: IndexStore): DataFrame = {
     import spark.implicits._
+    require(k > 0, "k must be > 0")
     require(files.nonEmpty, "no parquet files to search")
-    val q = query.toArray
-    // table-level dir-identity memo: repeat calls over an unchanged table
-    // validate in O(1) stats (IndexStore.memoizedTableProbe); a throwing
-    // validation is never cached, so error paths re-check every time
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-      }
+    val p = Probe(store, column, query.toArray, options.nprobe, options.cosine)
+    val scorer = CoarseScorer(options.tier)
+    validate(files, column, p.q, store, scorer)
+    options.maxCandidates match {
+      case Some(cap) => refine(spark, p, cappedCandidates(spark, files, p, cap))
+      case None =>
+        val keep = options.keep(k)
+        val scored = spark
+          .createDataset(overFiles(spark, files).flatMap(scorer.score(_, p, keep)))
+          .toDF("_file", "_ri", "_key")
+        // float keys are exact float distances widened to Double, so the
+        // narrowing cast is lossless
+        if (options.tier == Tier.Float)
+          scored.select(col("_file"), col("_ri"), col("_key").cast("float").as("_dist"))
+        else
+          refine(spark, p, scored
+            .orderBy(col("_key"), col("_file"), col("_ri"))
+            .limit(keep)
+            .select(col("_file"), col("_ri")))
     }
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val nprobe = options.nprobe
-    val angular = cosine
-    // fairness cap, two-phase like IvfCandidateScanExec
-    val quotas: Option[Map[String, Long]] = options.maxCandidates.map { cap =>
-      val counts = sc.parallelize(files.zipWithIndex, slices)
-        .map { case (f, i) =>
-          val idx = IndexManager.loadIndex(store, f, colName)
-          val probed =
-            if (angular) idx.findClosestCentroidsCosine(q, nprobe)
-            else idx.findClosestCentroids(q, nprobe)
-          (i, probed.map(idx.invertedLists(_).length.toLong).sum)
-        }
-        .collect().sortBy(_._1).map(_._2)
-      files.zip(graft.plans.IvfCandidateScan.roundRobinQuotas(counts, cap.toLong)).toMap
-    }
-    val withQuota = files.map(f => (f, quotas.fold(Long.MaxValue)(_(f))))
-    val results = sc.parallelize(withQuota, slices).flatMap { case (file, quota) =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      require(
-        index.dim == q.length,
-        s"query dim ${q.length} != index dim ${index.dim} for $file")
-      // cap takes the probe-order (centroid-order) prefix, like the
-      // reference's CandidateCursor, then fetch reads ordinal-ascending
-      val cands =
-        if (angular) index.candidateRowsCosine(q, nprobe)
-        else index.candidateRows(q, nprobe)
-      val n = math.min(quota, cands.length.toLong).toInt
-      val capped = java.util.Arrays.copyOfRange(cands, 0, n)
-      SelectiveFetch.embeddings(file, colName, capped).iterator.collect {
-        case (ri, vec) if vec.length == q.length =>
-          val d =
-            if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-            else math.sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-          (file, ri, d)
-      }
-    }
-    spark.createDataset(results).toDF("_file", "_ri", "_dist")
   }
 
-  /** Winner feed with the reference's round-robin `max_candidates` fairness
+  /** Exact refine of `(_file, _ri)` survivors: regroup per file, read only
+    * their floats, emit `(_file, _ri, _dist)`.
+    */
+  private def refine(spark: SparkSession, p: Probe, survivors: DataFrame): DataFrame = {
+    import spark.implicits._
+    survivors.as[(String, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups((file, rows) => p.exactRows(file, rows.map(_._2.toInt).toArray.sorted))
+      .toDF("_file", "_ri", "_dist")
+  }
+
+  /** Candidates under the reference's round-robin `max_candidates` fairness
     * cap, computed entirely INSIDE the plan — no job at construction time,
     * which is what lets [[graft.plans.VectorTopKRule]] keep the two-phase
     * winner-first shape under a cap (a rule must not run Spark jobs at
@@ -463,8 +510,7 @@ object VectorTopK {
     * order, exactly the water-fill + remainder state
     * ([[graft.plans.IvfCandidateScan.roundRobinQuotas]]). Each task emits
     * its files' candidates tagged with position; `orderBy(pos, fileIdx)
-    * .limit(cap)` plans as a distributed TakeOrdered bounded by `cap`;
-    * the survivors regroup per file for the selective embedding fetch.
+    * .limit(cap)` plans as a distributed TakeOrdered bounded by `cap`.
     *
     * The limit funnels `cap` rows through one partition — fine for what
     * the cap IS (a small-result fairness knob, like the reference's
@@ -474,60 +520,25 @@ object VectorTopK {
     */
   private[graft] val CapFunnelWarnRows = 1000000
 
-  private[graft] def cappedWinnersByFiles(
-      spark: SparkSession,
-      files: Seq[String],
-      column: String,
-      query: Seq[Float],
-      nprobe: Int,
-      cap: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
+  private def cappedCandidates(
+      spark: SparkSession, files: Seq[String], p: Probe, cap: Int): DataFrame = {
     import spark.implicits._
-    require(files.nonEmpty, "no parquet files to search")
-    require(cap >= 0, s"maxCandidates must be >= 0, got $cap")
     if (cap > CapFunnelWarnRows) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      log.warn(
         s"maxCandidates=$cap funnels the cap-prefix through a single " +
           s"partition (fairness-cap semantics); caps past ~$CapFunnelWarnRows " +
           "rows approximate no cap — consider dropping maxCandidates to use " +
           "the uncapped winner feed instead")
     }
-    val q = query.toArray
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val np = nprobe
-    val angular = cosine
-    val positioned = sc.parallelize(files.zipWithIndex, slices).flatMap {
-      case (file, fi) =>
-        val index = IndexManager.loadIndex(store, file, colName)
-        require(
-          index.dim == q.length,
-          s"query dim ${q.length} != index dim ${index.dim} for $file")
-        val cands =
-          if (angular) index.candidateRowsCosine(q, np) else index.candidateRows(q, np)
-        Iterator.tabulate(cands.length)(p => (file, fi, p, cands(p)))
+    val positioned = overFiles(spark, files.zipWithIndex).flatMap { case (file, fi) =>
+      val cands = p.candidates(p.index(file))
+      Iterator.tabulate(cands.length)(pos => (file, fi, pos, cands(pos).toLong))
     }
-    val capped = spark.createDataset(positioned)
+    spark.createDataset(positioned)
       .toDF("_file", "_fi", "_pos", "_ri")
       .orderBy(col("_pos"), col("_fi"))
       .limit(cap)
       .select(col("_file"), col("_ri"))
-    capped.as[(String, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (file, rows) =>
-        val ordinals = rows.map(_._2).toArray.sorted
-        SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
-        }
-      }
-      .toDF("_file", "_ri", "_dist")
   }
 
   /** Brute `(_file, _ri, _dist)` over the whole table in ONE vectorized
@@ -552,7 +563,7 @@ object VectorTopK {
         if (vec != null && vec.length == q.length)
           Iterator.single(
             (f, ri,
-              math.sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat))
+              math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat))
         else Iterator.empty
       }
       .toDF("_file", "_ri", "_dist")
@@ -579,26 +590,12 @@ object VectorTopK {
       store: IndexStore): DataFrame = {
     import spark.implicits._
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
+    val files = tableFiles(spark, path)
     val q = query.toArray
-    // table-level dir-identity memo: repeat calls over an unchanged table
-    // validate in O(1) stats (IndexStore.memoizedTableProbe); a throwing
-    // validation is never cached, so error paths re-check every time
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-      }
-    }
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
+    validate(files, column, q, store)
     val colName = column
     val r = radius
-    val results = sc.parallelize(files, slices).flatMap { file =>
+    val results = overFiles(spark, files).flatMap { file =>
       val index = IndexManager.loadIndex(store, file, colName)
       val radii = IndexManager.validRadii(store, file, colName, index)
       val cells = index.rangeProbeCells(q, r, radii)
@@ -607,7 +604,7 @@ object VectorTopK {
       SelectiveFetch.embeddings(file, colName, cands).iterator.flatMap {
         case (ri, vec) if vec.length == q.length =>
           val d = math
-            .sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble)
+            .sqrt(VectorKernels.squaredL2(vec, q).toDouble)
             .toFloat
           if (d < r) Iterator.single((file, ri, d)) else Iterator.empty
         case _ => Iterator.empty
@@ -634,11 +631,9 @@ object VectorTopK {
     require(files.nonEmpty, "no parquet files to search")
     require(radius >= 0, s"radius must be >= 0, got $radius")
     val q = query.toArray
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
     val colName = column
     val r = radius
-    val results = sc.parallelize(files, slices).flatMap { file =>
+    val results = overFiles(spark, files).flatMap { file =>
       val index = IndexManager.loadIndex(store, file, colName)
       val radii = IndexManager.validRadii(store, file, colName, index)
       index.rangeProbeCells(q, r, radii).iterator.flatMap { c =>
@@ -727,8 +722,7 @@ object VectorTopK {
       radius: Float,
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     import spark.implicits._
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
+    val files = tableFiles(spark, path)
     val (_, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
     val winners =
       if (bail) {
@@ -762,11 +756,9 @@ object VectorTopK {
       query: Seq[Float],
       radius: Float,
       store: IndexStore = IndexStore.default): DataFrame = {
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
+    val files = tableFiles(spark, path)
     val (est, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
     if (bail) {
-      import graft.functions.{array_distance, float_vector}
       return spark.read.parquet(path)
         .where(array_distance(col(column), float_vector(query)) < lit(radius))
     }
@@ -774,10 +766,7 @@ object VectorTopK {
       .select(col("_file"), col("_ri"))
     // stats-driven broadcast like candidateScan: even below the bailout a
     // broad radius can make the key set too large to broadcast safely
-    val estBytes = est * graft.plans.IvfCandidateScan.estRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val winnerSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(winners) else winners
+    val winnerSide = graft.plans.IvfCandidateScan.broadcastIfSmall(spark, winners, est, files)
     val fetched = spark.read.parquet(path)
       .withColumn("_file", col("_metadata.file_path"))
       .withColumn("_ri", col("_metadata.row_index"))
@@ -786,224 +775,145 @@ object VectorTopK {
     meterFetch(spark, fetched)
   }
 
-  /** IVF-SQ8 phase 1+2 as a lazy `(_file, _ri, _dist)` feed of the
-    * `k·oversample` refine survivors with EXACT distances:
-    *
-    *  1. coarse — each executor task probes its files' indexes and ranks
-    *     candidates by integer code-space L2 read from the [[Sq8Sidecar]]
-    *     (`dim` bytes per candidate, point reads; a per-file bounded heap
-    *     keeps `k·oversample`, so no full candidate list leaves a task);
-    *  2. refine — the surviving (file, ordinal) pairs regroup per file and
-    *     only THEIR full-precision floats are read ([[SelectiveFetch]]).
-    *
-    * Float IO is `k·oversample` rows regardless of candidate volume — the
-    * IVF-SQ8 (faiss `IndexIVFScalarQuantizer`-style) asymptotic.
+  /** Everything a task needs to probe and exactly score one file for one
+    * query.
     */
-  private def quantizedWinners(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame =
-    quantizedWinnersByFiles(
-      spark, IndexManager.listFiles(spark, path), column, query, k, options,
-      oversample, store, cosine)
-
-  /** File-list form of the SQ8 winner feed — the SQL rewrite rule calls this
-    * directly with the scan's (already enumerated) file set when
-    * `spark.graft.ivf.tier=sq8`.
-    */
-  private[graft] def quantizedWinnersByFiles(
-      spark: SparkSession,
-      files: Seq[String],
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(k > 0, "k must be > 0")
-    require(oversample >= 1, "oversample must be >= 1")
-    require(files.nonEmpty, "no parquet files to search")
-    val q = query.toArray
-    IndexStore.memoizedTableProbe(
-      s"validate-sq8-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-        require(
-          Sq8Sidecar.usable(store, file, column),
-          s"no usable SQ8 sidecar for file $file column '$column' (absent, stale " +
-            "binding, or damaged) — build one with Sq8Sidecar.ensure")
-      }
+  private final case class Probe(
+      store: IndexStore, column: String, q: Array[Float], nprobe: Int, cosine: Boolean) {
+    def index(file: String): IvfIndex = {
+      val index = IndexManager.loadIndex(store, file, column)
+      require(
+        index.dim == q.length,
+        s"query dim ${q.length} != index dim ${index.dim} for $file")
+      index
     }
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val nprobe = options.nprobe
-    val angular = cosine
-    val qCodes = graft.functions.Sq8.encode(q)
-    val keep = math.min(k.toLong * oversample, Int.MaxValue.toLong).toInt
 
-    val coarse = sc.parallelize(files, slices).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      // candidateRows concatenates per-cell posting lists — not globally
-      // ascending at nprobe > 1. readRows requires ascending ordinals (its
-      // bounds check and run-coalescing depend on it), and the heap below is
-      // order-independent, so sorting here is free of semantic effect.
-      val cands =
-        if (angular) index.candidateRowsCosine(q, nprobe)
-        else index.candidateRows(q, nprobe)
+    /** Probed cells in the metric's probe order (centroid cosine for
+      * cosine — at `nprobe >= nClusters` both orders cover every row).
+      */
+    def cells(index: IvfIndex): Array[Int] = index.probeCells(q, nprobe, cosine)
+
+    /** Probed cells' posting lists concatenated in probe order. */
+    def candidates(index: IvfIndex): Array[Int] = cells(index).flatMap(index.invertedLists)
+
+    /** The exact distance kernel: true L2, or `1 − cos`. */
+    def exact(vec: Array[Float]): Float =
+      if (cosine) 1.0f - VectorKernels.cosine(vec, q)
+      else math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat
+
+    /** Exact `(file, ordinal, distance)` of `ordinals`, read selectively;
+      * vectors of another dim are skipped.
+      */
+    def exactRows(file: String, ordinals: Array[Int]): Iterator[(String, Long, Float)] =
+      SelectiveFetch.embeddings(file, column, ordinals).iterator.collect {
+        case (ri, vec) if vec.length == q.length => (file, ri, exact(vec))
+      }
+  }
+
+  /** The one stage of the top-k pipeline that differs per [[Tier]]: how ONE
+    * file's probed candidates are scored. A scorer owns its loop over the
+    * file's candidates, so the hot loops stay monomorphic.
+    */
+  private sealed trait CoarseScorer extends Serializable {
+    /** Memo-key tag of the driver-side validation. */
+    def tag: String
+
+    /** Refuses a file whose sidecar this tier cannot read. */
+    def requireSidecar(store: IndexStore, file: String, column: String): Unit
+
+    /** `(file, ordinal, key)` rows of one file, ascending key = better:
+      * the exact distance (float), or the `keep` best coarse keys.
+      */
+    def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)]
+  }
+
+  private object CoarseScorer {
+    def apply(tier: Tier): CoarseScorer = tier match {
+      case Tier.Float => FloatScorer
+      case Tier.Sq8 => Sq8Scorer
+      case Tier.Pq(residual) => PqScorer(residual)
+    }
+  }
+
+  /** Exact distances on selectively read embeddings — IO proportional to
+    * candidates, not file size.
+    */
+  private case object FloatScorer extends CoarseScorer {
+    val tag = "float"
+    def requireSidecar(store: IndexStore, file: String, column: String): Unit = ()
+    def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)] =
+      SelectiveFetch.embeddings(file, p.column, p.candidates(p.index(file))).iterator.collect {
+        case (ri, vec) if vec.length == p.q.length => (file, ri, p.exact(vec).toDouble)
+      }
+  }
+
+  /** Integer code-space distance on the [[Sq8Sidecar]] (`dim` bytes per
+    * candidate, point reads). L2 keys are integer `distanceSq` values
+    * (exact in a Double far below 2^53); angular keys are the code-grid
+    * 1 − cos — coarse either way, the refine restores the exact metric.
+    */
+  private case object Sq8Scorer extends CoarseScorer {
+    val tag = "sq8"
+    def requireSidecar(store: IndexStore, file: String, column: String): Unit =
+      require(
+        Sq8Sidecar.usable(store, file, column),
+        s"no usable SQ8 sidecar for file $file column '$column' (absent, stale " +
+          "binding, or damaged) — build one with Sq8Sidecar.ensure")
+    def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)] = {
+      // readRows requires ascending ordinals (its bounds check and
+      // run-coalescing depend on it); the heap is order-independent
+      val cands = p.candidates(p.index(file))
       java.util.Arrays.sort(cands)
-      val codes = Sq8Sidecar.readRows(store.codesPath(file, colName), cands)
-      // bounded max-heap of the keep smallest (idist, ri) — deterministic
-      // tie-break on ordinal, like coarseTopK's id tie-break. L2 keys are
-      // integer distanceSq values (exact in a Double far below 2^53);
-      // angular keys are the code-grid 1 − cos — coarse either way, the
-      // float refine below restores the exact metric.
-      val heap = new java.util.PriorityQueue[(Double, Int)](
-        math.max(1, math.min(keep, cands.length)),
-        (a: (Double, Int), b: (Double, Int)) => {
-          val c = java.lang.Double.compare(b._1, a._1)
-          if (c != 0) c else Integer.compare(b._2, a._2)
-        })
+      val codes = Sq8Sidecar.readRows(p.store.codesPath(file, p.column), cands)
+      val qCodes = Sq8.encode(p.q)
+      val heap = new BoundedHeap(keep, cands.length)
       var i = 0
       while (i < cands.length) {
         if (codes(i).length == qCodes.length) {
-          val d =
-            if (angular) graft.functions.Sq8.angularDist(qCodes, codes(i))
-            else graft.functions.Sq8.distanceSq(qCodes, codes(i)).toDouble
-          if (heap.size < keep) heap.add((d, cands(i)))
-          else {
-            val worst = heap.peek()
-            if (d < worst._1 || (d == worst._1 && cands(i) < worst._2)) {
-              heap.poll(); heap.add((d, cands(i)))
-            }
-          }
+          heap.push(
+            if (p.cosine) Sq8.angularDist(qCodes, codes(i))
+            else Sq8.distanceSq(qCodes, codes(i)).toDouble,
+            cands(i))
         }
         i += 1
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Long, Double)](heap.size)
-      while (!heap.isEmpty) {
-        val (d, ri) = heap.poll()
-        out += ((file, ri.toLong, d))
-      }
-      out.iterator
+      heap.rows(file)
     }
-    val survivors = spark.createDataset(coarse).toDF("_file", "_ri", "_idist")
-      .orderBy(col("_idist"), col("_file"), col("_ri"))
-      .limit(keep)
-      .as[(String, Long, Double)]
-
-    // refine: re-group survivors per file, selectively read ONLY their
-    // floats, emit exact distances in the query's metric (1 − cos for
-    // angular, like the float winner feed)
-    val refined = survivors
-      .groupByKey(_._1)
-      .flatMapGroups { (file, rows) =>
-        val ordinals = rows.map(_._2.toInt).toArray.sorted
-        SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
-        }
-      }
-    refined.toDF("_file", "_ri", "_dist")
   }
 
-  /** IVF-PQ phase 1+2 as a lazy `(_file, _ri, _dist)` feed — the PQ twin of
-    * [[quantizedWinners]]: coarse ranks candidates by ADC (one `m × ksub`
-    * exact query-to-centroid table per task, then `m` byte lookups per
-    * candidate — coarse IO is `m` bytes/candidate, 32× under floats at
-    * m = dim/8), exact float refine of the `k·oversample` survivors.
+  /** ADC on the [[PqSidecar]]'s `m`-byte product codes: one `m × ksub`
+    * exact query-to-centroid table per file (per probed cell for the
+    * residual variant), then `m` byte lookups per candidate — coarse IO is
+    * `m` bytes/candidate, 32× under floats at m = dim/8.
     */
-  private def pqWinners(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      residual: Boolean,
-      cosine: Boolean = false): DataFrame =
-    pqWinnersByFiles(
-      spark, IndexManager.listFiles(spark, path), column, query, k, options,
-      oversample, store, residual, cosine)
+  private final case class PqScorer(residual: Boolean) extends CoarseScorer {
+    def tag: String = s"pq-$residual"
+    def requireSidecar(store: IndexStore, file: String, column: String): Unit =
+      // existsPq (not usable()): a PRESENT sidecar from a dead centroid
+      // epoch must reach the reader's specific stale-epoch refusal
+      // (rebuilt via ensure), not a generic absent message
+      require(
+        store.existsPq(file, column, residual),
+        s"no ${if (residual) "residual " else ""}PQ sidecar for file $file column " +
+          s"'$column' — build one with PqSidecar.build")
 
-  /** File-list form of the PQ/ADC winner feed — the SQL rewrite rule calls
-    * this directly when `spark.graft.ivf.tier=pq` (or `pqr`).
-    */
-  private[graft] def pqWinnersByFiles(
-      spark: SparkSession,
-      files: Seq[String],
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      residual: Boolean,
-      cosine: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(k > 0, "k must be > 0")
-    require(oversample >= 1, "oversample must be >= 1")
-    require(files.nonEmpty, "no parquet files to search")
-    val q = query.toArray
-    IndexStore.memoizedTableProbe(
-      s"validate-pq-$residual-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-        // existsPq (not usable()): a PRESENT sidecar from a dead centroid
-        // epoch must reach the reader's specific stale-epoch refusal
-        // (rebuilt via ensure), not a generic absent message
-        require(
-          store.existsPq(file, column, residual),
-          s"no ${if (residual) "residual " else ""}PQ sidecar for file $file column " +
-            s"'$column' — build one with PqSidecar.build")
-      }
-    }
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val nprobe = options.nprobe
-    val keep = math.min(k.toLong * oversample, Int.MaxValue.toLong).toInt
-    val wantResidual = residual
-    val angular = cosine
-    val qNorm = math.sqrt(graft.functions.VectorKernels.dot(q, q).toDouble)
-
-    val coarse = sc.parallelize(files, slices).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      val sidecar = store.pqPath(file, colName, wantResidual)
+    def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)] = {
+      val q = p.q
+      val index = p.index(file)
       // open-once reader: the residual branch reads per probed cell, so
       // reopening per cell would be nprobe redundant opens per task; the
       // codebook comes from the process-wide digest-keyed LRU, so a
       // multi-file table decodes it once per JVM and every other file
       // costs a 36-byte header read
-      val reader = new PqSidecar.Reader(sidecar)
+      val reader = new PqSidecar.Reader(p.store.pqPath(file, p.column, residual))
       val header = reader.header
       require(
-        header.residual == wantResidual,
+        header.residual == residual,
         s"PQ sidecar variant mismatch for $file (flags=${header.flags})")
       // refuse-don't-guess: residual codes quantize vec − cellCentroid, so a
       // retrain that moved the centroids makes them garbage under the new
       // ADC tables — a digest mismatch is a hard error, never a recall drop
-      if (wantResidual) require(
+      if (residual) require(
         header.centroidDigest == index.centroidDigest,
         s"stale residual PQ sidecar for $file: codes were encoded under " +
           s"centroid epoch ${header.centroidDigest} but the index is now " +
@@ -1013,23 +923,9 @@ object VectorTopK {
       require(
         cb.dim == q.length,
         s"query dim ${q.length} != PQ codebook dim ${cb.dim} for $file")
-      // bounded max-heap of the keep smallest (adc, ri); deterministic
-      // ordinal tie-break like the SQ8 path
-      val heap = new java.util.PriorityQueue[(Float, Int)](
-        math.max(1, keep),
-        (a: (Float, Int), b: (Float, Int)) => {
-          val c = java.lang.Float.compare(b._1, a._1)
-          if (c != 0) c else Integer.compare(b._2, a._2)
-        })
-      def push(d: Float, ri: Int): Unit = {
-        if (heap.size < keep) heap.add((d, ri))
-        else {
-          val worst = heap.peek()
-          if (d < worst._1 || (d == worst._1 && ri < worst._2)) {
-            heap.poll(); heap.add((d, ri)): Unit
-          }
-        }
-      }
+      val cells = p.cells(index)
+      val heap = new BoundedHeap(keep, cells.iterator.map(index.invertedLists(_).length).sum)
+      val qNorm = math.sqrt(VectorKernels.dot(q, q).toDouble)
       // code-space 1 − cos from per-(subspace, entry) tables: dot(q, x̂) and
       // ‖x̂‖² are EXACT sums over the code (subspaces partition coordinates),
       // so the only approximation is x̂ itself — coarse ranking, the float
@@ -1038,28 +934,25 @@ object VectorTopK {
         if (qNorm == 0.0 || normSq <= 0.0) 2.0f
         else (1.0 - dot / (qNorm * math.sqrt(normSq))).toFloat
       try {
-        if (header.residual) {
+        if (residual) {
           // IVF-ADC: codes quantize vec − cellCentroid, so the ADC table is
           // per probed cell, built from query − cellCentroid (exact identity
           // ‖q − x‖² = ‖(q − c) − (x − c)‖² — no approximation added); each
           // posting list is ascending, so the per-cell read still coalesces
           val dim = index.dim
-          val normT = if (angular) Pq.normTable(cb) else null
-          val dotT = if (angular) Pq.dotTable(q, cb) else null
-          val cells =
-            if (angular) index.findClosestCentroidsCosine(q, nprobe)
-            else index.findClosestCentroids(q, nprobe)
+          val normT = if (p.cosine) Pq.normTable(cb) else null
+          val dotT = if (p.cosine) Pq.dotTable(q, cb) else null
           cells.foreach { cell =>
             val ords = index.invertedLists(cell)
             if (ords.nonEmpty) {
               val codes = reader.rows(ords)
               val cent = java.util.Arrays
                 .copyOfRange(index.centroids, cell * dim, (cell + 1) * dim)
-              if (angular) {
+              if (p.cosine) {
                 // x̂ = cell + r̂: dot(q, x̂) = dot(q, cell) + Σ dotT[code];
                 // ‖x̂‖² = ‖cell‖² + 2·Σ crossT[code] + Σ normT[code]
-                val qDotCell = graft.functions.VectorKernels.dot(q, cent).toDouble
-                val cellNormSq = graft.functions.VectorKernels.dot(cent, cent).toDouble
+                val qDotCell = VectorKernels.dot(q, cent).toDouble
+                val cellNormSq = VectorKernels.dot(cent, cent).toDouble
                 val crossT = Pq.dotTable(cent, cb)
                 var i = 0
                 while (i < ords.length) {
@@ -1067,241 +960,76 @@ object VectorTopK {
                   val n2 = cellNormSq +
                     2.0 * Pq.adcDistanceSq(crossT, codes(i), cb.ksub) +
                     Pq.adcDistanceSq(normT, codes(i), cb.ksub)
-                  push(angularKey(dot, n2), ords(i))
+                  heap.push(angularKey(dot, n2), ords(i))
                   i += 1
                 }
               } else {
                 val table = Pq.adcTable(Pq.residual(q, cent), cb)
                 var i = 0
                 while (i < ords.length) {
-                  push(Pq.adcDistanceSq(table, codes(i), cb.ksub), ords(i))
+                  heap.push(Pq.adcDistanceSq(table, codes(i), cb.ksub), ords(i))
                   i += 1
                 }
               }
             }
           }
         } else {
-          val cands =
-            if (angular) index.candidateRowsCosine(q, nprobe)
-            else index.candidateRows(q, nprobe)
+          val cands = cells.flatMap(index.invertedLists)
           java.util.Arrays.sort(cands)
           val codes = reader.rows(cands)
-          if (angular) {
+          if (p.cosine) {
             val dotT = Pq.dotTable(q, cb)
             val normT = Pq.normTable(cb)
             var i = 0
             while (i < cands.length) {
               val dot = Pq.adcDistanceSq(dotT, codes(i), cb.ksub).toDouble
               val n2 = Pq.adcDistanceSq(normT, codes(i), cb.ksub).toDouble
-              push(angularKey(dot, n2), cands(i))
+              heap.push(angularKey(dot, n2), cands(i))
               i += 1
             }
           } else {
             val table = Pq.adcTable(q, cb)
             var i = 0
             while (i < cands.length) {
-              push(Pq.adcDistanceSq(table, codes(i), cb.ksub), cands(i))
+              heap.push(Pq.adcDistanceSq(table, codes(i), cb.ksub), cands(i))
               i += 1
             }
           }
         }
       } finally reader.close()
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Long, Float)](heap.size)
+      heap.rows(file)
+    }
+  }
+
+  /** Bounded max-heap of one file's `keep` smallest `(key, ordinal)` pairs;
+    * ties break on ordinal, like coarseTopK's id tie-break, so survivor
+    * selection is deterministic. Float keys widen to Double losslessly, so
+    * the order matches a Float heap's.
+    */
+  private final class BoundedHeap(keep: Int, candidates: Int) {
+    private val heap = new java.util.PriorityQueue[(Double, Int)](
+      math.max(1, math.min(keep, candidates)),
+      (a: (Double, Int), b: (Double, Int)) => {
+        val c = java.lang.Double.compare(b._1, a._1)
+        if (c != 0) c else Integer.compare(b._2, a._2)
+      })
+
+    def push(d: Double, ri: Int): Unit =
+      if (heap.size < keep) heap.add((d, ri))
+      else {
+        val worst = heap.peek()
+        if (d < worst._1 || (d == worst._1 && ri < worst._2)) {
+          heap.poll(); heap.add((d, ri)): Unit
+        }
+      }
+
+    def rows(file: String): Iterator[(String, Long, Double)] = {
+      val out = new scala.collection.mutable.ArrayBuffer[(String, Long, Double)](heap.size)
       while (!heap.isEmpty) {
         val (d, ri) = heap.poll()
         out += ((file, ri.toLong, d))
       }
       out.iterator
     }
-    val survivors = spark.createDataset(coarse).toDF("_file", "_ri", "_adc")
-      .orderBy(col("_adc"), col("_file"), col("_ri"))
-      .limit(keep)
-      .as[(String, Long, Float)]
-
-    val refined = survivors
-      .groupByKey(_._1)
-      .flatMapGroups { (file, rows) =>
-        val ordinals = rows.map(_._2.toInt).toArray.sorted
-        SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
-        }
-      }
-    refined.toDF("_file", "_ri", "_dist")
-  }
-
-  /** IVF-PQ programmatic search ([[SearchResult]] shape): ADC candidate
-    * ranking on `m`-byte product codes, exact float re-rank of the
-    * `k·oversample` survivors. Exact when `nprobe >= nClusters` AND
-    * `k·oversample` covers the candidate volume (every candidate survives
-    * coarse, refine is exact float space — ADC quality then only affects
-    * which EXTRA rows ride along); otherwise approximate with recall
-    * governed by (nprobe, oversample, codebook fit).
-    */
-  def searchPq(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): Dataset[SearchResult] = {
-    import spark.implicits._
-    pqWinners(spark, path, column, query, k, options, oversample, store, residual)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** IVF-PQ plan-integrated top-k: PQ winners → k-row payload broadcast
-    * semi-join (the [[indexedQuantized]] shape with `m`-byte coarse codes).
-    */
-  def indexedPq(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      pqWinners(spark, path, column, query, k, options, oversample, store, residual))
-  }
-
-  /** IVF-SQ8 programmatic search ([[SearchResult]] shape, like [[search]]):
-    * candidate ranking on int8 code sidecars, exact float re-rank of the
-    * `k·oversample` survivors. Exact when `nprobe >= nClusters` AND
-    * `k·oversample` covers the candidate volume; otherwise approximate with
-    * recall governed by (nprobe, oversample).
-    */
-  def searchQuantized(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    import spark.implicits._
-    quantizedWinners(spark, path, column, query, k, options, oversample, store)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** IVF-SQ8 plan-integrated top-k: quantized winners → k-row payload
-    * broadcast semi-join, the two-phase [[indexed]] shape with the coarse
-    * phase reading codes instead of floats.
-    */
-  def indexedQuantized(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      quantizedWinners(spark, path, column, query, k, options, oversample, store))
-  }
-
-  /** Angular twin of [[searchQuantized]] ([[searchCosine]]'s result
-    * convention: `distance` = 1 − cos, ascending): angular cell probe,
-    * code-grid integer dot/norm coarse ranking, exact float 1 − cos
-    * re-rank of the `k·oversample` survivors — the programmatic form of
-    * the SQL tier's vq20 path, same exactness argument.
-    */
-  def searchQuantizedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    import spark.implicits._
-    quantizedWinners(
-      spark, path, column, query, k, options, oversample, store, cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** Angular twin of [[indexedQuantized]]: payload rows of the k most
-    * cosine-similar vectors via the quantized angular winner feed.
-    */
-  def indexedQuantizedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      quantizedWinners(
-        spark, path, column, query, k, options, oversample, store, cosine = true),
-      cosine = true)
-  }
-
-  /** Angular twin of [[searchPq]]: reconstruction-cosine coarse ranking
-    * from per-(subspace, entry) dot/norm(/cross) tables, exact float
-    * 1 − cos re-rank — the programmatic form of the SQL tier's vq21 path.
-    */
-  def searchPqCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): Dataset[SearchResult] = {
-    import spark.implicits._
-    pqWinners(
-      spark, path, column, query, k, options, oversample, store, residual,
-      cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** Angular twin of [[indexedPq]]. */
-  def indexedPqCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      pqWinners(
-        spark, path, column, query, k, options, oversample, store, residual,
-        cosine = true),
-      cosine = true)
   }
 }

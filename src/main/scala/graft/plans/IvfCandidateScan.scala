@@ -7,11 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ivf.{IndexStore, IvfIndex, ParquetFooterIndex}
+import graft.ivf.{IndexManager, IndexStore}
 
 /** Custom plan node for IVF candidate generation — the Spark analog of the
   * reference's `VectorIndexScanExec` (`/root/reference/src/df_vector/
@@ -70,9 +71,56 @@ object IvfCandidateScan {
     Bridge.ofRows(spark, IvfCandidateScan(
       attrs, column, query, nprobe, maxCandidates, files, indexDir, estCandidates, cosine))
 
-  /** Sidecar first, footer-embedded second (same order as the driver peek). */
-  def loadIndex(store: IndexStore, file: String, column: String): IvfIndex =
-    graft.ivf.IndexManager.loadIndex(store, file, column)
+  /** O(1) driver estimate of the candidate volume: the first file's index
+    * probe scaled by the file count, capped by `maxCandidates`. Served by
+    * the decoded-index LRU, since the SQL rule runs it on every
+    * optimization pass of a matching query.
+    */
+  private def estimateCandidates(
+      store: IndexStore,
+      files: Seq[String],
+      column: String,
+      query: Array[Float],
+      nprobe: Int,
+      maxCandidates: Option[Int],
+      cosine: Boolean): Long = {
+    val perFile = scala.util.Try(IndexManager.loadIndex(store, files.head, column)).toOption
+      .map(_.candidateCount(query, nprobe, cosine)).getOrElse(0L)
+    val total = perFile * files.size
+    maxCandidates.fold(total)(c => math.min(c.toLong, total))
+  }
+
+  /** Broadcasts `side` when its estimated size fits under
+    * `spark.sql.autoBroadcastJoinThreshold`, else leaves it to a shuffle
+    * join. A negative threshold means the user DISABLED auto-broadcast —
+    * never force one; the 2x safety factor covers a first-file-scaled
+    * estimate under-counting.
+    */
+  def broadcastIfSmall(
+      spark: SparkSession, side: DataFrame, estRows: Long, files: Seq[String]): DataFrame = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && estRows * estRowBytes(files) * 2 <= threshold) broadcast(side)
+    else side
+  }
+
+  /** The one-phase candidate feed `(__file, __ri)`: the custom scan node,
+    * sized by [[estimateCandidates]] and broadcast when that fits.
+    */
+  def feed(
+      spark: SparkSession,
+      column: String,
+      query: Array[Float],
+      nprobe: Int,
+      maxCandidates: Option[Int],
+      files: Seq[String],
+      store: IndexStore,
+      cosine: Boolean): DataFrame = {
+    val est = estimateCandidates(store, files, column, query, nprobe, maxCandidates, cosine)
+    broadcastIfSmall(
+      spark,
+      df(spark, column, query.toIndexedSeq, nprobe, maxCandidates, files, store.dir, est, cosine),
+      est, files)
+  }
 
   /** Per-file quotas with the reference's round-robin fairness across files
     * (`/root/reference/src/df_vector/access.rs:193-243`), computed from
@@ -149,7 +197,7 @@ final case class IvfCandidateScanExec(
       val counts = sparkContext
         .parallelize(files.zipWithIndex, slices)
         .map { case (f, i) =>
-          (i, IvfCandidateScan.loadIndex(store, f, colName).candidateCount(q, np, cos))
+          (i, IndexManager.loadIndex(store, f, colName).candidateCount(q, np, cos))
         }
         .collect()
         .sortBy(_._1)
@@ -162,7 +210,7 @@ final case class IvfCandidateScanExec(
     sparkContext.parallelize(withQuota, slices).mapPartitions { it =>
       val proj = UnsafeProjection.create(Array[DataType](StringType, LongType))
       it.flatMap { case (file, quota) =>
-        val index = IvfCandidateScan.loadIndex(store, file, colName)
+        val index = IndexManager.loadIndex(store, file, colName)
         require(
           index.dim == q.length,
           s"query dim ${q.length} != index dim ${index.dim} for $file")
@@ -170,8 +218,7 @@ final case class IvfCandidateScanExec(
         val utf8 = UTF8String.fromString(file)
         // angular queries probe by centroid cosine — at nprobe >= nClusters
         // both orders emit every row, which is what the exactness gate uses
-        val cands =
-          if (cos) index.candidateRowsCosine(q, np) else index.candidateRows(q, np)
+        val cands = index.probeCells(q, np, cos).flatMap(index.invertedLists)
         val n = math.min(quota, cands.length.toLong).toInt
         candidateRows.add(n.toLong)
         Iterator.tabulate(n)(j => proj(InternalRow(utf8, cands(j).toLong)).copy())

@@ -14,6 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
 import graft.functions.{ArrayCosineSimilarity, ArrayDistance, ArraySquaredL2}
 import graft.ivf.IndexStore
+import graft.ivf.VectorTopK
+import graft.ivf.VectorTopK.{Metric, Tier}
 
 /** SQL-transparent IVF acceleration: rewrites
   * `ORDER BY array_distance(col, literal-vector) ASC LIMIT k` over a single
@@ -374,216 +376,55 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
             .exists(_._1 == query.length))))
       return None
     val twoPhaseOk = filterFree && conf(TwoPhaseKey, "true") == "true"
-    val candSide = if (twoPhaseOk) {
+    val requested = conf(TierKey, "float").trim.toLowerCase
+    // under a FILTER a tier narrows the row set the residual Filter gets to
+    // see (an approximation knob, not just a coarse-ranking speedup), hence
+    // the explicit FilteredTierKey opt-in
+    val (tier, tierReason) =
+      if (!twoPhaseOk && conf(FilteredTierKey, "false") != "true")
+        (Tier.Float, s"requested=$requested resolved=float " +
+          s"(filtered shape without the $FilteredTierKey opt-in runs the exact float feed)")
+      else Tier.resolve(
+        requested, conf(StorageProfileKey, "warm"), maxCandidates.nonEmpty, files, column, store)
+    val candDf = if (twoPhaseOk || tier != Tier.Float) {
+      // the API's winner feed: exact `_dist` (1 − cos for cosine) of every
+      // probed candidate for float, of the k·oversample coarse-ranked
+      // survivors for a quantized tier; a candidate cap swaps in the
+      // lazily-capped feed (round-robin fairness computed inside the plan —
+      // a rule must not run jobs at optimization time)
+      val options = VectorTopK.Options(
+        nprobe, maxCandidates, if (cosine) Metric.Cosine else Metric.L2, tier,
+        if (tier == Tier.Float) None else spark.conf.getOption(OversampleKey).map(_.toInt))
+      val feed = VectorTopK.winnerFeed(
+        spark, files, column, query.toIndexedSeq, k, options, store)
       // winner-first (two-phase): no Filter sits below the top-k, so the k
-      // phase-1 winners ARE the result set — rank candidates on selective
-      // single-column reads, then fetch payload for k rows only. The feed
-      // is bounded by k, so broadcasting is always safe.
-      // for cosine the feed emits 1 − cos as _dist, so the same ascending
-      // winner selection serves both metrics. A candidate cap swaps in the
-      // lazily-capped phase-1 (round-robin fairness computed inside the
-      // plan — a rule must not run jobs at optimization time)
-      val (feed, tierReason) = tierFeed(files, column, query, k, nprobe, store, cosine)
-      val (phase1, tierUsed) = feed
-        .getOrElse((maxCandidates match {
-          case Some(cap) => graft.ivf.VectorTopK.cappedWinnersByFiles(
-            spark, files, column, query.toIndexedSeq, nprobe, cap, store, cosine)
-          case None => graft.ivf.VectorTopK.searchByFiles(
-            spark, files, column, query.toIndexedSeq,
-            graft.ivf.VectorTopK.Options(nprobe), store, cosine)
-        }, "float"))
-      val winners = phase1
-        .orderBy(col("_dist").asc_nulls_last)
-        .limit(k)
-        .select(col("_file").as("__file"), col("_ri").as("__ri"))
-      (broadcast(winners), tierUsed, tierReason)
-    } else filteredTierFeed(files, column, query, k, nprobe, store, cosine) match {
-      case (Some((phase1, tierUsed)), tierReason) =>
+      // phase-1 winners ARE the result set — fetch payload for k rows only.
       // FILTERED quantized shape (opt-in): the whole k·oversample survivor
-      // feed — coarse-ranked on code sidecars, exact-refined — grafts as
-      // the semi-join side, the untouched Filter re-applies its predicate
-      // to the fetched rows, and the untouched Sort re-ranks them exactly.
-      // Post-FILTER semantics are preserved by construction (every emitted
-      // row passed the original predicate — the reference's composition
-      // seam, `/root/reference/src/df_vector/access.rs:65-105`); what the
-      // tier narrows is the CANDIDATE set handed to the filter: k·oversample
-      // nearest rows instead of every probed-cell member. That is an extra
-      // approximation knob on top of nprobe — if the predicate is selective,
-      // survivors thin and fewer than k rows can come back — which is why
-      // this path requires FilteredTierKey instead of riding TierKey alone;
-      // oversample doubles as the filter-headroom control. Exactness gate:
-      // exhaustive nprobe + covering oversample make the feed ALL candidate
-      // rows, collapsing this to the float one-phase semantics (vq24/vq25).
-      // bounded by k·oversample rows of (file, ordinal) — broadcast-safe
-      (broadcast(phase1.select(col("_file").as("__file"), col("_ri").as("__ri"))),
-        tierUsed, tierReason)
-      case (None, tierReason) =>
+      // feed grafts as the semi-join side, the untouched Filter re-applies
+      // its predicate to the fetched rows, and the untouched Sort re-ranks
+      // them exactly. Post-FILTER semantics are preserved by construction
+      // (every emitted row passed the original predicate — the reference's
+      // composition seam, `/root/reference/src/df_vector/access.rs:65-105`);
+      // what the tier narrows is the CANDIDATE set handed to the filter:
+      // k·oversample nearest rows instead of every probed-cell member, so a
+      // selective predicate can return fewer than k rows — oversample
+      // doubles as the filter-headroom control. Exhaustive nprobe + covering
+      // oversample make the feed ALL candidate rows, collapsing this to the
+      // float one-phase semantics (vq24/vq25). Either way the feed is
+      // bounded by k or k·oversample rows, so broadcasting is safe.
+      val winners = if (twoPhaseOk) feed.orderBy(col("_dist").asc_nulls_last).limit(k) else feed
+      broadcast(winners.select(col("_file").as("__file"), col("_ri").as("__ri")))
+    } else {
       // one-phase candidate feed — for cosine queries (a residual Filter or
       // a candidate cap forced this path) the probe ranks cells by centroid
       // cosine instead of L2, so the angular top-k's candidates are the
       // angular neighborhood; the untouched Sort above re-ranks exactly
-      // first-file index scaled by file count: O(1) estimate for stats and
-      // broadcast-vs-shuffle selection — served by the decoded-index LRU,
-      // since this runs on EVERY optimization pass of a matching query
-      val est = {
-        val perFile = scala.util
-          .Try(graft.ivf.IndexManager.loadIndex(store, files.head, column))
-          .toOption
-          .map(_.candidateCount(query, nprobe, cosine)).getOrElse(0L)
-        maxCandidates.fold(perFile * files.size)(c =>
-          math.min(c.toLong, perFile * files.size))
-      }
-      val candDf = IvfCandidateScan.df(
-        spark, column, query.toIndexedSeq, nprobe, maxCandidates,
-        files, store.dir, est, cosine)
-      val estBytes = est * IvfCandidateScan.estRowBytes(files)
-      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      // threshold < 0 means the user DISABLED auto-broadcast — honor it
-      // (the candidate feed can be huge at high nprobe / no cap); the 2x
-      // safety factor covers the first-file-scaled estimate under-counting
-      // (tier is float here: either none was requested, FilteredTierKey is
-      // unset — the exact default — or a sidecar was unusable and the
-      // quantized filtered shape fell back to the full candidate feed)
-      (if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf,
-        "float", tierReason)
+      IvfCandidateScan.feed(spark, column, query, nprobe, maxCandidates, files, store, cosine)
     }
-    val (candDf, tier, tierReason) = candSide
     val pruned = graftSubtree(leaf, candDf)
     aliasOutput(leaf, pruned).map { p =>
-      cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, tier, tierReason, served)
-      (p, tier, tierReason)
-    }
-  }
-
-  /** [[tierFeed]] gated for the FILTERED (one-phase) shape: engages only
-    * under the explicit `spark.graft.ivf.filteredTier=true` opt-in and
-    * without a candidate cap, because here the tier narrows the row set the
-    * residual Filter gets to see (an approximation knob, not just a coarse-
-    * ranking speedup — see the call site). None = exact float fallback.
-    */
-  private def filteredTierFeed(
-      files: Seq[String],
-      column: String,
-      query: Array[Float],
-      k: Int,
-      nprobe: Int,
-      store: IndexStore,
-      cosine: Boolean): (Option[(org.apache.spark.sql.DataFrame, String)], String) =
-    if (conf(FilteredTierKey, "false") != "true")
-      (None, s"requested=${conf(TierKey, "float").trim.toLowerCase} resolved=float " +
-        s"(filtered shape without the $FilteredTierKey opt-in runs the exact float feed)")
-    else tierFeed(files, column, query, k, nprobe, store, cosine)
-
-  /** The quantized phase-1 winner feed for `spark.graft.ivf.tier` ∈
-    * {sq8, pq, pqr}, or None to use the float feed. Falls back to float
-    * (None) when ANY file lacks a usable code sidecar (absent, stale
-    * data-file binding, or — for the residual variant — a dead centroid
-    * epoch), or when a candidate cap is set (the fairness cap is a
-    * float-feed construct). ANGULAR queries ride every tier: sq8 ranks by
-    * code-grid integer dot/norms, pq/pqr by per-(subspace, entry)
-    * dot/norm/cross tables (`Pq.dotTable`/`normTable` — exact
-    * reconstruction cosine of x̂), all over the angular cell probe with an
-    * exact 1 − cos float refine. Unknown tier names are refused loudly —
-    * a typo silently running float would defeat the point of asking for a
-    * tier.
-    *
-    * The feed's `k·oversample` survivors carry EXACT refined distances, so
-    * the winner selection and the untouched Sort above rank consistently;
-    * the tier governs COARSE ranking IO only (dim bytes/candidate for sq8,
-    * m bytes for pq vs 4·dim for float). Reference seam:
-    * `/root/reference/src/df_vector/physical.rs:134-177` (same guard
-    * matrix, different candidate feed).
-    */
-  private def tierFeed(
-      files: Seq[String],
-      column: String,
-      query: Array[Float],
-      k: Int,
-      nprobe: Int,
-      store: IndexStore,
-      cosine: Boolean): (Option[(org.apache.spark.sql.DataFrame, String)], String) = {
-    val requested = conf(TierKey, "float").trim.toLowerCase
-    require(
-      Set("float", "sq8", "pq", "pqr", "auto").contains(requested),
-      s"$TierKey must be one of float|sq8|pq|pqr|auto, got '$requested'")
-    // every exit records WHY the tier resolved the way it did (the second
-    // tuple slot → TierReasonTag): a cold profile silently running float
-    // because no sidecar covers the scan is a misconfiguration the user
-    // must be able to SEE, not infer from timings (review r11 item #6)
-    def silent(reason: String): (None.type, String) = {
-      val msg = s"requested=$requested resolved=float ($reason)"
-      if (requested != "float") logInfo(s"graft tier resolution: $msg")
-      (None, msg)
-    }
-    if (requested == "float") return silent("exact float feed is the default")
-    if (conf(MaxCandidatesKey, "").toIntOption.nonEmpty)
-      return silent("maxCandidates fairness cap is a float-feed construct")
-    // availability probes open sidecar headers per FILE — memoized per
-    // planning invocation so the auto resolution chain and the dispatch
-    // arms below share one probe per tier instead of re-opening every
-    // sidecar twice (review r11: up to ~3x redundant header IO per plan
-    // on multi-file tables)
-    // outer layer: the table-level dir-identity memo collapses repeat
-    // plans over an unchanged table to O(1) stats regardless of file count
-    // (IndexStore.memoizedTableProbe; the per-file probes beneath are
-    // themselves memoized for the recompute path)
-    val availMemo = scala.collection.mutable.HashMap.empty[String, Boolean]
-    def allPqUsable(residual: Boolean): Boolean =
-      availMemo.getOrElseUpdate(s"pq-$residual",
-        IndexStore.memoizedTableProbe(
-          s"table-pq-usable-$residual", column, files, store.dir)(
-          IndexStore.forallFiles(files)(f =>
-            graft.ivf.PqSidecar.usable(store, f, column, residual))))
-    def allSq8Codes(): Boolean =
-      availMemo.getOrElseUpdate("sq8",
-        IndexStore.memoizedTableProbe(
-          "table-sq8-usable", column, files, store.dir)(
-          IndexStore.forallFiles(files)(graft.ivf.Sq8Sidecar.usable(store, _, column))))
-    val tier =
-      if (requested != "auto") requested
-      else {
-        // auto: encode the MEASURED envelope (TierIoProbe, BENCHNOTES
-        // r10/r11) — on a warm local page cache float selective wins
-        // everywhere, so auto only leaves float when the table is
-        // DECLARED cold (remote/bandwidth-capped storage, where coarse
-        // bytes/query rule: pq 44 MB < sq8 74 MB < float 115 MB on the
-        // point-read layout). Cold-ness is a storage property the engine
-        // can't sniff per query, hence a conf, not a guess; which tiers
-        // are AVAILABLE is sniffed from the sidecar store, best first
-        // (pqr ranks residuals — strictly better codes than pq on
-        // clustered data — then pq, then sq8), falling back to float
-        // when nothing usable covers every scan file.
-        val profile = conf(StorageProfileKey, "warm").trim.toLowerCase
-        require(
-          Set("warm", "cold").contains(profile),
-          s"$StorageProfileKey must be warm|cold, got '$profile'")
-        if (profile != "cold")
-          return silent(s"profile=$profile — warm storage prefers float selective reads")
-        else if (allPqUsable(residual = true)) "pqr"
-        else if (allPqUsable(residual = false)) "pq"
-        else if (allSq8Codes()) "sq8"
-        else return silent(
-          s"profile=cold but no usable quantized sidecar covers all ${files.size} " +
-            "scan files — build PqSidecar/Sq8Sidecar (or check binding staleness)")
-      }
-    val oversample = conf(OversampleKey, if (tier == "sq8") "4" else "8").toInt
-    val opts = graft.ivf.VectorTopK.Options(nprobe)
-    val resolved = s"requested=$requested resolved=$tier"
-    tier match {
-      case "sq8" if allSq8Codes() =>
-        (Some((graft.ivf.VectorTopK.quantizedWinnersByFiles(
-          spark, files, column, query.toIndexedSeq, k, opts, oversample, store,
-          cosine), tier)), resolved)
-      case "pq" | "pqr" =>
-        val residual = tier == "pqr"
-        if (allPqUsable(residual))
-          (Some((graft.ivf.VectorTopK.pqWinnersByFiles(
-            spark, files, column, query.toIndexedSeq, k, opts, oversample, store,
-            residual, cosine), tier)), resolved)
-        else silent(
-          s"requested $tier sidecar absent/stale on some of ${files.size} scan files")
-      case _ => silent(
-        s"requested $tier sidecar absent/stale on some of ${files.size} scan files")
+      cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, tier.name, tierReason, served)
+      (p, tier.name, tierReason)
     }
   }
 
@@ -675,7 +516,7 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
           graft.ivf.IndexManager.cachedPeek(store, file, column)
             .exists(_._1 == query.length))))
       return None
-    val candDf = graft.ivf.VectorTopK
+    val candDf = VectorTopK
       .rangeCandidatesByFiles(spark, files, column, query.toIndexedSeq, radius, store)
       .toDF("__file", "__ri")
     // sampled-files estimate (shared with the API paths) drives (a) the
@@ -684,15 +525,11 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // crossover; measured at sf0.1: a ~10%-selective radius runs 0.2 s
     // brute vs 0.3-0.4 s pruned when pruning keeps most cells, BENCHNOTES
     // round-5) and (b) the broadcast-vs-shuffle choice
-    val (est, totalEst) = graft.ivf.VectorTopK
+    val (est, totalEst) = VectorTopK
       .estimateRangeCandidates(files, column, query, radius, store)
     val maxSelectivity = conf(RangeMaxSelectivityKey, RangeMaxSelectivityDefault).toDouble
     if (totalEst > 0 && est.toDouble / totalEst > maxSelectivity) return None
-    val estBytes = est * IvfCandidateScan.estRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val candSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf
-    val pruned = graftSubtree(leaf, candSide)
+    val pruned = graftSubtree(leaf, IvfCandidateScan.broadcastIfSmall(spark, candDf, est, files))
     aliasOutput(leaf, pruned).map { p =>
       cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, "float", "range", served)
       p

@@ -145,12 +145,14 @@ object ScaleBench {
       def selective() = VectorTopK.search(
         spark, table, "embedding", query, k,
         VectorTopK.Options(nprobe = nprobe), store = store).toDF()
-      def sq8() = VectorTopK.searchQuantized(
+      def sq8() = VectorTopK.search(
         spark, table, "embedding", query, k,
-        VectorTopK.Options(nprobe = nprobe), oversample = 4, store = store).toDF()
-      def pq() = VectorTopK.searchPq(
+        VectorTopK.Options(nprobe, tier = VectorTopK.Tier.Sq8, oversample = Some(4)),
+        store = store).toDF()
+      def pq() = VectorTopK.search(
         spark, table, "embedding", query, k,
-        VectorTopK.Options(nprobe = nprobe), oversample = 4, store = store).toDF()
+        VectorTopK.Options(nprobe, tier = VectorTopK.Tier.Pq(), oversample = Some(4)),
+        store = store).toDF()
       def rangePruned() = VectorTopK.rangeRows(
         spark, table, "embedding", query, radius, store = store)
       def rangeBrute() = spark.read.parquet(table).where(

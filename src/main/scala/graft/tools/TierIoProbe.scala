@@ -117,12 +117,14 @@ object TierIoProbe {
     def selective() = VectorTopK.search(
       spark, clustered, "embedding", query, k,
       VectorTopK.Options(nprobe = nprobe), store = store).toDF()
-    def sq8() = VectorTopK.searchQuantized(
+    def sq8() = VectorTopK.search(
       spark, clustered, "embedding", query, k,
-      VectorTopK.Options(nprobe = nprobe), oversample = 4, store = store).toDF()
-    def pq() = VectorTopK.searchPq(
+      VectorTopK.Options(nprobe, tier = VectorTopK.Tier.Sq8, oversample = Some(4)),
+      store = store).toDF()
+    def pq() = VectorTopK.search(
       spark, clustered, "embedding", query, k,
-      VectorTopK.Options(nprobe = nprobe), oversample = 4, store = store).toDF()
+      VectorTopK.Options(nprobe, tier = VectorTopK.Tier.Pq(), oversample = Some(4)),
+      store = store).toDF()
     val arms: Seq[(String, () => DataFrame)] =
       Seq("float_selective" -> (selective _), "sq8" -> (sq8 _), "pq" -> (pq _))
 

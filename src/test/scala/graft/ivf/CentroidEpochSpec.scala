@@ -32,9 +32,10 @@ class CentroidEpochSpec extends SparkSpec {
   private def exactPq(
       dir: String, store: IndexStore, q: Seq[Float], k: Int, nClusters: Int) =
     VectorTopK
-      .searchPq(spark, dir, "vec", q, k,
-        VectorTopK.Options(nprobe = nClusters),
-        oversample = (300 + k - 1) / k, store = store, residual = true)
+      .search(spark, dir, "vec", q, k,
+        VectorTopK.Options(
+          nprobe = nClusters, tier = VectorTopK.Tier.Pq(residual = true),
+          oversample = Some((300 + k - 1) / k)), store = store)
       .collect()
 
   // row_idx is FILE-LOCAL (the reference SearchResult shape), so the

@@ -33,7 +33,7 @@ class IvfPropertySpec extends SparkSpec {
     lists.map(_.distinct.sorted.toArray).toArray)
 
   test("round-robin cap: the (pos, fileIdx) sorted prefix equals the quota water-fill") {
-    // the lazy in-plan cap (VectorTopK.cappedWinnersByFiles sorts candidates
+    // the lazy in-plan cap (VectorTopK.cappedCandidates sorts candidates
     // by probe-order position then file index and takes the cap-prefix) must
     // select exactly the per-file counts the reference-shaped water-fill
     // (IvfCandidateScan.roundRobinQuotas) hands out — for ANY counts and cap

@@ -150,9 +150,10 @@ class PqSpec extends SparkSpec {
     val q = Seq.fill(dim)(0.5f)
     val k = 10
     val got = VectorTopK
-      .searchPq(spark, dir, "vec", q, k,
-        VectorTopK.Options(nprobe = build.nClusters),
-        oversample = (400 + k - 1) / k, store = store)
+      .search(spark, dir, "vec", q, k,
+        VectorTopK.Options(
+          nprobe = build.nClusters, tier = VectorTopK.Tier.Pq(),
+          oversample = Some((400 + k - 1) / k)), store = store)
       .collect()
     // brute twin through the SAME kernel (the codegen'd expression may
     // differ in the last f32 bit from the unrolled kernel — ordering, not
@@ -192,9 +193,10 @@ class PqSpec extends SparkSpec {
     val k = 10
     // covering oversample → exact, regardless of codebook
     val got = VectorTopK
-      .searchPq(spark, dir, "vec", q, k,
-        VectorTopK.Options(nprobe = build.nClusters),
-        oversample = (400 + k - 1) / k, store = store, residual = true)
+      .search(spark, dir, "vec", q, k,
+        VectorTopK.Options(
+          nprobe = build.nClusters, tier = VectorTopK.Tier.Pq(residual = true),
+          oversample = Some((400 + k - 1) / k)), store = store)
       .collect()
     val brute = rows
       .map { case (_, v) =>
@@ -207,9 +209,10 @@ class PqSpec extends SparkSpec {
     // at least as well as raw ADC on clustered data
     def recallAt(residual: Boolean): Double = {
       val ids = VectorTopK
-        .searchPq(spark, dir, "vec", q, k,
-          VectorTopK.Options(nprobe = build.nClusters),
-          oversample = 2, store = store, residual = residual)
+        .search(spark, dir, "vec", q, k,
+          VectorTopK.Options(
+            nprobe = build.nClusters, tier = VectorTopK.Tier.Pq(residual),
+            oversample = Some(2)), store = store)
         .collect().map(_.row_idx).toSet
       val exact = rows
         .map { case (id, v) => id -> VectorKernels.squaredL2(v.toArray, q.toArray) }
@@ -237,8 +240,10 @@ class PqSpec extends SparkSpec {
     val q = Seq.fill(dim)(0.5f)
     // exhaustive probe isolates the ADC ranking quality from IVF recall
     val approx = VectorTopK
-      .searchPq(spark, dir, "vec", q, 10,
-        VectorTopK.Options(nprobe = build.nClusters), oversample = 4, store = store)
+      .search(spark, dir, "vec", q, 10,
+        VectorTopK.Options(
+          nprobe = build.nClusters, tier = VectorTopK.Tier.Pq(), oversample = Some(4)),
+        store = store)
       .collect().map(_.row_idx).toSet
     val vecsById = rows.map { case (id, v) => id -> v.toArray }.toMap
     val exact = rows

@@ -234,7 +234,8 @@ class VectorTopKSpec extends SparkSpec {
 
     // quantized search without codes fails fast, naming the missing piece
     val noCodes = intercept[IllegalArgumentException] {
-      VectorTopK.searchQuantized(spark, dir, "vec", Seq.fill(8)(0f), 5, store = store)
+      VectorTopK.search(spark, dir, "vec", Seq.fill(8)(0f), 5,
+        VectorTopK.Options(tier = VectorTopK.Tier.Sq8), store = store)
     }
     assert(noCodes.getMessage.contains("SQ8 sidecar"))
 
@@ -251,15 +252,19 @@ class VectorTopKSpec extends SparkSpec {
     // coarse cut prunes nothing and the float re-rank is exact brute force
     val brute = VectorTopK.bruteForce(spark.read.parquet(dir), "vec", query, 10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val exact = VectorTopK.indexedQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 30, store = store)
+    val exact = VectorTopK.indexed(spark, dir, "vec", query, 10,
+      VectorTopK.Options(
+        nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8, oversample = Some(30)),
+      store = store)
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(exact.sorted == brute.sorted)
 
-    // searchQuantized (ordinal, distance) rows equal the float-path search
+    // sq8-tier search (ordinal, distance) rows equal the float-path search
     // exactly — same kernel, same winners at exhaustive probe
-    val sq = VectorTopK.searchQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 30, store = store)
+    val sq = VectorTopK.search(spark, dir, "vec", query, 10,
+      VectorTopK.Options(
+        nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8, oversample = Some(30)),
+      store = store)
       .collect().map(r => (r.row_idx, r.distance)).toSet
     val viaFloats = VectorTopK.search(spark, dir, "vec", query, 10,
       VectorTopK.Options(nprobe = built.nClusters), store = store)
@@ -267,8 +272,9 @@ class VectorTopKSpec extends SparkSpec {
     assert(sq == viaFloats)
 
     // tight oversample stays ANN: k rows out, all from the candidate set
-    val ann = VectorTopK.searchQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = 2), oversample = 1, store = store)
+    val ann = VectorTopK.search(spark, dir, "vec", query, 10,
+      VectorTopK.Options(nprobe = 2, tier = VectorTopK.Tier.Sq8, oversample = Some(1)),
+      store = store)
       .collect()
     assert(ann.length == 10)
 
@@ -291,8 +297,10 @@ class VectorTopKSpec extends SparkSpec {
     }
     val brute4 = VectorTopK.bruteForce(spark.read.parquet(dir), "vec", query, 10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val exact4 = VectorTopK.indexedQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 35, store = store)
+    val exact4 = VectorTopK.indexed(spark, dir, "vec", query, 10,
+      VectorTopK.Options(
+        nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8, oversample = Some(35)),
+      store = store)
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(exact4.sorted == brute4.sorted)
   }
@@ -551,14 +559,16 @@ class VectorTopKSpec extends SparkSpec {
       spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
     val q = Seq(1.0f, 0.0f)
     val got = VectorTopK
-      .indexedCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(nprobe = build.nClusters, metric = VectorTopK.Metric.Cosine),
+        store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(got == Seq(0, 1), s"expected cosine order [0, 1], got $got")
     // and the SearchResult twin agrees (distance = 1 - cos ascending)
     val sr = VectorTopK
-      .searchCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), store = store)
+      .search(spark, path, "vec", q, 2,
+        VectorTopK.Options(nprobe = build.nClusters, metric = VectorTopK.Metric.Cosine),
+        store = store)
       .collect()
     assert(sr.map(_.row_idx).toSeq == Seq(0L, 1L))
     assert(sr(0).distance < sr(1).distance)
@@ -567,15 +577,157 @@ class VectorTopKSpec extends SparkSpec {
     // right winner SET, wrong head row on non-unit-norm data)
     graft.ivf.Sq8Sidecar.ensure(spark, path, "vec", store)
     val gotSq8 = VectorTopK
-      .indexedQuantizedCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), oversample = 4, store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(
+          nprobe = build.nClusters, metric = VectorTopK.Metric.Cosine,
+          tier = VectorTopK.Tier.Sq8, oversample = Some(4)),
+        store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(gotSq8 == Seq(0, 1), s"sq8 twin: expected cosine order [0, 1], got $gotSq8")
     graft.ivf.PqSidecar.ensure(spark, path, "vec", m = 2, store = store)
     val gotPq = VectorTopK
-      .indexedPqCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), oversample = 4, store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(
+          nprobe = build.nClusters, metric = VectorTopK.Metric.Cosine,
+          tier = VectorTopK.Tier.Pq(), oversample = Some(4)),
+        store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(gotPq == Seq(0, 1), s"pq twin: expected cosine order [0, 1], got $gotPq")
+  }
+
+  // ── the tier × metric × output matrix ──────────────────────────────────
+  // Two 1200-row files with fixed names (so their order, and with it every
+  // seeded sample the index and codebook builds take, is stable) and every
+  // sidecar. Ids 0-1199 live in part-0 and 1200-2399 in part-1, so a
+  // search row_idx is `id % 1200`.
+  private val matrixDim = 16
+  private val matrixK = 10
+  private lazy val matrix: (String, IndexStore, Seq[Float]) = {
+    val rnd = new scala.util.Random(2024)
+    val rows = (0 until 2400).map(i =>
+      (i.toLong, Seq.fill(matrixDim)(rnd.nextFloat() * 1.8f - 0.9f)))
+    val dir = Files.createTempDirectory("graft-matrix").toString
+    rows.grouped(1200).zipWithIndex.foreach { case (part, p) =>
+      val tmp = Files.createTempDirectory("graft-matrix-part").toString
+      spark.createDataFrame(part).toDF("id", "vec")
+        .select(col("id"), col("vec").cast("array<float>").as("vec"))
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val written = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.copy(written.toPath, java.nio.file.Paths.get(dir, s"part-$p.parquet"))
+    }
+    val store = tmpStore
+    IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(8)), store)
+    Sq8Sidecar.ensure(spark, dir, "vec", store)
+    PqSidecar.ensure(spark, dir, "vec", m = 4, store = store)
+    PqSidecar.ensure(spark, dir, "vec", m = 4, store = store, residual = true)
+    val qrnd = new scala.util.Random(77)
+    (dir, store, Seq.fill(matrixDim)(qrnd.nextFloat() * 1.2f - 0.6f))
+  }
+
+  /** `(row_idx, distance)` lists at nprobe = 2, oversample = 2, recorded
+    * from the per-tier entry points this pipeline replaced; `indexed` rows
+    * record `id` and the kernel distance of the returned vector.
+    */
+  private lazy val annGolden: Map[(String, String, String), String] = {
+    val src = scala.io.Source.fromResource("graft/ivf/topk-matrix-ann.tsv")
+    try src.getLines().filter(_.nonEmpty).map { line =>
+      val Array(tier, metric, shape, rows) = line.split("\t")
+      (tier, metric, shape) -> rows
+    }.toMap finally src.close()
+  }
+
+  for {
+    (tierName, tier) <- Seq(
+      "float" -> VectorTopK.Tier.Float, "sq8" -> VectorTopK.Tier.Sq8,
+      "pq" -> VectorTopK.Tier.Pq(), "pqr" -> VectorTopK.Tier.Pq(residual = true))
+    (metricName, metric) <- Seq("l2" -> VectorTopK.Metric.L2, "cosine" -> VectorTopK.Metric.Cosine)
+    shape <- Seq("search", "indexed")
+  } test(s"top-k matrix: tier=$tierName metric=$metricName output=$shape") {
+    val (dir, store, q) = matrix
+    val cosine = metric == VectorTopK.Metric.Cosine
+    def kernel(v: Array[Float]): Float =
+      if (cosine) 1.0f - graft.functions.VectorKernels.cosine(v, q.toArray)
+      else math.sqrt(graft.functions.VectorKernels.squaredL2(v, q.toArray).toDouble).toFloat
+    def run(nprobe: Int, oversample: Int): Seq[(Long, Float)] = {
+      val options = VectorTopK.Options(
+        nprobe, metric = metric, tier = tier,
+        oversample = if (tier == VectorTopK.Tier.Float) None else Some(oversample))
+      if (shape == "search")
+        VectorTopK.search(spark, dir, "vec", q, matrixK, options, store)
+          .collect().map(r => (r.row_idx, r.distance)).toSeq
+      else
+        VectorTopK.indexed(spark, dir, "vec", q, matrixK, options, None, store)
+          .select("id", "vec").collect()
+          .map(r => (r.getLong(0), kernel(r.getSeq[Float](1).toArray))).toSeq
+    }
+    // exhaustive probe + covering oversample (k·oversample >= corpus) is
+    // brute force, in the metric's order
+    val table = spark.read.parquet(dir)
+    val brute =
+      if (cosine)
+        table.orderBy(graft.functions.array_cosine_similarity(
+          col("vec"), graft.functions.float_vector(q)).desc_nulls_last).limit(matrixK)
+      else VectorTopK.bruteForce(table, "vec", q, matrixK)
+    val expected = brute.select("id", "vec").collect().map { r =>
+      val id = r.getLong(0)
+      (if (shape == "search") id % 1200 else id, kernel(r.getSeq[Float](1).toArray))
+    }.toSeq
+    assert(run(nprobe = 8, oversample = 2400 / matrixK) == expected)
+    // ANN setting: ties and survivor selection pinned to recorded values
+    val ann = run(nprobe = 2, oversample = 2).map { case (ri, d) => s"$ri:$d" }.mkString(",")
+    assert(ann == annGolden((tierName, metricName, shape)))
+  }
+
+  test("an explicit PQ tier refuses a table without its sidecar") {
+    val path = writeFixture(Seq.tabulate(8)(i => Seq(i.toFloat, 0f)))
+    val store = tmpStore
+    IvfBuilder.build(spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
+    Seq(VectorTopK.Tier.Pq() -> "no PQ sidecar", VectorTopK.Tier.Pq(residual = true) ->
+        "no residual PQ sidecar").foreach { case (tier, msg) =>
+      val e = intercept[IllegalArgumentException] {
+        VectorTopK.search(spark, path, "vec", Seq(0f, 0f), 2,
+          VectorTopK.Options(tier = tier), store)
+      }
+      assert(e.getMessage.contains(msg) && e.getMessage.contains("PqSidecar.build"), e.getMessage)
+    }
+  }
+
+  test("a residual filter composes with the cosine metric") {
+    // for query (1, 0) among ids >= 1: cosine ranks id 1 then the
+    // orthogonal id 2; L2 would rank id 1 then the opposite id 3
+    val path = writeFixture(Seq(
+      Seq(10.0f, 0.0f), Seq(0.9f, 0.1f), Seq(0.0f, 5.0f), Seq(-3.0f, 0.0f)))
+    val store = tmpStore
+    val build = IvfBuilder.build(
+      spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
+    val got = VectorTopK
+      .indexed(spark, path, "vec", Seq(1.0f, 0.0f), 2,
+        VectorTopK.Options(nprobe = build.nClusters, metric = VectorTopK.Metric.Cosine),
+        filter = Some(col("id") >= 1), store = store)
+      .select("id").collect().map(_.getInt(0)).toSeq
+    assert(got == Seq(1, 2), s"expected cosine order [1, 2], got $got")
+  }
+
+  test("a residual filter refuses a non-float tier") {
+    val path = writeFixture(Seq.tabulate(8)(i => Seq(i.toFloat, 0f)))
+    val store = tmpStore
+    IvfBuilder.build(spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
+    Sq8Sidecar.ensure(spark, path, "vec", store)
+    val e = intercept[IllegalArgumentException] {
+      VectorTopK.indexed(spark, path, "vec", Seq(0f, 0f), 2,
+        VectorTopK.Options(tier = VectorTopK.Tier.Sq8), filter = Some(col("id") >= 2),
+        store = store)
+    }
+    assert(e.getMessage.contains("a residual filter must see every candidate row"), e.getMessage)
+  }
+
+  test("maxCandidates refuses a non-float tier") {
+    Seq(VectorTopK.Tier.Sq8, VectorTopK.Tier.Pq(), VectorTopK.Tier.Pq(residual = true))
+      .foreach { tier =>
+        val e = intercept[IllegalArgumentException](
+          VectorTopK.Options(maxCandidates = Some(5), tier = tier))
+        assert(e.getMessage.contains("maxCandidates fairness cap is a float-feed construct"),
+          e.getMessage)
+      }
   }
 }

@@ -42,8 +42,9 @@ class IndexIngestSpec extends SparkSpec {
     assert(files.forall(store.existsRadii(_, "vec")))
     assert(files.forall(store.existsCodes(_, "vec")))
     val sq8Ids = VectorTopK
-      .searchQuantized(spark, tableDir, "vec", Seq.fill(dim)(0.4f), 10,
-        VectorTopK.Options(nprobe = 64), oversample = 24, store = store)
+      .search(spark, tableDir, "vec", Seq.fill(dim)(0.4f), 10,
+        VectorTopK.Options(nprobe = 64, tier = VectorTopK.Tier.Sq8, oversample = Some(24)),
+        store = store)
       .collect()
     assert(sq8Ids.length == 10)
 
