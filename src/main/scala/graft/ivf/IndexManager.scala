@@ -43,11 +43,9 @@ object IndexManager {
   // posting lists (4 bytes per row of the file), so a count bound would
   // let a few million-row files pin gigabytes while a byte budget keeps
   // the worst case explicit (default 256 MiB per JVM)
-  private val MaxDecodedBytes =
-    sys.props.getOrElse("graft.index.cacheBytes", (256L << 20).toString).toLong
-  private def indexBytes(i: IvfIndex): Long =
-    4L * i.centroids.length +
-      i.invertedLists.iterator.map(l => 4L * l.length + 16L).sum
+  private val decoded = new IndexStore.ByteLru[CacheKey, IvfIndex](
+    sys.props.getOrElse("graft.index.cacheBytes", (256L << 20).toString).toLong,
+    (_, i) => 4L * i.centroids.length + i.invertedLists.iterator.map(l => 4L * l.length + 16L).sum)
   // column is part of the key even though a sidecar path already encodes
   // it — a FOOTER-embedded file can hold indexes for several columns under
   // one backing path, and those must not alias. fileKey (inode identity)
@@ -57,16 +55,11 @@ object IndexManager {
   private final case class CacheKey(
       path: String, column: String, fileKey: String, mtime: Long, length: Long,
       dataFileKey: String, dataMtime: Long, dataLength: Long)
-  private val decodedCache =
-    new java.util.LinkedHashMap[CacheKey, IvfIndex](64, 0.75f, true)
-  private var cachedBytes = 0L
-  private val hits = new java.util.concurrent.atomic.AtomicLong
-  private val misses = new java.util.concurrent.atomic.AtomicLong
 
   /** (hits, misses) since JVM start — surfaced so benches/specs can see the
     * cache working; executor-side numbers are per-executor.
     */
-  def decodedCacheStats: (Long, Long) = (hits.get(), misses.get())
+  def decodedCacheStats: (Long, Long) = decoded.stats
 
   /** Identity of the bytes [[loadIndex]] would decode: the sidecar when one
     * exists, else the data file itself (footer-embedded index — in-place
@@ -74,8 +67,7 @@ object IndexManager {
     */
   private def cacheKey(store: IndexStore, file: String, column: String): Option[CacheKey] = {
     val sidecar = java.nio.file.Paths.get(store.indexPath(file, column))
-    val dataPath = java.nio.file.Paths.get(
-      IndexStore.canonicalPath(file).stripPrefix("file:"))
+    val dataPath = java.nio.file.Paths.get(IndexStore.localPath(file))
     val backing =
       if (java.nio.file.Files.exists(sidecar)) sidecar else dataPath
     try {
@@ -106,12 +98,7 @@ object IndexManager {
     */
   def cachedPeek(
       store: IndexStore, file: String, column: String): Option[(Int, Int)] =
-    IndexStore.memoizedProbe(
-      "peek:" + store.dir, file, column,
-      Seq(
-        store.indexPath(file, column),
-        store.indexPath(file, column).stripSuffix(".pqvec") + ".meta",
-        file)) {
+    store.memoized("peek", file, column, IndexStore.Sidecar.Index) {
       scala.util.Try(
         store.peek(file, column).orElse(ParquetFooterIndex.peek(file, column)))
         .toOption.flatten
@@ -144,31 +131,7 @@ object IndexManager {
           s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
     cacheKey(store, file, column) match {
       case None => decode() // unstattable backing file: let decode() report
-      case Some(key) =>
-        val cached = decodedCache.synchronized(decodedCache.get(key))
-        if (cached != null) { hits.incrementAndGet(); cached }
-        else {
-          // decode OUTSIDE the lock: concurrent first-touch of one file may
-          // decode twice, but never serializes unrelated files behind IO
-          val idx = decode()
-          misses.incrementAndGet()
-          decodedCache.synchronized {
-            val old = decodedCache.put(key, idx)
-            if (old != null) cachedBytes -= indexBytes(old)
-            cachedBytes += indexBytes(idx)
-            // evict eldest (LRU order) until under budget; never the entry
-            // just inserted — a single over-budget index still gets served
-            val it = decodedCache.entrySet().iterator()
-            while (cachedBytes > MaxDecodedBytes && it.hasNext) {
-              val e = it.next()
-              if (e.getKey != key) {
-                cachedBytes -= indexBytes(e.getValue)
-                it.remove()
-              }
-            }
-          }
-          idx
-        }
+      case Some(key) => decoded.getOrLoad(key)(decode())
     }
   }
 

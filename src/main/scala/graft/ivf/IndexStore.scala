@@ -1,10 +1,14 @@
 package graft.ivf
 
-import java.io.File
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
+import java.util.concurrent.atomic.AtomicLong
 
-/** Sidecar persistence for per-data-file IVF indexes.
+/** Sidecar persistence for per-data-file IVF indexes and their companions,
+  * and the one copy of their file IO: naming, atomic writes, positioned
+  * reads, the binding check and the probe memo.
   *
   * The reference embeds the index inside the Parquet file footer region
   * (`/root/reference/src/ivf/parquet.rs:536-611`); we support that layout on
@@ -13,14 +17,22 @@ import java.security.MessageDigest
   * use the identical framing (magic + u64 length + payload), so a sidecar is
   * byte-for-byte what the reference would have appended.
   *
-  * Keyed by (data file path, embedding column): `<sha1>.pqvec` + `<sha1>.meta`.
-  * Writes are atomic (temp + rename) so speculative/retried executor tasks
-  * are safe.
+  * Every family is keyed by (data file path, embedding column) as
+  * `<dir>/<sha1>.<ext>`, written atomically (temp + rename, so speculative
+  * or retried executor tasks are safe) and little-endian:
+  *
+  * | ext | layout | binding | read by |
+  * |---|---|---|---|
+  * | `.pqvec` | `PQ_VECTOR1` · payload len u64 · [[IvfIndex]] payload | `.meta` | [[load]], [[peek]], [[centroidDigest]] → [[IndexManager]] |
+  * | `.meta` | JSON `{file, column, dataLen, dataDigest}` | is the stamp | [[bound]] |
+  * | `.sq8` | [[Sq8Sidecar]] header · nRows·dim code bytes | `.meta` | [[CodeReader]] via the sq8 tier of [[VectorTopK]] |
+  * | `.pq`, `.pqr` | [[PqSidecar]] header · codebook · nRows·m code bytes; `.pqr` also centroid-stamped | `.meta` | [[CodeReader]] via the pq tiers of [[VectorTopK]] |
+  * | `.radii` | `GQR2` · centroidDigest i64 · k i32 · f32 × k | `.meta` and centroid digest | [[loadRadii]] → [[IndexManager.validRadii]] |
   *
   * Every sidecar is BOUND to the data file's content: `write` stamps the
   * `.meta` with the data file's (length, footer-region digest), and every
-  * read path (`load`/`peek`/`exists`/`centroidDigest`, the codes and radii
-  * sidecars) refuses when the stamp no longer matches — a data file
+  * read path ([[exists]] and everything built on it) refuses when the stamp
+  * no longer matches — a data file
   * replaced AT THE SAME PATH (hand-swapped, external compaction output
   * copied over an input name) reads as "no index" instead of silently
   * serving the old file's row ordinals. The reference is structurally
@@ -38,6 +50,7 @@ import java.security.MessageDigest
   * them). Any replacement AFTER the write is fully covered.
   */
 final class IndexStore(val dir: String) extends Serializable {
+  import IndexStore._
 
   private def key(dataFile: String, column: String): String = {
     val md = MessageDigest.getInstance("SHA-1")
@@ -47,15 +60,15 @@ final class IndexStore(val dir: String) extends Serializable {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  def indexPath(dataFile: String, column: String): String =
-    s"$dir/${key(dataFile, column)}.pqvec"
+  /** Path of the `sidecar` family's file for (data file, column). */
+  def path(dataFile: String, column: String, sidecar: Sidecar = Sidecar.Index): String =
+    s"$dir/${key(dataFile, column)}.${sidecar.ext}"
+
+  def indexPath(dataFile: String, column: String): String = path(dataFile, column)
 
   def write(dataFile: String, column: String, index: IvfIndex): String = {
-    new File(dir).mkdirs()
-    val target = Paths.get(indexPath(dataFile, column))
-    val tmp = Paths.get(target.toString + s".tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, IvfIndex.frame(index.toBytes))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    val target = indexPath(dataFile, column)
+    writeAtomic(target, IvfIndex.frame(index.toBytes))
     val (len, digest) = IndexStore.dataStamp(dataFile).getOrElse(throw new IllegalStateException(
       s"cannot stat data file $dataFile to bind its index sidecar — refusing to " +
         "write an unbound sidecar (a later file replacement would read as stale ordinals)"))
@@ -64,12 +77,8 @@ final class IndexStore(val dir: String) extends Serializable {
     // atomic like the .pqvec itself: a crash mid-write must leave either
     // the old stamp or the new one, never a truncated .meta a concurrent
     // reader would misparse (it would read as unbound → spurious rebuild)
-    val metaTarget = Paths.get(target.toString.stripSuffix(".pqvec") + ".meta")
-    val metaTmp = Paths.get(metaTarget.toString + s".tmp-${java.util.UUID.randomUUID()}")
-    Files.write(metaTmp, meta.getBytes("UTF-8"))
-    Files.move(metaTmp, metaTarget,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    target.toString
+    writeAtomic(path(dataFile, column, Sidecar.Meta), meta.getBytes("UTF-8"))
+    target
   }
 
   /** True iff the sidecar family for (dataFile, column) is bound to the
@@ -80,7 +89,7 @@ final class IndexStore(val dir: String) extends Serializable {
     * sidecar" rather than risk serving another file's row ordinals.
     */
   def bound(dataFile: String, column: String): Boolean = {
-    val metaPath = Paths.get(indexPath(dataFile, column).stripSuffix(".pqvec") + ".meta")
+    val metaPath = Paths.get(path(dataFile, column, Sidecar.Meta))
     if (!Files.exists(metaPath)) return false
     val meta = try new String(Files.readAllBytes(metaPath), "UTF-8") catch {
       case _: Exception => return false
@@ -92,48 +101,35 @@ final class IndexStore(val dir: String) extends Serializable {
     }
   }
 
-  def load(dataFile: String, column: String): Option[IvfIndex] = {
-    val p = Paths.get(indexPath(dataFile, column))
-    if (Files.exists(p) && bound(dataFile, column))
-      Some(IvfIndex.unframe(Files.readAllBytes(p)))
-    else None
-  }
+  /** The `sidecar` file exists and the family is [[bound]] — the
+    * availability test every reader of every family starts with: the codes
+    * and radii sidecars map rows BY ORDINAL onto the data file, so a stale
+    * stamp hides them all at once.
+    */
+  def exists(dataFile: String, column: String, sidecar: Sidecar = Sidecar.Index): Boolean =
+    Files.exists(Paths.get(path(dataFile, column, sidecar))) && bound(dataFile, column)
+
+  /** The decoded index, None when absent or unbound; a corrupt or
+    * truncated sidecar is refused with a message naming the file.
+    */
+  def load(dataFile: String, column: String): Option[IvfIndex] =
+    if (!exists(dataFile, column)) None
+    else {
+      val p = indexPath(dataFile, column)
+      try Some(IvfIndex.unframe(Files.readAllBytes(Paths.get(p))))
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"${e.getMessage} in $p", e)
+      }
+    }
 
   /** Cheap (dim, nClusters) peek — reads only the framed header, so the
     * driver can validate an arbitrarily large file list without decoding
     * posting lists (those are probed executor-side).
     */
-  def peek(dataFile: String, column: String): Option[(Int, Int)] = {
-    val p = Paths.get(indexPath(dataFile, column))
-    if (!Files.exists(p) || !bound(dataFile, column)) return None
-    val ch = java.nio.channels.FileChannel.open(p)
-    try {
-      val buf = java.nio.ByteBuffer.allocate(IvfIndex.Magic.length + 16)
-      while (buf.hasRemaining && ch.read(buf) >= 0) {}
-      if (buf.hasRemaining) return None
-      buf.flip()
-      val magic = new Array[Byte](IvfIndex.Magic.length)
-      buf.get(magic)
-      if (!magic.sameElements(IvfIndex.Magic)) return None
-      buf.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.getLong // payload length
-      Some((buf.getInt, buf.getInt))
-    } finally ch.close()
-  }
-
-  def exists(dataFile: String, column: String): Boolean =
-    Files.exists(Paths.get(indexPath(dataFile, column))) && bound(dataFile, column)
-
-  /** SQ8 code-sidecar path for (data file, column) — same key scheme as the
-    * index sidecar, `.sq8` extension (see [[Sq8Sidecar]] for the codec).
-    */
-  def codesPath(dataFile: String, column: String): String =
-    s"$dir/${key(dataFile, column)}.sq8"
-
-  // codes/radii sidecars map rows BY ORDINAL onto the data file, so they
-  // share the index sidecar's binding: a stale stamp hides them all at once
-  def existsCodes(dataFile: String, column: String): Boolean =
-    Files.exists(Paths.get(codesPath(dataFile, column))) && bound(dataFile, column)
+  def peek(dataFile: String, column: String): Option[(Int, Int)] =
+    if (!exists(dataFile, column)) None
+    else withChannel(indexPath(dataFile, column))(IvfIndex.readHeader(_, 0L).toOption)
 
   /** Per-cell radius sidecar for (data file, column): cell i's value is the
     * max TRUE L2 distance from centroid i to its members — the triangle-
@@ -144,27 +140,17 @@ final class IndexStore(val dir: String) extends Serializable {
     * header carries the index's [[IvfIndex.centroidDigest]]; a reader that
     * finds a different digest (an index rebuilt out-of-band, e.g. by the
     * reference engine after `ensureRadii`) treats the sidecar as ABSENT —
-    * exact fallback instead of wrong pruning.
-    * Format: magic `GQR2` + centroidDigest:i64 LE + nClusters:i32 LE +
-    * f32 LE × k. (Old `GQR1` files lack the digest and read as absent.)
+    * exact fallback instead of wrong pruning. (Old `GQR1` files lack the
+    * digest and read as absent.)
     */
-  def radiiPath(dataFile: String, column: String): String =
-    s"$dir/${key(dataFile, column)}.radii"
-
   def writeRadii(
       dataFile: String, column: String, radii: Array[Float], centroidDigest: Long): Unit = {
-    new File(dir).mkdirs()
-    val buf = java.nio.ByteBuffer
-      .allocate(4 + 8 + 4 + 4 * radii.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val buf = ByteBuffer.allocate(16 + 4 * radii.length).order(ByteOrder.LITTLE_ENDIAN)
     buf.put(IndexStore.RadiiMagic)
     buf.putLong(centroidDigest)
     buf.putInt(radii.length)
     radii.foreach(buf.putFloat)
-    val target = Paths.get(radiiPath(dataFile, column))
-    val tmp = Paths.get(target.toString + s".tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, buf.array())
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    writeAtomic(path(dataFile, column, Sidecar.Radii), buf.array())
   }
 
   /** Radii iff present AND stamped with `expectedDigest` (the CURRENT
@@ -174,84 +160,64 @@ final class IndexStore(val dir: String) extends Serializable {
     */
   def loadRadii(
       dataFile: String, column: String, expectedDigest: Long): Option[Array[Float]] = {
-    val p = Paths.get(radiiPath(dataFile, column))
-    if (!Files.exists(p) || !bound(dataFile, column)) return None
-    val bytes = Files.readAllBytes(p)
+    if (!exists(dataFile, column, Sidecar.Radii)) return None
+    val bytes = Files.readAllBytes(Paths.get(path(dataFile, column, Sidecar.Radii)))
     if (bytes.length < 16) return None
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val magic = new Array[Byte](4)
     buf.get(magic)
     if (!magic.sameElements(IndexStore.RadiiMagic)) return None
     if (buf.getLong != expectedDigest) return None
     val k = buf.getInt
-    if (k < 0 || bytes.length < 16 + 4 * k) return None
+    if (k < 0 || bytes.length < 16 + 4L * k) return None
     val radii = new Array[Float](k)
-    var i = 0
-    while (i < k) { radii(i) = buf.getFloat; i += 1 }
+    buf.asFloatBuffer().get(radii)
     Some(radii)
   }
 
-  def existsRadii(dataFile: String, column: String): Boolean =
-    Files.exists(Paths.get(radiiPath(dataFile, column))) && bound(dataFile, column)
-
-  /** PQ code-sidecar path for (data file, column) — `.pq` extension, or
-    * `.pqr` for the residual (IVF-ADC) variant so both codebooks can
-    * coexist for one column (see [[PqSidecar]] for the codec).
-    */
-  def pqPath(dataFile: String, column: String, residual: Boolean = false): String =
-    s"$dir/${key(dataFile, column)}.${if (residual) "pqr" else "pq"}"
-
-  def existsPq(dataFile: String, column: String, residual: Boolean = false): Boolean =
-    Files.exists(Paths.get(pqPath(dataFile, column, residual))) && bound(dataFile, column)
-
-  def deletePq(dataFile: String, column: String, residual: Boolean): Unit =
-    Files.deleteIfExists(Paths.get(pqPath(dataFile, column, residual))): Unit
+  def delete(dataFile: String, column: String, sidecar: Sidecar): Unit =
+    Files.deleteIfExists(Paths.get(path(dataFile, column, sidecar))): Unit
 
   /** Centroid fingerprint of the stored index, decoding ONLY the framed
     * header + centroid matrix (no posting lists) — O(d·k) per file, cheap
     * enough for driver-side epoch checks over a long file list.
     */
-  def centroidDigest(dataFile: String, column: String): Option[Long] = {
-    val p = Paths.get(indexPath(dataFile, column))
-    if (!Files.exists(p) || !bound(dataFile, column)) return None
-    val ch = java.nio.channels.FileChannel.open(p)
-    try {
-      val head = java.nio.ByteBuffer
-        .allocate(IvfIndex.Magic.length + 16)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      while (head.hasRemaining && ch.read(head) >= 0) {}
-      if (head.hasRemaining) return None
-      head.flip()
-      val magic = new Array[Byte](IvfIndex.Magic.length)
-      head.get(magic)
-      if (!magic.sameElements(IvfIndex.Magic)) return None
-      head.getLong // payload length
-      val dim = head.getInt
-      val k = head.getInt
-      if (dim <= 0 || k <= 0) return None
-      // long-math shape check: a corrupt header with dim*k > ~536M would
-      // overflow 4*dim*k to a negative allocate size and THROW instead of
-      // reading as corruption; the centroid matrix also can't exceed what
-      // the file actually holds past the header
-      val centBytes = 4L * dim * k
-      if (centBytes > Int.MaxValue ||
-        centBytes > ch.size() - (IvfIndex.Magic.length + 16)) return None
-      val cents = java.nio.ByteBuffer
-        .allocate(centBytes.toInt)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var pos = (IvfIndex.Magic.length + 16).toLong
-      while (cents.hasRemaining) {
-        val n = ch.read(cents, pos)
-        if (n < 0) return None
-        pos += n
+  def centroidDigest(dataFile: String, column: String): Option[Long] =
+    if (!exists(dataFile, column)) None
+    else withChannel(indexPath(dataFile, column)) { ch =>
+      IvfIndex.readHeader(ch, 0L).toOption.flatMap { case (dim, k) =>
+        // long-math shape check: a corrupt header with dim*k > ~536M would
+        // overflow 4*dim*k to a negative allocate size and THROW instead of
+        // reading as corruption; the centroid matrix also can't exceed what
+        // the file actually holds past the header
+        val centBytes = 4L * dim * k
+        if (centBytes > Int.MaxValue || centBytes > ch.size() - IvfIndex.HeaderLen) None
+        else readFully(ch, IvfIndex.HeaderLen, centBytes.toInt).map { cents =>
+          val arr = new Array[Float](dim * k)
+          cents.asFloatBuffer().get(arr)
+          IvfIndex.centroidDigest(dim, k, arr)
+        }
       }
-      cents.flip()
-      val arr = new Array[Float](dim * k)
-      var i = 0
-      while (i < arr.length) { arr(i) = cents.getFloat; i += 1 }
-      Some(IvfIndex.centroidDigest(dim, k, arr))
-    } finally ch.close()
-  }
+    }
+
+  /** The `sidecar` code file's header iff it is present, bound and intact
+    * ([[IndexStore.intactHeader]]).
+    */
+  private[ivf] def intact[H <: CodeHeader](
+      dataFile: String, column: String, sidecar: Sidecar, codec: CodeCodec[H]): Option[H] =
+    if (!exists(dataFile, column, sidecar)) None
+    else intactHeader(path(dataFile, column, sidecar), codec)
+
+  /** [[IndexStore.memoizedProbe]] for an availability probe over this
+    * store's `sidecars` of (dataFile, column): the identity covers each of
+    * them, the `.meta` binding and the data file — every file such an
+    * answer reads.
+    */
+  private[ivf] def memoized[T](
+      kind: String, dataFile: String, column: String, sidecars: Sidecar*)(compute: => T): T =
+    IndexStore.memoizedProbe(
+      s"$kind:$dir", dataFile, column,
+      (sidecars :+ Sidecar.Meta).map(path(dataFile, column, _)) :+ dataFile)(compute)
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -264,6 +230,175 @@ final class IndexStore(val dir: String) extends Serializable {
 
 object IndexStore {
   private[ivf] val RadiiMagic: Array[Byte] = "GQR2".getBytes("US-ASCII")
+
+  /** A sidecar family and its file extension (see the [[IndexStore]] table). */
+  sealed abstract class Sidecar(val ext: String) extends Serializable
+  object Sidecar {
+    case object Index extends Sidecar("pqvec")
+    case object Meta extends Sidecar("meta")
+    case object Sq8 extends Sidecar("sq8")
+    case object Pq extends Sidecar("pq")
+    case object Pqr extends Sidecar("pqr")
+    case object Radii extends Sidecar("radii")
+
+    /** `.pqr` for the residual (IVF-ADC) codes, else `.pq` — both can
+      * coexist for one column.
+      */
+    def pq(residual: Boolean): Sidecar = if (residual) Pqr else Pq
+  }
+
+  /** Write `bytes` to `path` through a temp file and an atomic rename: a
+    * reader sees the old file or the new one, never a torn write.
+    */
+  private[ivf] def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
+    val target = Paths.get(path)
+    Files.createDirectories(target.getParent)
+    val tmp = Paths.get(s"$path.tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, bytes)
+    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Exactly `n` bytes of `ch` from `pos` (positioned, so the channel's own
+    * position is untouched), flipped and little-endian; None on EOF.
+    */
+  private[ivf] def readFully(ch: FileChannel, pos: Long, n: Int): Option[ByteBuffer] = {
+    val buf = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+    var at = pos
+    while (buf.hasRemaining) {
+      val read = ch.read(buf, at)
+      if (read < 0) return None
+      at += read
+    }
+    buf.flip()
+    Some(buf)
+  }
+
+  private[ivf] def withChannel[T](path: String)(f: FileChannel => T): T = {
+    val ch = FileChannel.open(Paths.get(path))
+    try f(ch) finally ch.close()
+  }
+
+  /** The fixed-header facts every dense code sidecar shares: `nRows` rows
+    * of `width` bytes, in row-ordinal order, from `codesOffset`.
+    */
+  private[graft] trait CodeHeader {
+    def nRows: Int
+    def width: Int
+    def codesOffset: Long
+  }
+
+  /** A code sidecar family's header codec ([[Sq8Sidecar]], [[PqSidecar]]). */
+  private[graft] trait CodeCodec[H <: CodeHeader] {
+    /** Family name for refusal messages. */
+    def name: String
+    /** Bytes [[parseHeader]] needs from offset 0. */
+    def headerBytes: Int
+    /** Parse (and sanity-check) the header; refusals name `path`. */
+    def parseHeader(buf: ByteBuffer, path: String): H
+  }
+
+  /** An open code sidecar with its parsed header. Not thread-safe; one per
+    * task.
+    */
+  private[ivf] final class CodeReader[H <: CodeHeader](val path: String, codec: CodeCodec[H])
+      extends AutoCloseable {
+    private val ch = FileChannel.open(Paths.get(path))
+    val header: H =
+      try codec.parseHeader(read(0L, codec.headerBytes, s"truncated ${codec.name} sidecar"), path)
+      catch { case e: Throwable => ch.close(); throw e }
+
+    /** `n` bytes from `pos`; EOF is refused as "`what` `path`". */
+    def read(pos: Long, n: Int, what: String): ByteBuffer =
+      readFully(ch, pos, n).getOrElse(throw new IllegalArgumentException(s"$what $path"))
+
+    /** The file covers every row the header promises — atomic writes rule
+      * out crash truncation, but a damaged or partially-copied file would
+      * otherwise pass the header check and fail the first query inside an
+      * executor task instead of being rebuilt by `ensure`.
+      */
+    def intact: Boolean =
+      ch.size() >= header.codesOffset + header.nRows.toLong * header.width
+
+    /** Codes of `ordinals` (sorted ascending, file-local), one positioned
+      * read per consecutive-ordinal run — IVF posting lists are ascending
+      * and locally clumped, so probed cells coalesce into few IO calls.
+      */
+    def rows(ordinals: Array[Int]): Array[Array[Byte]] = {
+      if (ordinals.isEmpty) return Array.empty
+      require(
+        ordinals.last < header.nRows && ordinals.head >= 0,
+        s"ordinal out of range [0, ${header.nRows}) in $path")
+      val w = header.width
+      val out = new Array[Array[Byte]](ordinals.length)
+      var i = 0
+      while (i < ordinals.length) {
+        var j = i
+        while (j + 1 < ordinals.length && ordinals(j + 1) == ordinals(j) + 1) j += 1
+        val bytes = read(
+          header.codesOffset + ordinals(i).toLong * w, (j - i + 1) * w, "unexpected EOF in").array()
+        var r = i
+        while (r <= j) {
+          out(r) = java.util.Arrays.copyOfRange(bytes, (r - i) * w, (r - i + 1) * w)
+          r += 1
+        }
+        i = j + 1
+      }
+      out
+    }
+
+    override def close(): Unit = ch.close()
+  }
+
+  private[ivf] def withCodes[H <: CodeHeader, T](path: String, codec: CodeCodec[H])(
+      f: CodeReader[H] => T): T = {
+    val reader = new CodeReader(path, codec)
+    try f(reader) finally reader.close()
+  }
+
+  /** Header + SIZE intactness probe of a code sidecar: its header iff it
+    * parses and [[CodeReader.intact]] holds, else None — one header read and
+    * one `size()` stat, no code bytes touched; never throws.
+    */
+  private[graft] def intactHeader[H <: CodeHeader](path: String, codec: CodeCodec[H]): Option[H] =
+    scala.util.Try(withCodes(path, codec)(r => Some(r.header).filter(_ => r.intact)))
+      .toOption.flatten
+
+  /** A byte-bounded LRU with hit/miss counters — the decoded-index and
+    * decoded-codebook caches. `load` runs OUTSIDE the lock: first touches of
+    * distinct keys never serialize behind each other's IO (a concurrent
+    * first touch of one key may load twice). Eviction runs eldest first
+    * until the budget holds and never drops the entry just inserted, so a
+    * single over-budget value is still served.
+    */
+  private[ivf] final class ByteLru[K, V <: AnyRef](maxBytes: Long, weight: (K, V) => Long) {
+    private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var bytes = 0L
+    private val hits = new AtomicLong
+    private val misses = new AtomicLong
+
+    /** (hits, misses) since JVM start. */
+    def stats: (Long, Long) = (hits.get(), misses.get())
+
+    def getOrLoad(key: K)(load: => V): V = {
+      val hit = entries.synchronized(entries.get(key))
+      if (hit != null) { hits.incrementAndGet(); hit }
+      else {
+        val v = load
+        misses.incrementAndGet()
+        entries.synchronized {
+          val old = entries.put(key, v)
+          if (old != null) bytes -= weight(key, old)
+          bytes += weight(key, v)
+          val it = entries.entrySet().iterator()
+          while (bytes > maxBytes && it.hasNext) {
+            val e = it.next()
+            if (e.getKey != key) { bytes -= weight(e.getKey, e.getValue); it.remove() }
+          }
+        }
+        v
+      }
+    }
+  }
 
   // ── driver-side availability-probe memo ────────────────────────────────
   // Planning probes (tier=auto sidecar `usable()`, the rule's per-file
@@ -280,9 +415,9 @@ object IndexStore {
   private val ProbeMemoCap = 1000000
   private val probeMemo =
     scala.collection.concurrent.TrieMap.empty[(String, String), (String, Any)]
-  private val probeMemoCount = new java.util.concurrent.atomic.AtomicLong(0)
-  private val probeHits = new java.util.concurrent.atomic.AtomicLong
-  private val probeMisses = new java.util.concurrent.atomic.AtomicLong
+  private val probeMemoCount = new AtomicLong(0)
+  private val probeHits = new AtomicLong
+  private val probeMisses = new AtomicLong
 
   /** (hits, misses) of the availability-probe memo since JVM start — a
     * second planned query over an unchanged F-file table shows F hits per
@@ -304,18 +439,10 @@ object IndexStore {
   private[graft] def fileIdentity(path: String): String =
     try {
       val a = Files.readAttributes(
-        Paths.get(canonicalPath(path).stripPrefix("file:")),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
+        Paths.get(localPath(path)), classOf[java.nio.file.attribute.BasicFileAttributes])
       s"${a.fileKey()}:${a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}:${a.size}"
     } catch { case _: Exception => "absent" }
 
-  /** Memoize a driver-side probe whose result is a pure function of the
-    * listed dependency files' CONTENT. `identityPaths` must cover every
-    * file the probe reads (or whose absence it reports on); a change to
-    * any of them — including appearing/disappearing — invalidates the
-    * entry. Costs |identityPaths| stats per call instead of the probe's
-    * opens+reads.
-    */
   /** The shared lookup/miss/cache body of both memo layers. The identity is
     * snapshotted BEFORE compute and re-derived AFTER: a result is cached
     * only when both snapshots agree, so a probe racing a concurrent write
@@ -343,13 +470,20 @@ object IndexStore {
         v
     }
 
+  /** Memoize a driver-side probe whose result is a pure function of the
+    * listed dependency files' CONTENT. `identityPaths` must cover every
+    * file the probe reads (or whose absence it reports on); a change to
+    * any of them — including appearing/disappearing — invalidates the
+    * entry. Costs |identityPaths| stats per call instead of the probe's
+    * opens+reads.
+    */
   private[graft] def memoizedProbe[T](
       kind: String,
       dataFile: String,
       column: String,
       identityPaths: Seq[String])(compute: => T): T = {
     val key = (kind + "\u0000" + canonicalPath(dataFile), column)
-    def idNow: String = identityPaths.map(fileIdentity).mkString("|")
+    def idNow: String = identityOf(identityPaths)
     memoizedEntry(key, idNow, idNow)(compute)
   }
 
@@ -357,37 +491,15 @@ object IndexStore {
     * is pre-sorted by every caller, so equal sets hash equal).
     */
   private def filesHash(files: Seq[String]): Long = {
-    var h = 0xcbf29ce484222325L
+    var h = IvfIndex.FnvBasis
     files.foreach { f =>
       var i = 0
-      while (i < f.length) {
-        h ^= f.charAt(i) & 0xFFFFL
-        h *= 0x100000001b3L
-        i += 1
-      }
-      h ^= 0xFFL; h *= 0x100000001b3L
+      while (i < f.length) { h = IvfIndex.fnv1a(h, f.charAt(i) & 0xFFFFL); i += 1 }
+      h = IvfIndex.fnv1a(h, 0xFFL)
     }
     h
   }
 
-  /** TABLE-level probe memo — the O(1)-stats fast path above
-    * [[memoizedProbe]]: an all-files availability question ("every scan
-    * file has a usable pq sidecar", "every file is indexed at dim d") is
-    * validated against the identity of the DIRECTORIES involved — the
-    * sidecar store dir plus each distinct parent dir of the data files —
-    * instead of per-file stats. Every write in this engine lands by
-    * temp + atomic-rename, and POSIX rename/create/delete updates the
-    * parent directory's mtime, so any sidecar build/rebuild/removal or
-    * data-file add/replace-by-rename invalidates the entry and the
-    * recompute falls through to the per-file layer. The one gap —
-    * an external tool overwriting a file's CONTENT in place (no directory
-    * entry change) — cannot make this memo produce silent wrongness:
-    * execution-side binding stamps still refuse the swapped file loudly;
-    * only the plan-time availability answer is stale until any rename
-    * touches the dir. Filesystems without stat-able directories (object
-    * stores) yield an "absent" dir identity, which BYPASSES this layer
-    * entirely (per-file probes, still memoized individually).
-    */
   /** Bounded daemon pool for driver-side availability probes — sized for
     * IO-latency hiding (header peeks are one small pread each), not CPU.
     */
@@ -453,7 +565,7 @@ object IndexStore {
     */
   private[graft] def tableDirs(files: Seq[String], storeDir: String): Seq[String] =
     storeDir +: files.iterator.map { f =>
-      val local = canonicalPath(f).stripPrefix("file:")
+      val local = localPath(f)
       val cut = local.lastIndexOf('/')
       if (cut > 0) local.substring(0, cut) else local
     }.distinct.toSeq
@@ -462,6 +574,24 @@ object IndexStore {
   private[graft] def identityOf(paths: Seq[String]): String =
     paths.map(fileIdentity).mkString("|")
 
+  /** TABLE-level probe memo — the O(1)-stats fast path above
+    * [[memoizedProbe]]: an all-files availability question ("every scan
+    * file has a usable pq sidecar", "every file is indexed at dim d") is
+    * validated against the identity of the DIRECTORIES involved — the
+    * sidecar store dir plus each distinct parent dir of the data files —
+    * instead of per-file stats. Every write in this engine lands by
+    * temp + atomic-rename, and POSIX rename/create/delete updates the
+    * parent directory's mtime, so any sidecar build/rebuild/removal or
+    * data-file add/replace-by-rename invalidates the entry and the
+    * recompute falls through to the per-file layer. The one gap —
+    * an external tool overwriting a file's CONTENT in place (no directory
+    * entry change) — cannot make this memo produce silent wrongness:
+    * execution-side binding stamps still refuse the swapped file loudly;
+    * only the plan-time availability answer is stale until any rename
+    * touches the dir. Filesystems without stat-able directories (object
+    * stores) yield an "absent" dir identity, which BYPASSES this layer
+    * entirely (per-file probes, still memoized individually).
+    */
   private[graft] def memoizedTableProbe[T](
       kind: String,
       column: String,
@@ -492,7 +622,7 @@ object IndexStore {
   // TrieMap.size walks the whole trie (O(entries)) — never call it on the
   // per-lookup hot path. An approximate insert counter (racy increments are
   // fine; the cap is a heuristic, not an invariant) gates the clear instead.
-  private val stampMemoCount = new java.util.concurrent.atomic.AtomicLong(0)
+  private val stampMemoCount = new AtomicLong(0)
 
   /** Content stamp of a data file: (length, digest of the file's TAIL).
     * The tail (last ≤64 KiB) covers the parquet footer — row-group
@@ -502,32 +632,23 @@ object IndexStore {
     * cannot be statted/read.
     */
   def dataStamp(dataFile: String): Option[(Long, Long)] = {
-    val local = Paths.get(canonicalPath(dataFile).stripPrefix("file:"))
+    val local = localPath(dataFile)
     try {
       val attrs = Files.readAttributes(
-        local, classOf[java.nio.file.attribute.BasicFileAttributes])
-      val key = (local.toString, String.valueOf(attrs.fileKey()),
+        Paths.get(local), classOf[java.nio.file.attribute.BasicFileAttributes])
+      val key = (local, String.valueOf(attrs.fileKey()),
         attrs.lastModifiedTime.toMillis, attrs.size)
       val digest = stampMemo.get(key).getOrElse {
         if (stampMemoCount.incrementAndGet() > StampMemoCap) {
           stampMemo.clear(); stampMemoCount.set(0)
         }
         stampMemo.getOrElseUpdate(key, {
-        val len = attrs.size
-        val tail = math.min(len, 65536L).toInt
-        val ch = java.nio.channels.FileChannel.open(local)
-        try {
-          val buf = java.nio.ByteBuffer.allocate(tail)
-          var pos = len - tail
-          while (buf.hasRemaining) {
-            val n = ch.read(buf, pos)
-            if (n < 0) throw new java.io.EOFException(local.toString)
-            pos += n
-          }
+          val tail = math.min(attrs.size, 65536L).toInt
+          val buf = withChannel(local)(readFully(_, attrs.size - tail, tail))
+            .getOrElse(throw new java.io.EOFException(local))
           val md = MessageDigest.getInstance("SHA-1")
           md.update(buf.array(), 0, tail)
           java.nio.ByteBuffer.wrap(md.digest()).getLong
-        } finally ch.close()
         })
       }
       Some((attrs.size, digest))
@@ -547,4 +668,9 @@ object IndexStore {
     val uri = try new java.net.URI(s) catch { case _: Exception => return s }
     if (uri.getScheme == "file") "file:" + uri.getPath else s
   }
+
+  /** The local filesystem path of a data file (`file:` URIs unwrapped; any
+    * other string passes through).
+    */
+  def localPath(dataFile: String): String = canonicalPath(dataFile).stripPrefix("file:")
 }

@@ -153,6 +153,72 @@ object IvfBuilder {
     (n, minDim)
   }
 
+  /** The one scan every build pass reads: `(_file, _ri, _vec)` — the data
+    * file, its file-local row ordinal (`_metadata.row_index`, the
+    * reference's u32 ordinal) and the embedding cast to `array<float>` —
+    * restricted to the `only` data files when given.
+    */
+  private[ivf] def scan(
+      spark: SparkSession,
+      path: String,
+      column: String,
+      only: Option[Seq[String]] = None): DataFrame = {
+    val all = spark.read
+      .parquet(path)
+      .select(
+        col("_metadata.file_path").as("_file"),
+        col("_metadata.row_index").as("_ri"),
+        col(column).cast("array<float>").as("_vec"))
+    only.fold(all)(fs => all.where(col("_file").isin(fs: _*)))
+  }
+
+  /** The one executor-side pass behind every dense code sidecar (`.sq8`,
+    * `.pq`, `.pqr`): `encode` each scanned row to `width` bytes BEFORE the
+    * per-file `groupByKey` (the shuffle carries code bytes, not floats), lay
+    * each file's codes out densely in row-ordinal order, and write its
+    * `sidecar` file — `fileBytes(codes)` — FROM THE EXECUTOR. Driver state
+    * is O(files). Returns file → rows encoded.
+    */
+  private[ivf] def writeCodes(
+      spark: SparkSession,
+      vecs: DataFrame,
+      store: IndexStore,
+      column: String,
+      sidecar: IndexStore.Sidecar,
+      width: Int)(
+      encode: Array[Float] => Array[Byte],
+      fileBytes: Array[Byte] => Array[Byte]): Map[String, Long] = {
+    import spark.implicits._
+    vecs
+      .as[(String, Long, Array[Float])]
+      .map { case (file, ri, vec) =>
+        require(
+          ri <= Int.MaxValue,
+          s"row ordinal $ri in $file exceeds the sidecar's 2^31 rows-per-file limit " +
+            "(header stores nRows as i32) — split the file")
+        val code = encode(vec)
+        require(code.length == width, s"code width ${code.length} != $width at $file:$ri")
+        (file, ri.toInt, code)
+      }
+      .groupByKey(_._1)
+      .mapGroups { (file, rows) =>
+        val collected = rows.map { case (_, ri, c) => (ri, c) }.toArray
+        // rows·width must fit one JVM byte array (also bounds every
+        // ri·width offset below) — overflow would alloc a negative-sized array
+        require(collected.length.toLong * width <= Int.MaxValue,
+          s"$file holds ${collected.length} rows × $width code bytes — over the " +
+            "2 GiB single-array sidecar limit; split the file")
+        val codes = new Array[Byte](collected.length * width)
+        collected.foreach { case (ri, c) =>
+          System.arraycopy(c, 0, codes, ri * width, width)
+        }
+        IndexStore.writeAtomic(store.path(file, column, sidecar), fileBytes(codes))
+        (file, collected.length.toLong)
+      }
+      .collect()
+      .toMap
+  }
+
   /** @param embed true: write each file's index INSIDE the parquet footer
     *              region (reference-native layout, mutates the data files —
     *              they must be writable); false: sidecar files in `store`.
@@ -168,13 +234,7 @@ object IvfBuilder {
     require(config.maxIters > 0, "max_iters must be > 0")
     config.nClusters.foreach(k => require(k > 0, "n_clusters must be > 0"))
 
-    val vecs = spark.read
-      .parquet(path)
-      .select(
-        col("_metadata.file_path").as("_file"),
-        col("_metadata.row_index").as("_ri"),
-        col(config.column).cast("array<float>").as("_vec"))
-
+    val vecs = scan(spark, path, config.column)
     val (n, dim) = validate(vecs, config.column)
     val k = config.warmStart match {
       case Some(warm) =>
@@ -394,7 +454,7 @@ object IvfBuilder {
         // epoch are garbage under this index — drop them here so every
         // (re)index path (build, retrain, streaming ingest) invalidates
         // uniformly; PqSidecar.ensure re-encodes on demand
-        store.deletePq(file, column, residual = true)
+        store.delete(file, column, IndexStore.Sidecar.Pqr)
         (file, count)
       }
       .collect()
@@ -414,19 +474,15 @@ object IvfBuilder {
       store: IndexStore = IndexStore.default): Unit = {
     import spark.implicits._
     val files = IndexManager.listFiles(spark, path)
-    val missing = files.filterNot(store.existsRadii(_, column))
+    val missing = files.filterNot(store.exists(_, column, IndexStore.Sidecar.Radii))
     if (missing.isEmpty) return
     val existing = IndexManager.loadIndex(store, missing.head, column)
     val bcCentroids = spark.sparkContext.broadcast(existing.centroids)
     val dim = existing.dim
     val k = existing.nClusters
     val epoch = existing.centroidDigest
-    spark.read
-      .parquet(path)
-      .select(
-        col("_metadata.file_path").as("_file"),
-        col(column).cast("array<float>").as("_vec"))
-      .where(col("_file").isin(missing: _*))
+    scan(spark, path, column, Some(missing))
+      .select("_file", "_vec")
       .as[(String, Array[Float])]
       .mapPartitions { it =>
         val cents = bcCentroids.value
@@ -461,7 +517,6 @@ object IvfBuilder {
       path: String,
       config: Config,
       store: IndexStore = IndexStore.default): BuildResult = {
-    import org.apache.spark.sql.functions.col
     require(config.column.nonEmpty, "embedding column name must be non-empty")
     val files = IndexManager.listFiles(spark, path)
     require(files.nonEmpty, s"no parquet files under $path")
@@ -481,13 +536,7 @@ object IvfBuilder {
     val counts: Map[String, Long] =
       if (missing.isEmpty) Map.empty
       else {
-        val vecs = spark.read
-          .parquet(path)
-          .select(
-            col("_metadata.file_path").as("_file"),
-            col("_metadata.row_index").as("_ri"),
-            col(config.column).cast("array<float>").as("_vec"))
-          .where(col("_file").isin(missing: _*))
+        val vecs = scan(spark, path, config.column, Some(missing))
         val (_, dim) = validate(vecs, config.column)
         require(
           dim == existing.dim,
@@ -660,12 +709,7 @@ object IvfBuilder {
       indexedCellStats(spark, indexed, config.column, existing.nClusters, store)
     val bcCentroids = spark.sparkContext.broadcast(existing.centroids)
     val dim = existing.dim
-    val appendedRows = spark.read
-      .parquet(path)
-      .select(
-        col("_metadata.file_path").as("_file"),
-        col(config.column).cast("array<float>").as("_vec"))
-      .where(col("_file").isin(missing: _*))
+    val appendedRows = scan(spark, path, config.column, Some(missing))
     // same validation contract as build/extend: a null or wrong-dim vector in
     // an appended file must fail with the clean error, not an executor NPE
     // inside the assignment pass

@@ -1,6 +1,7 @@
 package graft.ivf
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
 
 import graft.functions.VectorKernels
 
@@ -169,20 +170,23 @@ object IvfIndex {
   val IndexOffsetKey = "pq_vector_index_offset"
   val EmbeddingColumnKey = "pq_vector_embedding_column"
 
+  /** FNV-1a's offset basis and its one mixing step, `(h ^ v) · prime` —
+    * the hash behind the centroid digest, the PQ codebook digest (both
+    * stored in sidecar headers) and the table-probe memo key.
+    */
+  private[ivf] val FnvBasis = 0xcbf29ce484222325L
+  private[ivf] def fnv1a(h: Long, v: Long): Long = (h ^ v) * 0x100000001b3L
+
   /** FNV-1a over the shape and the raw f32 bit patterns — stable across
     * JVMs/platforms (bit-exact centroids ⇒ equal digest; any moved centroid
     * ⇒ different with overwhelming probability). NaN payload bits count as
     * written, so even exotic centroids fingerprint deterministically.
     */
   def centroidDigest(dim: Int, nClusters: Int, centroids: Array[Float]): Long = {
-    var h = 0xcbf29ce484222325L
+    var h = FnvBasis
     def mix(v: Int): Unit = {
       var i = 0
-      while (i < 4) {
-        h ^= (v >>> (i * 8)) & 0xFFL
-        h *= 0x100000001b3L
-        i += 1
-      }
+      while (i < 4) { h = fnv1a(h, (v >>> (i * 8)) & 0xFFL); i += 1 }
     }
     mix(dim)
     mix(nClusters)
@@ -213,7 +217,11 @@ object IvfIndex {
     val lists = new Array[Array[Int]](nClusters)
     var c = 0
     while (c < nClusters) {
+      require(buf.remaining >= 4, s"posting list $c is missing — corrupt or truncated index")
       val len = buf.getInt
+      require(len >= 0 && 4L * len <= buf.remaining,
+        s"posting list $c length $len exceeds the ${buf.remaining}-byte remainder " +
+          "— corrupt or truncated index")
       val list = new Array[Int](len)
       var j = 0
       while (j < len) { list(j) = buf.getInt; j += 1 }
@@ -222,6 +230,27 @@ object IvfIndex {
     }
     IvfIndex(dim, nClusters, centroids, lists)
   }
+
+  /** Bytes of the framed header: magic, payload length u64, dim and
+    * nClusters i32.
+    */
+  private[ivf] val HeaderLen: Int = Magic.length + 16
+
+  /** `(dim, nClusters)` of the framed index whose magic starts at `offset`
+    * in `ch` — one read of [[HeaderLen]] bytes, no payload decode. Left
+    * names the defect: a short read, a bad magic or a non-positive shape.
+    */
+  private[ivf] def readHeader(ch: FileChannel, offset: Long): Either[String, (Int, Int)] =
+    IndexStore.readFully(ch, offset, HeaderLen).toRight("truncated index header").flatMap { buf =>
+      val magic = new Array[Byte](Magic.length)
+      buf.get(magic)
+      buf.getLong // payload length
+      val dim = buf.getInt
+      val k = buf.getInt
+      if (!magic.sameElements(Magic)) Left("bad index magic")
+      else if (dim <= 0 || k <= 0) Left(s"implausible index shape dim=$dim k=$k")
+      else Right((dim, k))
+    }
 
   /** Wrap payload with the reference's persist framing: magic + u64 LE length. */
   def frame(payload: Array[Byte]): Array[Byte] = {

@@ -1,7 +1,6 @@
 package graft.ivf
 
 import java.io.{ByteArrayOutputStream, RandomAccessFile}
-import java.net.URI
 import java.nio.{ByteBuffer, ByteOrder}
 
 import scala.jdk.CollectionConverters._
@@ -24,15 +23,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * therefore directly queryable by this engine.
   */
 object ParquetFooterIndex {
-
-  private def toLocalFile(file: String): String = {
-    val uri = Try(new URI(file)).toOption
-    uri match {
-      case Some(u) if u.getScheme == "file" => u.getPath
-      case Some(u) if u.getScheme == null => file
-      case _ => file
-    }
-  }
 
   /** Footer KV lookup: (index byte offset, embedding column) if present. */
   def indexMetadata(file: String): Option[(Long, String)] = {
@@ -61,7 +51,7 @@ object ParquetFooterIndex {
     * refused, like the reference.
     */
   def embedInPlace(file: String, column: String, index: IvfIndex): Unit = {
-    val local = toLocalFile(file)
+    val local = IndexStore.localPath(file)
     val inputFile = HadoopInputFile.fromPath(new Path(local), new Configuration())
     val reader = ParquetFileReader.open(inputFile)
     val footer: ParquetMetadata =
@@ -140,29 +130,21 @@ object ParquetFooterIndex {
   def peek(file: String, column: String): Option[(Int, Int)] =
     indexMetadata(file).collect {
       case (offset, indexedColumn) if indexedColumn == column =>
-        val raf = new RandomAccessFile(toLocalFile(file), "r")
-        try {
-          val header = new Array[Byte](IvfIndex.Magic.length + 16)
+        IndexStore.withChannel(IndexStore.localPath(file)) { ch =>
           require(
-            offset >= 0 && offset + header.length <= raf.length(),
-            s"index offset $offset out of bounds for $file (len ${raf.length()})")
-          raf.seek(offset)
-          raf.readFully(header)
-          require(
-            header.view.slice(0, IvfIndex.Magic.length).sameElements(IvfIndex.Magic),
-            s"bad index magic at offset $offset in $file")
-          val buf = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-          buf.position(IvfIndex.Magic.length + 8)
-          (buf.getInt, buf.getInt)
-        } finally raf.close()
+            offset >= 0 && offset + IvfIndex.HeaderLen <= ch.size(),
+            s"index offset $offset out of bounds for $file (len ${ch.size()})")
+          IvfIndex.readHeader(ch, offset).fold(
+            defect => throw new IllegalArgumentException(s"$defect at offset $offset in $file"),
+            identity)
+        }
     }
 
   /** Load the embedded index if this file carries one for `column`. */
   def load(file: String, column: String): Option[IvfIndex] =
     indexMetadata(file).collect {
       case (offset, indexedColumn) if indexedColumn == column =>
-        val local = toLocalFile(file)
-        val raf = new RandomAccessFile(local, "r")
+        val raf = new RandomAccessFile(IndexStore.localPath(file), "r")
         try {
           require(
             offset >= 0 && offset < raf.length(),

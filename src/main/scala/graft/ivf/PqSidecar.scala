@@ -1,11 +1,10 @@
 package graft.ivf
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+
+import graft.ivf.IndexStore.{ByteLru, CodeCodec, CodeHeader, CodeReader, Sidecar}
 
 /** PQ code sidecar: the product-quantized twin of a file's embedding column
   * — `m` BYTES per row (vs `4·dim` for floats), dense in row-ordinal order
@@ -30,7 +29,7 @@ import org.apache.spark.sql.functions._
   * amplification, and since "GRAFTPQ4" the codebook is DIGEST-KEYED and
   * decoded through a process-wide LRU ([[codebookCacheStats]]) — a
   * table-shared codebook is read+decoded once per JVM and every other
-  * file's reader touches only its 36-byte fixed header (the per-file
+  * file's reader touches only its 40-byte header (the per-file
   * ~1 MB codebook re-reads that erased the r10 multi-file win). On a warm
   * page cache float selective stays faster — `tier=auto` encodes that.
   *
@@ -50,7 +49,9 @@ import org.apache.spark.sql.functions._
   * codes against new-centroid ADC tables silently collapses recall) and
   * [[ensure]] rebuilds it. Non-residual sidecars don't depend on the
   * centroids and stamp 0.
-  * Writes are atomic (temp + rename), safe under speculative retries.
+  * This object is the codec (header layout, encoder and codebook);
+  * naming, binding, atomic writes and row reads are [[IndexStore]]'s,
+  * whose class doc tables every sidecar family.
   */
 object PqSidecar {
 
@@ -64,27 +65,47 @@ object PqSidecar {
 
   val FlagResidual = 1
 
-  /** Immutable view of a sidecar's FIXED header — metadata only, the
+  /** Immutable view of a sidecar's FIXED header plus the codebook's leading
+    * `m` (its first i32, see [[Pq.codebookBytes]]) — metadata only, the
     * codebook is decoded lazily through the digest-keyed cache (a
     * multi-file query must not pay a codebook read per file).
     */
   final case class Header(
-      nRows: Int, flags: Int, centroidDigest: Long, cbDigest: Long, cbLen: Int) {
+      nRows: Int, flags: Int, centroidDigest: Long, cbDigest: Long, cbLen: Int, m: Int)
+      extends CodeHeader {
     def residual: Boolean = (flags & FlagResidual) != 0
+    def width: Int = m
     def codesOffset: Long = FixedHeaderLen.toLong + cbLen
   }
 
+  /** The header codec [[IndexStore.CodeReader]] opens this family with. */
+  object Header extends CodeCodec[Header] {
+    val name = "PQ"
+    val headerBytes: Int = FixedHeaderLen + 4
+
+    def parseHeader(buf: ByteBuffer, path: String): Header = {
+      val magic = new Array[Byte](Magic.length)
+      buf.get(magic)
+      require(magic.sameElements(Magic), s"not a PQ sidecar: $path")
+      val nRows = buf.getInt
+      val flags = buf.getInt
+      val centroidDigest = buf.getLong
+      val cbDigest = buf.getLong
+      val cbLen = buf.getInt
+      require(nRows >= 0 && cbLen >= 4, s"implausible PQ header in $path")
+      val m = buf.getInt
+      require(m > 0, s"implausible PQ subquantizer count $m in $path")
+      Header(nRows, flags, centroidDigest, cbDigest, cbLen, m)
+    }
+  }
+
   /** FNV-1a over the serialized codebook bytes — stable across JVMs (same
-    * scheme as [[IvfIndex.centroidDigest]]).
+    * mixer as [[IvfIndex.centroidDigest]]).
     */
   private[ivf] def codebookDigest(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
+    var h = IvfIndex.FnvBasis
     var i = 0
-    while (i < bytes.length) {
-      h ^= bytes(i) & 0xFFL
-      h *= 0x100000001b3L
-      i += 1
-    }
+    while (i < bytes.length) { h = IvfIndex.fnv1a(h, bytes(i) & 0xFFL); i += 1 }
     h
   }
 
@@ -92,50 +113,43 @@ object PqSidecar {
   // keyed by (digest, byte length): a table-shared codebook decodes ONCE
   // per JVM no matter how many files or queries touch it; incremental
   // appends with a retrained codebook coexist under their own digests.
-  // Byte-bounded like IndexManager's decoded-index LRU (a codebook is
-  // ~cbLen in memory; m=128 × ksub=256 × dim=1024 ≈ 1 MiB)
-  private val MaxCodebookBytes =
-    sys.props.getOrElse("graft.pq.codebookCacheBytes", (64L << 20).toString).toLong
-  private val codebookCache =
-    new java.util.LinkedHashMap[(Long, Int), Pq.Codebook](16, 0.75f, true)
-  private var cachedCbBytes = 0L
-  private val cbHits = new java.util.concurrent.atomic.AtomicLong
-  private val cbMisses = new java.util.concurrent.atomic.AtomicLong
+  // 64 MiB of codebooks (one is ~cbLen in memory; m=128 × ksub=256 ×
+  // dim=1024 ≈ 1 MiB)
+  private val codebooks = new ByteLru[(Long, Int), Pq.Codebook](64L << 20, (k, _) => k._2.toLong)
 
   /** (hits, misses) of the decoded-codebook cache since JVM start — the
     * multi-file win is visible here: F files × Q queries of one table is
     * F·Q−1 hits, 1 miss.
     */
-  def codebookCacheStats: (Long, Long) = (cbHits.get(), cbMisses.get())
+  def codebookCacheStats: (Long, Long) = codebooks.stats
 
-  private def cachedCodebook(
-      key: (Long, Int))(decode: => Pq.Codebook): Pq.Codebook = {
-    val hit = codebookCache.synchronized(codebookCache.get(key))
-    if (hit != null) { cbHits.incrementAndGet(); hit }
-    else {
-      // decode outside the lock: first touch of distinct codebooks must
-      // not serialize behind each other's IO
-      val cb = decode
-      cbMisses.incrementAndGet()
-      codebookCache.synchronized {
-        val old = codebookCache.put(key, cb)
-        if (old == null) cachedCbBytes += key._2.toLong
-        val it = codebookCache.entrySet().iterator()
-        while (cachedCbBytes > MaxCodebookBytes && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) { cachedCbBytes -= e.getKey._2.toLong; it.remove() }
-        }
-      }
-      cb
+  /** The open sidecar's codebook — a cache hit for every file sharing the
+    * table's codebook after the first decode in this JVM; a miss verifies
+    * the bytes against the header digest.
+    */
+  private[ivf] def codebook(reader: CodeReader[Header]): Pq.Codebook = {
+    val h = reader.header
+    val cb = codebooks.getOrLoad((h.cbDigest, h.cbLen)) {
+      val bytes =
+        reader.read(FixedHeaderLen, h.cbLen, "unexpected EOF reading PQ codebook in").array()
+      val got = codebookDigest(bytes)
+      require(got == h.cbDigest,
+        s"PQ codebook digest mismatch in ${reader.path}: header says ${h.cbDigest}, " +
+          s"bytes hash to $got — corrupt sidecar, rebuild with PqSidecar.build")
+      Pq.codebookFromBytes(bytes)
     }
+    require(cb.m == h.m, s"PQ codebook m=${cb.m} != header m=${h.m} in ${reader.path}")
+    cb
   }
 
-  def writeFile(
-      path: String,
+  /** A whole `.pq`/`.pqr` file: fixed header, codebook, then `codes`
+    * (row-ordinal order).
+    */
+  def fileBytes(
       cb: Pq.Codebook,
       codes: Array[Byte],
       flags: Int = 0,
-      centroidDigest: Long = 0L): Unit = {
+      centroidDigest: Long = 0L): Array[Byte] = {
     require(
       codes.length % cb.m == 0,
       s"codes length ${codes.length} not a multiple of m ${cb.m}")
@@ -151,118 +165,16 @@ object PqSidecar {
     buf.putInt(cbBytes.length)
     buf.put(cbBytes)
     buf.put(codes)
-    val target = Paths.get(path)
-    Files.createDirectories(target.getParent)
-    val tmp = Paths.get(path + s".tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, buf.array())
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  def readHeader(path: String): Header = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try readHeader(ch, path) finally ch.close()
-  }
-
-  private def readHeader(ch: FileChannel, path: String): Header = {
-    val fixed = ByteBuffer.allocate(FixedHeaderLen).order(ByteOrder.LITTLE_ENDIAN)
-    while (fixed.hasRemaining && ch.read(fixed) >= 0) {}
-    require(!fixed.hasRemaining, s"truncated PQ sidecar $path")
-    fixed.flip()
-    val magic = new Array[Byte](Magic.length)
-    fixed.get(magic)
-    require(magic.sameElements(Magic), s"not a PQ sidecar: $path")
-    val nRows = fixed.getInt
-    val flags = fixed.getInt
-    val centroidDigest = fixed.getLong
-    val cbDigest = fixed.getLong
-    val cbLen = fixed.getInt
-    require(nRows >= 0 && cbLen > 0, s"implausible PQ header in $path")
-    Header(nRows, flags, centroidDigest, cbDigest, cbLen)
-  }
-
-  private def readCodebook(ch: FileChannel, header: Header, path: String): Pq.Codebook =
-    cachedCodebook((header.cbDigest, header.cbLen)) {
-      val cbBuf = ByteBuffer.allocate(header.cbLen)
-      var pos = FixedHeaderLen.toLong
-      while (cbBuf.hasRemaining) {
-        val n = ch.read(cbBuf, pos)
-        require(n >= 0, s"unexpected EOF reading PQ codebook in $path")
-        pos += n
-      }
-      val got = codebookDigest(cbBuf.array())
-      require(got == header.cbDigest,
-        s"PQ codebook digest mismatch in $path: header says ${header.cbDigest}, " +
-          s"bytes hash to $got — corrupt sidecar, rebuild with PqSidecar.build")
-      Pq.codebookFromBytes(cbBuf.array())
-    }
-
-  /** Open-once reader: holds the channel and the parsed header so repeated
-    * `rows()` calls (one per probed cell in residual search) don't reopen
-    * the file each time. The codebook is served from the process-wide
-    * digest-keyed cache — opening a reader costs one 36-byte header read
-    * when the table's codebook is already decoded. Not thread-safe; one
-    * per task.
-    */
-  final class Reader(path: String) extends AutoCloseable {
-    private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    val header: Header =
-      try PqSidecar.readHeader(ch, path)
-      catch { case e: Throwable => ch.close(); throw e }
-
-    /** Decoded codebook — cache hit for every file sharing the table's
-      * codebook after the first decode in this JVM.
-      */
-    lazy val codebook: Pq.Codebook = PqSidecar.readCodebook(ch, header, path)
-
-    /** Codes of `ordinals` (sorted ascending, file-local), one positioned
-      * read per consecutive-ordinal run (same IO coalescing as
-      * [[Sq8Sidecar]]).
-      */
-    def rows(ordinals: Array[Int]): Array[Array[Byte]] = {
-      if (ordinals.isEmpty) return Array.empty
-      require(
-        ordinals.last < header.nRows && ordinals.head >= 0,
-        s"ordinal out of range [0, ${header.nRows}) in $path")
-      val m = codebook.m
-      val out = new Array[Array[Byte]](ordinals.length)
-      var i = 0
-      while (i < ordinals.length) {
-        var j = i
-        while (j + 1 < ordinals.length && ordinals(j + 1) == ordinals(j) + 1) j += 1
-        val run = ByteBuffer.allocate((j - i + 1) * m)
-        var pos = header.codesOffset + ordinals(i).toLong * m
-        while (run.hasRemaining) {
-          val n = ch.read(run, pos)
-          require(n >= 0, s"unexpected EOF in $path")
-          pos += n
-        }
-        val bytes = run.array()
-        var r = i
-        while (r <= j) {
-          out(r) = java.util.Arrays.copyOfRange(bytes, (r - i) * m, (r - i + 1) * m)
-          r += 1
-        }
-        i = j + 1
-      }
-      out
-    }
-
-    override def close(): Unit = ch.close()
-  }
-
-  /** One-shot convenience over [[Reader]]. */
-  def readRows(path: String, ordinals: Array[Int]): (Header, Array[Array[Byte]]) = {
-    val reader = new Reader(path)
-    try (reader.header, reader.rows(ordinals))
-    finally reader.close()
+    buf.array()
   }
 
   /** Build the per-file PQ sidecars: ONE codebook trained on a driver-side
     * bounded sample (the IVF build's sample discipline — table-shared, like
     * the centroid set), then a distributed encode pass; the shuffle and the
     * per-file buffer carry `m` bytes per row, and sidecars are written FROM
-    * THE EXECUTOR. `only` restricts the scan for incremental appends (the
-    * codebook still trains on the whole table so codes stay comparable).
+    * THE EXECUTOR ([[IvfBuilder.writeCodes]]). `only` restricts the scan for
+    * incremental appends (the codebook still trains on the whole table so
+    * codes stay comparable).
     */
   def build(
       spark: SparkSession,
@@ -275,12 +187,7 @@ object PqSidecar {
       only: Option[Seq[String]] = None,
       residual: Boolean = false): Map[String, Long] = {
     import spark.implicits._
-    val all = spark.read
-      .parquet(path)
-      .select(
-        col("_metadata.file_path").as("_file"),
-        col("_metadata.row_index").as("_ri"),
-        col(column).cast("array<float>").as("_vec"))
+    val all = IvfBuilder.scan(spark, path, column)
     val (n, dim) = IvfBuilder.validate(all, column)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
 
@@ -342,106 +249,43 @@ object PqSidecar {
     val bcCents = spark.sparkContext.broadcast(centroids)
     val flags = if (residual) FlagResidual else 0
 
-    val vecs = only.fold(all)(fs => all.where(col("_file").isin(fs: _*)))
-    vecs
-      .as[(String, Long, Array[Float])]
-      .map { case (file, ri, vec) =>
-        require(
-          ri <= Int.MaxValue,
-          s"row ordinal $ri in $file exceeds the sidecar's 2^31 rows-per-file limit " +
-            "(header stores nRows as i32) — split the file")
-        val target =
-          if (bcCents.value == null) vec else toResidual(vec, bcCents.value)
-        (file, ri.toInt, Pq.encode(target, bcCb.value))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (file, rows) =>
-        val codebook = bcCb.value
-        val collected = rows.map { case (_, ri, c) => (ri, c) }.toArray
-        // rows·m must fit one JVM byte array (same guard as Sq8Sidecar) —
-        // overflow would alloc a negative-sized array
-        require(collected.length.toLong * codebook.m <= Int.MaxValue,
-          s"$file holds ${collected.length} rows × m=${codebook.m} of codes — over " +
-            "the 2 GiB single-array sidecar limit; split the file")
-        val codes = new Array[Byte](collected.length * codebook.m)
-        collected.foreach { case (ri, c) =>
-          System.arraycopy(c, 0, codes, ri * codebook.m, codebook.m)
-        }
-        writeFile(
-          store.pqPath(file, column, residual = flags != 0), codebook, codes, flags,
-          centroidEpoch)
-        (file, collected.length.toLong)
-      }
-      .collect()
-      .toMap
+    IvfBuilder.writeCodes(
+        spark, IvfBuilder.scan(spark, path, column, only), store, column,
+        Sidecar.pq(residual), m)(
+      vec =>
+        Pq.encode(if (bcCents.value == null) vec else toResidual(vec, bcCents.value), bcCb.value),
+      fileBytes(bcCb.value, _, flags, centroidEpoch))
   }
 
-  /** Build sidecars ONLY for files that lack one (idempotent, incremental).
-    * NOTE: an append-triggered build re-trains on the grown table; existing
-    * sidecars keep their original codebook (self-contained), so cross-file
-    * ADC stays valid per file — the refine phase re-ranks in exact float
-    * space, which is what guarantees cross-file comparability.
+  /** A sidecar is usable when present, bound and intact
+    * ([[IndexStore.intactHeader]]) with the wanted variant flag AND (for
+    * residual codes) stamped with the CURRENT index's centroid digest — a
+    * stale (old-format), damaged, wrong-variant, or wrong-centroid-epoch
+    * file (index retrained since encode) counts as missing and gets
+    * rebuilt instead of silently mis-scoring. Memoized store-level
+    * ([[IndexStore.memoizedProbe]]): tier=auto probes this per FILE per
+    * planned query; the identity also covers the index sidecar (residual
+    * only, via centroidDigest / footer fallback).
     */
-  /** A sidecar is usable when present AND parseable with the wanted
-    * variant flag AND (for residual codes) stamped with the CURRENT index's
-    * centroid digest — a stale (old-format), wrong-variant, or
-    * wrong-centroid-epoch file (index retrained since encode) counts as
-    * missing and gets rebuilt instead of silently mis-scoring.
-    */
-  /** Header + SIZE check: since r11's lazy header read, `readHeader` alone
-    * no longer touches the codebook/codes regions, so a sidecar truncated
-    * past byte 36 (partial copy without the atomic rename, disk damage)
-    * would pass a header-only probe and then crash the first query inside
-    * an executor task instead of being rebuilt. The codebook's leading i32
-    * is `m` (see [[Pq.codebookBytes]]), so one extra 4-byte read lets us
-    * require the channel to cover `codesOffset + nRows·m` — restoring
-    * ensure()'s self-healing without decoding the ~1 MiB codebook.
-    */
-  private[ivf] def headerIfIntact(path: String): Option[Header] =
-    scala.util.Try {
-      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-      try {
-        val h = readHeader(ch, path)
-        val mBuf = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-        var pos = FixedHeaderLen.toLong
-        while (mBuf.hasRemaining) {
-          val read = ch.read(mBuf, pos)
-          require(read >= 0, s"truncated PQ codebook header in $path")
-          pos += read
-        }
-        mBuf.flip()
-        val m = mBuf.getInt
-        require(m > 0, s"implausible PQ subquantizer count $m in $path")
-        require(
-          ch.size() >= h.codesOffset + h.nRows.toLong * m,
-          s"truncated PQ sidecar $path: ${ch.size()} bytes, " +
-            s"expected >= ${h.codesOffset + h.nRows.toLong * m}")
-        h
-      } finally ch.close()
-    }.toOption
-
   private[graft] def usable(store: IndexStore, f: String, column: String, residual: Boolean): Boolean =
-    // memoized store-level (IndexStore.memoizedProbe): tier=auto probes
-    // this per FILE per planned query — the memo bounds that to stats
-    // after the first plan. Identity covers everything the answer reads:
-    // the codes sidecar, the .meta binding, the data file, and (residual
-    // only, via centroidDigest / footer fallback) the index sidecar.
-    IndexStore.memoizedProbe(
-      (if (residual) "pqr-usable:" else "pq-usable:") + store.dir, f, column,
-      Seq(
-        store.pqPath(f, column, residual),
-        store.indexPath(f, column).stripSuffix(".pqvec") + ".meta",
-        f) ++ (if (residual) Seq(store.indexPath(f, column)) else Nil)) {
-      store.existsPq(f, column, residual) &&
-        headerIfIntact(store.pqPath(f, column, residual)).exists { h =>
-          h.residual == residual && (!residual ||
-            store.centroidDigest(f, column)
-              .orElse(scala.util.Try(
-                IndexManager.loadIndex(store, f, column).centroidDigest).toOption)
-              .contains(h.centroidDigest))
-        }
+    store.memoized(
+        if (residual) "pqr-usable" else "pq-usable", f, column,
+        Sidecar.pq(residual) +: (if (residual) Seq(Sidecar.Index) else Nil): _*) {
+      store.intact(f, column, Sidecar.pq(residual), Header).exists { h =>
+        h.residual == residual && (!residual ||
+          store.centroidDigest(f, column)
+            .orElse(scala.util.Try(
+              IndexManager.loadIndex(store, f, column).centroidDigest).toOption)
+            .contains(h.centroidDigest))
+      }
     }
 
+  /** Build sidecars ONLY for files that lack a usable one (idempotent,
+    * incremental). An append-triggered build re-trains on the grown table;
+    * existing sidecars keep their original codebook (self-contained), so
+    * cross-file ADC stays valid per file — the refine phase re-ranks in
+    * exact float space, which is what guarantees cross-file comparability.
+    */
   def ensure(
       spark: SparkSession,
       path: String,

@@ -1,6 +1,5 @@
 package graft.ivf
 
-import java.net.URI
 import java.util.PrimitiveIterator
 import java.util.stream.{IntStream, LongStream}
 
@@ -36,12 +35,6 @@ import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type}
   * downcast to f32, like the reference (`src/ivf/parquet.rs:287-291`).
   */
 object SelectiveFetch {
-
-  private def toLocal(file: String): String =
-    Try(new URI(file)).toOption match {
-      case Some(u) if u.getScheme == "file" => u.getPath
-      case _ => file
-    }
 
   /** Leaf column descriptor + projected schema for an `array<float/double>`
     * column written in the standard 3-level LIST layout.
@@ -90,7 +83,8 @@ object SelectiveFetch {
     val sorted = ordinals.distinct.sorted
     val out = new ArrayBuffer[(Long, Array[Float])](sorted.length)
 
-    val inputFile = HadoopInputFile.fromPath(new Path(toLocal(file)), new Configuration())
+    val inputFile =
+      HadoopInputFile.fromPath(new Path(IndexStore.localPath(file)), new Configuration())
     val reader = ParquetFileReader.open(inputFile)
     try {
       val footer = reader.getFooter

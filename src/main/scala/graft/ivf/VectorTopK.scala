@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{array_distance, float_vector, Sq8, VectorKernels}
+import graft.ivf.IndexStore.Sidecar
 
 /** Top-k vector search: brute-force and IVF-index-accelerated paths.
   *
@@ -860,11 +861,14 @@ object VectorTopK {
         s"no usable SQ8 sidecar for file $file column '$column' (absent, stale " +
           "binding, or damaged) — build one with Sq8Sidecar.ensure")
     def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)] = {
-      // readRows requires ascending ordinals (its bounds check and
+      // rows() requires ascending ordinals (its bounds check and
       // run-coalescing depend on it); the heap is order-independent
       val cands = p.candidates(p.index(file))
       java.util.Arrays.sort(cands)
-      val codes = Sq8Sidecar.readRows(p.store.codesPath(file, p.column), cands)
+      val path = p.store.path(file, p.column, Sidecar.Sq8)
+      val codes =
+        if (cands.isEmpty) Array.empty[Array[Byte]]
+        else IndexStore.withCodes(path, Sq8Sidecar.Header)(_.rows(cands))
       val qCodes = Sq8.encode(p.q)
       val heap = new BoundedHeap(keep, cands.length)
       var i = 0
@@ -889,11 +893,11 @@ object VectorTopK {
   private final case class PqScorer(residual: Boolean) extends CoarseScorer {
     def tag: String = s"pq-$residual"
     def requireSidecar(store: IndexStore, file: String, column: String): Unit =
-      // existsPq (not usable()): a PRESENT sidecar from a dead centroid
+      // exists (not usable()): a PRESENT sidecar from a dead centroid
       // epoch must reach the reader's specific stale-epoch refusal
       // (rebuilt via ensure), not a generic absent message
       require(
-        store.existsPq(file, column, residual),
+        store.exists(file, column, Sidecar.pq(residual)),
         s"no ${if (residual) "residual " else ""}PQ sidecar for file $file column " +
           s"'$column' — build one with PqSidecar.build")
 
@@ -904,36 +908,36 @@ object VectorTopK {
       // reopening per cell would be nprobe redundant opens per task; the
       // codebook comes from the process-wide digest-keyed LRU, so a
       // multi-file table decodes it once per JVM and every other file
-      // costs a 36-byte header read
-      val reader = new PqSidecar.Reader(p.store.pqPath(file, p.column, residual))
-      val header = reader.header
-      require(
-        header.residual == residual,
-        s"PQ sidecar variant mismatch for $file (flags=${header.flags})")
-      // refuse-don't-guess: residual codes quantize vec − cellCentroid, so a
-      // retrain that moved the centroids makes them garbage under the new
-      // ADC tables — a digest mismatch is a hard error, never a recall drop
-      if (residual) require(
-        header.centroidDigest == index.centroidDigest,
-        s"stale residual PQ sidecar for $file: codes were encoded under " +
-          s"centroid epoch ${header.centroidDigest} but the index is now " +
-          s"${index.centroidDigest} (retrained since encode) — rebuild with " +
-          "PqSidecar.ensure")
-      val cb = reader.codebook
-      require(
-        cb.dim == q.length,
-        s"query dim ${q.length} != PQ codebook dim ${cb.dim} for $file")
-      val cells = p.cells(index)
-      val heap = new BoundedHeap(keep, cells.iterator.map(index.invertedLists(_).length).sum)
-      val qNorm = math.sqrt(VectorKernels.dot(q, q).toDouble)
-      // code-space 1 − cos from per-(subspace, entry) tables: dot(q, x̂) and
-      // ‖x̂‖² are EXACT sums over the code (subspaces partition coordinates),
-      // so the only approximation is x̂ itself — coarse ranking, the float
-      // refine restores the true metric
-      def angularKey(dot: Double, normSq: Double): Float =
-        if (qNorm == 0.0 || normSq <= 0.0) 2.0f
-        else (1.0 - dot / (qNorm * math.sqrt(normSq))).toFloat
-      try {
+      // costs a 40-byte header read
+      val path = p.store.path(file, p.column, Sidecar.pq(residual))
+      IndexStore.withCodes(path, PqSidecar.Header) { reader =>
+        val header = reader.header
+        require(
+          header.residual == residual,
+          s"PQ sidecar variant mismatch for $file (flags=${header.flags})")
+        // refuse-don't-guess: residual codes quantize vec − cellCentroid, so a
+        // retrain that moved the centroids makes them garbage under the new
+        // ADC tables — a digest mismatch is a hard error, never a recall drop
+        if (residual) require(
+          header.centroidDigest == index.centroidDigest,
+          s"stale residual PQ sidecar for $file: codes were encoded under " +
+            s"centroid epoch ${header.centroidDigest} but the index is now " +
+            s"${index.centroidDigest} (retrained since encode) — rebuild with " +
+            "PqSidecar.ensure")
+        val cb = PqSidecar.codebook(reader)
+        require(
+          cb.dim == q.length,
+          s"query dim ${q.length} != PQ codebook dim ${cb.dim} for $file")
+        val cells = p.cells(index)
+        val heap = new BoundedHeap(keep, cells.iterator.map(index.invertedLists(_).length).sum)
+        val qNorm = math.sqrt(VectorKernels.dot(q, q).toDouble)
+        // code-space 1 − cos from per-(subspace, entry) tables: dot(q, x̂) and
+        // ‖x̂‖² are EXACT sums over the code (subspaces partition coordinates),
+        // so the only approximation is x̂ itself — coarse ranking, the float
+        // refine restores the true metric
+        def angularKey(dot: Double, normSq: Double): Float =
+          if (qNorm == 0.0 || normSq <= 0.0) 2.0f
+          else (1.0 - dot / (qNorm * math.sqrt(normSq))).toFloat
         if (residual) {
           // IVF-ADC: codes quantize vec − cellCentroid, so the ADC table is
           // per probed cell, built from query − cellCentroid (exact identity
@@ -996,8 +1000,8 @@ object VectorTopK {
             }
           }
         }
-      } finally reader.close()
-      heap.rows(file)
+        heap.rows(file)
+      }
     }
   }
 

@@ -182,9 +182,6 @@ object Html {
       filter(transform(rawBlocks(html), b => blockTextOf(b)), t => t =!= ""),
       "\n")
 
-  /** The keep predicate over (text, linkedChars) — one place, so the
-    * column op, the exploded diagnostic op, and the scaladoc can't drift.
-    */
   /** The block tokenization both stopword signals share — stage its
     * result (struct field or projected column) and pass it to
     * [[keepPredicate]]: HOF lambda bodies get no subexpression

@@ -746,7 +746,7 @@ object VectorTopKRule {
     }
   private[plans] def internedFileList(
       rootPaths: Seq[String], inputFiles: Seq[String]): Seq[String] = {
-    val key = rootPaths.mkString(",") + " " + inputFiles.length + " " +
+    val key = rootPaths.mkString(",") + "\u0000" + inputFiles.length + "\u0000" +
       unorderedMix(inputFiles)
     fileListCache.synchronized {
       Option(fileListCache.get(key)).getOrElse {

@@ -165,24 +165,24 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("damaged SQ8 sidecars classify as unusable and self-heal via ensure") {
-    // the PqSidecar.headerIfIntact parity (review r11): a truncated .sq8
-    // must read as missing, not crash readRows inside an executor
+    // the .pq intactness parity (review r11): a truncated .sq8
+    // must read as missing, not crash a row read inside an executor
     val dir = java.nio.file.Files.createTempDirectory("graft-sq8-intact").toString
     val path = s"$dir/codes.sq8"
     val codes = Array.tabulate(40 * 8)(i => (i % 100 - 50).toByte)
-    graft.ivf.Sq8Sidecar.writeFile(path, dim = 8, codes)
-    assert(graft.ivf.Sq8Sidecar.intact(path))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), graft.ivf.Sq8Sidecar.fileBytes(dim = 8, codes))
+    assert(graft.ivf.IndexStore.intactHeader(path, graft.ivf.Sq8Sidecar.Header).isDefined)
     val full = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     // codes-region truncation: header intact, last rows missing
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/trunc.sq8"), full.dropRight(5))
-    assert(!graft.ivf.Sq8Sidecar.intact(s"$dir/trunc.sq8"))
+    assert(graft.ivf.IndexStore.intactHeader(s"$dir/trunc.sq8", graft.ivf.Sq8Sidecar.Header).isEmpty)
     // mid-header truncation
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/hdr.sq8"), full.take(6))
-    assert(!graft.ivf.Sq8Sidecar.intact(s"$dir/hdr.sq8"))
+    assert(graft.ivf.IndexStore.intactHeader(s"$dir/hdr.sq8", graft.ivf.Sq8Sidecar.Header).isEmpty)
     // untouched copy still passes
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/copy.sq8"), full)
-    assert(graft.ivf.Sq8Sidecar.intact(s"$dir/copy.sq8"))
+    assert(graft.ivf.IndexStore.intactHeader(s"$dir/copy.sq8", graft.ivf.Sq8Sidecar.Header).isDefined)
   }
 }

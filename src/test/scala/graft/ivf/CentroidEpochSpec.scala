@@ -62,7 +62,7 @@ class CentroidEpochSpec extends SparkSpec {
       spark, dir, IvfBuilder.Config("vec", nClusters = Some(5)), store)
     PqSidecar.build(spark, dir, "vec", m = 4, store, residual = true)
     val files = IndexManager.listFiles(spark, dir)
-    assert(files.forall(store.existsPq(_, "vec", residual = true)))
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Pqr)))
 
     val q = Seq.fill(dim)(0.5f)
     val k = 10
@@ -74,7 +74,7 @@ class CentroidEpochSpec extends SparkSpec {
     val rebuilt = IvfBuilder.build(
       spark, dir, IvfBuilder.Config("vec", nClusters = Some(7)), store)
     assert(
-      files.forall(f => !store.existsPq(f, "vec", residual = true)),
+      files.forall(f => !store.exists(f, "vec", IndexStore.Sidecar.Pqr)),
       "assignAndWrite must delete residual PQ sidecars of the old epoch")
 
     // ensure re-encodes under the new centroids and search is exact again
@@ -134,7 +134,7 @@ class CentroidEpochSpec extends SparkSpec {
     Sq8Sidecar.build(spark, dir, "vec", store)
     val files = IndexManager.listFiles(spark, dir)
     IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(7)), store)
-    assert(files.forall(store.existsPq(_, "vec")), "plain PQ codes are epoch-free")
-    assert(files.forall(store.existsCodes(_, "vec")), "SQ8 codes are epoch-free")
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Pq)), "plain PQ codes are epoch-free")
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Sq8)), "SQ8 codes are epoch-free")
   }
 }

@@ -52,6 +52,23 @@ class IvfIndexSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](IvfIndex.unframe(framed))
   }
 
+  test("a corrupt posting-list length is refused, not allocated") {
+    // list 0's length sits right after the 2×3 centroid matrix
+    def withList0Len(len: Int): Array[Byte] = {
+      val bytes = fixture.toBytes
+      ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).putInt(8 + 6 * 4, len)
+      bytes
+    }
+    for (len <- Seq(-1, Int.MinValue, 1000, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](IvfIndex.fromBytes(withList0Len(len)))
+      assert(e.getMessage.contains("corrupt or truncated index"), e.getMessage)
+    }
+    // a payload cut inside list 1's length field
+    val cut = fixture.toBytes.dropRight(2 * 4 + 2)
+    val e = intercept[IllegalArgumentException](IvfIndex.fromBytes(cut))
+    assert(e.getMessage.contains("corrupt or truncated index"), e.getMessage)
+  }
+
   test("probe returns nprobe closest centroids ascending by distance") {
     val idx = fixture
     // query near centroid 1 (4,5,6)

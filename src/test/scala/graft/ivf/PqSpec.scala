@@ -78,21 +78,21 @@ class PqSpec extends SparkSpec {
 
     val codes = samples.flatMap(v => Pq.encode(v, cb))
     val path = Files.createTempDirectory("graft-pq").toString + "/codes.pq"
-    PqSidecar.writeFile(path, cb, codes)
-    val header = PqSidecar.readHeader(path)
+    IndexStore.writeAtomic(path, PqSidecar.fileBytes(cb, codes))
+    val header = IndexStore.withCodes(path, PqSidecar.Header)(_.header)
     assert(header.nRows == samples.length && !header.residual)
     assert(header.cbDigest == PqSidecar.codebookDigest(Pq.codebookBytes(cb)))
-    val reader = new PqSidecar.Reader(path)
-    try assert(reader.codebook == cb.copy(centroids = reader.codebook.centroids)
-      && reader.codebook.centroids.toSeq == cb.centroids.toSeq)
+    val reader = new IndexStore.CodeReader(path, PqSidecar.Header)
+    try assert(PqSidecar.codebook(reader) == cb.copy(centroids = PqSidecar.codebook(reader).centroids)
+      && PqSidecar.codebook(reader).centroids.toSeq == cb.centroids.toSeq)
     finally reader.close()
     val wanted = Array(0, 1, 2, 57, 100, 299)
-    val (_, rows) = PqSidecar.readRows(path, wanted)
+    val rows = IndexStore.withCodes(path, PqSidecar.Header)(_.rows(wanted))
     wanted.zipWithIndex.foreach { case (ri, i) =>
       assert(rows(i).toSeq == Pq.encode(samples(ri), cb).toSeq, s"ordinal $ri")
     }
     intercept[IllegalArgumentException] {
-      PqSidecar.readRows(path, Array(300))
+      IndexStore.withCodes(path, PqSidecar.Header)(_.rows(Array(300)))
     }
   }
 
@@ -102,14 +102,14 @@ class PqSpec extends SparkSpec {
     val codes = samples.flatMap(v => Pq.encode(v, cb))
     val dir = Files.createTempDirectory("graft-pq-cbcache").toString
     val paths = (0 until 4).map(i => s"$dir/part-$i.pq")
-    paths.foreach(p => PqSidecar.writeFile(p, cb, codes))
+    paths.foreach(p => IndexStore.writeAtomic(p, PqSidecar.fileBytes(cb, codes)))
     val (h0, m0) = PqSidecar.codebookCacheStats
     // repeated multi-"file" reads: at most ONE miss (the table's shared
     // codebook decodes once per JVM; it may already be cached from an
     // earlier spec if digests collide — they don't across seeds)
     for (_ <- 0 until 3; p <- paths) {
-      val r = new PqSidecar.Reader(p)
-      try assert(r.codebook.centroids.toSeq == cb.centroids.toSeq)
+      val r = new IndexStore.CodeReader(p, PqSidecar.Header)
+      try assert(PqSidecar.codebook(r).centroids.toSeq == cb.centroids.toSeq)
       finally r.close()
     }
     val (h1, m1) = PqSidecar.codebookCacheStats
@@ -122,14 +122,14 @@ class PqSpec extends SparkSpec {
     assert(PqSidecar.codebookDigest(Pq.codebookBytes(cb2)) !=
       PqSidecar.codebookDigest(Pq.codebookBytes(cb)))
     val badPath = java.nio.file.Paths.get(s"$dir/bad.pq")
-    PqSidecar.writeFile(
-      badPath.toString, cb2, samples.flatMap(v => Pq.encode(v, cb2)))
+    IndexStore.writeAtomic(
+      badPath.toString, PqSidecar.fileBytes(cb2, samples.flatMap(v => Pq.encode(v, cb2))))
     val bytes = Files.readAllBytes(badPath)
     bytes(40) = (bytes(40) ^ 0x1).toByte // inside the codebook region
     Files.write(badPath, bytes)
-    val r = new PqSidecar.Reader(badPath.toString)
+    val r = new IndexStore.CodeReader(badPath.toString, PqSidecar.Header)
     try {
-      val e = intercept[IllegalArgumentException](r.codebook)
+      val e = intercept[IllegalArgumentException](PqSidecar.codebook(r))
       assert(e.getMessage.contains("digest mismatch"))
     } finally r.close()
   }
@@ -187,7 +187,7 @@ class PqSpec extends SparkSpec {
     PqSidecar.build(spark, dir, "vec", m = 4, store, residual = true)
     PqSidecar.build(spark, dir, "vec", m = 4, store, residual = false)
     val files = IndexManager.listFiles(spark, dir)
-    assert(PqSidecar.readHeader(store.pqPath(files.head, "vec", residual = true)).residual)
+    assert(IndexStore.withCodes(store.path(files.head, "vec", IndexStore.Sidecar.Pqr), PqSidecar.Header)(_.header).residual)
 
     val q = Seq.tabulate(dim)(_ => 8.5f) // near cluster 1
     val k = 10
@@ -262,17 +262,17 @@ class PqSpec extends SparkSpec {
     val codes = samples.flatMap(v => Pq.encode(v, cb))
     val dir = Files.createTempDirectory("graft-pq-intact").toString
     val path = s"$dir/codes.pq"
-    PqSidecar.writeFile(path, cb, codes)
-    assert(PqSidecar.headerIfIntact(path).exists(_.nRows == samples.length))
+    IndexStore.writeAtomic(path, PqSidecar.fileBytes(cb, codes))
+    assert(IndexStore.intactHeader(path, PqSidecar.Header).exists(_.nRows == samples.length))
     val full = Files.readAllBytes(java.nio.file.Paths.get(path))
     // mid-codebook truncation: fixed header parses fine, codebook is gone
     Files.write(java.nio.file.Paths.get(s"$dir/midcb.pq"), full.take(50))
-    assert(PqSidecar.headerIfIntact(s"$dir/midcb.pq").isEmpty)
+    assert(IndexStore.intactHeader(s"$dir/midcb.pq", PqSidecar.Header).isEmpty)
     // codes-region truncation: header AND codebook intact, last rows missing
     Files.write(java.nio.file.Paths.get(s"$dir/midcodes.pq"), full.dropRight(8))
-    assert(PqSidecar.headerIfIntact(s"$dir/midcodes.pq").isEmpty)
+    assert(IndexStore.intactHeader(s"$dir/midcodes.pq", PqSidecar.Header).isEmpty)
     // sanity: an untouched copy still passes
     Files.write(java.nio.file.Paths.get(s"$dir/copy.pq"), full)
-    assert(PqSidecar.headerIfIntact(s"$dir/copy.pq").isDefined)
+    assert(IndexStore.intactHeader(s"$dir/copy.pq", PqSidecar.Header).isDefined)
   }
 }

@@ -88,14 +88,14 @@ class RangeSearchSpec extends SparkSpec {
   test("missing radius sidecar degrades to probe-all and stays exact") {
     val (dir, store) = fixture()
     val files = IndexManager.listFiles(spark, dir)
-    files.foreach(f => Files.deleteIfExists(Paths.get(store.radiiPath(f, "vec"))))
+    files.foreach(f => Files.deleteIfExists(Paths.get(store.path(f, "vec", IndexStore.Sidecar.Radii))))
     val near = (0 until dim).map(_ => 0.1f)
     assert(ranged(dir, store, near, 1.5f) == brute(dir, near, 1.5f))
     // ensureRadii backfills without touching the indexes
     val indexBytesBefore =
       files.map(f => Files.readAllBytes(Paths.get(store.indexPath(f, "vec"))).toSeq)
     IvfBuilder.ensureRadii(spark, dir, "vec", store)
-    assert(files.forall(store.existsRadii(_, "vec")))
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Radii)))
     val indexBytesAfter =
       files.map(f => Files.readAllBytes(Paths.get(store.indexPath(f, "vec"))).toSeq)
     assert(indexBytesBefore == indexBytesAfter)

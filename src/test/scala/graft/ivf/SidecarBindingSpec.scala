@@ -54,7 +54,7 @@ class SidecarBindingSpec extends SparkSpec {
     // warm the decoded-index LRU so the stale-hit path is also exercised
     val cached = IndexManager.loadIndex(store, victim, "vec")
     assert(cached.nClusters == 4)
-    assert(store.exists(victim, "vec") && store.existsRadii(victim, "vec"))
+    assert(store.exists(victim, "vec") && store.exists(victim, "vec", IndexStore.Sidecar.Radii))
 
     val donorDir = Files.createTempDirectory("graft-bind-donor").toString
     writeTable(donorDir, 80, seed = 8, parts = 1)
@@ -64,7 +64,7 @@ class SidecarBindingSpec extends SparkSpec {
     assert(store.load(victim, "vec").isEmpty, "load must refuse a stale-bound sidecar")
     assert(store.peek(victim, "vec").isEmpty)
     assert(!store.exists(victim, "vec"))
-    assert(!store.existsRadii(victim, "vec"))
+    assert(!store.exists(victim, "vec", IndexStore.Sidecar.Radii))
     assert(store.centroidDigest(victim, "vec").isEmpty)
     // the warm LRU entry must not rescue the stale decode either
     val err = intercept[IllegalStateException](IndexManager.loadIndex(store, victim, "vec"))

@@ -243,7 +243,7 @@ class VectorTopKSpec extends SparkSpec {
     assert(counts.values.sum == 300L && counts.size == 3)
     // sidecar headers carry the real shape
     counts.keys.foreach { f =>
-      val (dim, n) = Sq8Sidecar.readHeader(store.codesPath(f, "vec"))
+      val Sq8Sidecar.Header(dim, n) = IndexStore.withCodes(store.path(f, "vec", IndexStore.Sidecar.Sq8), Sq8Sidecar.Header)(_.header)
       assert(dim == 8 && n.toLong == counts(f))
     }
 
@@ -286,11 +286,11 @@ class VectorTopKSpec extends SparkSpec {
       .select(col("id"), col("vec").cast("array<float>").as("vec"))
       .coalesce(1).write.mode("append").parquet(dir)
     IvfBuilder.extend(spark, dir, IvfBuilder.Config("vec"), store)
-    val before = counts.keys.map(f => store.codesPath(f, "vec") ->
-      Files.getLastModifiedTime(java.nio.file.Paths.get(store.codesPath(f, "vec")))).toMap
+    val before = counts.keys.map(f => store.path(f, "vec", IndexStore.Sidecar.Sq8) ->
+      Files.getLastModifiedTime(java.nio.file.Paths.get(store.path(f, "vec", IndexStore.Sidecar.Sq8)))).toMap
     Sq8Sidecar.ensure(spark, dir, "vec", store)
     val files4 = IndexManager.listFiles(spark, dir)
-    assert(files4.size == 4 && files4.forall(f => store.existsCodes(f, "vec")))
+    assert(files4.size == 4 && files4.forall(f => store.exists(f, "vec", IndexStore.Sidecar.Sq8)))
     // pre-existing sidecars untouched (incremental, not a rebuild)
     before.foreach { case (p, t) =>
       assert(Files.getLastModifiedTime(java.nio.file.Paths.get(p)) == t)

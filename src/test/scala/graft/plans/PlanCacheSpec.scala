@@ -2,6 +2,8 @@ package graft.plans
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -303,5 +305,19 @@ class PlanCacheSpec extends SparkSpec {
         assert(ids(served) == firstIds, "served plan must stay exact")
       } finally spark.conf.set("spark.sql.parquet.filterPushdown", savedP)
     }
+  }
+
+  // The plan-cache keys join their parts with NUL. Written as a literal
+  // byte it makes grep and rg treat the whole source file as binary and
+  // skip it silently; the "\u0000" escape is the same runtime string.
+  test("no Scala source holds a literal NUL byte") {
+    val sources = Files.walk(java.nio.file.Paths.get("src"))
+    val withNul =
+      try sources.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => Files.readAllBytes(p).contains(0.toByte))
+        .map(_.toString).toList
+      finally sources.close()
+    assert(withNul.isEmpty, s"NUL bytes in $withNul")
   }
 }

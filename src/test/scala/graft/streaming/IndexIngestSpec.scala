@@ -39,8 +39,8 @@ class IndexIngestSpec extends SparkSpec {
     assert(indexes.map(_.numRows).sum == 240L)
     // radius sidecars came along (extend shares assignAndWrite), and the
     // per-batch SQ8 maintenance kept the quantized tier live too
-    assert(files.forall(store.existsRadii(_, "vec")))
-    assert(files.forall(store.existsCodes(_, "vec")))
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Radii)))
+    assert(files.forall(store.exists(_, "vec", IndexStore.Sidecar.Sq8)))
     val sq8Ids = VectorTopK
       .search(spark, tableDir, "vec", Seq.fill(dim)(0.4f), 10,
         VectorTopK.Options(nprobe = 64, tier = VectorTopK.Tier.Sq8, oversample = Some(24)),
