@@ -6,6 +6,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 /** Sidecar persistence for per-data-file IVF indexes and their companions,
   * and the one copy of their file IO: naming, atomic writes, positioned
   * reads, the binding check and the probe memo.
@@ -673,4 +678,16 @@ object IndexStore {
     * other string passes through).
     */
   def localPath(dataFile: String): String = canonicalPath(dataFile).stripPrefix("file:")
+
+  /** The Hadoop configuration every parquet open here reads: a default
+    * `Configuration`, built once per JVM (each build re-parses the XML
+    * resources) and only read, never mutated.
+    */
+  private val hadoopConf: Configuration = new Configuration()
+
+  /** Open the parquet file at `path` through Hadoop's filesystem, so a
+    * local file's `.crc` checksum is verified on read.
+    */
+  private[ivf] def openParquet(path: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), hadoopConf))
 }

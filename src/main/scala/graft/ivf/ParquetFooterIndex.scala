@@ -6,13 +6,10 @@ import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.Util
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Read path for indexes embedded INSIDE a Parquet file, the reference's
   * native layout (`/root/reference/src/ivf/parquet.rs:105-208`): the index
@@ -26,8 +23,7 @@ object ParquetFooterIndex {
 
   /** Footer KV lookup: (index byte offset, embedding column) if present. */
   def indexMetadata(file: String): Option[(Long, String)] = {
-    val inputFile = HadoopInputFile.fromPath(new Path(file), new Configuration())
-    val reader = ParquetFileReader.open(inputFile)
+    val reader = IndexStore.openParquet(file)
     try {
       val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData.asScala
       for {
@@ -52,8 +48,7 @@ object ParquetFooterIndex {
     */
   def embedInPlace(file: String, column: String, index: IvfIndex): Unit = {
     val local = IndexStore.localPath(file)
-    val inputFile = HadoopInputFile.fromPath(new Path(local), new Configuration())
-    val reader = ParquetFileReader.open(inputFile)
+    val reader = IndexStore.openParquet(local)
     val footer: ParquetMetadata =
       try reader.getFooter
       finally reader.close()

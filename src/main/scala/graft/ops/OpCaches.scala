@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Per-session registry of OP-INTERNAL persisted intermediates, with one
   * documented release hook — the r15 generalization of the scoreBulk
@@ -39,11 +40,15 @@ object OpCaches {
     * op-internal multi-consumer persist goes through.
     */
   private[graft] def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     register(df.sparkSession, p)
     p
   }
 
+  /** Register `df` for [[release]]. Frames already unpersisted outside
+    * the registry are dropped from the queue first, so a long-lived
+    * session that unpersists on its own does not grow it per call.
+    */
   private[graft] def register(spark: SparkSession, df: DataFrame): Unit =
     caches.synchronized {
       var q = caches.get(spark)
@@ -51,8 +56,13 @@ object OpCaches {
         q = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
         caches.put(spark, q)
       }
+      q.removeIf(_.storageLevel == StorageLevel.NONE): Unit
       q.add(df): Unit
     }
+
+  /** How many frames are queued for [[release]] in `spark`. */
+  private[graft] def queued(spark: SparkSession): Int =
+    caches.synchronized(Option(caches.get(spark)).fold(0)(_.size))
 
   /** Unpersist every op-internal cache registered in `spark` and return
     * how many were dropped. Call AFTER the consuming action — an

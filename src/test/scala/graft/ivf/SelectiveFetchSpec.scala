@@ -1,10 +1,30 @@
 package graft.ivf
 
 import java.nio.file.Files
+import java.util.{Optional, PrimitiveIterator}
+import java.util.stream.LongStream
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.util.Random
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.bytes.{BytesInput, HeapByteBufferAllocator}
+import org.apache.parquet.column.{ColumnDescriptor, Encoding}
+import org.apache.parquet.column.page.{DataPage, DataPageV1, DataPageV2, DictionaryPage,
+  PageReadStore, PageReader}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.column.values.plain.PlainValuesWriter
+import org.apache.parquet.column.values.rle.RunLengthBitPackingHybridEncoder
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
@@ -133,5 +153,338 @@ class SelectiveFetchSpec extends SparkSpec {
     // capped fetch bounds the result set: at most 40 candidates survive
     assert(res.length <= 40 && res.nonEmpty)
     assert(res.map(_.distance).toSeq == res.map(_.distance).sorted.toSeq)
+  }
+
+  // ---- differential test: Spark's own reader is the oracle ---------------
+
+  /** One random row: None = null vector; Some(Seq()) = empty list; a None
+    * element = null element. Lengths are ragged; values mix a small pool
+    * (so dictionaries form), random draws and the float specials, or come
+    * from the pool alone with `poolOnly`.
+    */
+  private def randomVec(rnd: Random, poolOnly: Boolean = false): Option[Seq[Option[Double]]] = {
+    val pool = Array(0.0, -0.0, 1.5, -2.25, 1e-3, 3.0e38, Double.NaN,
+      Double.PositiveInfinity, java.lang.Float.MIN_VALUE.toDouble, 0.1)
+    rnd.nextInt(20) match {
+      case 0 => None
+      case 1 => Some(Seq.empty)
+      case _ =>
+        Some(Seq.fill(1 + rnd.nextInt(12)) {
+          rnd.nextInt(40) match {
+            case 0 => None
+            case k if k < 20 || poolOnly => Some(pool(rnd.nextInt(pool.length)))
+            case _ => Some(rnd.nextGaussian() * 100)
+          }
+        })
+    }
+  }
+
+  private def writeSpark(
+      dir: String, rows: Seq[Option[Seq[Option[Double]]]], double: Boolean,
+      opts: Map[String, String]): String = {
+    val elem = if (double) DoubleType else FloatType
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("vec", ArrayType(elem, containsNull = true), nullable = true)))
+    val data: Seq[Row] = rows.zipWithIndex.map { case (v, i) =>
+      val vec = v.map(_.map {
+        case Some(x) => if (double) (x: Any) else (x.toFloat: Any)
+        case None => null
+      })
+      Row(i.toLong, vec.orNull)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+      .write.mode("overwrite").options(opts).parquet(dir)
+    oneFile(dir)
+  }
+
+  /** A BYTE_STREAM_SPLIT file: Spark's writer cannot enable that
+    * encoding, so parquet's example writer writes the same 3-level list.
+    */
+  private def writeByteStreamSplit(
+      dir: String, rows: Seq[Option[Seq[Option[Double]]]], double: Boolean): String = {
+    val elem = if (double) "double" else "float"
+    val schema = MessageTypeParser.parseMessageType(
+      s"""message spark_schema {
+         |  required int64 id;
+         |  optional group vec (LIST) { repeated group list { optional $elem element; } }
+         |}""".stripMargin)
+    val file = s"$dir/part-0.parquet"
+    val w = ExampleParquetWriter.builder(new Path(file))
+      .withType(schema).withConf(new Configuration())
+      .withByteStreamSplitEncoding(true).withDictionaryEncoding(false)
+      .withPageRowCountLimit(9).withPageSize(512).withRowGroupSize(4096L)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.zipWithIndex.foreach { case (v, i) =>
+      val g = groups.newGroup().append("id", i.toLong)
+      v.foreach { xs =>
+        val list = g.addGroup("vec")
+        xs.foreach { x =>
+          val e = list.addGroup("list")
+          x.foreach(d => if (double) e.append("element", d) else e.append("element", d.toFloat))
+        }
+      }
+      w.write(g)
+    } finally w.close()
+    file
+  }
+
+  private def footerOf[T](file: String)(f: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file), new Configuration()))
+    try f(r) finally r.close()
+  }
+
+  /** File-absolute (first, last) rows of every page of `vec` (of every
+    * row group where there is no offset index), and the page kinds
+    * ("V1"/"V2" + value encoding) the file holds.
+    */
+  private def pageLayout(file: String): (Seq[(Long, Long)], Set[String]) = footerOf(file) { r =>
+    val spans = ArrayBuffer[(Long, Long)]()
+    var start = 0L
+    r.getFooter.getBlocks.asScala.foreach { b =>
+      val chunk = b.getColumns.asScala.find(_.getPath.toDotString.startsWith("vec")).get
+      val oi = r.readOffsetIndex(chunk)
+      if (oi == null) spans += ((start, start + b.getRowCount - 1))
+      else (0 until oi.getPageCount).foreach { p =>
+        spans += ((start + oi.getFirstRowIndex(p), start + oi.getLastRowIndex(p, b.getRowCount)))
+      }
+      start += b.getRowCount
+    }
+    val desc = r.getFooter.getFileMetaData.getSchema.getColumns.asScala
+      .find(_.getPath.head == "vec").get
+    val kinds = Set.newBuilder[String]
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val pr = pages.getPageReader(desc)
+      var page = pr.readPage()
+      while (page != null) {
+        kinds += (page match {
+          case p: DataPageV1 => s"V1:${p.getValueEncoding}"
+          case p: DataPageV2 => s"V2:${p.getDataEncoding}"
+          case other => other.getClass.getSimpleName
+        })
+        page = pr.readPage()
+      }
+      pages.close()
+      pages = r.readNextRowGroup()
+    }
+    (spans.toSeq, kinds.result())
+  }
+
+  /** Spark's reading of `file`: row_index → vector bits, under the fetch's
+    * skip rules (null vector, empty list, null element → no row; double →
+    * `toFloat`).
+    */
+  private def oracle(file: String, vectorized: Boolean): Map[Long, Seq[Int]] = {
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, vectorized.toString)
+    val rows =
+      try spark.read.parquet(file).select(col("_metadata.row_index"), col("vec")).collect()
+      finally spark.conf.set(key, prior)
+    rows.flatMap { r =>
+        if (r.isNullAt(1)) None
+        else {
+          val xs = r.getSeq[Any](1)
+          if (xs.isEmpty || xs.contains(null)) None
+          else Some(r.getLong(0) -> xs.map {
+            case d: Double => java.lang.Float.floatToRawIntBits(d.toFloat)
+            case f: Float => java.lang.Float.floatToRawIntBits(f)
+          })
+        }
+      }.toMap
+  }
+
+  /** Random candidate sets over `spans`: set 0 holds every page's first
+    * and last row (so every page is read, the whole-row-group path); the
+    * rest hold the first and last rows of a random subset of pages (the
+    * page-filtered path) plus random rows. Every set adds duplicates,
+    * ordinals at and beyond the row count, and a negative one.
+    */
+  private def candidateSets(
+      rnd: Random, spans: Seq[(Long, Long)], nRows: Int): Seq[Array[Int]] =
+    (0 until 5).map { s =>
+      val pages = if (s == 0) spans else spans.filter(_ => rnd.nextInt(3) == 0)
+      val edges = pages.flatMap { case (a, b) => Seq(a.toInt, b.toInt) }
+      val random = Seq.fill(rnd.nextInt(1 + nRows / 4))(rnd.nextInt(nRows))
+      val base = edges ++ random
+      val dups = base.take(1 + base.length / 5)
+      rnd.shuffle(base ++ dups ++ Seq(nRows, nRows + 1 + rnd.nextInt(50), -1 - rnd.nextInt(5)))
+        .toArray
+    }
+
+  private def assertMatchesOracle(
+      file: String, seed: Int, expectKinds: Set[String], vectorized: Boolean = true): Unit = {
+    val (spans, kinds) = pageLayout(file)
+    assert(expectKinds.subsetOf(kinds), s"$file: page kinds $kinds lack $expectKinds")
+    val truth = oracle(file, vectorized)
+    val nRows = spans.last._2.toInt + 1
+    val rnd = new Random(seed)
+    candidateSets(rnd, spans, nRows).foreach { cands =>
+      val got = SelectiveFetch.embeddings(file, "vec", cands)
+      val expected = cands.distinct.sorted.filter(c => truth.contains(c.toLong))
+      assert(got.map(_._1) == expected.map(_.toLong).toSeq, s"$file: ordinals")
+      got.foreach { case (ri, v) =>
+        assert(v.map(java.lang.Float.floatToRawIntBits).toSeq == truth(ri), s"$file: row $ri")
+      }
+    }
+  }
+
+  test("differential: page decode equals Spark's reader over encodings and page layouts") {
+    val small = Map(
+      "parquet.page.size" -> "256",
+      "parquet.page.row.count.limit" -> "7",
+      "parquet.page.size.row.check.min" -> "1",
+      "parquet.block.size" -> "2048")
+    var seed = 0
+    for {
+      double <- Seq(false, true)
+      dictionary <- Seq(true, false)
+      version <- Seq("v1", "v2")
+    } {
+      seed += 1
+      val rnd = new Random(seed)
+      val rows = Seq.fill(200 + rnd.nextInt(200))(randomVec(rnd))
+      val dir = Files.createTempDirectory("graft-selfetch-diff").toString
+      val file = writeSpark(dir, rows, double, small ++ Map(
+        "parquet.enable.dictionary" -> dictionary.toString,
+        "parquet.writer.version" -> version))
+      val page = if (version == "v1") "V1" else "V2"
+      val values =
+        if (!dictionary) "PLAIN"
+        else if (version == "v1") "PLAIN_DICTIONARY"
+        else "RLE_DICTIONARY"
+      assertMatchesOracle(file, seed, Set(s"$page:$values"))
+    }
+    // a dictionary that overflows mid-chunk: dictionary pages, then PLAIN
+    val rnd = new Random(99)
+    val rows = Seq.tabulate(400)(i => randomVec(rnd, poolOnly = i < 100))
+    val fallback = writeSpark(
+      Files.createTempDirectory("graft-selfetch-fallback").toString, rows, double = false,
+      small ++ Map("parquet.dictionary.page.size" -> "512", "parquet.block.size" -> "65536"))
+    assertMatchesOracle(fallback, 99, Set("V1:PLAIN_DICTIONARY", "V1:PLAIN"))
+    // BYTE_STREAM_SPLIT values: the generic ValuesReader route
+    Seq(false, true).foreach { double =>
+      val rnd = new Random(if (double) 101 else 100)
+      val rows = Seq.fill(300)(randomVec(rnd))
+      val file = writeByteStreamSplit(
+        Files.createTempDirectory("graft-selfetch-bss").toString, rows, double)
+      // Spark's vectorized reader refuses the encoding; its row reader does not
+      assertMatchesOracle(file, 100, Set("V1:BYTE_STREAM_SPLIT"), vectorized = false)
+    }
+  }
+
+  test("differential: page decode equals Spark's reader on the 1-row-page layout") {
+    val rnd = new Random(7)
+    val in = Files.createTempDirectory("graft-selfetch-diff-pg-in").toString
+    val out = Files.createTempDirectory("graft-selfetch-diff-pg-out").toString
+    // fixed dim, no nulls: the index build refuses null vectors
+    val rows = Seq.fill(150)(Some(Seq.fill(5)(Some(rnd.nextGaussian()))))
+    writeSpark(in, rows, double = false, Map.empty)
+    IvfBuilder.rewriteWithIndex(spark, in, out,
+      IvfBuilder.Config("vec", nClusters = Some(4)), numFiles = Some(1))
+    val file = oneFile(out)
+    // the writer checks page sizes from row 100 on; every page after is 1 row
+    val spans = pageLayout(file)._1
+    assert(spans.count { case (a, b) => a == b } >= 40, s"expected 1-row pages: $spans")
+    assertMatchesOracle(file, 7, Set("V1:PLAIN"))
+  }
+
+  // ---- record boundaries on synthetic pages --------------------------------
+
+  private val listDesc: ColumnDescriptor = MessageTypeParser.parseMessageType(
+    "message m { optional group vec (LIST) { repeated group list { optional float element; } } }")
+    .getColumns.get(0)
+
+  private def rle(bitWidth: Int, levels: Seq[Int]): BytesInput = {
+    val enc = new RunLengthBitPackingHybridEncoder(
+      bitWidth, 64, 1024, HeapByteBufferAllocator.getInstance())
+    levels.foreach(enc.writeInt)
+    val bytes = enc.toBytes
+    BytesInput.concat(BytesInput.fromInt(bytes.size.toInt), bytes)
+  }
+
+  /** A V1 page of (repetition, definition, value) entries; value is used
+    * only where the definition level is the max (3).
+    */
+  private def pageV1(entries: Seq[(Int, Int, Float)]): DataPage = {
+    val values = new PlainValuesWriter(64, 1024, HeapByteBufferAllocator.getInstance())
+    entries.collect { case (_, 3, v) => values.writeFloat(v) }
+    val bytes = BytesInput.concat(
+      rle(1, entries.map(_._1)), rle(2, entries.map(_._2)), values.getBytes)
+    new DataPageV1(bytes, entries.size, bytes.size.toInt,
+      Statistics.createStats(listDesc.getPrimitiveType),
+      Encoding.RLE, Encoding.RLE, Encoding.PLAIN)
+  }
+
+  private def store(
+      pages: Seq[DataPage], rows: Long, rowIndexes: Option[Seq[Long]]): PageReadStore =
+    new PageReadStore {
+      private val it = pages.iterator
+      def getPageReader(d: ColumnDescriptor): PageReader = new PageReader {
+        def readDictionaryPage(): DictionaryPage = null
+        def getTotalValueCount: Long = pages.map(_.getValueCount.toLong).sum
+        def readPage(): DataPage = if (it.hasNext) it.next() else null
+      }
+      def getRowCount: Long = rows
+      override def getRowIndexes: Optional[PrimitiveIterator.OfLong] =
+        rowIndexes match {
+          case Some(ix) => Optional.of(LongStream.of(ix: _*).iterator())
+          case None => Optional.empty()
+        }
+    }
+
+  // rows: r0 = [1, 2, 3]; r1 = [4 .. 8], split 2 + 3 across the first page
+  // boundary; r2 = null element; r3 = [9]; r4 = empty list; r5 = [10, 11,
+  // null], its null element on the third page; r6 = [12]
+  private val boundaryPages = Seq(
+    pageV1(Seq((0, 3, 1f), (1, 3, 2f), (1, 3, 3f), (0, 3, 4f), (1, 3, 5f))),
+    pageV1(Seq((1, 3, 6f), (1, 3, 7f), (1, 3, 8f), (0, 3, 0f), (1, 2, 0f),
+      (0, 3, 9f), (0, 1, 0f), (0, 3, 10f), (1, 3, 11f))),
+    pageV1(Seq((1, 2, 0f), (0, 3, 12f))))
+
+  test("whole-row-group decode carries a record across a page boundary") {
+    val out = ArrayBuffer[(Long, Array[Float])]()
+    new SelectiveFetch.PageDecoder(listDesc, "synthetic.parquet")
+      .decodeGroup(store(boundaryPages, 7, None), 2, 100L, (100 to 106).toArray, out)
+    assert(out.map { case (ri, v) => (ri, v.toSeq) }.toSeq == Seq(
+      100L -> Seq(1f, 2f, 3f),
+      101L -> Seq(4f, 5f, 6f, 7f, 8f),
+      103L -> Seq(9f),
+      106L -> Seq(12f)))
+    // only the carried row
+    val one = ArrayBuffer[(Long, Array[Float])]()
+    new SelectiveFetch.PageDecoder(listDesc, "synthetic.parquet")
+      .decodeGroup(store(boundaryPages, 7, None), 2, 100L, Array(101), one)
+    assert(one.map { case (ri, v) => (ri, v.toSeq) }.toSeq == Seq(101L -> Seq(4f, 5f, 6f, 7f, 8f)))
+  }
+
+  test("page-filtered decode refuses a page that starts inside a record") {
+    val e = intercept[IllegalStateException] {
+      new SelectiveFetch.PageDecoder(listDesc, "synthetic.parquet").decodeGroup(
+        store(boundaryPages, 7, Some((0L to 6L))), 2, 100L, Array(103),
+        ArrayBuffer[(Long, Array[Float])]())
+    }
+    assert(e.getMessage.contains("row group 2") && e.getMessage.contains("synthetic.parquet"),
+      e.getMessage)
+  }
+
+  test("a truncated level run is refused naming the file and row group") {
+    // definition levels: a 1-byte section holding only the header of an RLE
+    // run of 5 (0x0A); its value byte is missing
+    val bytes = BytesInput.concat(
+      rle(1, Seq(0, 1, 1, 0, 1)), BytesInput.fromInt(1), BytesInput.from(Array[Byte](0x0a)))
+    val page = new DataPageV1(bytes, 5, bytes.size.toInt,
+      Statistics.createStats(listDesc.getPrimitiveType),
+      Encoding.RLE, Encoding.RLE, Encoding.PLAIN)
+    val e = intercept[IllegalStateException] {
+      new SelectiveFetch.PageDecoder(listDesc, "synthetic.parquet").decodeGroup(
+        store(Seq(page), 2, None), 2, 100L, Array(100),
+        ArrayBuffer[(Long, Array[Float])]())
+    }
+    assert(e.getMessage.contains("row group 2") && e.getMessage.contains("synthetic.parquet"),
+      e.getMessage)
   }
 }

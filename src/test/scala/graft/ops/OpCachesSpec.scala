@@ -46,4 +46,18 @@ class OpCachesSpec extends SparkSpec {
     // second release is a no-op
     assert(OpCaches.release(spark) == 0)
   }
+
+  test("register drops frames already unpersisted outside the registry") {
+    spark.sharedState.cacheManager.clearCache()
+    OpCaches.release(spark): Unit
+    val before = persistentRddCount
+    val frames = (1 to 4).map(i => spark.range(10L * i).toDF("x"))
+    frames.take(3).foreach(f => OpCaches.persist(f).count(): Unit)
+    assert(OpCaches.queued(spark) == 3)
+    frames.take(2).foreach(_.unpersist(blocking = true): Unit)
+    OpCaches.persist(frames(3)).count(): Unit
+    assert(OpCaches.queued(spark) == 2)
+    assert(OpCaches.release(spark) == 2)
+    assert(persistentRddCount == before)
+  }
 }
