@@ -1,7 +1,9 @@
 package graft.ivf
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.ArrayBuilder
+import scala.reflect.ClassTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,24 +15,33 @@ import graft.functions.VectorKernels
   * parquet.rs:22-103`, `src/ivf/index.rs:152-214`) re-expressed for Spark's
   * execution model:
   *
-  *  1. one distributed validation pass (null vectors / null elements /
-  *     inconsistent dims rejected, like `parquet.rs:241-279`);
+  *  1. one per-file validation pass (null vectors / null elements /
+  *     inconsistent dims / a non-float leaf rejected, like
+  *     `parquet.rs:241-279`): each task summarizes one file's column and
+  *     the driver merges the summaries and refuses before anything is
+  *     written;
   *  2. centroids trained ONCE on a seeded global sample collected to the
   *     driver (the reference trains on a ≤100k sample per file; sharing one
   *     centroid set across all files of a table keeps driver work O(sample),
   *     not O(files), at 100 TB — each per-file index still stores its own
   *     copy, so the on-disk format stays reference-compatible);
-  *  3. a distributed assignment pass (broadcast centroids, `mapPartitions`,
-  *     no shuffle) followed by a per-file `groupByKey` that builds the
-  *     inverted lists and writes each file's sidecar FROM THE EXECUTOR —
-  *     the driver never holds more than per-file stats. Row ids are the
-  *     file-local ordinals (`_metadata.row_index`), matching the reference's
-  *     u32 ordinals.
+  *  3. a per-file assignment pass (broadcast centroids, one task per data
+  *     file, no shuffle) that streams the file's vectors, builds its
+  *     inverted lists and writes its sidecars FROM THE EXECUTOR — the
+  *     driver never holds more than per-file stats, like the reference's
+  *     file-by-file assignment (`index.rs:189-206`). Row ids are the
+  *     file-local ordinals, matching the reference's u32 ordinals.
+  *
+  * Every per-file pass (validate, assign, code encode, radii backfill,
+  * drift histogram) reads through [[SelectiveFetch.scanFile]], the same
+  * page decoder and `.crc`-verified reads as search; its parallelism is the
+  * file count. Only the training samples and the distributed Lloyd rounds
+  * read the Spark [[scan]].
   *
   * Determinism: fixed seed → fixed sample (sorted before the driver-side
-  * k-means) → fixed centroids → fixed assignment; inverted lists sorted
-  * ascending (the reference gets that implicitly from contiguous chunking,
-  * `index.rs:193-206`).
+  * k-means) → fixed centroids → fixed assignment; inverted lists ascending,
+  * since each file streams in ordinal order (the reference gets that from
+  * contiguous chunking, `index.rs:193-206`).
   */
 object IvfBuilder {
 
@@ -127,97 +138,90 @@ object IvfBuilder {
     def numRows: Long = files.values.sum
   }
 
+  /** One task per data file: `f(file)` runs on an executor; no shuffle. */
+  private[ivf] def perFile[T: ClassTag](spark: SparkSession, files: Seq[String])(
+      f: String => T): RDD[T] =
+    spark.sparkContext.parallelize(files, math.max(files.size, 1)).map(f)
+
   /** Validation from reference `parquet.rs:241-279`: fail on null vectors,
-    * null elements, zero-length or inconsistent dims. Returns (rowCount, dim).
+    * null elements, zero-length or inconsistent dims, or a leaf that is not
+    * float/double. One task per file summarizes its column
+    * ([[SelectiveFetch.scanFile]]); the driver merges the summaries and
+    * raises. Returns (rowCount, dim).
     */
-  private[ivf] def validate(vecs: DataFrame, column: String): (Long, Int) = {
-    val stats = vecs
-      .agg(
-        count(lit(1)).as("n"),
-        count(when(col("_vec").isNull, 1)).as("null_vecs"),
-        // null-element probe without a lambda HOF (interpreted per element):
-        // array_compact drops nulls, so a size delta flags them
-        count(when(size(array_compact(col("_vec"))) =!= size(col("_vec")), 1))
-          .as("null_elems"),
-        min(size(col("_vec"))).as("min_dim"),
-        max(size(col("_vec"))).as("max_dim"))
-      .first()
-    val n = stats.getAs[Long]("n")
-    require(n > 0, "cannot build IVF index over zero vectors")
-    require(stats.getAs[Long]("null_vecs") == 0L, s"null vectors in column '$column'")
-    require(stats.getAs[Long]("null_elems") == 0L, s"null elements in column '$column'")
-    val minDim = stats.getAs[Int]("min_dim")
-    val maxDim = stats.getAs[Int]("max_dim")
-    require(minDim == maxDim, s"inconsistent vector dims: [$minDim, $maxDim]")
-    require(minDim > 0, "zero-length vectors")
-    (n, minDim)
+  private[ivf] def validate(spark: SparkSession, files: Seq[String], column: String): (Long, Int) = {
+    val summaries = perFile(spark, files) { f =>
+      try Right(SelectiveFetch.scanFile(f, column)(null))
+      catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    }.collect()
+    summaries.collectFirst { case Left(msg) => msg }
+      .foreach(msg => throw new IllegalArgumentException(msg))
+    val s = summaries.collect { case Right(s) => s }
+      .foldLeft(SelectiveFetch.ColumnSummary.Empty)(_ merge _)
+    require(s.rows > 0, "cannot build IVF index over zero vectors")
+    require(s.nullVectors == 0L, s"null vectors in column '$column'")
+    require(s.nullElements == 0L, s"null elements in column '$column'")
+    require(s.minDim == s.maxDim, s"inconsistent vector dims: [${s.minDim}, ${s.maxDim}]")
+    require(s.minDim > 0, "zero-length vectors")
+    (s.rows, s.minDim)
   }
 
-  /** The one scan every build pass reads: `(_file, _ri, _vec)` — the data
-    * file, its file-local row ordinal (`_metadata.row_index`, the
-    * reference's u32 ordinal) and the embedding cast to `array<float>` —
-    * restricted to the `only` data files when given.
+  /** The Spark scan behind the training samples and the distributed Lloyd
+    * rounds: `(_file, _ri, _vec)` — the data file, its file-local row
+    * ordinal (`_metadata.row_index`, the reference's u32 ordinal) and the
+    * embedding cast to `array<float>`.
     */
-  private[ivf] def scan(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      only: Option[Seq[String]] = None): DataFrame = {
-    val all = spark.read
+  private[ivf] def scan(spark: SparkSession, path: String, column: String): DataFrame =
+    spark.read
       .parquet(path)
       .select(
         col("_metadata.file_path").as("_file"),
         col("_metadata.row_index").as("_ri"),
         col(column).cast("array<float>").as("_vec"))
-    only.fold(all)(fs => all.where(col("_file").isin(fs: _*)))
-  }
+
+  /** Per-cell radius bound: the max member-to-centroid distance (true L2,
+    * rounded UP so the stored bound never understates a member's distance).
+    */
+  private def radii(maxDistSq: Array[Float]): Array[Float] =
+    maxDistSq.map(d => Math.nextUp(math.sqrt(d.toDouble).toFloat))
 
   /** The one executor-side pass behind every dense code sidecar (`.sq8`,
-    * `.pq`, `.pqr`): `encode` each scanned row to `width` bytes BEFORE the
-    * per-file `groupByKey` (the shuffle carries code bytes, not floats), lay
-    * each file's codes out densely in row-ordinal order, and write its
-    * `sidecar` file — `fileBytes(codes)` — FROM THE EXECUTOR. Driver state
-    * is O(files). Returns file → rows encoded.
+    * `.pq`, `.pqr`): one task per file streams its vectors, `encode`s each
+    * to `width` bytes laid out densely in row-ordinal order, and writes its
+    * `sidecar` file — `fileBytes(codes)` — FROM THE EXECUTOR. Per-file
+    * memory is the codes; driver state is O(files). Returns file → rows
+    * encoded (files without rows are skipped).
     */
   private[ivf] def writeCodes(
       spark: SparkSession,
-      vecs: DataFrame,
+      files: Seq[String],
       store: IndexStore,
       column: String,
       sidecar: IndexStore.Sidecar,
       width: Int)(
       encode: Array[Float] => Array[Byte],
-      fileBytes: Array[Byte] => Array[Byte]): Map[String, Long] = {
-    import spark.implicits._
-    vecs
-      .as[(String, Long, Array[Float])]
-      .map { case (file, ri, vec) =>
+      fileBytes: Array[Byte] => Array[Byte]): Map[String, Long] =
+    perFile(spark, files) { file =>
+      val codes = new ArrayBuilder.ofByte
+      var rows = 0L
+      SelectiveFetch.scanFile(file, column) { (ri, vec) =>
         require(
           ri <= Int.MaxValue,
           s"row ordinal $ri in $file exceeds the sidecar's 2^31 rows-per-file limit " +
             "(header stores nRows as i32) — split the file")
+        require(ri == rows, s"row $ri of $file is out of order or follows a skipped row")
+        // rows·width must fit one JVM byte array
+        require((rows + 1) * width <= Int.MaxValue,
+          s"$file holds over $rows rows × $width code bytes — over the " +
+            "2 GiB single-array sidecar limit; split the file")
         val code = encode(vec)
         require(code.length == width, s"code width ${code.length} != $width at $file:$ri")
-        (file, ri.toInt, code)
+        codes.addAll(code)
+        rows += 1
       }
-      .groupByKey(_._1)
-      .mapGroups { (file, rows) =>
-        val collected = rows.map { case (_, ri, c) => (ri, c) }.toArray
-        // rows·width must fit one JVM byte array (also bounds every
-        // ri·width offset below) — overflow would alloc a negative-sized array
-        require(collected.length.toLong * width <= Int.MaxValue,
-          s"$file holds ${collected.length} rows × $width code bytes — over the " +
-            "2 GiB single-array sidecar limit; split the file")
-        val codes = new Array[Byte](collected.length * width)
-        collected.foreach { case (ri, c) =>
-          System.arraycopy(c, 0, codes, ri * width, width)
-        }
-        IndexStore.writeAtomic(store.path(file, column, sidecar), fileBytes(codes))
-        (file, collected.length.toLong)
-      }
-      .collect()
-      .toMap
-  }
+      if (rows > 0) IndexStore.writeAtomic(store.path(file, column, sidecar), fileBytes(codes.result()))
+      (file, rows)
+    }.filter(_._2 > 0).collect().toMap
 
   /** @param embed true: write each file's index INSIDE the parquet footer
     *              region (reference-native layout, mutates the data files —
@@ -234,8 +238,9 @@ object IvfBuilder {
     require(config.maxIters > 0, "max_iters must be > 0")
     config.nClusters.foreach(k => require(k > 0, "n_clusters must be > 0"))
 
+    val files = IndexManager.listFiles(spark, path)
+    val (n, dim) = validate(spark, files, config.column)
     val vecs = scan(spark, path, config.column)
-    val (n, dim) = validate(vecs, config.column)
     val k = config.warmStart match {
       case Some(warm) =>
         require(
@@ -296,7 +301,7 @@ object IvfBuilder {
         spark, vecs, seeded, dim, k, distIters,
         relTol = if (autoEngaged) AutoSseRelTol else 0.0)
 
-    val written = assignAndWrite(spark, vecs, config.column, centroids, dim, k, store, embed)
+    val written = assignAndWrite(spark, files, config.column, centroids, dim, k, store, embed)
     BuildResult(written, dim, k, centroids)
   }
 
@@ -401,78 +406,68 @@ object IvfBuilder {
     (cents, curve.result())
   }
 
-  /** Distributed assignment + per-file inverted lists + executor-side write
-    * (shared by full builds and incremental extension).
+  /** Per-file assignment: one task per file streams its vectors, builds
+    * its inverted lists and writes its sidecars (shared by full builds and
+    * incremental extension). Returns file → rows indexed (files without
+    * rows are skipped).
     */
   private def assignAndWrite(
       spark: SparkSession,
-      vecs: DataFrame,
+      files: Seq[String],
       column: String,
       centroids: Array[Float],
       dim: Int,
       k: Int,
       store: IndexStore,
       embed: Boolean): Map[String, Long] = {
-    import spark.implicits._
     val bcCentroids = spark.sparkContext.broadcast(centroids)
-    vecs
-      .as[(String, Long, Array[Float])]
-      .mapPartitions { it =>
-        val cents = bcCentroids.value
-        it.map { case (file, ri, vec) =>
-          val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
-          // distance via the SAME accumulation order as the search kernel,
-          // so the stored radius bound dominates every query-side
-          // recomputation exactly (nearestCentroid's internal sum has a
-          // different f32 order and must NOT be reused for the bound)
-          (file, cluster, ri, VectorKernels.squaredL2Offset(vec, cents, cluster * dim))
-        }
+    perFile(spark, files) { file =>
+      val cents = bcCentroids.value
+      val lists = Array.fill(k)(new ArrayBuilder.ofInt)
+      val maxDistSq = new Array[Float](k)
+      var count = 0L
+      SelectiveFetch.scanFile(file, column) { (ri, vec) =>
+        val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
+        // distance via the SAME accumulation order as the search kernel,
+        // so the stored radius bound dominates every query-side
+        // recomputation exactly (nearestCentroid's internal sum has a
+        // different f32 order and must NOT be reused for the bound)
+        val distSq = VectorKernels.squaredL2Offset(vec, cents, cluster * dim)
+        lists(cluster) += ri.toInt
+        if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
+        count += 1L
       }
-      .groupByKey(_._1)
-      .mapGroups { (file, rows) =>
-        val lists = Array.fill(k)(new ArrayBuffer[Int]())
-        val maxDistSq = new Array[Float](k)
-        var count = 0L
-        rows.foreach { case (_, cluster, ri, distSq) =>
-          lists(cluster) += ri.toInt
-          if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
-          count += 1L
-        }
-        val sorted = lists.map { l => val a = l.toArray; java.util.Arrays.sort(a); a }
-        val index = IvfIndex(dim, k, bcCentroids.value, sorted)
+      if (count > 0) {
+        // rows stream in ordinal order, so every list is already ascending
+        val index = IvfIndex(dim, k, cents, lists.map(_.result()))
         if (embed) ParquetFooterIndex.embedInPlace(file, column, index)
         else store.write(file, column, index)
-        // per-cell radius sidecar (true L2, rounded UP so the stored bound
-        // never understates a member's distance) — the triangle-inequality
-        // bound behind exact index-pruned range search; stamped with this
-        // index's centroid epoch so an out-of-band rebuild can't leave
-        // wrong bounds in play
-        store.writeRadii(file, column,
-          maxDistSq.map(d => Math.nextUp(math.sqrt(d.toDouble).toFloat)),
-          index.centroidDigest)
+        // per-cell radius sidecar — the triangle-inequality bound behind
+        // exact index-pruned range search; stamped with this index's
+        // centroid epoch so an out-of-band rebuild can't leave wrong bounds
+        // in play
+        store.writeRadii(file, column, radii(maxDistSq), index.centroidDigest)
         // residual PQ codes (vec − cellCentroid) from a PREVIOUS centroid
         // epoch are garbage under this index — drop them here so every
         // (re)index path (build, retrain, streaming ingest) invalidates
         // uniformly; PqSidecar.ensure re-encodes on demand
         store.delete(file, column, IndexStore.Sidecar.Pqr)
-        (file, count)
       }
-      .collect()
-      .toMap
+      (file, count)
+    }.filter(_._2 > 0).collect().toMap
   }
 
   /** Backfill the per-cell radius sidecars for files whose index predates
-    * them (or was built by the reference engine): one selective scan of the
-    * embedding column of ONLY the missing files, assignment under the
-    * stored centroids, per-cell max distance, sidecar write — the indexes
-    * themselves are untouched. No-op when every file already has radii.
+    * them (or was built by the reference engine): one task per missing
+    * file streams its vectors, assigns them under the stored centroids and
+    * writes the per-cell max distance — the indexes themselves are
+    * untouched. No-op when every file already has radii.
     */
   def ensureRadii(
       spark: SparkSession,
       path: String,
       column: String,
       store: IndexStore = IndexStore.default): Unit = {
-    import spark.implicits._
     val files = IndexManager.listFiles(spark, path)
     val missing = files.filterNot(store.exists(_, column, IndexStore.Sidecar.Radii))
     if (missing.isEmpty) return
@@ -481,27 +476,18 @@ object IvfBuilder {
     val dim = existing.dim
     val k = existing.nClusters
     val epoch = existing.centroidDigest
-    scan(spark, path, column, Some(missing))
-      .select("_file", "_vec")
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val cents = bcCentroids.value
-        it.map { case (file, vec) =>
-          val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
-          (file, cluster, VectorKernels.squaredL2Offset(vec, cents, cluster * dim))
-        }
+    perFile(spark, missing) { file =>
+      val cents = bcCentroids.value
+      val maxDistSq = new Array[Float](k)
+      var count = 0L
+      SelectiveFetch.scanFile(file, column) { (_, vec) =>
+        val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
+        val distSq = VectorKernels.squaredL2Offset(vec, cents, cluster * dim)
+        if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
+        count += 1L
       }
-      .groupByKey(_._1)
-      .mapGroups { (file, rows) =>
-        val maxDistSq = new Array[Float](k)
-        rows.foreach { case (_, cluster, distSq) =>
-          if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
-        }
-        store.writeRadii(file, column,
-          maxDistSq.map(d => Math.nextUp(math.sqrt(d.toDouble).toFloat)), epoch)
-        file
-      }
-      .collect(): Unit
+      if (count > 0) store.writeRadii(file, column, radii(maxDistSq), epoch)
+    }.collect(): Unit
   }
 
   /** Incremental extension: index only the table's UNINDEXED files, reusing
@@ -536,13 +522,12 @@ object IvfBuilder {
     val counts: Map[String, Long] =
       if (missing.isEmpty) Map.empty
       else {
-        val vecs = scan(spark, path, config.column, Some(missing))
-        val (_, dim) = validate(vecs, config.column)
+        val (_, dim) = validate(spark, missing, config.column)
         require(
           dim == existing.dim,
           s"new files' vector dim $dim != existing index dim ${existing.dim}")
         assignAndWrite(
-          spark, vecs, config.column, existing.centroids, existing.dim,
+          spark, missing, config.column, existing.centroids, existing.dim,
           existing.nClusters, store, embed = false)
       }
     BuildResult(counts, existing.dim, existing.nClusters, existing.centroids)
@@ -581,62 +566,37 @@ object IvfBuilder {
     indexedCellStats(spark, files, column, k, store)._1
   }
 
-  /** ONE distributed pass over the indexed files returning BOTH the trained
-    * per-cell counts (from the stored inverted lists) and the per-cell
-    * radius envelope (max over the files' radius sidecars) —
+  /** ONE shuffle-free pass over the indexed files returning BOTH the
+    * trained per-cell counts (from the stored inverted lists) and the
+    * per-cell radius envelope (max over the files' radius sidecars) —
     * [[extendOrRetrain]]'s two drift signals share the job instead of
-    * scanning the file list twice. The envelope is `None` unless EVERY
-    * indexed file carries a valid length-k sidecar: a partial envelope
-    * (e.g. reference-built footer indexes without sidecars plus one
-    * extend-written file WITH one) would understate the trained spread and
-    * force spurious full-table rebuilds — partial coverage must disengage
-    * the distortion signal, not tighten it.
+    * scanning the file list twice. An index load is small, so the files
+    * are spread over the default parallelism rather than one task each;
+    * the driver merges k-length partials as tasks finish. The envelope is `None` unless EVERY indexed file carries
+    * a valid length-k sidecar: a partial envelope (e.g. reference-built
+    * footer indexes without sidecars plus one extend-written file WITH one)
+    * would understate the trained spread and force spurious full-table
+    * rebuilds — partial coverage must disengage the distortion signal, not
+    * tighten it.
     */
   private def indexedCellStats(
       spark: SparkSession,
       indexed: Seq[String],
       column: String,
       k: Int,
-      store: IndexStore): (Array[Long], Option[Array[Float]]) = {
-    import spark.implicits._
-    val perPartition = spark
-      .createDataset(indexed)
-      .repartition(math.min(indexed.size, spark.sparkContext.defaultParallelism))
-      .mapPartitions { it =>
-        val counts = new Array[Long](k)
-        val radii = new Array[Float](k)
-        var files = 0L
-        var filesWithRadii = 0L
-        it.foreach { f =>
-          val idx = IndexManager.loadIndex(store, f, column)
-          var c = 0
-          while (c < k) { counts(c) += idx.invertedLists(c).length; c += 1 }
-          files += 1L
-          IndexManager.validRadii(store, f, column, idx).foreach { r =>
-            filesWithRadii += 1L
-            var i = 0
-            while (i < k) { if (r(i) > radii(i)) radii(i) = r(i); i += 1 }
-          }
-        }
-        Iterator.single((counts, radii, files, filesWithRadii))
+      store: IndexStore): (Array[Long], Option[Array[Float]]) =
+    spark.sparkContext
+      .parallelize(indexed, math.min(indexed.size, spark.sparkContext.defaultParallelism))
+      .map { f =>
+        val idx = IndexManager.loadIndex(store, f, column)
+        (Array.tabulate(k)(c => idx.invertedLists(c).length.toLong),
+          IndexManager.validRadii(store, f, column, idx))
       }
-      .collect()
-    val counts = new Array[Long](k)
-    val radii = new Array[Float](k)
-    var files = 0L
-    var filesWithRadii = 0L
-    perPartition.foreach { case (c, r, f, fr) =>
-      var i = 0
-      while (i < k) {
-        counts(i) += c(i)
-        if (r(i) > radii(i)) radii(i) = r(i)
-        i += 1
+      .reduce { case ((c1, r1), (c2, r2)) =>
+        var i = 0
+        while (i < k) { c1(i) += c2(i); i += 1 }
+        (c1, r1.zip(r2).map { case (a, b) => Array.tabulate(k)(j => math.max(a(j), b(j))) })
       }
-      files += f
-      filesWithRadii += fr
-    }
-    (counts, if (files > 0 && filesWithRadii == files) Some(radii) else None)
-  }
 
   /** Total-variation distance between two cell-count histograms:
     * `0.5 * Σ |p_c − q_c|` over normalized counts — 0 means identical
@@ -670,9 +630,9 @@ object IvfBuilder {
     *     while every distance explodes — the centroids stopped describing
     *     the data even though the histogram looks stable.
     *
-    * At 100 TB the probe costs one map-side-combined groupBy over the
-    * appended files only — the trained histogram comes from the stored
-    * lists and the radius envelope from the tiny sidecars, never a rescan.
+    * At 100 TB the probe costs one task per appended file and no shuffle
+    * — the trained histogram comes from the stored lists and the radius
+    * envelope from the tiny sidecars, never a rescan.
     * Signal 2 engages only when EVERY indexed file carries a radius
     * sidecar (run [[ensureRadii]] to backfill); anything less disengages
     * it (outlierFraction = -1), keeping pre-radii and reference-built
@@ -685,7 +645,6 @@ object IvfBuilder {
       store: IndexStore = IndexStore.default,
       maxDrift: Double = 0.25,
       maxOutlierFraction: Double = 0.5): ExtendResult = {
-    import spark.implicits._
     require(maxDrift >= 0 && maxDrift <= 1, s"maxDrift must be in [0,1], got $maxDrift")
     require(
       maxOutlierFraction >= 0 && maxOutlierFraction <= 1,
@@ -709,44 +668,38 @@ object IvfBuilder {
       indexedCellStats(spark, indexed, config.column, existing.nClusters, store)
     val bcCentroids = spark.sparkContext.broadcast(existing.centroids)
     val dim = existing.dim
-    val appendedRows = scan(spark, path, config.column, Some(missing))
     // same validation contract as build/extend: a null or wrong-dim vector in
     // an appended file must fail with the clean error, not an executor NPE
     // inside the assignment pass
-    val (_, appendedDim) = validate(appendedRows, config.column)
+    val (_, appendedDim) = validate(spark, missing, config.column)
     require(
       appendedDim == dim,
       s"appended files' vector dim $appendedDim != existing index dim $dim")
     val k = existing.nClusters
     val bcRadii = spark.sparkContext.broadcast(trainedRadii.orNull)
 
-    val appended = new Array[Long](k)
-    var outliers = 0L
-    var appendedTotal = 0L
-    appendedRows
-      .select(col("_vec"))
-      .as[Array[Float]]
-      .mapPartitions { it =>
-        val cents = bcCentroids.value
-        val radii = bcRadii.value
-        it.map { v =>
-          val cell = VectorKernels.nearestCentroid(v, cents, dim)
-          val out = radii != null && {
-            val d = math
-              .sqrt(VectorKernels.squaredL2Offset(v, cents, cell * dim).toDouble)
-            d > radii(cell).toDouble
-          }
-          (cell, out)
-        }
+    // per file: the k-cell histogram plus the outlier count in slot k
+    val column = config.column
+    val appendedHist = perFile(spark, missing) { file =>
+      val cents = bcCentroids.value
+      val radii = bcRadii.value
+      val hist = new Array[Long](k + 1)
+      SelectiveFetch.scanFile(file, column) { (_, v) =>
+        val cell = VectorKernels.nearestCentroid(v, cents, dim)
+        hist(cell) += 1L
+        if (radii != null &&
+          math.sqrt(VectorKernels.squaredL2Offset(v, cents, cell * dim).toDouble) > radii(cell).toDouble)
+          hist(k) += 1L
       }
-      .groupByKey(identity)
-      .count()
-      .collect()
-      .foreach { case ((cell, out), n) =>
-        appended(cell) += n
-        appendedTotal += n
-        if (out) outliers += n
-      }
+      hist
+    }.reduce { (a, b) =>
+      var i = 0
+      while (i <= k) { a(i) += b(i); i += 1 }
+      a
+    }
+    val appended = java.util.Arrays.copyOf(appendedHist, k)
+    val outliers = appendedHist(k)
+    val appendedTotal = appended.sum
 
     val tv = totalVariation(trained, appended)
     val outlierFrac =

@@ -215,6 +215,12 @@ object IvfIndex {
     var i = 0
     while (i < centroids.length) { centroids(i) = buf.getFloat; i += 1 }
     val lists = new Array[Array[Int]](nClusters)
+    // every row of the file sits in exactly one list, so each ordinal lies
+    // in [0, total postings); one outside would be silently dropped by
+    // the fetch instead of served
+    var minOrd = 0
+    var maxOrd = -1
+    var total = 0L
     var c = 0
     while (c < nClusters) {
       require(buf.remaining >= 4, s"posting list $c is missing — corrupt or truncated index")
@@ -224,10 +230,20 @@ object IvfIndex {
           "— corrupt or truncated index")
       val list = new Array[Int](len)
       var j = 0
-      while (j < len) { list(j) = buf.getInt; j += 1 }
+      while (j < len) {
+        val o = buf.getInt
+        if (o < minOrd) minOrd = o
+        if (o > maxOrd) maxOrd = o
+        list(j) = o
+        j += 1
+      }
       lists(c) = list
+      total += len
       c += 1
     }
+    require(minOrd >= 0 && maxOrd < total,
+      s"posting ordinal ${if (minOrd < 0) minOrd else maxOrd} is outside [0, $total) " +
+        "— corrupt or truncated index")
     IvfIndex(dim, nClusters, centroids, lists)
   }
 

@@ -54,8 +54,9 @@ object Pq {
     val dsub = dim / m
     val ksub = math.min(MaxK, samples.length)
     val cents = new Array[Float](m * ksub * dsub)
-    var s = 0
-    while (s < m) {
+    // each subspace is its own seeded fit into its own slice of `cents`,
+    // so the fits run in parallel and the codebook does not change
+    java.util.stream.IntStream.range(0, m).parallel().forEach { s =>
       val flat = new Array[Float](samples.length * dsub)
       var r = 0
       while (r < samples.length) {
@@ -64,7 +65,6 @@ object Pq {
       }
       val sub = KMeans.fit(flat, dsub, KMeans.Params(ksub, maxIters, seed + s))
       System.arraycopy(sub, 0, cents, s * ksub * dsub, ksub * dsub)
-      s += 1
     }
     Codebook(m, dsub, ksub, cents)
   }

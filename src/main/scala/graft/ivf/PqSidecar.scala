@@ -168,13 +168,14 @@ object PqSidecar {
     buf.array()
   }
 
-  /** Build the per-file PQ sidecars: ONE codebook trained on a driver-side
-    * bounded sample (the IVF build's sample discipline — table-shared, like
-    * the centroid set), then a distributed encode pass; the shuffle and the
-    * per-file buffer carry `m` bytes per row, and sidecars are written FROM
-    * THE EXECUTOR ([[IvfBuilder.writeCodes]]). `only` restricts the scan for
-    * incremental appends (the codebook still trains on the whole table so
-    * codes stay comparable).
+  /** Build the per-file PQ sidecars: a per-file validation pass over the
+    * whole table, ONE codebook trained on a driver-side bounded sample (the
+    * IVF build's sample discipline — table-shared, like the centroid set),
+    * then one encode task per file that streams its vectors and writes its
+    * sidecar FROM THE EXECUTOR ([[IvfBuilder.writeCodes]]); no shuffle, and
+    * the per-file buffer holds `m` bytes per row. `only` restricts the
+    * encode to those files for incremental appends (the codebook still
+    * trains on the whole table so codes stay comparable).
     */
   def build(
       spark: SparkSession,
@@ -187,8 +188,9 @@ object PqSidecar {
       only: Option[Seq[String]] = None,
       residual: Boolean = false): Map[String, Long] = {
     import spark.implicits._
+    val files = IndexManager.listFiles(spark, path)
+    val (n, dim) = IvfBuilder.validate(spark, files, column)
     val all = IvfBuilder.scan(spark, path, column)
-    val (n, dim) = IvfBuilder.validate(all, column)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
 
     // residual (IVF-ADC) mode quantizes vec − cellCentroid under the
@@ -200,7 +202,6 @@ object PqSidecar {
     val (centroids, centroidEpoch): (Array[Float], Long) =
       if (!residual) (null, 0L)
       else {
-        val files = IndexManager.listFiles(spark, path)
         val digests = files.map { f =>
           // header-only peek for sidecars; the footer-embedded fallback
           // goes through the decoded-index LRU so repeated ensure() calls
@@ -250,8 +251,7 @@ object PqSidecar {
     val flags = if (residual) FlagResidual else 0
 
     IvfBuilder.writeCodes(
-        spark, IvfBuilder.scan(spark, path, column, only), store, column,
-        Sidecar.pq(residual), m)(
+        spark, only.getOrElse(files), store, column, Sidecar.pq(residual), m)(
       vec =>
         Pq.encode(if (bcCents.value == null) vec else toResidual(vec, bcCents.value), bcCb.value),
       fileBytes(bcCb.value, _, flags, centroidEpoch))

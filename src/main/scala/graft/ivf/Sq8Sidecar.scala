@@ -71,13 +71,13 @@ object Sq8Sidecar {
   }
 
   /** Build the per-file code sidecars for a table's embedding column —
-    * same distribution shape as the index build: one validated linear scan,
-    * quantization to 1-byte-per-element codes BEFORE the per-file
-    * `groupByKey` (the shuffle and the per-file buffer carry dim bytes per
-    * row, not 4·dim float bytes), sidecars written FROM THE EXECUTOR
-    * ([[IvfBuilder.writeCodes]]); driver state is O(files). `only`
-    * restricts the scan to those data files (incremental appends). Returns
-    * file → rows encoded.
+    * same distribution shape as the index build: a per-file validation
+    * pass, then one task per file that streams its vectors, quantizes them
+    * to 1-byte-per-element codes (the per-file buffer holds dim bytes per
+    * row, not 4·dim float bytes) and writes its sidecar FROM THE EXECUTOR
+    * ([[IvfBuilder.writeCodes]]); no shuffle, driver state is O(files).
+    * `only` restricts both passes to those data files (incremental
+    * appends). Returns file → rows encoded.
     */
   def build(
       spark: SparkSession,
@@ -85,9 +85,9 @@ object Sq8Sidecar {
       column: String,
       store: IndexStore = IndexStore.default,
       only: Option[Seq[String]] = None): Map[String, Long] = {
-    val vecs = IvfBuilder.scan(spark, path, column, only)
-    val (_, dim) = IvfBuilder.validate(vecs, column)
-    IvfBuilder.writeCodes(spark, vecs, store, column, Sidecar.Sq8, dim)(
+    val files = only.getOrElse(IndexManager.listFiles(spark, path))
+    val (_, dim) = IvfBuilder.validate(spark, files, column)
+    IvfBuilder.writeCodes(spark, files, store, column, Sidecar.Sq8, dim)(
       Sq8.encode, fileBytes(dim, _))
   }
 

@@ -69,6 +69,18 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("corrupt or truncated index"), e.getMessage)
   }
 
+  test("a posting ordinal outside [0, total postings) is refused") {
+    // the fixture's 5 postings hold ordinals 0..4; the last int is list 1's
+    // last ordinal
+    for (ord <- Seq(5, Int.MaxValue, -1)) {
+      val bytes = fixture.toBytes
+      ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).putInt(bytes.length - 4, ord)
+      val e = intercept[IllegalArgumentException](IvfIndex.fromBytes(bytes))
+      assert(e.getMessage.contains(s"posting ordinal $ord is outside [0, 5)"), e.getMessage)
+      assert(e.getMessage.contains("corrupt or truncated index"), e.getMessage)
+    }
+  }
+
   test("probe returns nprobe closest centroids ascending by distance") {
     val idx = fixture
     // query near centroid 1 (4,5,6)

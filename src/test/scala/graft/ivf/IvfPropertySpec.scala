@@ -23,14 +23,15 @@ class IvfPropertySpec extends SparkSpec {
       body(g.pureApply(Gen.Parameters.default.withSize(20), Seed(42L + i)))
     }
 
+  /** A valid index: its lists partition the ordinals `0 until rows`. */
   private val indexGen = for {
     dim <- Gen.choose(1, 16)
     k <- Gen.choose(1, 8)
     centroids <- Gen.listOfN(dim * k, Gen.choose(-10.0f, 10.0f))
-    lists <- Gen.listOfN(k, Gen.listOf(Gen.choose(0, 1000000)))
+    cells <- Gen.listOf(Gen.choose(0, k - 1))
   } yield IvfIndex(
     dim, k, centroids.toArray,
-    lists.map(_.distinct.sorted.toArray).toArray)
+    Array.tabulate(k)(c => cells.indices.filter(cells(_) == c).toArray))
 
   test("round-robin cap: the (pos, fileIdx) sorted prefix equals the quota water-fill") {
     // the lazy in-plan cap (VectorTopK.cappedCandidates sorts candidates

@@ -103,6 +103,17 @@ class SidecarFormatSpec extends SparkSpec {
         Files.write(path, full.take(n))
         assert(!served(), s"${sidecar.ext} truncated to $n of ${full.length} bytes was served")
       }
+      if (sidecar == Sidecar.Index) {
+        // full length, but the last posting (the last list's last ordinal)
+        // points one past the file's rows
+        val idx = IvfIndex.unframe(full)
+        assert(idx.invertedLists.last.nonEmpty)
+        val bad = full.clone()
+        java.nio.ByteBuffer.wrap(bad).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          .putInt(bad.length - 4, idx.numRows.toInt)
+        Files.write(path, bad)
+        assert(!served(), "an index with an out-of-range posting ordinal was served")
+      }
       sidecar match {
         case Sidecar.Sq8 => Sq8Sidecar.ensure(spark, dir, "vec", store)
         case Sidecar.Pq => PqSidecar.ensure(spark, dir, "vec", m = 4, store = store)
