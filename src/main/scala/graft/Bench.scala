@@ -57,16 +57,32 @@ object Bench {
   private def timeMin(f: => Unit): Double = BenchTiming.timeMin()(f)
   private def materialize(df: DataFrame): Unit = BenchTiming.materialize(df)
 
+  /** The timed pass over registry entries, under [[Harness.eachEntry]]'s
+    * conf restore: min of [[Reps]] runs, 3 for a [[Headline]] entry. An
+    * entry that throws reads -1 and the pass goes on: [[BenchTiming.timeMin]]
+    * catches it and logs `[name] FAIL` on stderr, and `total`/
+    * `headline_total` leave out the -1, so `Verify` and its oracle, not the
+    * bench, are what fail a broken entry.
+    */
+  private[graft] def timedPass(
+      spark: SparkSession,
+      sfDir: String,
+      names: Seq[String],
+      registry: Harness.Registry = SparkEntry.queries): Seq[(String, Double)] =
+    Harness.eachEntry(spark, "bench", names) { name =>
+      // min-of-3 for the WHOLE headline set (round-11 verdict item #4):
+      // started as q1/q3 only after their r9 6x/4x phantom regressions, but
+      // r11's official record wobbled 1.3-1.7x on seven more sub-second
+      // headline entries (vq7/vq8/va2/zq4/zq5/sq2/st1 — all at r10 level in
+      // the same-day closing run). One extra rep across the 17 headliners
+      // costs a few bench seconds and shields every judged series.
+      val reps = if (Headline.contains(name)) 3 else Reps
+      BenchTiming.timeMin(name, reps)(materialize(registry(name)(spark, sfDir)))
+    }.map { case (name, t) => name -> t.getOrElse(-1.0) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     Graft.install(spark)
 
     // warm the session first — JVM/codegen/FS first-touch must not bill the
@@ -93,27 +109,15 @@ object Bench {
     graft.ivf.PqSidecar.ensure(spark, s"$sfDir/embeddings.parquet", "embedding", m = 8)
 
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows an attribution re-probe to the
-    // entries under study; filtered runs never overwrite the full records
-    // (BENCH_LAST_LOCAL.json / BENCH_CALIBRATED.json)
+    // entries under study (the solo min-of-2 A/B protocol); filtered runs
+    // never overwrite the full records (BENCH_LAST_LOCAL.json /
+    // BENCH_CALIBRATED.json)
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
-      .split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val names = SparkEntry.queries.keys.toSeq.filterNot(VerifyOnly)
-      .filter(n => only.isEmpty || only(n)).sorted
-    // Conf hygiene (same rule as Verify): entries that pin spark.graft.*
-    // tier/nprobe/oversample keys must not leak them into whichever entry
-    // the sorted order runs next — a leaked tier conf would silently time
-    // a different plan. Snapshot once, restore after every entry.
-    val graftConf0 = spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
-    def restoreGraftConf(): Unit = {
-      spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
-        .foreach(spark.conf.unset)
-      graftConf0.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
+      .split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val names = Harness.select(only).filterNot(VerifyOnly).sorted
     // warmup pass: steady-state JIT/codegen/page-cache
-    names.foreach { name =>
-      try materialize(SparkEntry.queries(name)(spark, sfDir))
-      catch { case _: Throwable => () }
-      finally restoreGraftConf()
+    Harness.eachEntry(spark, "bench", names) { name =>
+      materialize(SparkEntry.queries(name)(spark, sfDir))
     }
     // BASELINE.md protocol metrics (k=100, nprobe=16), directly comparable
     // to the self-measured baseline table
@@ -160,19 +164,7 @@ object Bench {
       .indexed(spark, path, "embedding", query, 10,
         graft.ivf.VectorTopK.Options(nprobe = 4))
       .select("vec_id")
-    // min-of-3 for the WHOLE headline set (round-11 verdict item #4):
-    // started as q1/q3 only after their r9 6x/4x phantom regressions, but
-    // r11's official record wobbled 1.3-1.7x on seven more sub-second
-    // headline entries (vq7/vq8/va2/zq4/zq5/sq2/st1 — all at r10 level in
-    // the same-day closing run). One extra rep across the 17 headliners
-    // costs a few bench seconds and shields every judged series.
-    val extraReps = Headline.toSet
-    val queryResults: Seq[(String, Double)] = names.map { name =>
-      val reps = if (extraReps(name)) 3 else BenchTiming.DefaultReps
-      try name -> BenchTiming.timeMin(name, reps)(
-        materialize(SparkEntry.queries(name)(spark, sfDir)))
-      finally restoreGraftConf()
-    } ++ {
+    val queryResults: Seq[(String, Double)] = timedPass(spark, sfDir, names) ++ {
       materialize(sq2Raw()); materialize(va1Raw()) // warm, like the loop
       Seq(
         "sq2_ivf_cell_pairs" -> timeMin(materialize(sq2Raw())),
@@ -335,8 +327,9 @@ object Bench {
     // a reader note, not a metric: the sf-fixture maxsim number at probes=4
     // is a floor-gated DIAGNOSTIC of the operating point on a tiny
     // unclustered fixture (the clustered 500k probe measures 0.96 —
-    // MaxsimProbe, round-9 BENCHNOTES); exactness is separately gated at
-    // exhaustive probe by vq18/vq19
+    // MaxsimProbe, round-9 BENCHNOTES; its source is under BENCHNOTES
+    // "Retired tools"); exactness is separately gated at exhaustive probe
+    // by vq18/vq19
     val maxsimNote = "floor-gated diagnostic on the tiny unclustered sf " +
       "fixture; 0.96 on the clustered 500k probe (MaxsimProbe); exactness " +
       "gated at exhaustive probe by vq18/vq19"
@@ -374,14 +367,16 @@ object Bench {
     // sits over the baseline timings. The bench prints its JSON first —
     // the driver always gets the numbers — then fails loudly.
     // maxsim's operating point is validated on the CLUSTERED 500k probe
-    // (tools.MaxsimProbe: recall 1.0 at probes=4 on both layouts, round 9
-    // BENCHNOTES) — the sf fixture's uniform random vectors carry no
-    // neighborhood structure, so its absolute number is fixture-bound
-    // (0.1 at sf0.1, 0.75 at sf0.001) and only gates catastrophic
-    // candidate-rule breakage, not quality.
+    // (MaxsimProbe: recall 1.0 at probes=4 on both layouts, round 9
+    // BENCHNOTES; the probe is under BENCHNOTES "Retired tools") — the sf
+    // fixture's uniform random vectors carry no neighborhood structure, so
+    // its absolute number is fixture-bound (0.1 at sf0.1, 0.75 at
+    // sf0.001) and only gates catastrophic candidate-rule breakage, not
+    // quality.
     // mrl: sf0.1's uniform-random vectors are the iso control (prefix dims
     // carry 1/4 of the energy → 0.56 measured; the MRL-trained profile
-    // measures 0.96 — MrlScaleProbe, round-9 BENCHNOTES), so like maxsim
+    // measures 0.96 — MrlScaleProbe, round-9 BENCHNOTES, retired like
+    // MaxsimProbe), so like maxsim
     // this floor only gates catastrophic coarse-phase breakage.
     // clustered: deterministic seeded mixture at the tuned centerScale=1.0
     // point (0.951 measured); a dip below 0.85 is probe/rank code
@@ -406,7 +401,8 @@ object Bench {
     * cluster count, recall@100 vs brute at nprobe=16. `centerScale`
     * controls cluster overlap: centers ~ N(0, scale²) per dim with unit
     * point noise. The default 1.0 was TUNED to a non-degenerate operating
-    * point (ClusteredRecallProbe sweep: 0.8→0.81, 0.9→0.89, 1.0→0.951,
+    * point (the retired ClusteredRecallProbe's sweep, BENCHNOTES "Retired
+    * tools": 0.8→0.81, 0.9→0.89, 1.0→0.951,
     * 1.1→0.99, ≥1.2 saturates at 1.0 — well-separated mixtures read 1.0 no
     * matter what the probe code does, which is true but informationless),
     * sitting right at the 500k Gaussian probe's honest 0.96 band with

@@ -1004,7 +1004,7 @@ object Queries {
     * CORRECTNESS-verifiable (round-10 verdict item #1). Recall at this
     * point is a fixture property — 0/10 on sf0.1's uniform-random vectors,
     * which carry no neighborhood structure to recover (GateProbe, round-10
-    * BENCHNOTES) — so a recall oracle would gate the fixture, not the code.
+    * BENCHNOTES; its source is under BENCHNOTES "Retired tools") — so a recall oracle would gate the fixture, not the code.
     * Instead this gates the EXACT IVF contract (reference
     * `src/ivf/index.rs:57-63`): the indexed result must equal the
     * brute-force top-k over exactly the probed cells' members. The expected
@@ -3242,7 +3242,8 @@ object Queries {
     * precision (`n_false_pairs = 0` — every emitted pair must truly pass
     * the cosine threshold, the operator's fixture-independent hard
     * invariant), and recall ≥ 0.5 (measured band 0.64–0.80 across
-    * sf0.001/0.01/0.1 — GateProbe, round-10 BENCHNOTES; the bench floors
+    * sf0.001/0.01/0.1 — GateProbe, round-10 BENCHNOTES, its source under
+    * BENCHNOTES "Retired tools"; the bench floors
     * the same metric at 0.55 at sf0.1). A regression anywhere in
     * assignment, probe explode, verify, or dedup flips a count and fails
     * the hash. The raw pair path's timing stays in Bench under this name —

@@ -147,7 +147,9 @@ object IvfBuilder {
     * null elements, zero-length or inconsistent dims, or a leaf that is not
     * float/double. One task per file summarizes its column
     * ([[SelectiveFetch.scanFile]]); the driver merges the summaries and
-    * raises. Returns (rowCount, dim).
+    * raises. Returns (rowCount, dim); files without rows pass with dim 0
+    * (they get empty sidecars), so a pass that needs vectors checks the
+    * row count itself.
     */
   private[ivf] def validate(spark: SparkSession, files: Seq[String], column: String): (Long, Int) = {
     val summaries = perFile(spark, files) { f =>
@@ -158,7 +160,7 @@ object IvfBuilder {
       .foreach(msg => throw new IllegalArgumentException(msg))
     val s = summaries.collect { case Right(s) => s }
       .foldLeft(SelectiveFetch.ColumnSummary.Empty)(_ merge _)
-    require(s.rows > 0, "cannot build IVF index over zero vectors")
+    if (s.rows == 0L) return (0L, 0)
     require(s.nullVectors == 0L, s"null vectors in column '$column'")
     require(s.nullElements == 0L, s"null elements in column '$column'")
     require(s.minDim == s.maxDim, s"inconsistent vector dims: [${s.minDim}, ${s.maxDim}]")
@@ -190,7 +192,7 @@ object IvfBuilder {
     * to `width` bytes laid out densely in row-ordinal order, and writes its
     * `sidecar` file — `fileBytes(codes)` — FROM THE EXECUTOR. Per-file
     * memory is the codes; driver state is O(files). Returns file → rows
-    * encoded (files without rows are skipped).
+    * encoded; a file without rows gets an empty sidecar.
     */
   private[ivf] def writeCodes(
       spark: SparkSession,
@@ -219,9 +221,9 @@ object IvfBuilder {
         codes.addAll(code)
         rows += 1
       }
-      if (rows > 0) IndexStore.writeAtomic(store.path(file, column, sidecar), fileBytes(codes.result()))
+      IndexStore.writeAtomic(store.path(file, column, sidecar), fileBytes(codes.result()))
       (file, rows)
-    }.filter(_._2 > 0).collect().toMap
+    }.collect().toMap
 
   /** @param embed true: write each file's index INSIDE the parquet footer
     *              region (reference-native layout, mutates the data files —
@@ -240,6 +242,7 @@ object IvfBuilder {
 
     val files = IndexManager.listFiles(spark, path)
     val (n, dim) = validate(spark, files, config.column)
+    require(n > 0, "cannot build IVF index over zero vectors")
     val vecs = scan(spark, path, config.column)
     val k = config.warmStart match {
       case Some(warm) =>
@@ -408,8 +411,8 @@ object IvfBuilder {
 
   /** Per-file assignment: one task per file streams its vectors, builds
     * its inverted lists and writes its sidecars (shared by full builds and
-    * incremental extension). Returns file → rows indexed (files without
-    * rows are skipped).
+    * incremental extension) — empty ones for a file without rows, so it
+    * counts as indexed. Returns file → rows indexed.
     */
   private def assignAndWrite(
       spark: SparkSession,
@@ -437,7 +440,8 @@ object IvfBuilder {
         if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
         count += 1L
       }
-      if (count > 0) {
+      // the footer-embedded layout keeps skipping a file without rows
+      if (count > 0 || !embed) {
         // rows stream in ordinal order, so every list is already ascending
         val index = IvfIndex(dim, k, cents, lists.map(_.result()))
         if (embed) ParquetFooterIndex.embedInPlace(file, column, index)
@@ -454,7 +458,7 @@ object IvfBuilder {
         store.delete(file, column, IndexStore.Sidecar.Pqr)
       }
       (file, count)
-    }.filter(_._2 > 0).collect().toMap
+    }.filter { case (_, count) => count > 0 || !embed }.collect().toMap
   }
 
   /** Backfill the per-cell radius sidecars for files whose index predates
@@ -479,14 +483,12 @@ object IvfBuilder {
     perFile(spark, missing) { file =>
       val cents = bcCentroids.value
       val maxDistSq = new Array[Float](k)
-      var count = 0L
       SelectiveFetch.scanFile(file, column) { (_, vec) =>
         val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
         val distSq = VectorKernels.squaredL2Offset(vec, cents, cluster * dim)
         if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq
-        count += 1L
       }
-      if (count > 0) store.writeRadii(file, column, radii(maxDistSq), epoch)
+      store.writeRadii(file, column, radii(maxDistSq), epoch)
     }.collect(): Unit
   }
 
@@ -519,19 +521,27 @@ object IvfBuilder {
     // 100k-file table
     val indexedSet = indexed.toSet
     val missing = files.filterNot(indexedSet.contains)
-    val counts: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else {
-        val (_, dim) = validate(spark, missing, config.column)
-        require(
-          dim == existing.dim,
-          s"new files' vector dim $dim != existing index dim ${existing.dim}")
-        assignAndWrite(
-          spark, missing, config.column, existing.centroids, existing.dim,
-          existing.nClusters, store, embed = false)
-      }
-    BuildResult(counts, existing.dim, existing.nClusters, existing.centroids)
+    if (missing.isEmpty)
+      return BuildResult(Map.empty, existing.dim, existing.nClusters, existing.centroids)
+    val (rows, dim) = validate(spark, missing, config.column)
+    require(
+      rows == 0L || dim == existing.dim,
+      s"new files' vector dim $dim != existing index dim ${existing.dim}")
+    indexUnder(spark, missing, config.column, existing, store)
   }
+
+  /** Indexes already-validated new files under `existing`'s centroids. */
+  private def indexUnder(
+      spark: SparkSession,
+      files: Seq[String],
+      column: String,
+      existing: IvfIndex,
+      store: IndexStore): BuildResult =
+    BuildResult(
+      assignAndWrite(
+        spark, files, column, existing.centroids, existing.dim,
+        existing.nClusters, store, embed = false),
+      existing.dim, existing.nClusters, existing.centroids)
 
   /** Outcome of [[extendOrRetrain]]: what ran, and the measured drift.
     * `drift` is the total-variation distance in [0, 1] between the trained
@@ -671,7 +681,11 @@ object IvfBuilder {
     // same validation contract as build/extend: a null or wrong-dim vector in
     // an appended file must fail with the clean error, not an executor NPE
     // inside the assignment pass
-    val (_, appendedDim) = validate(spark, missing, config.column)
+    val (appendedRows, appendedDim) = validate(spark, missing, config.column)
+    // no appended vector, no drift to measure: index the empty files
+    if (appendedRows == 0L)
+      return ExtendResult(
+        indexUnder(spark, missing, config.column, existing, store), retrained = false, drift = -1.0)
     require(
       appendedDim == dim,
       s"appended files' vector dim $appendedDim != existing index dim $dim")

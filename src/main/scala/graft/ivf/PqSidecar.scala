@@ -190,6 +190,7 @@ object PqSidecar {
     import spark.implicits._
     val files = IndexManager.listFiles(spark, path)
     val (n, dim) = IvfBuilder.validate(spark, files, column)
+    require(n > 0, "cannot build IVF index over zero vectors")
     val all = IvfBuilder.scan(spark, path, column)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
 

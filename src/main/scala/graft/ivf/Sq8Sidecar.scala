@@ -77,7 +77,8 @@ object Sq8Sidecar {
     * row, not 4·dim float bytes) and writes its sidecar FROM THE EXECUTOR
     * ([[IvfBuilder.writeCodes]]); no shuffle, driver state is O(files).
     * `only` restricts both passes to those data files (incremental
-    * appends). Returns file → rows encoded.
+    * appends); when they hold no rows, their empty sidecars take the dim
+    * from the table's existing ones. Returns file → rows encoded.
     */
   def build(
       spark: SparkSession,
@@ -86,7 +87,13 @@ object Sq8Sidecar {
       store: IndexStore = IndexStore.default,
       only: Option[Seq[String]] = None): Map[String, Long] = {
     val files = only.getOrElse(IndexManager.listFiles(spark, path))
-    val (_, dim) = IvfBuilder.validate(spark, files, column)
+    val (n, filesDim) = IvfBuilder.validate(spark, files, column)
+    val dim =
+      if (n > 0 || only.isEmpty) filesDim
+      else IndexManager.listFiles(spark, path).iterator
+        .flatMap(store.intact(_, column, Sidecar.Sq8, Header))
+        .map(_.dim).nextOption().getOrElse(0)
+    require(dim > 0, "cannot build IVF index over zero vectors")
     IvfBuilder.writeCodes(spark, files, store, column, Sidecar.Sq8, dim)(
       Sq8.encode, fileBytes(dim, _))
   }

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * collect the word-frequency table once and run the merge loop in
   * memory with incremental pair maintenance (measured: 1000 merges in
   * 2.3 s on the 500k-doc scale corpus vs 0.38 s/merge ≈ 383 s projected
-  * for the job-per-merge form — BpeScaleProbe, round-10 BENCHNOTES).
+  * for the job-per-merge form — BpeScaleProbe, round-10 BENCHNOTES; the
+  * probe's source is under BENCHNOTES "Retired tools").
   *
   * Representation: a word's symbol sequence is a string with a DOUBLE
   * `\u001F` separator at every boundary (`"␟␟a␟␟b␟␟"`); merging pair

@@ -295,7 +295,8 @@ object Lexical {
     * the layout prunes nothing and still charges a per-row set probe
     * inside the scan — measured 68.5 s for a 55k-term isin vs 51.4 s for
     * the equivalent semi-join vs 45.8 s for no filter at all on the same
-    * 248M-posting corpus (LexicalScaleProbe r13). Up to this size the In
+    * 248M-posting corpus (LexicalScaleProbe r13, now in BENCHNOTES
+    * "Retired tools"). Up to this size the In
     * list still has a real chance of pruning buckets/row groups (the r12
     * rare-batch shape: ≤64k pairs of ≤8k distinct terms, 17.9 → 1.12 s).
     */
@@ -331,8 +332,9 @@ object Lexical {
   private[graft] var MidPushdownMaxBytes = 64L << 20
 
   /** Probe/test hook: force the pre-mid-tier full-scan join for over-cap
-    * batches, so LexicalScaleProbe can A/B the mid-tier against the old
-    * plan on the SAME batch. Never set in production paths.
+    * batches, so a spec (and the retired LexicalScaleProbe) can A/B the
+    * mid-tier against the old plan on the SAME batch. Never set in
+    * production paths.
     */
   @volatile private[graft] var disableMidTier = false
 

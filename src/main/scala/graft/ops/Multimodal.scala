@@ -256,7 +256,8 @@ object Multimodal {
     /** Direct RIFF/WAVE PCM16 parse — the executor fast path. The JDK's
       * `AudioSystem.getAudioInputStream` serializes on a global SPI lock:
       * measured 55k decodes/s single-threaded and 51k/s TOTAL at 32
-      * threads (zero scaling — MediaScaleProbe/round-12 review), which
+      * threads (zero scaling — MediaScaleProbe/round-12 review; the probe
+      * is under BENCHNOTES "Retired tools"), which
       * made audio the only non-parallel decode path in the engine. The
       * canonical container (RIFF → fmt(PCM, 16-bit) → data, unknown
       * chunks skipped) is ~30 lines of public-spec byte math and scales

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{array_distance, bin1_encode, bin1_hamming, float_vector, sq8_decode, sq8_distance_sq, sq8_encode, Bin1, Sq8}
+import graft.functions.{array_distance, bin1_encode, bin1_hamming, float_vector, sq8_distance_sq, sq8_encode, Bin1, Sq8}
 
 /** Int8 scalar-quantized (SQ8) storage and search over embedding columns.
   *
@@ -22,10 +22,6 @@ object Quantize {
     */
   def compress(df: DataFrame, vecCol: String, codeCol: String = "sq8"): DataFrame =
     df.withColumn(codeCol, sq8_encode(col(vecCol)))
-
-  /** Reconstruct an `array<float>` column from SQ8 codes. */
-  def decompress(df: DataFrame, codeCol: String, vecCol: String): DataFrame =
-    df.withColumn(vecCol, sq8_decode(col(codeCol)))
 
   /** Coarse top-k directly on a code column: integer code-space squared L2,
     * `TakeOrderedAndProject` (per-partition heaps, k rows to the driver).

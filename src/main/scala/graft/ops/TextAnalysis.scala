@@ -142,15 +142,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "et", "est", "pas"),
     "zh" -> Seq("的", "是", "不", "了", "在"))
 
-  /** Hit count for one marker vocabulary (a single-vocabulary projection of
-    * [[allMarkerCounts]] when it is a known language's, else a one-off HOF).
-    */
-  def markerCount(text: Column, markers: Seq[String]): Column = {
-    val i = LangMarkers.indexWhere(_._2 == markers)
-    if (i >= 0) allMarkerCounts(text).getItem(i)
-    else size(filter(tokens(text), w => w.isin(markers: _*)))
-  }
-
   /** All language marker counts in ONE tokenization pass (native
     * expression), ordered like [[LangMarkers]].
     */

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.ivf.{IndexManager, IndexStore, IvfBuilder, Recall, VectorTopK}
+import graft.ivf.{IndexStore, IvfBuilder, Recall, VectorTopK}
 
 /** Self-measured BASELINE protocol (BASELINE.md "Self-measured baseline"):
   * reference-default index params on sf0.1 embeddings, k=100, nprobe=16 —
@@ -17,13 +15,7 @@ object Baseline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 16)
     graft.Graft.install(spark)
 
     val path = s"$sfDir/embeddings.parquet"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.ivf.{IndexStore, IvfBuilder, PqSidecar, Sq8Sidecar}
@@ -27,13 +26,7 @@ import graft.plans.VectorTopKRule
 object PlanLatencyProbe {
   def main(args: Array[String]): Unit = {
     val fileCounts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(512, 2048, 8192)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
     import spark.implicits._
     graft.Graft.install(spark)
 

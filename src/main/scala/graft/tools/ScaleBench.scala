@@ -73,15 +73,8 @@ object ScaleBench {
     val trueClusters = 64
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/repo/.graft/scale")
     val corpus = s"$baseDir/corpus_${rows}x$dim"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
     // deliberately NOT Graft.install: every path below is the programmatic
     // API, and the brute baseline must never meet the rewrite rule
 

@@ -78,31 +78,14 @@ object TextScaleBench {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** Generate-or-reuse the seeded corpus (env-sized); returns its path.
-    * Shared with [[BpeScaleProbe]]. The dir is generator-versioned: a
-    * generator change must never silently reuse a stale cached corpus.
-    */
-  def ensureCorpus(spark: SparkSession): String = {
-    val rows = sys.env.getOrElse("SPARK_GRAFT_TEXTSCALE_ROWS", "500000").toLong
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_TEXTSCALE_DIR", "/root/repo/.graft/scale")
-    val corpus = s"$baseDir/docs_${rows}_v2"
-    if (!new java.io.File(corpus).exists()) generate(spark, corpus, rows)
-    corpus
-  }
-
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_TEXTSCALE_ROWS", "500000").toLong
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_TEXTSCALE_DIR", "/root/repo/.graft/scale")
+    // generator-versioned: a generator change must never silently reuse a
+    // stale cached corpus
     val corpus = s"$baseDir/docs_${rows}_v2"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
 
     val genTime =
       if (new java.io.File(corpus).exists()) -1.0

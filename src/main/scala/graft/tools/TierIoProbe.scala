@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.ivf.{IndexManager, IndexStore, IvfBuilder, PqSidecar, Sq8Sidecar, VectorTopK}
 
@@ -86,13 +86,7 @@ object TierIoProbe {
       (if (numFiles == 16) s"${corpus}_bycell" else s"${corpus}_bycell$numFiles") +
         pageSuffix
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(defaultCpus = 32)
 
     if (!new java.io.File(corpus).exists())
       ScaleBench.generate(spark, corpus, rows, dim, trueClusters)

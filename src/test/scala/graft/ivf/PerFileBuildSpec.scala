@@ -125,6 +125,82 @@ class PerFileBuildSpec extends SparkSpec {
     assert(radii.forall(_._2 == 0L), s"radii: $radii")
     assert(files.forall(store.exists(_, "vec", Sidecar.Radii)))
   }
+
+  test("a 0-row file appended to an indexed table gets empty sidecars and changes no answer") {
+    emptyAppend { (dir, store) => IvfBuilder.extend(spark, dir, IvfBuilder.Config("vec"), store) }
+  }
+
+  test("extendOrRetrain indexes a 0-row append without retraining or measuring drift") {
+    emptyAppend { (dir, store) =>
+      val grown = IvfBuilder.extendOrRetrain(spark, dir, IvfBuilder.Config("vec"), store)
+      assert(!grown.retrained)
+      assert(grown.drift == -1.0)
+      assert(grown.build.files.size == 1 && grown.build.files.values.forall(_ == 0L), grown.build.files)
+    }
+  }
+
+  /** A 2-file table plus a `df.limit(0)` append: `grow` indexes the append,
+    * after which every sidecar ensure succeeds, a second round writes
+    * nothing, and search, indexed and the rewritten SQL answer as before.
+    */
+  private def emptyAppend(grow: (String, IndexStore) => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-perfile-empty").toString
+    (0 until 2).foreach(writeFile(dir, _))
+    val store = new IndexStore(Files.createTempDirectory("graft-perfile-empty-store").toString)
+    IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    def ensureCodes(): Unit = {
+      Sq8Sidecar.ensure(spark, dir, "vec", store)
+      PqSidecar.ensure(spark, dir, "vec", m = 4, store)
+      PqSidecar.ensure(spark, dir, "vec", m = 4, store, residual = true)
+    }
+    ensureCodes()
+
+    val query = Seq.fill(16)(0.5f)
+    val options = VectorTopK.Options(nprobe = 4)
+    val view = "graft_perfile_empty"
+    def answers() = {
+      val search = VectorTopK.search(spark, dir, "vec", query, 10, options, store)
+        .collect().toSeq
+      val indexed = VectorTopK.indexed(spark, dir, "vec", query, 10, options, store = store)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      spark.read.parquet(dir).createOrReplaceTempView(view)
+      val sql = spark.sql(
+        s"""SELECT id FROM $view
+           |ORDER BY array_distance(vec, array(${Seq.fill(16)("0.5F").mkString(",")})) ASC
+           |LIMIT 10""".stripMargin)
+      assert(graft.Graft.tierResolution(sql).isDefined, "the SQL rewrite declined the table")
+      (search, indexed, sql.collect().map(_.getLong(0)).toSeq)
+    }
+
+    spark.conf.set(graft.plans.VectorTopKRule.IndexDirKey, store.dir)
+    spark.conf.set(graft.plans.VectorTopKRule.NprobeKey, "4")
+    try {
+      val before = answers()
+      spark.createDataFrame(Seq((0L, Seq(0f)))).toDF("id", "vec")
+        .select(col("id"), col("vec").cast("array<float>").as("vec"))
+        .limit(0).write.mode("append").parquet(dir)
+      val files = IndexManager.listFiles(spark, dir)
+      assert(files.size == 3)
+
+      grow(dir, store)
+      IvfBuilder.ensureRadii(spark, dir, "vec", store)
+      ensureCodes()
+      val families = Seq(Sidecar.Index, Sidecar.Radii, Sidecar.Sq8, Sidecar.Pq, Sidecar.Pqr)
+      def stamps() = for (f <- files; s <- families)
+        yield Files.getLastModifiedTime(Paths.get(store.path(f, "vec", s)))
+      val written = stamps()
+      // the second round finds every sidecar in place and writes nothing
+      IvfBuilder.extend(spark, dir, IvfBuilder.Config("vec"), store)
+      IvfBuilder.ensureRadii(spark, dir, "vec", store)
+      ensureCodes()
+      assert(stamps() == written)
+
+      assert(answers() == before)
+    } finally {
+      spark.conf.unset(graft.plans.VectorTopKRule.IndexDirKey)
+      spark.conf.unset(graft.plans.VectorTopKRule.NprobeKey)
+    }
+  }
 }
 
 object PerFileBuildSpec {

@@ -7,8 +7,8 @@ import graft.SparkSpec
 /** Pins the r15 release-path contract for op-internal persists: every
   * operator that persists a multi-consumer intermediate registers it with
   * [[OpCaches]], and one `release(spark)` call after consumption drops
-  * ALL of them — zero persistent RDDs left (the LexicalScaleProbe
-  * precedent for scoreBulk, now engine-wide).
+  * ALL of them — zero persistent RDDs left (the precedent the retired
+  * LexicalScaleProbe set for scoreBulk, now engine-wide).
   */
 class OpCachesSpec extends SparkSpec {
   import spark.implicits._
