@@ -415,8 +415,20 @@ object Bench {
     val dir = java.nio.file.Files.createTempDirectory("graft-bench-clust").toString
     val storeDir =
       java.nio.file.Files.createTempDirectory("graft-bench-clust-store").toString
+    // the build samples the scan per input split (seed + split index).
+    // Spark sizes splits by the default parallelism unless minPartitionNum
+    // is set, and orders files by size, ties by their random names. So the
+    // corpus is 8 files of distinct row counts (10,750 + 500·s rows), one
+    // slice each with no round-robin repartition, and minPartitionNum is
+    // pinned: the files, the splits, the sample and the centroids depend
+    // neither on the session's core count nor on the file names
+    val minPartitionNum = "spark.sql.files.minPartitionNum"
+    val priorMinPartitionNum = spark.conf.getOption(minPartitionNum)
+    spark.conf.set(minPartitionNum, "8")
     try {
-    spark.range(nRows).map { i =>
+    val bounds = (0 to 8).map(s => 10750L * s + 250L * s * (s - 1))
+    require(bounds.last == nRows)
+    (0 until 8).map(s => spark.range(bounds(s), bounds(s + 1), 1, 1)).reduce(_ union _).map { i =>
       val cr = new scala.util.Random(1234 + (i % centers))
       val center = Array.fill(dims)((cr.nextGaussian() * centerScale).toFloat)
       val pr = new scala.util.Random(5678 + i)
@@ -426,7 +438,7 @@ object Bench {
         org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.col("embedding")
           .cast("array<float>").as("embedding"))
-      .repartition(8).write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(dir)
     val cstore = new graft.ivf.IndexStore(storeDir)
     // index at the builder's natural ⌈√n⌉ cluster count (~316 here), NOT
     // the mixture's 64: nprobe16 then probes ~5% of cells — the same
@@ -448,6 +460,8 @@ object Bench {
     }
     recalls.sum / recalls.size
     } finally {
+      priorMinPartitionNum.fold(spark.conf.unset(minPartitionNum))(
+        spark.conf.set(minPartitionNum, _))
       // both temp trees (100k-vector corpus + sidecar store) are per-run
       // scratch — delete them so repeated bench runs don't accumulate
       // unbounded /tmp usage on the bench host

@@ -2,8 +2,12 @@ package graft.ivf
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Process-wide cache of built IVF indexes, keyed by (table path, column).
   * `ensure` builds with the reference's default parameters on first use and
@@ -21,13 +25,70 @@ object IndexManager {
 
   private val cache = TrieMap.empty[(String, String), TableIndex]
 
-  /** Enumerate data files from the driver-side file index (no scan job);
-    * canonical form matches `_metadata.file_path` and the store keys.
+  /** A table's data files (canonical form, sorted) and its partition
+    * column names, as Spark's file index lists them.
     */
-  def listFiles(spark: SparkSession, path: String): Seq[String] =
-    spark.read.parquet(path).inputFiles.toSeq
-      .map(IndexStore.canonicalPath)
-      .sorted
+  private[graft] final case class Listing(files: Seq[String], partitionColumns: Seq[String])
+
+  /** Spark's own file index over the table at `path`, listed now. Building
+    * it infers no schema, so it runs no Spark job (a directory with more
+    * subdirectories than `spark.sql.sources.parallelPartitionDiscovery
+    * .threshold` is listed by one, as for any Spark read). `schema`, when
+    * given, types the partition columns the way a read with that schema
+    * does.
+    */
+  private def fileIndex(
+      spark: SparkSession, path: String, schema: Option[StructType]): InMemoryFileIndex = {
+    val root = new Path(path)
+    val qualified = root.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(root)
+    new InMemoryFileIndex(spark, Seq(qualified), Map.empty[String, String], schema)
+  }
+
+  /** List the table at `path` again (never memoized: a new partition
+    * directory under a partitioned root changes no directory a memo could
+    * stat).
+    */
+  private[graft] def listTable(spark: SparkSession, path: String): Listing = {
+    val index = fileIndex(spark, path, None)
+    Listing(
+      index.inputFiles.toSeq.map(IndexStore.canonicalPath).sorted,
+      index.partitionSchema.fieldNames.toSeq)
+  }
+
+  /** Enumerate data files from the driver-side file index (no scan job,
+    * no schema inference); canonical form matches `_metadata.file_path` and
+    * the store keys. The same files `spark.read.parquet(path).inputFiles`
+    * names.
+    */
+  def listFiles(spark: SparkSession, path: String): Seq[String] = listTable(spark, path).files
+
+  /** Each data file's partition values (canonical path → values), the
+    * partition columns typed by `schema` (the table's full schema).
+    */
+  private[graft] def partitionValues(
+      spark: SparkSession, path: String, schema: StructType): Map[String, InternalRow] =
+    fileIndex(spark, path, Some(schema)).listFiles(Nil, Nil).iterator.flatMap { dir =>
+      val values = dir.values.copy()
+      dir.files.iterator.map(f => IndexStore.canonicalPath(f.getPath.toUri.toString) -> values)
+    }.toMap
+
+  /** Spark's inferred schema of the table — `spark.read.parquet(path)
+    * .schema`, whose inference runs a Spark job — memoized per listed file
+    * set through [[IndexStore.memoizedTableProbe]]: a repeat call over an
+    * unchanged table runs no job, and an append (a new file, a changed
+    * directory) infers once more. The parquet confs that steer inference
+    * are part of the key.
+    */
+  private[graft] def tableSchema(
+      spark: SparkSession, path: String, files: Seq[String], store: IndexStore): StructType = {
+    val conf = spark.sessionState.conf
+    val steering = Seq(
+      SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.PARQUET_SCHEMA_MERGING_ENABLED,
+      SQLConf.CASE_SENSITIVE).map(e => conf.getConf(e)).mkString(",")
+    IndexStore.memoizedTableProbe(s"table-schema-$steering", path, files, store.dir)(
+      spark.read.parquet(path).schema)
+  }
 
   /** Decoded-index LRU (per JVM, so per executor in cluster mode): probe
     * paths call [[loadIndex]] once per (task, file), and without a cache

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -686,8 +687,15 @@ object IndexStore {
   private val hadoopConf: Configuration = new Configuration()
 
   /** Open the parquet file at `path` through Hadoop's filesystem, so a
-    * local file's `.crc` checksum is verified on read.
+    * local file's `.crc` checksum is verified on read. The read options
+    * come from the shared configuration: `ParquetFileReader.open(file)`
+    * builds a fresh `Configuration` per call, which re-parses the XML
+    * resources — about 8 ms per open, more than the footer read itself.
+    * Each reader still gets its own options (and codec factory, which
+    * `close` releases).
     */
   private[ivf] def openParquet(path: String): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), hadoopConf))
+    ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build())
 }

@@ -10,15 +10,21 @@ import scala.util.Try
 
 import org.apache.parquet.bytes.{ByteBufferInputStream, BytesInput, BytesUtils}
 import org.apache.parquet.column.{ColumnDescriptor, Dictionary, Encoding, ValuesType}
-import org.apache.parquet.column.page.{DataPage, DataPageV1, DataPageV2, PageReadStore}
+import org.apache.parquet.column.page.{DataPage, DataPageV1, DataPageV2, PageReadStore, PageReader}
+import org.apache.parquet.column.values.ValuesReader
 import org.apache.parquet.column.values.rle.RunLengthBitPackingHybridDecoder
 import org.apache.parquet.internal.filter2.columnindex.RowRanges
 import org.apache.parquet.io.ParquetDecodingException
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** The one reader of a file's `array<float|double>` embedding column, for
-  * search and build alike.
+/** The one page-level reader of parquet files: a file's
+  * `array<float|double>` embedding column, for search and build alike, and
+  * the flat payload columns of a top-k's winner rows.
   *
   * Search ([[embeddings]]) is the Spark-side analog of the reference's
   * `read_embeddings_for_rows` (its `src/ivf/search.rs:155-244`):
@@ -30,6 +36,10 @@ import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
   * Over `IvfBuilder.rewriteWithIndex` output (1 row per page) this is true
   * point-read IO, like the reference's 1-row-page + selection pairing; over
   * standard files it degrades gracefully to row-group granularity.
+  *
+  * Payload ([[payload]]) reads the winners' rows of a file's flat columns
+  * the same way — one read per row group, of only the pages that hold a
+  * winner — decoded straight into Spark's internal values.
   *
   * Build ([[scanFile]]) streams every row of one file — the reference's
   * per-file flat read (`src/ivf/parquet.rs:216-305`) — and summarizes the
@@ -48,7 +58,9 @@ import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
   *     `FloatBuffer` view, with one bulk copy per row;
   *   - every other value encoding (PLAIN doubles, dictionary pages,
   *     `BYTE_STREAM_SPLIT`, …) is decoded through parquet's own
-  *     `ValuesReader` into a reusable array.
+  *     `ValuesReader` into a reusable array;
+  *   - flat payload columns read each wanted value through parquet's own
+  *     (dictionary-based) `ValuesReader` and skip the others.
   * A page that cannot be decoded (truncated or corrupt) is refused with an
   * `IllegalStateException` naming the file and row group; a column that is
   * not a list of float or double is refused with an
@@ -140,64 +152,385 @@ object SelectiveFetch {
     val sorted = ordinals.filter(_ >= 0).distinct.sorted
     if (sorted.isEmpty) return Seq.empty
     val out = new ArrayBuffer[(Long, Array[Float])](sorted.length)
-
     withColumn(file, column) { (reader, decoder) =>
-      val footer = reader.getFooter
-      val desc = decoder.desc
-      var groupStart = 0L // first file-absolute ordinal of the current group
-      var ci = 0 // cursor into sorted ordinals
-      footer.getBlocks.asScala.zipWithIndex.foreach { case (block, blockIdx) =>
-        val rows = block.getRowCount
-        val groupEnd = groupStart + rows
-        val lo = ci
-        while (ci < sorted.length && sorted(ci) < groupEnd) ci += 1
-        val groupCands = java.util.Arrays.copyOfRange(sorted, lo, ci)
-        if (groupCands.nonEmpty) {
-          // page-granular row selection when the file has an offset index;
-          // whole-group ranges otherwise (groups without candidates are
-          // never touched at all — random access by block index)
-          val chunk = block.getColumns.asScala
-            .find(c => c.getPath.toArray.sameElements(desc.getPath))
-            .getOrElse(throw new IllegalStateException(
-              s"column chunk for '$column' missing in row group $blockIdx of $file"))
-          val offsetIndex = Try(reader.readOffsetIndex(chunk)).getOrElse(null)
-          val ranges =
-            if (offsetIndex == null) RowRanges.createSingle(rows)
-            else {
-              val selected = (0 until offsetIndex.getPageCount).filter { p =>
-                val first = groupStart + offsetIndex.getFirstRowIndex(p)
-                val last = groupStart + offsetIndex.getLastRowIndex(p, rows)
-                // any candidate in [first, last]?
-                var idx = java.util.Arrays.binarySearch(groupCands, first.toInt)
-                if (idx < 0) idx = -idx - 1
-                idx < groupCands.length && groupCands(idx) <= last
-              }
-              RowRanges.create(
-                rows,
-                IntStream.of(selected.toArray: _*).iterator(),
-                offsetIndex)
-            }
-          // typed as the interface: the concrete ColumnChunkPageReadStore's
-          // covariant close() override is package-private to callers
-          val pages: PageReadStore = reader.readFilteredRowGroup(blockIdx, ranges)
-          try decoder.decodeGroup(pages, blockIdx, groupStart, groupCands, out)
-          finally pages.close()
-        }
-        groupStart = groupEnd
+      eachGroup(reader, sorted) { (blockIdx, groupStart, groupCands) =>
+        val ranges = pageRanges(reader, blockIdx, groupStart, groupCands, decoder.desc, file)
+        // typed as the interface: the concrete ColumnChunkPageReadStore's
+        // covariant close() override is package-private to callers
+        val pages: PageReadStore = reader.readFilteredRowGroup(blockIdx, ranges)
+        try decoder.decodeGroup(pages, blockIdx, groupStart, groupCands, out)
+        finally pages.close()
       }
     }
     out.toSeq
   }
 
-  /** Page-level decoder of one `array<float|double>` leaf column. Holds
-    * reusable level/value buffers, so one instance serves every row group
-    * of one file; not thread-safe.
+  /** For each row group holding some of `sorted` (file-absolute ordinals,
+    * ascending, distinct): `f(blockIdx, groupStart, groupOrdinals)`. Groups
+    * without a wanted ordinal are never touched (random access by block
+    * index).
     */
-  private[ivf] final class PageDecoder(val desc: ColumnDescriptor, file: String) {
+  private def eachGroup(reader: ParquetFileReader, sorted: Array[Int])(
+      f: (Int, Long, Array[Int]) => Unit): Unit = {
+    var groupStart = 0L // first file-absolute ordinal of the current group
+    var ci = 0 // cursor into sorted ordinals
+    reader.getFooter.getBlocks.asScala.zipWithIndex.foreach { case (block, blockIdx) =>
+      val groupEnd = groupStart + block.getRowCount
+      val lo = ci
+      while (ci < sorted.length && sorted(ci) < groupEnd) ci += 1
+      if (ci > lo) f(blockIdx, groupStart, java.util.Arrays.copyOfRange(sorted, lo, ci))
+      groupStart = groupEnd
+    }
+  }
+
+  /** The rows of the pages of `desc` in row group `blockIdx` that hold one
+    * of `groupCands`, from the column's offset index; the whole group when
+    * the chunk has none.
+    */
+  private def pageRanges(
+      reader: ParquetFileReader, blockIdx: Int, groupStart: Long, groupCands: Array[Int],
+      desc: ColumnDescriptor, file: String): RowRanges = {
+    val block = reader.getFooter.getBlocks.get(blockIdx)
+    val rows = block.getRowCount
+    val chunk = block.getColumns.asScala
+      .find(c => c.getPath.toArray.sameElements(desc.getPath))
+      .getOrElse(throw new IllegalStateException(
+        s"column chunk for '${desc.getPath.mkString(".")}' missing in row group $blockIdx of $file"))
+    val offsetIndex = Try(reader.readOffsetIndex(chunk)).getOrElse(null)
+    if (offsetIndex == null) RowRanges.createSingle(rows)
+    else {
+      val selected = (0 until offsetIndex.getPageCount).filter { p =>
+        val first = groupStart + offsetIndex.getFirstRowIndex(p)
+        val last = groupStart + offsetIndex.getLastRowIndex(p, rows)
+        // any candidate in [first, last]?
+        var idx = java.util.Arrays.binarySearch(groupCands, first.toInt)
+        if (idx < 0) idx = -idx - 1
+        idx < groupCands.length && groupCands(idx) <= last
+      }
+      RowRanges.create(rows, IntStream.of(selected.toArray: _*).iterator(), offsetIndex)
+    }
+  }
+
+  /** A payload column: its name in the table schema and the Spark type it
+    * is read as (an atomic type, see [[leafReader]]).
+    */
+  final case class PayloadColumn(name: String, dataType: DataType)
+
+  /** The session's datetime rebase modes for parquet reads
+    * (`spark.sql.parquet.datetimeRebaseModeInRead`,
+    * `spark.sql.parquet.int96RebaseModeInRead`), applied per file as
+    * Spark's own reader applies them.
+    */
+  final case class RebaseModes(datetime: String, int96: String)
+
+  /** Read `columns` at `ordinals` (file-absolute, ascending, distinct,
+    * within the file) of `file`. Returns `(values, pages)`: `values(c)(i)`
+    * is column c's value at `ordinals(i)` in Spark's internal form — null
+    * where the value is null or the file lacks the column — and `pages` the
+    * number of pages decoded. The file is opened once, and each row group
+    * holding an ordinal is read once, with only the pages (of every
+    * column) whose rows hold one.
+    */
+  def payload(
+      file: String,
+      ordinals: Array[Int],
+      columns: Seq[PayloadColumn],
+      modes: RebaseModes): (Array[Array[Any]], Int) = {
+    val out = Array.fill(columns.size)(new Array[Any](ordinals.length))
+    if (ordinals.isEmpty || columns.isEmpty) return (out, 0)
+    val reader = IndexStore.openParquet(IndexStore.localPath(file))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      val schema = meta.getSchema
+      val kv = meta.getKeyValueMetaData
+      val lookup: String => String = k => kv.get(k)
+      val datetime = DataSourceUtils.datetimeRebaseSpec(lookup, modes.datetime)
+      val rebases = Rebases(
+        DataSourceUtils.createDateRebaseFuncInRead(datetime.mode, "Parquet"),
+        DataSourceUtils.createTimestampRebaseFuncInRead(datetime, "Parquet"),
+        DataSourceUtils.createTimestampRebaseFuncInRead(
+          DataSourceUtils.int96RebaseSpec(lookup, modes.int96), "Parquet INT96"))
+      // the file's leaf of each column it holds (a column it lacks reads as
+      // nulls, as Spark reads it)
+      val leaves = columns.zipWithIndex.flatMap { case (c, ci) =>
+        fileField(schema, c.name).map { field =>
+          val desc = new MessageType(schema.getName, field).getColumns.get(0)
+          require(
+            field.isPrimitive && desc.getMaxRepetitionLevel == 0,
+            s"payload column '${c.name}' in $file is not a flat primitive column")
+          (ci, field, new FlatDecoder(
+            desc, file, leafReader(desc.getPrimitiveType, c.dataType, c.name, file, rebases)))
+        }
+      }
+      if (leaves.isEmpty) return (out, 0)
+      reader.setRequestedSchema(
+        new MessageType(schema.getName, leaves.map(_._2).distinct.asJava))
+      var i = 0 // cursor into ordinals, over all groups
+      eachGroup(reader, ordinals) { (blockIdx, groupStart, groupCands) =>
+        // one read per group: every column's pages holding a winner, IO
+        // coalesced across columns (a column may also get a page that
+        // holds only another column's winners)
+        val ranges = leaves.map { case (_, _, d) =>
+          pageRanges(reader, blockIdx, groupStart, groupCands, d.desc, file)
+        }.reduce(RowRanges.union)
+        val pages: PageReadStore = reader.readFilteredRowGroup(blockIdx, ranges)
+        try leaves.foreach { case (ci, _, d) =>
+          val col = out(ci)
+          val base = i
+          d.decodeGroup(pages, blockIdx, groupStart, groupCands, (j, v) => col(base + j) = v)
+        } finally pages.close()
+        i += groupCands.length
+      }
+      (out, leaves.map(_._3.pagesRead).sum)
+    } finally reader.close()
+  }
+
+  /** The top-level field `name` of a file schema: an exact match, else the
+    * one case-insensitive match (Spark's default resolution).
+    */
+  private def fileField(schema: MessageType, name: String): Option[Type] =
+    if (schema.containsField(name)) Some(schema.getType(schema.getFieldIndex(name)))
+    else schema.getFields.asScala.filter(_.getName.equalsIgnoreCase(name)).toList match {
+      case one :: Nil => Some(one)
+      case _ => None
+    }
+
+  /** A file's datetime rebase functions, from its footer and the session's
+    * modes (see [[RebaseModes]]).
+    */
+  private final case class Rebases(date: Int => Int, timestamp: Long => Long, int96: Long => Long)
+
+  /** How one value of a flat leaf is read into Spark's internal form for
+    * `dt`, covering the parquet physical and logical types Spark maps to
+    * that atomic type: ints of every width (unsigned ones widened, as Spark
+    * infers them), dates, timestamps (`MILLIS`/`MICROS` INT64 and INT96,
+    * rebased like Spark's reader), decimals backed by INT32, INT64, BINARY
+    * or FIXED_LEN_BYTE_ARRAY, strings and binaries. Any other pairing is
+    * refused naming the column and file.
+    */
+  private def leafReader(
+      pt: PrimitiveType, dt: DataType, name: String, file: String,
+      rebases: Rebases): ValuesReader => Any = {
+    import PrimitiveType.PrimitiveTypeName._
+    val logical = pt.getLogicalTypeAnnotation
+    val unsigned = logical match {
+      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => !i.isSigned
+      case _ => false
+    }
+    val decimal = logical match {
+      case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => Some((d.getPrecision, d.getScale))
+      case _ => None
+    }
+    val tsUnit = logical match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => Some(t.getUnit)
+      case _ => None
+    }
+    def micros(v: Long): Long = tsUnit match {
+      case Some(LogicalTypeAnnotation.TimeUnit.MILLIS) => DateTimeUtils.millisToMicros(v)
+      case _ => v
+    }
+    def refuse: Nothing = throw new IllegalStateException(
+      s"payload column '$name' stores ${pt.getPrimitiveTypeName}" +
+        Option(logical).fold("")(l => s" ($l)") + s" in $file, which cannot be read as $dt")
+    (pt.getPrimitiveTypeName, dt) match {
+      case (BOOLEAN, BooleanType) => _.readBoolean()
+      case (INT32, IntegerType) => _.readInteger()
+      case (INT32, ShortType) => _.readInteger().toShort
+      case (INT32, ByteType) => _.readInteger().toByte
+      case (INT32, LongType) =>
+        if (unsigned) r => Integer.toUnsignedLong(r.readInteger()) else _.readInteger().toLong
+      case (INT32, DateType) => r => rebases.date(r.readInteger())
+      case (INT32 | INT64, d: DecimalType) =>
+        val (p, s) = decimal.getOrElse((d.precision, d.scale))
+        if (pt.getPrimitiveTypeName == INT32) r => Decimal(r.readInteger().toLong, p, s)
+        else if (unsigned) r => Decimal(new java.math.BigDecimal(
+          java.lang.Long.toUnsignedString(r.readLong())), p, s)
+        else r => Decimal(r.readLong(), p, s)
+      case (INT64, LongType) if tsUnit.isEmpty || tsUnit.contains(LogicalTypeAnnotation.TimeUnit.NANOS) =>
+        _.readLong()
+      case (INT64, TimestampType) if tsUnit.exists(_ != LogicalTypeAnnotation.TimeUnit.NANOS) =>
+        r => rebases.timestamp(micros(r.readLong()))
+      case (INT64, TimestampNTZType) if tsUnit.exists(_ != LogicalTypeAnnotation.TimeUnit.NANOS) =>
+        r => micros(r.readLong())
+      case (INT96, TimestampType) => r =>
+        val buf = r.readBytes().toByteBuffer.order(ByteOrder.LITTLE_ENDIAN)
+        val nanosOfDay = buf.getLong
+        rebases.int96(DateTimeUtils.fromJulianDay(buf.getInt, nanosOfDay))
+      case (FLOAT, FloatType) => _.readFloat()
+      case (DOUBLE, DoubleType) => _.readDouble()
+      case (BINARY, _: StringType) => r => UTF8String.fromBytes(r.readBytes().getBytes)
+      case (BINARY | FIXED_LEN_BYTE_ARRAY, BinaryType) => _.readBytes().getBytes
+      case (BINARY | FIXED_LEN_BYTE_ARRAY, d: DecimalType) =>
+        val (p, s) = decimal.getOrElse((d.precision, d.scale))
+        r => Decimal(new java.math.BigDecimal(new java.math.BigInteger(r.readBytes().getBytes), s), p, s)
+      case _ => refuse
+    }
+  }
+
+  /** Page plumbing shared by the leaf decoders: decodes each `DataPage`'s
+    * (V1 or V2) repetition and definition levels into int arrays and hands
+    * its value section to [[loadValues]]. Holds reusable buffers, so one
+    * instance serves every row group of one file; not thread-safe.
+    */
+  private[ivf] abstract class LeafPages(val desc: ColumnDescriptor, protected val file: String) {
+    protected val maxRep: Int = desc.getMaxRepetitionLevel
+    protected val maxDef: Int = desc.getMaxDefinitionLevel
+    protected var reps = new Array[Int](0)
+    protected var defs = new Array[Int](0)
+
+    /** Data pages decoded so far. */
+    var pagesRead = 0
+
+    /** Set up a page's values from its value section (`in`), which holds
+      * one value per entry at `maxDef` among `n`.
+      */
+    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit
+
+    protected def dictionary(reader: PageReader): Dictionary = {
+      val dictPage = reader.readDictionaryPage()
+      if (dictPage == null) null else dictPage.getEncoding.initDictionary(desc, dictPage)
+    }
+
+    /** Parquet's own reader of a value section: the dictionary-based one
+      * for dictionary encodings.
+      */
+    protected def valuesReader(enc: Encoding, dict: Dictionary): ValuesReader =
+      if (!enc.usesDictionary) enc.getValuesReader(desc, ValuesType.VALUES)
+      else if (dict == null)
+        throw new ParquetDecodingException("dictionary-encoded page without a dictionary page")
+      else enc.getDictionaryBasedValuesReader(desc, ValuesType.VALUES, dict)
+
+    /** Decode `page`'s levels into `reps`/`defs` and set up its values. A
+      * page that cannot be decoded is refused naming the file and row group.
+      */
+    protected def loadPage(page: DataPage, dict: Dictionary, blockIdx: Int): Unit = {
+      val n = page.getValueCount
+      if (reps.length < n) {
+        reps = new Array[Int](n)
+        defs = new Array[Int](n)
+      }
+      pagesRead += 1
+      refusing(blockIdx) {
+        page match {
+          case p: DataPageV1 =>
+            val in = p.getBytes.toInputStream
+            levelsV1(p.getRlEncoding, ValuesType.REPETITION_LEVEL, maxRep, in, n, reps)
+            levelsV1(p.getDlEncoding, ValuesType.DEFINITION_LEVEL, maxDef, in, n, defs)
+            loadValues(p.getValueEncoding, in, n, dict)
+          case p: DataPageV2 =>
+            levelsV2(p.getRepetitionLevels, maxRep, n, reps)
+            levelsV2(p.getDefinitionLevels, maxDef, n, defs)
+            loadValues(p.getDataEncoding, p.getData.toInputStream, n, dict)
+          case other =>
+            throw new IllegalStateException(s"unsupported page type ${other.getClass} in $file")
+        }
+      }
+    }
+
+    /** Runs `f`, refusing a decoding failure naming the file and row group. */
+    protected def refusing[T](blockIdx: Int)(f: => T): T =
+      try f
+      catch {
+        case e @ (_: ParquetDecodingException | _: IOException) =>
+          throw new IllegalStateException(s"unreadable page in row group $blockIdx of $file", e)
+      }
+
+    /** V1 levels (RLE with its length prefix, or `BIT_PACKED`); none
+      * stored at level 0.
+      */
+    private def levelsV1(
+        enc: Encoding, tpe: ValuesType, maxLevel: Int, in: ByteBufferInputStream, n: Int,
+        dst: Array[Int]): Unit =
+      if (maxLevel == 0) java.util.Arrays.fill(dst, 0, n, 0)
+      else {
+        val r = enc.getValuesReader(desc, tpe)
+        r.initFromPage(n, in)
+        var i = 0
+        while (i < n) { dst(i) = r.readInteger(); i += 1 }
+      }
+
+    /** V2 levels: RLE without a length prefix; none stored at level 0. */
+    private def levelsV2(bytes: BytesInput, maxLevel: Int, n: Int, dst: Array[Int]): Unit =
+      if (maxLevel == 0) java.util.Arrays.fill(dst, 0, n, 0)
+      else {
+        val d = new RunLengthBitPackingHybridDecoder(
+          BytesUtils.getWidthFromMaxInt(maxLevel), bytes.toInputStream)
+        var i = 0
+        while (i < n) { dst(i) = d.readInt(); i += 1 }
+      }
+  }
+
+  /** Page-level decoder of one flat (unrepeated) leaf column: every entry
+    * is a row, and `read` turns a defined value into its Spark form.
+    */
+  private[ivf] final class FlatDecoder(
+      desc: ColumnDescriptor, file: String, read: ValuesReader => Any)
+      extends LeafPages(desc, file) {
+    private var values: ValuesReader = _
+
+    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit = {
+      values = valuesReader(enc, dict)
+      values.initFromPage(n, in)
+    }
+
+    /** Hand `emit(j, value)` the value of `cands(j)` (file-absolute,
+      * ascending) for every candidate in one row group, null where it is
+      * null; other values are skipped undecoded. A page-filtered group's
+      * pages carry their first row; a whole group's pages follow each
+      * other from row 0.
+      */
+    def decodeGroup(
+        pages: PageReadStore,
+        blockIdx: Int,
+        groupStart: Long,
+        cands: Array[Int],
+        emit: (Int, Any) => Unit): Unit = {
+      val reader = pages.getPageReader(desc)
+      val dict = dictionary(reader)
+      val filtered = pages.getRowIndexes.isPresent
+      var next = 0L // the first row of the next page, in an unfiltered group
+      var cj = 0 // cursor into cands
+      while (cj < cands.length) {
+        val page = reader.readPage()
+        if (page == null)
+          throw new IllegalStateException(
+            s"row group $blockIdx of $file ends before row ${cands(cj)} of column " +
+              desc.getPath.mkString("."))
+        val first = groupStart + (
+          if (page.getFirstRowIndex.isPresent) page.getFirstRowIndex.get.longValue
+          else if (filtered)
+            throw new IllegalStateException(
+              s"page-filtered row group $blockIdx of $file holds a page without its first row")
+          else next)
+        val n = page.getValueCount
+        next = first - groupStart + n
+        if (cands(cj) < first)
+          throw new IllegalStateException(
+            s"row ${cands(cj)} of column ${desc.getPath.mkString(".")} is on no page read " +
+              s"from row group $blockIdx of $file")
+        if (cands(cj) < first + n) {
+          loadPage(page, dict, blockIdx)
+          refusing(blockIdx) {
+            var i = 0
+            while (i < n && cj < cands.length) {
+              val defined = defs(i) == maxDef
+              if (cands(cj) == first + i) {
+                emit(cj, if (defined) read(values) else null)
+                cj += 1
+              } else if (defined) values.skip()
+              i += 1
+            }
+          }
+        }
+      }
+    }
+  }
+
+  /** Page-level decoder of one `array<float|double>` leaf column. */
+  private[ivf] final class PageDecoder(desc: ColumnDescriptor, file: String)
+      extends LeafPages(desc, file) {
     private val isDouble =
       desc.getPrimitiveType.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.DOUBLE
-    private val maxRep = desc.getMaxRepetitionLevel
-    private val maxDef = desc.getMaxDefinitionLevel
 
     // the definition level at which a record has an element slot (a
     // value at maxDef, else a null element); one below, an empty list;
@@ -205,8 +538,6 @@ object SelectiveFetch {
     private val slotDef =
       if (desc.getPrimitiveType.isRepetition(Type.Repetition.OPTIONAL)) maxDef - 1 else maxDef
 
-    private var reps = new Array[Int](0)
-    private var defs = new Array[Int](0)
     private var acc = new Array[Float](0) // a kept record's values on earlier pages
     private var accLen = 0
 
@@ -237,8 +568,7 @@ object SelectiveFetch {
         groupStart: Long,
         visit: (Long, Array[Float]) => Unit): Unit = {
       val reader = pages.getPageReader(desc)
-      val dictPage = reader.readDictionaryPage()
-      val dict = if (dictPage == null) null else dictPage.getEncoding.initDictionary(desc, dictPage)
+      val dict = dictionary(reader)
 
       var open = false // a record is in progress
       var ordinal = groupStart - 1
@@ -318,8 +648,7 @@ object SelectiveFetch {
         cands: Array[Int],
         out: ArrayBuffer[(Long, Array[Float])]): Unit = {
       val reader = pages.getPageReader(desc)
-      val dictPage = reader.readDictionaryPage()
-      val dict = if (dictPage == null) null else dictPage.getEncoding.initDictionary(desc, dictPage)
+      val dict = dictionary(reader)
       val filtered = pages.getRowIndexes.isPresent
       val rowIdx = pages.getRowIndexes
         .orElseGet(() => LongStream.range(0L, pages.getRowCount).iterator())
@@ -396,57 +725,11 @@ object SelectiveFetch {
       if (floats != null) floats.get(from, dst, off, len)
       else System.arraycopy(vals, from, dst, off, len)
 
-    /** Decode `page`'s levels into `reps`/`defs` and set up its values. A
-      * page that cannot be decoded is refused naming the file and row group.
-      */
-    private def loadPage(page: DataPage, dict: Dictionary, blockIdx: Int): Unit = {
-      val n = page.getValueCount
-      if (reps.length < n) {
-        reps = new Array[Int](n)
-        defs = new Array[Int](n)
-      }
-      try page match {
-        case p: DataPageV1 =>
-          val in = p.getBytes.toInputStream
-          levelsV1(p.getRlEncoding, ValuesType.REPETITION_LEVEL, in, n, reps)
-          levelsV1(p.getDlEncoding, ValuesType.DEFINITION_LEVEL, in, n, defs)
-          loadValues(p.getValueEncoding, in, n, dict)
-        case p: DataPageV2 =>
-          levelsV2(p.getRepetitionLevels, maxRep, n, reps)
-          levelsV2(p.getDefinitionLevels, maxDef, n, defs)
-          loadValues(p.getDataEncoding, p.getData.toInputStream, n, dict)
-        case other =>
-          throw new IllegalStateException(s"unsupported page type ${other.getClass} in $file")
-      } catch {
-        case e @ (_: ParquetDecodingException | _: IOException) =>
-          throw new IllegalStateException(s"unreadable page in row group $blockIdx of $file", e)
-      }
-    }
-
-    /** V1 levels (RLE with its length prefix, or `BIT_PACKED`). */
-    private def levelsV1(
-        enc: Encoding, tpe: ValuesType, in: ByteBufferInputStream, n: Int, dst: Array[Int]): Unit = {
-      val r = enc.getValuesReader(desc, tpe)
-      r.initFromPage(n, in)
-      var i = 0
-      while (i < n) { dst(i) = r.readInteger(); i += 1 }
-    }
-
-    /** V2 levels: RLE without a length prefix; none stored at level 0. */
-    private def levelsV2(bytes: BytesInput, maxLevel: Int, n: Int, dst: Array[Int]): Unit =
-      if (maxLevel == 0) java.util.Arrays.fill(dst, 0, n, 0)
-      else {
-        val d = new RunLengthBitPackingHybridDecoder(
-          BytesUtils.getWidthFromMaxInt(maxLevel), bytes.toInputStream)
-        var i = 0
-        while (i < n) { dst(i) = d.readInt(); i += 1 }
-      }
-
     /** Set up the page's values from its value section (`in`), which holds
       * one value per defined entry among `n`: a view for PLAIN floats, else
       * parquet's own (dictionary-based) `ValuesReader` into `vals`.
       */
-    private def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit = {
+    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit = {
       var nVals = 0
       var i = 0
       while (i < n) { if (defs(i) == maxDef) nVals += 1; i += 1 }
@@ -457,11 +740,7 @@ object SelectiveFetch {
             s"PLAIN page holds ${floats.remaining} of its $nVals values")
       } else {
         floats = null
-        val r =
-          if (!enc.usesDictionary) enc.getValuesReader(desc, ValuesType.VALUES)
-          else if (dict == null)
-            throw new ParquetDecodingException("dictionary-encoded page without a dictionary page")
-          else enc.getDictionaryBasedValuesReader(desc, ValuesType.VALUES, dict)
+        val r = valuesReader(enc, dict)
         r.initFromPage(n, in)
         if (vals.length < nVals) vals = new Array[Float](nVals)
         var k = 0

@@ -1,8 +1,12 @@
 package graft.ivf
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.{array_distance, float_vector, Sq8, VectorKernels}
 import graft.ivf.IndexStore.Sidecar
@@ -17,15 +21,13 @@ import graft.ivf.IndexStore.Sidecar
   *    `TakeOrderedAndProjectExec`, a per-partition bounded heap + driver
   *    merge, i.e. exactly the reference's heap re-rank, but distributed;
   *  - indexed, no residual filter = TWO-PHASE (the reference's access
-  *    plan): phase 1 is [[winnerFeed]], which probes per-file indexes
-  *    executor-side and ranks candidates reading only the embedding column
-  *    of candidate row groups (`SelectiveFetch`) or the tier's code
-  *    sidecar; phase 2 materializes the k winners eagerly (the reference
-  *    TopkBuilder's shape) and fetches their payload rows from ONLY the
-  *    files that hold them — payload IO is ≤ k files of the projected
-  *    columns, not a table scan. (The SQL rewrite keeps a fully LAZY plan,
-  *    so its phase-2 stays a broadcast semi-join over the column-pruned
-  *    scan — lazy plans cannot prune files they have not executed yet.);
+  *    plan), one lazy plan: phase 1 is [[winnerFeed]], which probes
+  *    per-file indexes executor-side and ranks candidates reading only the
+  *    embedding column of candidate row groups (`SelectiveFetch`) or the
+  *    tier's code sidecar; `orderBy(_dist).limit(k)` keeps the k winners;
+  *    phase 2, [[graft.plans.WinnerPayload]], reads only the winners' rows
+  *    from the pages that hold them (the reference TopkBuilder's
+  *    RowSelection fetch), with each winner's vector carried from phase 1;
   *  - indexed with a residual filter = one-phase: a semi-join of the scan
   *    against the candidate (file, row ordinal) feed emitted by
   *    `IvfCandidateScanExec` (the reference's per-scan-file
@@ -243,18 +245,41 @@ object VectorTopK {
         graft.functions.array_cosine_similarity(col(column), float_vector(query)).desc_nulls_last
     }
 
-  private def tableFiles(spark: SparkSession, path: String): Seq[String] = {
-    val files = IndexManager.listFiles(spark, path)
+  private def tableFiles(spark: SparkSession, path: String): Seq[String] =
+    nonEmpty(IndexManager.listFiles(spark, path), path)
+
+  private def nonEmpty(files: Seq[String], path: String): Seq[String] = {
     require(files.nonEmpty, s"no parquet files under $path")
     files
   }
 
-  /** One task per slice of files, at most the default parallelism. */
-  private def overFiles[T: scala.reflect.ClassTag](
-      spark: SparkSession, items: Seq[T]): RDD[T] = {
-    val sc = spark.sparkContext
-    sc.parallelize(items, math.max(1, math.min(items.size, sc.defaultParallelism)))
+  /** One task per slice of files, at most the default parallelism; `items`
+    * is evaluated on the driver when the plan first runs (see [[FilesRDD]]).
+    */
+  private def overFiles[T: ClassTag](spark: SparkSession, items: () => Seq[T]): RDD[T] =
+    new FilesRDD(spark.sparkContext, items)
+
+  /** The files (or file-tagged items) a feed's tasks work on, sliced like
+    * `parallelize` into at most the default parallelism. The list is taken
+    * when the RDD's partitions are first asked for — when the plan runs, not
+    * when it is built — so a feed that re-lists its table sees the files
+    * that are there when it runs.
+    */
+  private final class FilesRDD[T: ClassTag](sc: SparkContext, @transient items: () => Seq[T])
+      extends RDD[T](sc, Nil) {
+    override protected def getPartitions: Array[Partition] = {
+      val all = items().toArray
+      val n = math.max(1, math.min(all.length, sparkContext.defaultParallelism))
+      Array.tabulate[Partition](n) { i =>
+        FilesSlice(i, all.slice((i.toLong * all.length / n).toInt, ((i + 1L) * all.length / n).toInt))
+      }
+    }
+
+    override def compute(split: Partition, context: TaskContext): Iterator[T] =
+      split.asInstanceOf[FilesSlice[T]].items.iterator
   }
+
+  private final case class FilesSlice[T](index: Int, items: Array[T]) extends Partition
 
   /** Driver-side validation, header peeks only (O(files) tiny reads —
     * posting lists are probed executor-side): every file has an index of
@@ -290,14 +315,13 @@ object VectorTopK {
       query: Seq[Float],
       options: Options,
       store: IndexStore): DataFrame = {
-    val base = spark.read.parquet(path)
     val files = tableFiles(spark, path)
     val q = query.toArray
     validate(files, column, q, store)
     graft.Graft.installStrategy(spark)
     val candSide = graft.plans.IvfCandidateScan.feed(
       spark, column, q, options.nprobe, options.maxCandidates, files, store, options.cosine)
-    base
+    scan(spark, path, files, store)
       .withColumn("__file", col("_metadata.file_path"))
       .withColumn("__ri", col("_metadata.row_index"))
       .join(candSide, Seq("__file", "__ri"), "left_semi")
@@ -317,55 +341,36 @@ object VectorTopK {
       spark, graft.plans.MeteredFetch(df.queryExecution.analyzed))
   }
 
-  /** Payload fetch for an ALREADY-MATERIALIZED winner set: reads ONLY the
-    * files that hold winners (file-level pruning — payload IO is bounded
-    * by ≤ k files, not the table; the lazy semi-join alternative streams a
-    * column-pruned scan of EVERY file, which at 100 TB is a full pass of
-    * the projected columns per query). The winner list is k rows by
-    * contract, so collecting it is bounded — the same eager phase split
-    * the reference's TopkBuilder makes.
+  /** The table as a Spark scan under its memoized inferred schema
+    * ([[IndexManager.tableSchema]]), so building it runs no job.
     */
-  private def fetchWinnersPayload(
-      spark: SparkSession,
-      path: String,
-      winners: Array[(String, Long)]): DataFrame = {
-    if (winners.isEmpty) return spark.read.parquet(path).limit(0)
-    import spark.implicits._
-    val files = winners.map(_._1).distinct.toSeq
-    val winnerDf = winners.toSeq.toDF("_file", "_ri")
-    // basePath anchors partition-column inference to the TABLE root: a
-    // leaf-file read without it would silently drop Hive-style partition
-    // columns (and diverge from the empty-winners branch's root-read
-    // schema). Spark requires basePath to be a DIRECTORY — a single-file
-    // table (footer-embedded layouts) has no partition columns to lose,
-    // so it reads plain.
-    val isDir =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).isDirectory
-      } catch { case _: Exception => false }
-    val reader = if (isDir) spark.read.option("basePath", path) else spark.read
-    reader.parquet(files: _*)
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_ri", col("_metadata.row_index"))
-      .join(broadcast(winnerDf), Seq("_file", "_ri"), "left_semi")
-      .drop("_file", "_ri")
-  }
+  private def scan(
+      spark: SparkSession, path: String, files: Seq[String], store: IndexStore): DataFrame =
+    spark.read.schema(IndexManager.tableSchema(spark, path, files, store)).parquet(path)
 
   /** Index-accelerated top-k over a Parquet table: full payload rows of the
     * k nearest vectors, ordered by the query's metric (cosine similarity
     * DESCENDING for [[Metric.Cosine]]).
     *
-    * Filter-free queries run phase 1 EAGERLY (the reference TopkBuilder's
-    * shape): the k winners are materialized at call time so the payload
-    * scan can be pruned to only their files — see [[fetchWinnersPayload]].
-    * Consequence: the returned DataFrame is a SNAPSHOT of the winners at
-    * construction time — re-executing it after the table grows replays the
-    * frozen winner set (construct a fresh query to re-probe), and
-    * construction itself launches the phase-1 jobs. The filtered variant
-    * stays fully lazy (its candidate feed re-probes per execution) —
-    * callers needing lazy filter-free plans can use the SQL rewrite path,
-    * which keeps the lazy semi-join shape.
+    * Filter-free queries are one lazy plan (the reference TopkBuilder's
+    * access shape, `src/ivf/search.rs:47-244`): the [[winnerFeed]], which
+    * also carries each candidate's vector from the scoring pass, then
+    * `orderBy(_dist).limit(k)`, then the [[graft.plans.WinnerPayload]]
+    * node, which opens each winner file once and decodes only the pages
+    * holding its winners in each column — payload IO is the k winners'
+    * pages, not a table scan, and the vector column is not read twice.
+    * Rows come in the winners' `_dist` order (the metric's order). Collected
+    * directly, the plan runs as one single-stage job and the driver reads
+    * the payload.
+    * Building the frame runs no Spark job (the table's inferred schema is
+    * memoized per file set, [[IndexManager.tableSchema]]); the table is
+    * listed again when the plan runs, so a frame built before an append
+    * and `extend` ranks the appended rows too. A table holding a column
+    * the page reader does not cover (struct, map, a list other than the
+    * vector) or a `list<double>` vector (whose payload must stay double)
+    * takes the lazy `scan ⋉ winner feed` semi-join instead — the SQL
+    * rewrite's shape — over the files listed at construction; the reason is
+    * logged.
     *
     * @param filter residual predicate applied AFTER candidate pruning
     *               (post-filter semantics, like the reference); needs the
@@ -394,14 +399,40 @@ object VectorTopK {
         meterFetch(spark, scan.where(residual)).orderBy(ordering).limit(k)
       case None =>
         // two-phase: rank the winner feed, keep k, fetch their payload rows
-        // from only their files, re-rank exactly
-        val winners = winnerFeed(spark, tableFiles(spark, path), column, query, k, options, store)
-          .orderBy(col("_dist").asc_nulls_last)
-          .limit(k)
-          .select(col("_file"), col("_ri"))
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-        meterFetch(spark, fetchWinnersPayload(spark, path, winners)).orderBy(ordering).limit(k)
+        val listing = IndexManager.listTable(spark, path)
+        val files = nonEmpty(listing.files, path)
+        val schema = IndexManager.tableSchema(spark, path, files, store)
+        val conf = spark.sessionState.conf
+        val fallback = graft.plans.WinnerPayload
+          .unsupported(schema, column, listing.partitionColumns)
+          .orElse(Option.when(conf.getConf(SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION))(
+            s"${SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION.key} is on"))
+        def topK(feed: DataFrame) = feed.orderBy(col("_dist").asc_nulls_last).limit(k)
+        fallback match {
+          case None =>
+            // the winners arrive in `_dist` order, which is the metric's
+            // order (`1 − cos` ascending for cosine), and keep it
+            graft.Graft.installStrategy(spark)
+            val feed = winnerFeed(
+              spark, files, column, query, k, options, store,
+              relist = Some(() => IndexManager.listFiles(spark, path)), withVec = true)
+            graft.plans.WinnerPayload.df(spark, topK(feed), schema,
+              graft.plans.WinnerPayload.Spec(
+                path, column, listing.partitionColumns,
+                SelectiveFetch.RebaseModes(
+                  conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString,
+                  conf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)))
+          case Some(reason) =>
+            log.info(s"graft indexed payload: scan semi-join winner feed ($reason)")
+            val winners = topK(winnerFeed(spark, files, column, query, k, options, store))
+              .select(col("_file").as("__file"), col("_ri").as("__ri"))
+            val payload = scan(spark, path, files, store)
+              .withColumn("__file", col("_metadata.file_path"))
+              .withColumn("__ri", col("_metadata.row_index"))
+              .join(broadcast(winners), Seq("__file", "__ri"), "left_semi")
+              .drop("__file", "__ri")
+            meterFetch(spark, payload).orderBy(ordering).limit(k)
+        }
     }
   }
 
@@ -453,6 +484,11 @@ object VectorTopK {
     *
     * A `maxCandidates` cap swaps steps 2–3 for the in-plan round-robin cap
     * ([[cappedCandidates]]) ahead of the same refine.
+    *
+    * [[indexed]]'s feed differs in two ways: `relist` replaces `files` with
+    * the table's files when the plan runs (the construction-time `files`
+    * are still what is validated), and `withVec` adds each row's vector as
+    * `_vec`, taken from the pass that computed its exact distance.
     */
   private[graft] def winnerFeed(
       spark: SparkSession,
@@ -461,41 +497,55 @@ object VectorTopK {
       query: Seq[Float],
       k: Int,
       options: Options,
-      store: IndexStore): DataFrame = {
+      store: IndexStore,
+      relist: Option[() => Seq[String]] = None,
+      withVec: Boolean = false): DataFrame = {
     import spark.implicits._
     require(k > 0, "k must be > 0")
     require(files.nonEmpty, "no parquet files to search")
     val p = Probe(store, column, query.toArray, options.nprobe, options.cosine)
     val scorer = CoarseScorer(options.tier)
     validate(files, column, p.q, store, scorer)
+    val source = relist.getOrElse(() => files)
     options.maxCandidates match {
-      case Some(cap) => refine(spark, p, cappedCandidates(spark, files, p, cap))
+      case Some(cap) => refine(spark, p, cappedCandidates(spark, source, p, cap), withVec)
       case None =>
         val keep = options.keep(k)
-        val scored = spark
-          .createDataset(overFiles(spark, files).flatMap(scorer.score(_, p, keep)))
-          .toDF("_file", "_ri", "_key")
-        // float keys are exact float distances widened to Double, so the
-        // narrowing cast is lossless
-        if (options.tier == Tier.Float)
-          scored.select(col("_file"), col("_ri"), col("_key").cast("float").as("_dist"))
-        else
-          refine(spark, p, scored
-            .orderBy(col("_key"), col("_file"), col("_ri"))
-            .limit(keep)
-            .select(col("_file"), col("_ri")))
+        if (options.tier == Tier.Float && withVec)
+          spark.createDataset(overFiles(spark, source).flatMap(f =>
+            p.exactVecRows(f, p.candidates(p.index(f)))))
+            .toDF("_file", "_ri", "_dist", "_vec")
+        else {
+          val scored = spark
+            .createDataset(overFiles(spark, source).flatMap(scorer.score(_, p, keep)))
+            .toDF("_file", "_ri", "_key")
+          // float keys are exact float distances widened to Double, so the
+          // narrowing cast is lossless
+          if (options.tier == Tier.Float)
+            scored.select(col("_file"), col("_ri"), col("_key").cast("float").as("_dist"))
+          else
+            refine(spark, p, scored
+              .orderBy(col("_key"), col("_file"), col("_ri"))
+              .limit(keep)
+              .select(col("_file"), col("_ri")), withVec)
+        }
     }
   }
 
   /** Exact refine of `(_file, _ri)` survivors: regroup per file, read only
-    * their floats, emit `(_file, _ri, _dist)`.
+    * their floats, emit `(_file, _ri, _dist)` (and `_vec` with `withVec`).
     */
-  private def refine(spark: SparkSession, p: Probe, survivors: DataFrame): DataFrame = {
+  private def refine(
+      spark: SparkSession, p: Probe, survivors: DataFrame, withVec: Boolean): DataFrame = {
     import spark.implicits._
-    survivors.as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups((file, rows) => p.exactRows(file, rows.map(_._2.toInt).toArray.sorted))
-      .toDF("_file", "_ri", "_dist")
+    val byFile = survivors.as[(String, Long)].groupByKey(_._1)
+    def ordinals(rows: Iterator[(String, Long)]) = rows.map(_._2.toInt).toArray.sorted
+    if (withVec)
+      byFile.flatMapGroups((file, rows) => p.exactVecRows(file, ordinals(rows)))
+        .toDF("_file", "_ri", "_dist", "_vec")
+    else
+      byFile.flatMapGroups((file, rows) => p.exactRows(file, ordinals(rows)))
+        .toDF("_file", "_ri", "_dist")
   }
 
   /** Candidates under the reference's round-robin `max_candidates` fairness
@@ -522,7 +572,7 @@ object VectorTopK {
   private[graft] val CapFunnelWarnRows = 1000000
 
   private def cappedCandidates(
-      spark: SparkSession, files: Seq[String], p: Probe, cap: Int): DataFrame = {
+      spark: SparkSession, files: () => Seq[String], p: Probe, cap: Int): DataFrame = {
     import spark.implicits._
     if (cap > CapFunnelWarnRows) {
       log.warn(
@@ -531,7 +581,7 @@ object VectorTopK {
           "rows approximate no cap — consider dropping maxCandidates to use " +
           "the uncapped winner feed instead")
     }
-    val positioned = overFiles(spark, files.zipWithIndex).flatMap { case (file, fi) =>
+    val positioned = overFiles(spark, () => files().zipWithIndex).flatMap { case (file, fi) =>
       val cands = p.candidates(p.index(file))
       Iterator.tabulate(cands.length)(pos => (file, fi, pos, cands(pos).toLong))
     }
@@ -550,11 +600,13 @@ object VectorTopK {
   private def bruteDistances(
       spark: SparkSession,
       path: String,
+      files: Seq[String],
       column: String,
-      query: Seq[Float]): DataFrame = {
+      query: Seq[Float],
+      store: IndexStore): DataFrame = {
     import spark.implicits._
     val q = query.toArray
-    spark.read.parquet(path)
+    scan(spark, path, files, store)
       .select(
         col("_metadata.file_path").as("_file"),
         col("_metadata.row_index").as("_ri"),
@@ -596,7 +648,7 @@ object VectorTopK {
     validate(files, column, q, store)
     val colName = column
     val r = radius
-    val results = overFiles(spark, files).flatMap { file =>
+    val results = overFiles(spark, () => files).flatMap { file =>
       val index = IndexManager.loadIndex(store, file, colName)
       val radii = IndexManager.validRadii(store, file, colName, index)
       val cells = index.rangeProbeCells(q, r, radii)
@@ -634,7 +686,7 @@ object VectorTopK {
     val q = query.toArray
     val colName = column
     val r = radius
-    val results = overFiles(spark, files).flatMap { file =>
+    val results = overFiles(spark, () => files).flatMap { file =>
       val index = IndexManager.loadIndex(store, file, colName)
       val radii = IndexManager.validRadii(store, file, colName, index)
       index.rangeProbeCells(q, r, radii).iterator.flatMap { c =>
@@ -729,7 +781,7 @@ object VectorTopK {
       if (bail) {
         // brute twin through the SAME kernel as the pruned path so both
         // branches agree bit-for-bit at the radius boundary
-        bruteDistances(spark, path, column, query)
+        bruteDistances(spark, path, files, column, query, store)
           .where(col("_dist") < lit(radius))
       } else rangeWinners(spark, path, column, query, radius, store)
     winners
@@ -760,7 +812,7 @@ object VectorTopK {
     val files = tableFiles(spark, path)
     val (est, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
     if (bail) {
-      return spark.read.parquet(path)
+      return scan(spark, path, files, store)
         .where(array_distance(col(column), float_vector(query)) < lit(radius))
     }
     val winners = rangeWinners(spark, path, column, query, radius, store)
@@ -768,7 +820,7 @@ object VectorTopK {
     // stats-driven broadcast like candidateScan: even below the bailout a
     // broad radius can make the key set too large to broadcast safely
     val winnerSide = graft.plans.IvfCandidateScan.broadcastIfSmall(spark, winners, est, files)
-    val fetched = spark.read.parquet(path)
+    val fetched = scan(spark, path, files, store)
       .withColumn("_file", col("_metadata.file_path"))
       .withColumn("_ri", col("_metadata.row_index"))
       .join(winnerSide, Seq("_file", "_ri"), "left_semi")
@@ -806,8 +858,13 @@ object VectorTopK {
       * vectors of another dim are skipped.
       */
     def exactRows(file: String, ordinals: Array[Int]): Iterator[(String, Long, Float)] =
+      exactVecRows(file, ordinals).map(r => (r._1, r._2, r._3))
+
+    /** [[exactRows]] with each row's vector. */
+    def exactVecRows(
+        file: String, ordinals: Array[Int]): Iterator[(String, Long, Float, Array[Float])] =
       SelectiveFetch.embeddings(file, column, ordinals).iterator.collect {
-        case (ri, vec) if vec.length == q.length => (file, ri, exact(vec))
+        case (ri, vec) if vec.length == q.length => (file, ri, exact(vec), vec)
       }
   }
 

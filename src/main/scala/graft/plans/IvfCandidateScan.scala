@@ -3,16 +3,20 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
+  GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, UnaryNode}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition,
+  UnknownPartitioning}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, SQLExecution,
+  UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ivf.{IndexManager, IndexStore}
+import graft.ivf.{IndexManager, IndexStore, SelectiveFetch}
 
 /** Custom plan node for IVF candidate generation — the Spark analog of the
   * reference's `VectorIndexScanExec` (`/root/reference/src/df_vector/
@@ -267,7 +271,180 @@ final case class MeteredFetchExec(child: SparkPlan) extends UnaryExecNode {
     copy(child = c)
 }
 
-/** Plans [[IvfCandidateScan]] / [[MeteredFetch]]; injected via
+/** The payload step of the filter-free `VectorTopK.indexed`: the table's
+  * full rows of the k winners in `child` (a `_file, _ri, _vec` feed of at
+  * most k rows), read page-selectively — the reference TopkBuilder's
+  * RowSelection fetch (`src/ivf/search.rs:155-244`). `output` is the
+  * table's schema as Spark infers it; the vector column comes from each
+  * winner's `_vec`, which the scoring pass already decoded, partition
+  * columns from the file index, and every other column from
+  * [[graft.ivf.SelectiveFetch.payload]].
+  */
+final case class WinnerPayload(
+    child: LogicalPlan,
+    output: Seq[Attribute],
+    spec: WinnerPayload.Spec) extends UnaryNode {
+  override def producedAttributes: AttributeSet = outputSet
+  override def references: AttributeSet =
+    AttributeSet(child.output.filter(a => WinnerPayload.FeedColumns.contains(a.name)))
+  override def maxRows: Option[Long] = child.maxRows
+  override def simpleString(maxFields: Int): String =
+    s"WinnerPayload [table=${spec.table}, column=${spec.column}, columns=${output.size}]"
+  override protected def withNewChildInternal(c: LogicalPlan): WinnerPayload = copy(child = c)
+}
+
+object WinnerPayload {
+  /** The feed columns the payload reads: a winner's file, row ordinal and
+    * vector.
+    */
+  val FeedColumns: Seq[String] = Seq("_file", "_ri", "_vec")
+
+  /** What the exec needs besides its child and output: the table root
+    * (listed again at execution for partition values), the vector column,
+    * the partition columns, and the session's datetime rebase modes.
+    */
+  final case class Spec(
+      table: String,
+      column: String,
+      partitionColumns: Seq[String],
+      modes: SelectiveFetch.RebaseModes)
+
+  private def atomic(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+        BinaryType | DateType | TimestampType | TimestampNTZType => true
+    case _: StringType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** Why the page-level payload cannot read a table of `schema`, or None
+    * when it can: every column but the vector must be atomic, and the
+    * vector `array<float>` (a `list<double>` vector must keep its stored
+    * type, which the float feed does not carry).
+    */
+  def unsupported(
+      schema: StructType, column: String, partitionColumns: Seq[String]): Option[String] =
+    schema.fields.iterator.filterNot(f => partitionColumns.contains(f.name)).flatMap { f =>
+      (f.name == column, f.dataType) match {
+        case (true, ArrayType(FloatType, _)) => None
+        case (true, dt) => Some(s"vector column '$column' is ${dt.simpleString}, not array<float>")
+        case (false, dt) if atomic(dt) => None
+        case (false, dt) => Some(s"column '${f.name}' is ${dt.simpleString}, not an atomic type")
+      }
+    }.nextOption()
+
+  /** The payload rows of `winners` over a table of `schema` (requires
+    * [[GraftStrategy]] installed).
+    */
+  def df(spark: SparkSession, winners: DataFrame, schema: StructType, spec: Spec): DataFrame =
+    Bridge.ofRows(spark, WinnerPayload(
+      winners.queryExecution.analyzed,
+      schema.map(f => AttributeReference(f.name, f.dataType, f.nullable, f.metadata)()),
+      spec))
+}
+
+/** Plans [[WinnerPayload]]. Collected directly (`df.collect()`, the API's
+  * usual consumer), the child's winners merge on the driver — a TakeOrdered
+  * collect, one stage — and the driver reads their payload: no second stage
+  * waits for a free core. Any other consumer reads the payload in the task
+  * that holds the (single-partition) winners. Rows keep the winners' order.
+  */
+final case class WinnerPayloadExec(
+    child: SparkPlan,
+    output: Seq[Attribute],
+    spec: WinnerPayload.Spec) extends UnaryExecNode {
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "payloadFiles" -> SQLMetrics.createMetric(sparkContext, "payload files"),
+    "payloadPages" -> SQLMetrics.createMetric(sparkContext, "payload pages"),
+    "payloadRows" -> SQLMetrics.createMetric(sparkContext, "payload rows"))
+
+  override def simpleString(maxFields: Int): String =
+    s"WinnerPayloadExec [table=${spec.table}, column=${spec.column}, columns=${output.size}]"
+
+  // the winners arrive in one partition (a TakeOrdered), and so leave
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case SinglePartition => SinglePartition
+    case other => UnknownPartitioning(other.numPartitions)
+  }
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val read = reader()
+    child.execute().mapPartitions(it => read(it.map(_.copy()).toArray).iterator)
+  }
+
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = reader()(child.executeCollect())
+    SQLMetrics.postDriverMetricUpdates(
+      sparkContext, sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      metrics.values.toSeq)
+    rows
+  }
+
+  /** The payload rows of a set of feed rows, in their order: each winner
+    * file is opened once ([[SelectiveFetch.payload]]), the vector comes
+    * from the feed's `_vec`, partition values from a listing taken now —
+    * the feed's files are listed when it runs, so an appended partition
+    * has no values at construction.
+    */
+  private def reader(): Array[InternalRow] => Array[InternalRow] = {
+    val files = longMetric("payloadFiles")
+    val pages = longMetric("payloadPages")
+    val rowsOut = longMetric("payloadRows")
+    val types = output.map(_.dataType).toArray
+    val partValues =
+      if (spec.partitionColumns.isEmpty) Map.empty[String, InternalRow]
+      else IndexManager.partitionValues(
+        session, spec.table, StructType(output.map(a => StructField(a.name, a.dataType))))
+    val Seq(fileIdx, riIdx, vecIdx) =
+      WinnerPayload.FeedColumns.map(n => child.output.indexWhere(_.name == n))
+    // where each output column comes from: the feed's vector (-1), a
+    // partition value (-2 - its index), or the data columns read (>= 0)
+    val dataCols = output.filter(a =>
+      a.name != spec.column && !spec.partitionColumns.contains(a.name))
+    val source = output.map { a =>
+      if (a.name == spec.column) -1
+      else if (spec.partitionColumns.contains(a.name)) -2 - spec.partitionColumns.indexOf(a.name)
+      else dataCols.indexOf(a)
+    }.toArray
+    val partTypes = spec.partitionColumns.map(n => output.find(_.name == n).get.dataType).toArray
+    val columns = dataCols.map(a => SelectiveFetch.PayloadColumn(a.name, a.dataType))
+    val modes = spec.modes
+    winners => {
+      val out = new Array[InternalRow](winners.length)
+      val proj = UnsafeProjection.create(types)
+      winners.indices.groupBy(i => winners(i).getUTF8String(fileIdx).toString).foreach {
+        case (file, idx) =>
+          val sorted = idx.sortBy(i => winners(i).getLong(riIdx))
+          val (values, nPages) = SelectiveFetch.payload(
+            file, sorted.map(i => winners(i).getLong(riIdx).toInt).toArray, columns, modes)
+          files.add(1L)
+          pages.add(nPages.toLong)
+          rowsOut.add(sorted.length.toLong)
+          val part = if (partTypes.isEmpty) null else partValues.getOrElse(file,
+            throw new IllegalStateException(s"no partition values listed for $file"))
+          sorted.zipWithIndex.foreach { case (w, j) =>
+            val row = new GenericInternalRow(source.length)
+            var c = 0
+            while (c < source.length) {
+              val s = source(c)
+              row.update(c,
+                if (s == -1) winners(w).getArray(vecIdx)
+                else if (s >= 0) values(s)(j)
+                else part.get(-2 - s, partTypes(-2 - s)))
+              c += 1
+            }
+            out(w) = proj(row).copy()
+          }
+      }
+      out
+    }
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): WinnerPayloadExec =
+    copy(child = c)
+}
+
+/** Plans [[IvfCandidateScan]] / [[MeteredFetch]] / [[WinnerPayload]]; injected via
   * `Graft.install` / `GraftExtensions` (the reference registers its exec
   * through its session builder the same way, `src/df_vector/session.rs`).
   */
@@ -279,6 +456,8 @@ object GraftStrategy extends SparkStrategy {
         IvfCandidateScanExec(out, col, q, nprobe, maxCands, files, dir, cos) :: Nil
       case MeteredFetch(child) =>
         MeteredFetchExec(planLater(child)) :: Nil
+      case WinnerPayload(child, out, spec) =>
+        WinnerPayloadExec(planLater(child), out, spec) :: Nil
       case _ => Nil
     }
 }

@@ -25,6 +25,20 @@ class VectorTopKSpec extends SparkSpec {
   private def tmpStore = new IndexStore(
     Files.createTempDirectory("graft-store").toString)
 
+  /** Every node of an executed plan, across AQE wrappers and query-stage
+    * boundaries.
+    */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
+      Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      p +: allNodes(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      p +: allNodes(q.plan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
+      p +: allNodes(r.child)
+    case _ => p +: p.children.flatMap(allNodes)
+  }
+
   // Fixture 1: tests.rs:31-39; WHERE id >= 2 LIMIT 2 → ids [5, 2] (tests.rs:99)
   test("reference fixture 1: filter id >= 2, top-2 → ids [5, 2]") {
     val path = writeFixture(Seq(
@@ -160,17 +174,6 @@ class VectorTopKSpec extends SparkSpec {
       VectorTopK.Options(nprobe = 64),
       filter = Some(col("id") >= 3), store = store)
     df.collect()
-    // flatten across AQE wrappers and query-stage boundaries
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        p +: allNodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        p +: allNodes(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        p +: allNodes(r.child)
-      case _ => p +: p.children.flatMap(allNodes)
-    }
     val nodes = allNodes(df.queryExecution.executedPlan)
     val metered = nodes.collectFirst { case m: graft.plans.MeteredFetchExec => m }
     assert(metered.isDefined, df.queryExecution.executedPlan.toString)
@@ -467,13 +470,91 @@ class VectorTopKSpec extends SparkSpec {
 
     val df = VectorTopK.indexed(spark, dir, "vec", Seq(0f, 0f), 3,
       VectorTopK.Options(nprobe = 64), store = store)
-    val ids = df.select("id").collect().map(_.getLong(0)).toSet
+    val ids = df.collect().map(_.getAs[Long]("id")).toSet
     assert(ids == Set(0L, 1L, 2L))
-    // the fetched plan scans exactly one file — the winners' file
-    assert(df.inputFiles.length == 1, df.inputFiles.mkString(", "))
-    // and the join build side is the broadcast k-row winner set
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoop"))
+    // the payload node opened exactly one file — the winners' — and read
+    // exactly the k winner rows from it
+    val payload = allNodes(df.queryExecution.executedPlan).collectFirst {
+      case p: graft.plans.WinnerPayloadExec => p
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+    assert(payload.metrics("payloadFiles").value == 1L)
+    assert(payload.metrics("payloadRows").value == 3L)
+    assert(payload.metrics("payloadPages").value >= 1L)
+  }
+
+  /** Spark jobs started while `f` runs: job starts are tagged with a job
+    * group, then a fence job proves the listener bus has delivered them.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains(group + "-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-fence"), "fence job never reached the listener")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("indexed and search construction runs no Spark job; indexed runs as one") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-nojobs").toString
+    (0 until 200).map(i => (i.toLong, Seq(i * 0.01f, (i % 7).toFloat)))
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .repartition(2).write.mode("overwrite").parquet(dir)
+    val store = tmpStore
+    val build = IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    val options = VectorTopK.Options(nprobe = build.nClusters)
+    val q = Seq(0.5f, 3f)
+    // the job-free listing names the files Spark's read does
+    assert(IndexManager.listFiles(spark, dir) ==
+      spark.read.parquet(dir).inputFiles.toSeq.map(IndexStore.canonicalPath).sorted)
+    // the first call infers (and memoizes) the table schema
+    VectorTopK.indexed(spark, dir, "vec", q, 5, options, store = store)
+    var indexed: org.apache.spark.sql.DataFrame = null
+    var search: org.apache.spark.sql.Dataset[VectorTopK.SearchResult] = null
+    assert(jobsDuring {
+      indexed = VectorTopK.indexed(spark, dir, "vec", q, 5, options, store = store)
+      search = VectorTopK.search(spark, dir, "vec", q, 5, options, store)
+    } == 0)
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(jobsDuring { rows = indexed.collect() } == 1)
+    val brute = VectorTopK.bruteForce(spark.read.parquet(dir), "vec", q, 5)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(rows.map(_.getAs[Long]("id")).toSet == brute)
+    assert(search.collect().length == 5)
+  }
+
+  test("an indexed frame built before an append and extend ranks the appended rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lazy-append").toString
+    def write(rows: Seq[(Long, Seq[Float])]): Unit =
+      rows.toDF("id", "vec")
+        .select(col("id"), col("vec").cast("array<float>").as("vec"))
+        .coalesce(1).write.mode("append").parquet(dir)
+    write((0 until 60).map(i => (i.toLong, Seq(10f + i * 0.1f, 10f))))
+    write((60 until 120).map(i => (i.toLong, Seq(-10f - i * 0.1f, 10f))))
+    val store = tmpStore
+    val build = IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(2)), store)
+    val df = VectorTopK.indexed(spark, dir, "vec", Seq(0f, 0f), 3,
+      VectorTopK.Options(nprobe = build.nClusters), store = store)
+    // the appended row is the nearest to the query by far
+    write(Seq((999L, Seq(0.01f, 0f))))
+    IvfBuilder.extend(spark, dir, IvfBuilder.Config("vec"), store)
+    val ids = df.collect().map(_.getAs[Long]("id")).toSeq
+    assert(ids.head == 999L, ids.toString)
+    assert(ids.size == 3)
   }
 
   test("two-phase fetch keeps Hive-style partition columns") {
