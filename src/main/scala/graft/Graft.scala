@@ -102,6 +102,20 @@ object Graft {
         s.getTagValue(plans.VectorTopKRule.TierReasonTag).get
     }
 
+  /** How a planned vector top-k (or range) rewrite reads its rows — the
+    * read of [[plans.VectorTopKRule.PayloadTag]]: `page` when the k
+    * winners' pages are read directly (the plan `VectorTopK.indexed`
+    * runs), or `semi-join: <reason>` when the scan is semi-joined to a
+    * candidate feed (e.g. `semi-join: a filter sits below the top-k`). None
+    * when the rule did not rewrite the query. Like [[tierResolution]], it
+    * forces optimization but runs no jobs.
+    */
+  def payloadResolution(df: org.apache.spark.sql.DataFrame): Option[String] =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case p if p.getTagValue(plans.VectorTopKRule.PayloadTag).isDefined =>
+        p.getTagValue(plans.VectorTopKRule.PayloadTag).get
+    }
+
   /** Planner strategy for the custom candidate-scan node (idempotent). */
   def installStrategy(spark: SparkSession): Unit = {
     val existing = spark.experimental.extraStrategies

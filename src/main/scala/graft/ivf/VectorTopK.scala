@@ -5,8 +5,12 @@ import scala.reflect.ClassTag
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{array_distance, float_vector, Sq8, VectorKernels}
 import graft.ivf.IndexStore.Sidecar
@@ -368,9 +372,9 @@ object VectorTopK {
     * and `extend` ranks the appended rows too. A table holding a column
     * the page reader does not cover (struct, map, a list other than the
     * vector) or a `list<double>` vector (whose payload must stay double)
-    * takes the lazy `scan ⋉ winner feed` semi-join instead — the SQL
-    * rewrite's shape — over the files listed at construction; the reason is
-    * logged.
+    * takes the lazy `scan ⋉ winner feed` semi-join instead over the files
+    * listed at construction; the reason ([[graft.plans.WinnerPayload.refusal]],
+    * which the SQL rewrite shares) is logged.
     *
     * @param filter residual predicate applied AFTER candidate pruning
     *               (post-filter semantics, like the reference); needs the
@@ -403,12 +407,8 @@ object VectorTopK {
         val files = nonEmpty(listing.files, path)
         val schema = IndexManager.tableSchema(spark, path, files, store)
         val conf = spark.sessionState.conf
-        val fallback = graft.plans.WinnerPayload
-          .unsupported(schema, column, listing.partitionColumns)
-          .orElse(Option.when(conf.getConf(SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION))(
-            s"${SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION.key} is on"))
         def topK(feed: DataFrame) = feed.orderBy(col("_dist").asc_nulls_last).limit(k)
-        fallback match {
+        graft.plans.WinnerPayload.refusal(schema, column, listing.partitionColumns, conf) match {
           case None =>
             // the winners arrive in `_dist` order, which is the metric's
             // order (`1 − cos` ascending for cosine), and keep it
@@ -417,11 +417,7 @@ object VectorTopK {
               spark, files, column, query, k, options, store,
               relist = Some(() => IndexManager.listFiles(spark, path)), withVec = true)
             graft.plans.WinnerPayload.df(spark, topK(feed), schema,
-              graft.plans.WinnerPayload.Spec(
-                path, column, listing.partitionColumns,
-                SelectiveFetch.RebaseModes(
-                  conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString,
-                  conf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)))
+              graft.plans.WinnerPayload.spec(path, column, listing.partitionColumns, conf))
           case Some(reason) =>
             log.info(s"graft indexed payload: scan semi-join winner feed ($reason)")
             val winners = topK(winnerFeed(spark, files, column, query, k, options, store))
@@ -512,9 +508,14 @@ object VectorTopK {
       case None =>
         val keep = options.keep(k)
         if (options.tier == Tier.Float && withVec)
-          spark.createDataset(overFiles(spark, source).flatMap(f =>
-            p.exactVecRows(f, p.candidates(p.index(f)))))
-            .toDF("_file", "_ri", "_dist", "_vec")
+          // Catalyst rows, so building the frame derives and resolves no
+          // encoder: the SQL rewrite builds this feed on every planned query
+          org.apache.spark.sql.graft.Bridge.ofInternalRows(spark,
+            overFiles(spark, source).flatMap(f =>
+              p.exactVecRows(f, p.candidates(p.index(f))).map { case (file, ri, d, vec) =>
+                InternalRow(UTF8String.fromString(file), ri, d, UnsafeArrayData.fromPrimitiveArray(vec))
+              }),
+            VecFeedSchema)
         else {
           val scored = spark
             .createDataset(overFiles(spark, source).flatMap(scorer.score(_, p, keep)))
@@ -531,6 +532,12 @@ object VectorTopK {
         }
     }
   }
+
+  /** The `(_file, _ri, _dist, _vec)` feed's schema. */
+  private val VecFeedSchema = StructType(Seq(
+    StructField("_file", StringType), StructField("_ri", LongType, nullable = false),
+    StructField("_dist", FloatType, nullable = false),
+    StructField("_vec", ArrayType(FloatType, containsNull = false))))
 
   /** Exact refine of `(_file, _ri)` survivors: regroup per file, read only
     * their floats, emit `(_file, _ri, _dist)` (and `_vec` with `withVec`).

@@ -340,12 +340,15 @@ object Lexical {
 
   private def registerBatchCache(
       spark: org.apache.spark.sql.SparkSession, df: DataFrame): Unit =
-    OpCaches.register(spark, df)
+    OpCaches.register(spark, df, CacheOwner)
 
-  /** Unpersist every op-internal cache registered in this session —
-    * [[scoreBulk]]'s mid-tier (qid, term) batch plans plus every other
-    * operator's registered persist (r15: now delegates to the engine-wide
-    * [[OpCaches]] registry) — and return how many were dropped. Call
+  /** The [[OpCaches]] owner of [[scoreBulk]]'s batch caches. */
+  private val CacheOwner = "lexical"
+
+  /** Unpersist [[scoreBulk]]'s mid-tier (qid, term) batch plans registered
+    * in this session — only Lexical's entries of the engine-wide
+    * [[OpCaches]] registry; other operators' persists stay (drop those
+    * with `OpCaches.release`) — and return how many were dropped. Call
     * between batches in a loop-heavy bulk-scoring service, AFTER the
     * previous batch's result has been fully consumed — an un-consumed
     * result recomputes from lineage, which for a non-deterministic
@@ -354,7 +357,7 @@ object Lexical {
     * your behalf).
     */
   def releaseBatchCaches(spark: org.apache.spark.sql.SparkSession): Int =
-    OpCaches.release(spark)
+    OpCaches.release(spark, CacheOwner)
 
   private def scoreBulk(
       post: DataFrame,

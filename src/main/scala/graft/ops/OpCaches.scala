@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -24,6 +26,11 @@ import org.apache.spark.storage.StorageLevel
   * the session cache per repetition pay and drop these blocks anyway;
   * this hook is for loop-heavy services that keep one session alive.
   *
+  * Each entry carries its OWNER, the op family that registered it:
+  * [[release]] with an owner drops only that family's caches (what
+  * `Lexical.releaseBatchCaches` does, so a bulk-scoring loop cannot evict
+  * another op's live intermediates); without one it drops every entry.
+  *
   * Entries are STRONG references on purpose: the persist itself already
   * pins the blocks, so the registry adds no pinning beyond what exists —
   * a weak entry would be collected before release could unpersist it,
@@ -31,9 +38,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object OpCaches {
 
+  /** The owner of every entry registered without one. */
+  private val DefaultOwner = "ops"
+
   private val caches =
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+      java.util.concurrent.ConcurrentLinkedQueue[(String, DataFrame)]]()
 
   /** Persist `df` at MEMORY_AND_DISK and register it for [[release]];
     * returns the persisted frame. The single entry point every
@@ -45,19 +55,21 @@ object OpCaches {
     p
   }
 
-  /** Register `df` for [[release]]. Frames already unpersisted outside
-    * the registry are dropped from the queue first, so a long-lived
-    * session that unpersists on its own does not grow it per call.
+  /** Register `df` for [[release]] under `owner`. Frames already
+    * unpersisted outside the registry are dropped from the queue first, so
+    * a long-lived session that unpersists on its own does not grow it per
+    * call.
     */
-  private[graft] def register(spark: SparkSession, df: DataFrame): Unit =
+  private[graft] def register(
+      spark: SparkSession, df: DataFrame, owner: String = DefaultOwner): Unit =
     caches.synchronized {
       var q = caches.get(spark)
       if (q == null) {
-        q = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+        q = new java.util.concurrent.ConcurrentLinkedQueue[(String, DataFrame)]()
         caches.put(spark, q)
       }
-      q.removeIf(_.storageLevel == StorageLevel.NONE): Unit
-      q.add(df): Unit
+      q.removeIf(_._2.storageLevel == StorageLevel.NONE): Unit
+      q.add((owner, df)): Unit
     }
 
   /** How many frames are queued for [[release]] in `spark`. */
@@ -70,18 +82,24 @@ object OpCaches {
     * non-deterministic batch input, reintroduces the consistency hazard
     * its persist closes, so ops cannot auto-evict on your behalf).
     */
-  def release(spark: SparkSession): Int = {
-    val q = caches.synchronized(caches.remove(spark))
-    if (q == null) 0
-    else {
-      var n = 0
-      var df = q.poll()
-      while (df != null) {
-        df.unpersist(blocking = true)
-        n += 1
-        df = q.poll()
-      }
-      n
-    }
+  def release(spark: SparkSession): Int =
+    unpersist(caches.synchronized(Option(caches.remove(spark)).toSeq.flatMap(drain(_, _ => true))))
+
+  /** [[release]] of only the caches `owner` registered; the others stay. */
+  private[graft] def release(spark: SparkSession, owner: String): Int =
+    unpersist(caches.synchronized(
+      Option(caches.get(spark)).toSeq.flatMap(drain(_, _ == owner))))
+
+  private def drain(
+      q: java.util.concurrent.ConcurrentLinkedQueue[(String, DataFrame)],
+      take: String => Boolean): Seq[DataFrame] = {
+    val taken = q.iterator().asScala.filter(e => take(e._1)).toList
+    taken.foreach(q.remove)
+    taken.map(_._2)
+  }
+
+  private def unpersist(frames: Seq[DataFrame]): Int = {
+    frames.foreach(_.unpersist(blocking = true))
+    frames.size
   }
 }

@@ -4,15 +4,19 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
-  GenericInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, UnaryNode}
+  GenericInternalRow, IntegerLiteral, NamedExpression, PlanExpression, SortOrder,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Limit, LogicalPlan, Project,
+  ReturnAnswer, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition,
   UnknownPartitioning}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, SQLExecution,
-  UnaryExecNode}
+import org.apache.spark.sql.execution.{InputAdapter, LeafExecNode, ProjectExec, SparkPlan,
+  SparkStrategy, SQLExecution, TakeOrderedAndProjectExec, UnaryExecNode, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -267,15 +271,30 @@ final case class MeteredFetchExec(child: SparkPlan) extends UnaryExecNode {
     }
   }
 
+  /** Under [[TopKCollectExec]]: the child's rows, collected on the driver
+    * (one batch).
+    */
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = TopKCollectExec.driverRows(child)
+    longMetric("embeddingsFetched").add(rows.length.toLong)
+    longMetric("batchesFetched").add(1L)
+    SQLMetrics.postDriverMetricUpdates(
+      sparkContext, sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      metrics.values.toSeq)
+    rows
+  }
+
   override protected def withNewChildInternal(c: SparkPlan): MeteredFetchExec =
     copy(child = c)
 }
 
-/** The payload step of the filter-free `VectorTopK.indexed`: the table's
-  * full rows of the k winners in `child` (a `_file, _ri, _vec` feed of at
-  * most k rows), read page-selectively — the reference TopkBuilder's
-  * RowSelection fetch (`src/ivf/search.rs:155-244`). `output` is the
-  * table's schema as Spark infers it; the vector column comes from each
+/** The payload step of the filter-free `VectorTopK.indexed` and of the
+  * filter-free SQL top-k [[VectorTopKRule]] rewrites: the table's rows of
+  * the k winners in `child` (a `_file, _ri, _vec` feed of at most k rows),
+  * read page-selectively — the reference TopkBuilder's RowSelection fetch
+  * (`src/ivf/search.rs:155-244`). `output` is the table's schema as Spark
+  * infers it (the API), or the replaced leaf's attributes that the plan
+  * above reads (SQL); the vector column comes from each
   * winner's `_vec`, which the scoring pass already decoded, partition
   * columns from the file index, and every other column from
   * [[graft.ivf.SelectiveFetch.payload]].
@@ -331,6 +350,36 @@ object WinnerPayload {
         case (false, dt) => Some(s"column '${f.name}' is ${dt.simpleString}, not an atomic type")
       }
     }.nextOption()
+
+  /** Why a top-k over a table of `schema` must take the `scan ⋉ winner
+    * feed` semi-join instead of the page-level payload, or None when the
+    * payload can serve it — the one decision `VectorTopK.indexed` and
+    * [[VectorTopKRule]] share. Besides [[unsupported]]: INT96 conversion
+    * (the page reader applies no time-zone conversion), and, for a SQL
+    * leaf, more than one root path (the payload lists one table root for
+    * partition values) or a `_metadata` column in the leaf's output (the
+    * payload reads no file metadata).
+    */
+  def refusal(
+      schema: StructType,
+      column: String,
+      partitionColumns: Seq[String],
+      conf: SQLConf,
+      rootPaths: Int = 1,
+      metadataOutput: Boolean = false): Option[String] =
+    Option.when(rootPaths > 1)(s"the scan has $rootPaths root paths")
+      .orElse(Option.when(metadataOutput)("the scan outputs _metadata"))
+      .orElse(unsupported(schema, column, partitionColumns))
+      .orElse(Option.when(conf.getConf(SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION))(
+        s"${SQLConf.PARQUET_INT96_TIMESTAMP_CONVERSION.key} is on"))
+
+  /** The spec of a payload over the table at `table`, with the session's
+    * datetime rebase modes.
+    */
+  def spec(table: String, column: String, partitionColumns: Seq[String], conf: SQLConf): Spec =
+    Spec(table, column, partitionColumns, SelectiveFetch.RebaseModes(
+      conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString,
+      conf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString))
 
   /** The payload rows of `winners` over a table of `schema` (requires
     * [[GraftStrategy]] installed).
@@ -406,7 +455,10 @@ final case class WinnerPayloadExec(
       else if (spec.partitionColumns.contains(a.name)) -2 - spec.partitionColumns.indexOf(a.name)
       else dataCols.indexOf(a)
     }.toArray
-    val partTypes = spec.partitionColumns.map(n => output.find(_.name == n).get.dataType).toArray
+    // a SQL payload outputs only the columns its plan references, so a
+    // partition column may be absent; it is then never read
+    val partTypes = spec.partitionColumns
+      .map(n => output.find(_.name == n).fold(NullType: DataType)(_.dataType)).toArray
     val columns = dataCols.map(a => SelectiveFetch.PayloadColumn(a.name, a.dataType))
     val modes = spec.modes
     winners => {
@@ -444,7 +496,55 @@ final case class WinnerPayloadExec(
     copy(child = c)
 }
 
-/** Plans [[IvfCandidateScan]] / [[MeteredFetch]] / [[WinnerPayload]]; injected via
+/** The collected root of a SQL top-k whose leaf [[VectorTopKRule]] replaced
+  * with a [[WinnerPayload]]: `LIMIT limit` of `child` ordered by
+  * `sortOrder`, projected to `projectList` — Spark's
+  * `TakeOrderedAndProjectExec`, except that a collect takes the child's
+  * (at most `limit`) rows on the driver ([[TopKCollectExec.driverRows]]),
+  * so the winners merge and their payload read run there, as the API's
+  * `WinnerPayloadExec.executeCollect` does: the query is the one scoring
+  * stage. Any other consumer runs the TakeOrdered.
+  */
+final case class TopKCollectExec(
+    limit: Int,
+    sortOrder: Seq[SortOrder],
+    projectList: Seq[NamedExpression],
+    child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+
+  protected override def doExecute(): RDD[InternalRow] =
+    TakeOrderedAndProjectExec(limit, sortOrder, projectList, child).execute()
+
+  override def executeCollect(): Array[InternalRow] = {
+    val ordering = new LazilyGeneratedOrdering(sortOrder, child.output)
+    val project = UnsafeProjection.create(projectList, child.output)
+    project.initialize(0)
+    TopKCollectExec.driverRows(child).sorted(ordering).take(limit).map(r => project(r).copy())
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): TopKCollectExec = copy(child = c)
+}
+
+object TopKCollectExec {
+  /** `plan`'s rows collected on the driver: Projects (codegen wrappers
+    * included) are evaluated there over their child's driver rows, and
+    * every other node collects through its own `executeCollect` — for
+    * [[WinnerPayloadExec]] and [[MeteredFetchExec]], the driver path.
+    */
+  private[plans] def driverRows(plan: SparkPlan): Array[InternalRow] = plan match {
+    case w: WholeStageCodegenExec => driverRows(w.child)
+    case i: InputAdapter => driverRows(i.child)
+    case p: ProjectExec if !p.projectList.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) =>
+      val project = UnsafeProjection.create(p.projectList, p.child.output)
+      project.initialize(0)
+      driverRows(p.child).map(r => project(r).copy())
+    case other => other.executeCollect()
+  }
+}
+
+/** Plans [[IvfCandidateScan]] / [[MeteredFetch]] / [[WinnerPayload]], and the
+  * collected root of a payload top-k as a [[TopKCollectExec]]; injected via
   * `Graft.install` / `GraftExtensions` (the reference registers its exec
   * through its session builder the same way, `src/df_vector/session.rs`).
   */
@@ -452,6 +552,8 @@ object GraftStrategy extends SparkStrategy {
   override def apply(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[SparkPlan] =
     plan match {
+      case ReturnAnswer(PayloadTopK(k, projectList, sort)) =>
+        TopKCollectExec(k, sort.order, projectList, planLater(sort.child)) :: Nil
       case IvfCandidateScan(out, col, q, nprobe, maxCands, files, dir, _, cos) =>
         IvfCandidateScanExec(out, col, q, nprobe, maxCands, files, dir, cos) :: Nil
       case MeteredFetch(child) =>
@@ -460,4 +562,29 @@ object GraftStrategy extends SparkStrategy {
         WinnerPayloadExec(planLater(child), out, spec) :: Nil
       case _ => Nil
     }
+
+  /** `(limit, projectList, Sort)` of a collected top-k root whose Sort
+    * [[VectorTopKRule]] gave the page-level payload: `Limit(Project?(Sort))`,
+    * or `Project?(Sort)` alone — the optimizer drops the Limit when it runs
+    * after the rewrite (an extensions session), the payload's maxRows
+    * already bounding the Sort.
+    */
+  private object PayloadTopK {
+    def unapply(root: LogicalPlan): Option[(Int, Seq[NamedExpression], Sort)] = {
+      val (limit, top) = root match {
+        case Limit(IntegerLiteral(k), t) => (Some(k), t)
+        case t => (None, t)
+      }
+      val (projectList, sort) = top match {
+        case Project(list, s: Sort) => (list, s)
+        case s: Sort => (s.output, s)
+        case _ => return None
+      }
+      if (!sort.global ||
+          !sort.getTagValue(VectorTopKRule.PayloadTag).contains(VectorTopKRule.PagePayload))
+        return None
+      limit.orElse(sort.maxRows.filter(_ <= Int.MaxValue).map(_.toInt))
+        .map(k => (k, projectList, sort))
+    }
+  }
 }

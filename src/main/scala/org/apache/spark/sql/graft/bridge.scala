@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, DataType, FloatType}
 
 /** Minimal `private[sql]` bridge. Everything else in the engine lives in the
-  * `graft` package; only the two pieces that structurally need `sql`-private
-  * types are here: the Column<->Expression converters and the
+  * `graft` package; only the pieces that structurally need `sql`-private
+  * types are here: the Column<->Expression converters, the DataFrame
+  * constructors over a logical plan and over internal rows, and the
   * `inputTypes` declaration (Seq[AbstractDataType] is private[sql]).
   */
 object Bridge {
@@ -18,6 +19,15 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** A DataFrame over rows already in Catalyst's form: no encoder to derive
+    * or resolve.
+    */
+  def ofInternalRows(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }
 
 /** Base for binary expressions over two `array<float>` columns; declares the

@@ -110,11 +110,35 @@ class GraftExtensionsSpec extends AnyFunSuite {
            |LIMIT 5""".stripMargin
       val df = spark.sql(sql)
       // the rewrite fired — filter-free SQL gets the winner-first feed
-      // (phase-1 `_dist` ranking under a LeftSemi) — and the
+      // (phase-1 `_dist` ranking under a WinnerPayload) — and the
       // ANN-exhaustive answer equals brute force
       val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("LeftSemi") && optimized.contains("_dist"), optimized)
-      val got = df.collect().map(_.getLong(0)).toSet
+      assert(graft.Graft.payloadResolution(df).contains(plans.VectorTopKRule.PagePayload))
+      assert(optimized.contains("WinnerPayload") && optimized.contains("_dist"), optimized)
+      // collected, the rewrite is one job of one stage here too: the
+      // optimizer, running on after the rewrite, drops the Limit the
+      // payload's maxRows bounds, and the root still collects on the driver
+      assert(df.queryExecution.executedPlan.toString.contains("TopKCollect"),
+        df.queryExecution.executedPlan.toString)
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("spark.jobGroup.id") == "graft-ext-topk")
+            stages.add(e.stageInfos.size)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val got = try {
+        spark.sparkContext.setJobGroup("graft-ext-topk", "top-k")
+        try df.collect().map(_.getLong(0)).toSet
+        finally spark.sparkContext.clearJobGroup()
+      } finally {
+        // a fence job: the listener bus delivers in order
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 10000000000L
+        while (stages.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(stages.toArray.toSeq == Seq(1), s"stages per job: ${stages.toArray.toSeq}")
       spark.conf.set(plans.VectorTopKRule.EnabledKey, "false")
       val brute = spark.sql(sql).collect().map(_.getLong(0)).toSet
       spark.conf.set(plans.VectorTopKRule.EnabledKey, "true")

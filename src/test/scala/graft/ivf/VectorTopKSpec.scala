@@ -759,6 +759,49 @@ class VectorTopKSpec extends SparkSpec {
     assert(ann == annGolden((tierName, metricName, shape)))
   }
 
+  // the SQL rewrite on the same corpus: at the ANN setting it must return
+  // the `indexed` line's rows (its plan is `indexed`'s), and at exhaustive
+  // settings brute force; both sides sorted by (distance, id), since the
+  // SQL Sort re-ranks by the kernel expression
+  for {
+    tierName <- Seq("float", "sq8", "pq", "pqr")
+    metricName <- Seq("l2", "cosine")
+  } test(s"top-k matrix: tier=$tierName metric=$metricName output=sql") {
+    val (dir, store, q) = matrix
+    val cosine = metricName == "cosine"
+    def kernel(v: Array[Float]): Float =
+      if (cosine) 1.0f - graft.functions.VectorKernels.cosine(v, q.toArray)
+      else math.sqrt(graft.functions.VectorKernels.squaredL2(v, q.toArray).toDouble).toFloat
+    def byDistance(rows: Seq[(Long, Float)]) = rows.sortBy { case (id, d) => (d, id) }
+    val lit = q.map(f => java.lang.Float.toString(f) + "F").mkString("array(", ",", ")")
+    val orderBy =
+      if (cosine) s"array_cosine_similarity(vec, $lit) DESC" else s"array_distance(vec, $lit)"
+    val sql = s"SELECT id, vec FROM graft_matrix ORDER BY $orderBy LIMIT $matrixK"
+    graft.Graft.install(spark)
+    spark.read.parquet(dir).createOrReplaceTempView("graft_matrix")
+    val keys = Seq(graft.plans.VectorTopKRule.IndexDirKey, graft.plans.VectorTopKRule.TierKey,
+      graft.plans.VectorTopKRule.NprobeKey, graft.plans.VectorTopKRule.OversampleKey)
+    def run(nprobe: Int, oversample: Int): Seq[(Long, Float)] = {
+      Seq(store.dir, tierName, nprobe.toString, oversample.toString).zip(keys)
+        .foreach { case (v, k) => spark.conf.set(k, v) }
+      val df = spark.sql(sql)
+      assert(graft.Graft.tierResolution(df).exists(_.contains(s"resolved=$tierName")),
+        graft.Graft.tierResolution(df).toString)
+      assert(graft.Graft.payloadResolution(df).contains(graft.plans.VectorTopKRule.PagePayload))
+      byDistance(df.collect().map(r => (r.getLong(0), kernel(r.getSeq[Float](1).toArray))).toSeq)
+    }
+    try {
+      val brute = spark.read.parquet(dir).select("id", "vec").collect()
+        .map(r => (r.getLong(0), kernel(r.getSeq[Float](1).toArray))).toSeq
+      assert(run(nprobe = 8, oversample = 2400 / matrixK) == byDistance(brute).take(matrixK))
+      val indexedLine = byDistance(annGolden((tierName, metricName, "indexed")).split(",").map { e =>
+        val Array(id, d) = e.split(":")
+        (id.toLong, d.toFloat)
+      }.toSeq)
+      assert(run(nprobe = 2, oversample = 2) == indexedLine)
+    } finally keys.foreach(spark.conf.unset)
+  }
+
   test("an explicit PQ tier refuses a table without its sidecar") {
     val path = writeFixture(Seq.tabulate(8)(i => Seq(i.toFloat, 0f)))
     val store = tmpStore

@@ -239,6 +239,26 @@ class LexicalSpec extends SparkSpec {
     Lexical.releaseBatchCaches(spark): Unit
   }
 
+  test("releaseBatchCaches leaves another op's registered persist in place") {
+    val huge = (0 until 6100).map { q =>
+      (q.toLong, (0 until 11).map(j => s"ow${q}w$j").mkString(" ") + " cat dog")
+    }.toDF("qid", "qtext")
+    Lexical.releaseBatchCaches(spark): Unit
+    OpCaches.release(spark): Unit
+    // another operator's multi-consumer intermediate, registered the way
+    // every op persist is
+    val other = OpCaches.persist(docs.select(col("id") * 2 as "id2"))
+    other.count(): Unit
+    Lexical.bm25BulkTopK(docs, "id", "text", huge, "qid", "qtext", k = 5)
+      .as[(Long, Long, Long)].collect(): Unit
+    assert(Lexical.releaseBatchCaches(spark) >= 1, "the batch plan was not registered")
+    assert(other.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "releaseBatchCaches unpersisted another op's cache")
+    assert(OpCaches.queued(spark) == 1)
+    assert(OpCaches.release(spark) == 1)
+    assert(other.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("incremental appendPostings reproduces the one-shot snapshot scores") {
     val queries = Seq((0L, "cat fish"), (1L, "dog")).toDF("qid", "qtext")
     val direct = Lexical.bm25BulkTopK(docs, "id", "text", queries, "qid", "qtext", k = 10)

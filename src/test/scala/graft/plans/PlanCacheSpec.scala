@@ -14,7 +14,9 @@ import graft.ivf.{IndexStore, IvfBuilder}
   * over an unchanged table must be served from the cache (flat in file
   * count), stay exact, and invalidate on any rename-landed change to the
   * data dir or sidecar store — the same staleness contract as
-  * `IndexStore.memoizedTableProbe`.
+  * `IndexStore.memoizedTableProbe`. Only the semi-join shapes use the cache
+  * (the filtered top-k here, and the range predicate); a filter-free top-k
+  * plans the page-level payload, which caches nothing.
   */
 class PlanCacheSpec extends SparkSpec {
 
@@ -43,17 +45,28 @@ class PlanCacheSpec extends SparkSpec {
     }
   }
 
-  private def topk(k: Int = 5, q: String = "0.5F"): DataFrame =
+  /** The FILTERED top-k — the shape whose `scan ⋉ feed` subtree the plan
+    * cache holds; `where = ""` gives the filter-free top-k.
+    */
+  private def topk(k: Int = 5, q: String = "0.5F", where: String = "WHERE label >= 1"): DataFrame =
     spark.sql(
-      s"""SELECT id FROM plancache_vecs
+      s"""SELECT id FROM plancache_vecs $where
          |ORDER BY array_distance(vec, array(${Seq.fill(6)(q).mkString(",")})) ASC
          |LIMIT $k""".stripMargin)
 
   private def register(): Unit =
     spark.read.parquet(dataDir).createOrReplaceTempView("plancache_vecs")
 
-  private def fired(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.toString.contains("LeftSemi")
+  /** The rewrite fired: its payload tag is set, and the plan has the shape
+    * the tag names (`WinnerPayload` for `page`, else a `LeftSemi` join).
+    */
+  private def fired(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    graft.Graft.payloadResolution(df).exists { p =>
+      if (p == VectorTopKRule.PagePayload) plan.contains("WinnerPayload")
+      else plan.contains("LeftSemi")
+    }
+  }
 
   private def ids(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
 
@@ -209,16 +222,19 @@ class PlanCacheSpec extends SparkSpec {
     register()
     withRule {
       VectorTopKRule.clearPlanCache()
-      val want = ids(topk()) // also primes the cache
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      try {
-        val tasks = (0 until 16).map { _ =>
-          pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
-            override def call(): Seq[Long] = ids(topk())
-          })
-        }
-        tasks.foreach(t => assert(t.get(120, java.util.concurrent.TimeUnit.SECONDS) == want))
-      } finally pool.shutdownNow()
+      // the cached filtered shape and the uncached filter-free one
+      Seq("WHERE label >= 1", "").foreach { where =>
+        val want = ids(topk(where = where)) // also primes the cache
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+        try {
+          val tasks = (0 until 16).map { _ =>
+            pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+              override def call(): Seq[Long] = ids(topk(where = where))
+            })
+          }
+          tasks.foreach(t => assert(t.get(120, java.util.concurrent.TimeUnit.SECONDS) == want))
+        } finally pool.shutdownNow()
+      }
     }
   }
 
@@ -227,20 +243,53 @@ class PlanCacheSpec extends SparkSpec {
     withRule {
       VectorTopKRule.clearPlanCache()
       topk().queryExecution.optimizedPlan // prime the cache
-      def selfJoin() = spark.sql(
-        s"""SELECT a.id FROM
-           |  (SELECT id FROM plancache_vecs
-           |   ORDER BY array_distance(vec, array(${Seq.fill(6)("0.5F").mkString(",")})) ASC
-           |   LIMIT 5) a
-           |JOIN
-           |  (SELECT id FROM plancache_vecs
-           |   ORDER BY array_distance(vec, array(${Seq.fill(6)("0.5F").mkString(",")})) ASC
-           |   LIMIT 5) b
-           |ON a.id = b.id""".stripMargin)
-      val joined = selfJoin()
+      val joined = selfJoin("WHERE label >= 1")
+      assert(fired(joined), joined.queryExecution.optimizedPlan.toString)
       val got = ids(joined).sorted
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
-      val want = ids(selfJoin()).sorted
+      val want = ids(selfJoin("WHERE label >= 1")).sorted
+      assert(got == want, s"self-join diverged: $got vs $want")
+    }
+  }
+
+  private def selfJoin(where: String): DataFrame = spark.sql(
+    s"""SELECT a.id FROM
+       |  (SELECT id FROM plancache_vecs $where
+       |   ORDER BY array_distance(vec, array(${Seq.fill(6)("0.5F").mkString(",")})) ASC
+       |   LIMIT 5) a
+       |JOIN
+       |  (SELECT id FROM plancache_vecs $where
+       |   ORDER BY array_distance(vec, array(${Seq.fill(6)("0.5F").mkString(",")})) ASC
+       |   LIMIT 5) b
+       |ON a.id = b.id""".stripMargin)
+
+  test("a filter-free top-k plans the payload and adds no cache entry") {
+    register()
+    withRule {
+      VectorTopKRule.clearPlanCache()
+      val (h0, m0) = VectorTopKRule.planCacheStats
+      val first = topk(where = "")
+      assert(graft.Graft.payloadResolution(first).contains(VectorTopKRule.PagePayload))
+      assert(fired(first), first.queryExecution.optimizedPlan.toString)
+      val firstIds = ids(first)
+      assert(ids(topk(where = "")) == firstIds)
+      assert(VectorTopKRule.planCacheStats == ((h0, m0)), "a filter-free plan touched the cache")
+      assert(VectorTopKRule.planCacheSize == 0)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      assert(ids(topk(where = "")) == firstIds)
+    }
+  }
+
+  test("self-join of two filter-free top-k subqueries stays exact") {
+    register()
+    withRule {
+      val joined = selfJoin("")
+      val plan = joined.queryExecution.optimizedPlan.toString
+      assert(plan.split("WinnerPayload ").length - 1 == 2, plan)
+      val got = ids(joined).sorted
+      assert(got.length == 5)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val want = ids(selfJoin("")).sorted
       assert(got == want, s"self-join diverged: $got vs $want")
     }
   }

@@ -52,19 +52,33 @@ class VectorTopKRuleSpec extends SparkSpec {
   private def register(): Unit =
     spark.read.parquet(dataDir).createOrReplaceTempView("graft_vecs")
 
-  private def fired(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.toString.contains("LeftSemi")
+  /** The rewrite fired: its payload tag is set, and the plan has the shape
+    * the tag names — a `WinnerPayload` for `page`, a `LeftSemi` join for
+    * `semi-join: …` (filtered, range, `twoPhase=false`, refused tables).
+    */
+  private def fired(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    graft.Graft.payloadResolution(df).exists { p =>
+      if (p == VectorTopKRule.PagePayload) plan.contains("WinnerPayload")
+      else p.startsWith("semi-join: ") && plan.contains("LeftSemi")
+    }
+  }
+
+  private def payload(df: DataFrame): String =
+    graft.Graft.payloadResolution(df).getOrElse(fail("the rewrite did not fire"))
 
   test("rewrite fires on ORDER BY array_distance ASC LIMIT k and stays exact") {
     register()
     withRule(nprobe = 8) { // nprobe = nClusters → exhaustive → exact
       val df = sqlTopk()
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
-      // filter-free → winner-first feed: the build side is the phase-1
+      // filter-free → winner-first feed: the payload reads the phase-1
       // top-k over selective reads, not the full candidate scan
+      assert(payload(df) == "page")
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("_dist"), optimized)
       assert(!optimized.contains("IvfCandidateScan"), optimized)
+      assert(!optimized.contains("LeftSemi"), optimized)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlTopk()
       assert(!fired(brute))
@@ -80,6 +94,7 @@ class VectorTopKRuleSpec extends SparkSpec {
       try {
         val df = sqlTopk()
         assert(fired(df), df.queryExecution.optimizedPlan.toString)
+        assert(payload(df) == s"semi-join: ${VectorTopKRule.TwoPhaseKey}=false")
         // candidate feed is the metered custom node, planned by GraftStrategy
         assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
         assert(df.queryExecution.executedPlan.toString.contains("IvfCandidateScanExec"))
@@ -97,6 +112,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     withRule(nprobe = 8) {
       val df = sqlTopk(extra = "WHERE label >= 2")
       assert(fired(df))
+      assert(payload(df) == "semi-join: a filter sits below the top-k")
       // a filter below the top-k must see full candidate rows — the
       // winner-first shortcut must NOT engage
       assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
@@ -182,6 +198,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     withRule(nprobe = 8) { // exhaustive → exact regardless of probe order
       val df = sqlCosineTopk()
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      assert(payload(df) == "page")
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("_dist"), optimized)
       assert(!optimized.contains("IvfCandidateScan"), optimized)
@@ -361,6 +378,180 @@ class VectorTopKRuleSpec extends SparkSpec {
 
   private def vecLit: String = s"array(${Seq.fill(8)("0.5F").mkString(",")})"
 
+  private def rows(df: DataFrame): Seq[(Long, Float)] =
+    df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+
+  test("ORDER BY a select-list alias of the L2 distance rewrites, exactly") {
+    register()
+    withRule(nprobe = 8) {
+      def q = spark.sql(
+        s"SELECT id, array_distance(vec, $vecLit) AS d FROM graft_vecs ORDER BY d LIMIT 5")
+      val df = q
+      assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      assert(payload(df) == "page")
+      val got = rows(df)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val brute = q
+      assert(!fired(brute))
+      assert(got == rows(brute))
+    }
+  }
+
+  test("ORDER BY a select-list alias of cosine similarity DESC rewrites, exactly") {
+    register()
+    withRule(nprobe = 8) {
+      def q = spark.sql(
+        s"""SELECT id, array_cosine_similarity(vec, $vecLit) AS s FROM graft_vecs
+           |ORDER BY s DESC LIMIT 5""".stripMargin)
+      val df = q
+      assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      assert(payload(df) == "page")
+      val got = rows(df)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val brute = q
+      assert(!fired(brute))
+      assert(got == rows(brute))
+      spark.conf.set(VectorTopKRule.EnabledKey, "true")
+      // the alias ASC is least-similar-first: no rewrite
+      assert(!fired(spark.sql(
+        s"SELECT id, array_cosine_similarity(vec, $vecLit) AS s FROM graft_vecs ORDER BY s LIMIT 5")))
+    }
+  }
+
+  /** Runs `sql` with the rule on and off: the rule fires with the payload
+    * reason `reason`, and both return the same ids in the same order.
+    */
+  private def assertRefused(sql: String, reason: String): Unit = {
+    val df = spark.sql(sql)
+    assert(fired(df), df.queryExecution.optimizedPlan.toString)
+    assert(payload(df) == s"semi-join: $reason")
+    val got = df.collect().map(_.getLong(0)).toSeq
+    spark.conf.set(VectorTopKRule.EnabledKey, "false")
+    try assert(got == spark.sql(sql).collect().map(_.getLong(0)).toSeq)
+    finally spark.conf.set(VectorTopKRule.EnabledKey, "true")
+  }
+
+  /** An indexed copy of the fixture with `cols` selected. */
+  private def indexedVariant(cols: String*): String = {
+    val dir = Files.createTempDirectory("graft-rule-variant").toString
+    spark.read.parquet(dataDir).selectExpr(cols: _*)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    IvfBuilder.build(spark, dir,
+      IvfBuilder.Config("vec", nClusters = Some(8)), new IndexStore(storeDir))
+    dir
+  }
+
+  test("payload refusal: a non-atomic column takes the semi-join, exactly") {
+    withRule(nprobe = 8) {
+      spark.read.parquet(indexedVariant("id", "vec", "named_struct('l', label) AS st"))
+        .createOrReplaceTempView("graft_struct")
+      assertRefused(
+        s"SELECT id, st FROM graft_struct ORDER BY array_distance(vec, $vecLit) LIMIT 5",
+        "column 'st' is struct<l:int>, not an atomic type")
+    }
+  }
+
+  test("payload refusal: a list<double> vector takes the semi-join, exactly") {
+    withRule(nprobe = 8) {
+      spark.read.parquet(indexedVariant("id", "CAST(vec AS array<double>) AS vec"))
+        .createOrReplaceTempView("graft_double")
+      assertRefused(
+        s"SELECT id FROM graft_double ORDER BY array_distance(vec, $vecLit) LIMIT 5",
+        "vector column 'vec' is array<double>, not array<float>")
+    }
+  }
+
+  test("payload refusal: INT96 timestamp conversion takes the semi-join, exactly") {
+    register()
+    withRule(nprobe = 8) {
+      val key = "spark.sql.parquet.int96TimestampConversion"
+      spark.conf.set(key, "true")
+      try assertRefused(
+        s"SELECT id FROM graft_vecs ORDER BY array_distance(vec, $vecLit) LIMIT 5",
+        s"$key is on")
+      finally spark.conf.unset(key)
+    }
+  }
+
+  test("payload refusal: a scan of two root paths takes the semi-join, exactly") {
+    withRule(nprobe = 8) {
+      spark.read.parquet(dataDir,
+          indexedVariant("id + 1000 AS id", "transform(vec, x -> x * 0.9F) AS vec", "label"))
+        .createOrReplaceTempView("graft_two_roots")
+      assertRefused(
+        s"SELECT id FROM graft_two_roots ORDER BY array_distance(vec, $vecLit) LIMIT 5",
+        "the scan has 2 root paths")
+    }
+  }
+
+  test("payload refusal: a _metadata column in the scan takes the semi-join, exactly") {
+    withRule(nprobe = 8) {
+      spark.read.parquet(dataDir).select(col("*"), col("_metadata"))
+        .createOrReplaceTempView("graft_meta")
+      assertRefused(
+        s"""SELECT id, _metadata.file_name AS f FROM graft_meta
+           |ORDER BY array_distance(vec, $vecLit) LIMIT 5""".stripMargin,
+        "the scan outputs _metadata")
+    }
+  }
+
+  /** The stage count of each Spark job `f` runs: its jobs carry a job
+    * group, then a fence job proves the listener bus has delivered them.
+    */
+  private def stagesPerJob(f: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = "graft-rule-spec-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")), e.stageInfos.size))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      def fenced = seen.toArray.exists(_.asInstanceOf[(String, Int)]._1 == group + "-fence")
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced, "fence job never reached the listener")
+      seen.toArray.toSeq.map(_.asInstanceOf[(String, Int)]).collect { case (`group`, n) => n }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a Hive-partitioned table reads its partition column on the payload") {
+    withRule(nprobe = 8) {
+      val dir = Files.createTempDirectory("graft-rule-part").toString
+      spark.read.parquet(dataDir).write.mode("overwrite").partitionBy("label").parquet(dir)
+      IvfBuilder.build(spark, dir,
+        IvfBuilder.Config("vec", nClusters = Some(4)), new IndexStore(storeDir))
+      spark.read.parquet(dir).createOrReplaceTempView("graft_parted")
+      // the partition column read, and left out of the payload's output
+      Seq("id, label", "id").foreach { cols =>
+        def q = spark.sql(
+          s"SELECT $cols FROM graft_parted ORDER BY array_distance(vec, $vecLit) LIMIT 5")
+        val df = q
+        assert(payload(df) == "page")
+        assert(fired(df), df.queryExecution.optimizedPlan.toString)
+        val got = df.collect().map(_.toSeq).toSeq
+        spark.conf.set(VectorTopKRule.EnabledKey, "false")
+        try assert(got == q.collect().map(_.toSeq).toSeq, cols)
+        finally spark.conf.set(VectorTopKRule.EnabledKey, "true")
+      }
+    }
+  }
+
+  test("a collected filter-free top-k runs as one job of one stage") {
+    register()
+    withRule(nprobe = 8) {
+      val df = sqlTopk()
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("TopKCollect") && physical.contains("WinnerPayloadExec"), physical)
+      assert(stagesPerJob(df.collect(): Unit) == Seq(1))
+    }
+  }
+
   private def sqlRange(pred: String): DataFrame =
     spark.sql(s"SELECT id FROM graft_vecs WHERE $pred")
 
@@ -370,6 +561,7 @@ class VectorTopKRuleSpec extends SparkSpec {
       val pred = s"array_distance(vec, $vecLit) < 0.55"
       val df = sqlRange(pred)
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      assert(payload(df) == "semi-join: range predicate")
       spark.conf.set(VectorTopKRule.RangeEnabledKey, "false")
       try {
         val brute = sqlRange(pred)
