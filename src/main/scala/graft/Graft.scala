@@ -102,13 +102,13 @@ object Graft {
         s.getTagValue(plans.VectorTopKRule.TierReasonTag).get
     }
 
-  /** How a planned vector top-k (or range) rewrite reads its rows — the
-    * read of [[plans.VectorTopKRule.PayloadTag]]: `page` when the k
-    * winners' pages are read directly (the plan `VectorTopK.indexed`
-    * runs), or `semi-join: <reason>` when the scan is semi-joined to a
-    * candidate feed (e.g. `semi-join: a filter sits below the top-k`). None
-    * when the rule did not rewrite the query. Like [[tierResolution]], it
-    * forces optimization but runs no jobs.
+  /** How a planned vector top-k (or range) query reads its rows — the
+    * read of [[plans.VectorTopKRule.PayloadTag]]: `page` when the rewrite
+    * reads the feed rows' pages directly (the plan `VectorTopK.indexed`
+    * runs), or `declined: <reason>` when the table is one the page reader
+    * refuses and Spark's own plan runs (e.g. `declined: the scan has 2
+    * root paths`). None when the rule did not match the query. Like
+    * [[tierResolution]], it forces optimization but runs no jobs.
     */
   def payloadResolution(df: org.apache.spark.sql.DataFrame): Option[String] =
     df.queryExecution.optimizedPlan.collectFirst {
@@ -116,7 +116,7 @@ object Graft {
         p.getTagValue(plans.VectorTopKRule.PayloadTag).get
     }
 
-  /** Planner strategy for the custom candidate-scan node (idempotent). */
+  /** Planner strategy for the payload and fetch-meter nodes (idempotent). */
   def installStrategy(spark: SparkSession): Unit = {
     val existing = spark.experimental.extraStrategies
     if (!existing.contains(plans.GraftStrategy)) {

@@ -161,7 +161,7 @@ object Queries {
   }
 
   /** SQL-transparent range search: the rule rewrites the WHERE-clause
-    * range predicate itself — no API call — into a cell-pruned semi-join
+    * range predicate itself — no API call — into a cell-pruned page read
     * (the original Filter stays and applies the exact predicate, so the
     * rewrite is lossless by construction and shares vq4's oracle with no
     * probe knob).
@@ -279,9 +279,9 @@ object Queries {
   /** FILTERED cosine top-k through the SQL rewrite — the LLM-retrieval
     * staple (`WHERE lang = 'en' ORDER BY cosine DESC LIMIT k`). A residual
     * WHERE rules out the winner-first feed (post-filter semantics must see
-    * every candidate row), so the rule grafts the ANGULAR one-phase
-    * candidate feed: `IvfCandidateScanExec` probes cells by centroid
-    * cosine, and the untouched Filter + Sort above re-rank exactly. nprobe
+    * every candidate row), so the rule reads every candidate of the
+    * ANGULAR probe — cells ranked by centroid cosine — and the untouched
+    * Filter + Sort above re-rank exactly. nprobe
     * is exhaustive here so the result hash-gates against DuckDB; the
     * production operating point is the same plan at nprobe ≪ nClusters.
     */
@@ -429,7 +429,7 @@ object Queries {
   /** The FILTERED quantized shape's exactness gate: vq3's query (predicate
     * + L2 top-k) served SQL-transparently with `tier=sq8` under the
     * `filteredTier` opt-in — the k·oversample coarse-ranked survivors feed
-    * the semi-join, the untouched Filter re-applies the predicate, the
+    * the payload, the untouched Filter re-applies the predicate, the
     * untouched Sort re-ranks exactly. Exhaustive nprobe + covering
     * oversample make the survivor feed ALL candidates, so the result is
     * exact and shares vq3's oracle (the same gate construction as

@@ -32,10 +32,10 @@ import graft.ivf.IndexStore.Sidecar
   *    phase 2, [[graft.plans.WinnerPayload]], reads only the winners' rows
   *    from the pages that hold them (the reference TopkBuilder's
   *    RowSelection fetch), with each winner's vector carried from phase 1;
-  *  - indexed with a residual filter = one-phase: a semi-join of the scan
-  *    against the candidate (file, row ordinal) feed emitted by
-  *    `IvfCandidateScanExec` (the reference's per-scan-file
-  *    `VectorIndexScanExec` distribution shape) → residual filter →
+  *  - indexed with a residual filter = one-phase: the same feed without
+  *    the `limit(k)` — every probed candidate, scored and read per file in
+  *    the reference's per-scan-file distribution shape — then the same
+  *    payload node reads every candidate's row → residual filter →
   *    metered fetch → heap top-k. Candidate pruning composes with later
   *    filters in post-filter order, matching the reference's semantics
   *    (`src/df_vector/tests.rs:151-241`): a restrictive filter may return
@@ -48,11 +48,9 @@ import graft.ivf.IndexStore.Sidecar
   * per tier is its [[CoarseScorer]].
   *
   * Scale: the driver only peeks index HEADERS (dim/k, a ~26-byte read per
-  * file) for validation and estimates candidate volume from one file;
-  * probing — footer reads and posting-list decodes — happens on executors.
-  * The candidate feed joins by stats-driven strategy: small candidate sets
-  * broadcast, large ones fall back to a shuffle join instead of funnelling
-  * through the driver.
+  * file) for validation; probing — footer reads and posting-list decodes —
+  * and the payload read happen on executors, each task on its own files,
+  * so no candidate list funnels through the driver.
   */
 object VectorTopK {
 
@@ -209,10 +207,9 @@ object VectorTopK {
     df.orderBy(distanceCol(column, query).asc_nulls_last).limit(k)
 
   /** Round-robin fairness cap across files so one file cannot starve the
-    * others (reference `CandidateCursor`: `src/df_vector/access.rs:193-243`).
-    * Used when the per-file lists are already materialized;
-    * [[graft.plans.IvfCandidateScan.roundRobinQuotas]] is the counts-only
-    * twin used by the distributed scan.
+    * others (reference `CandidateCursor`: `src/df_vector/access.rs:193-243`),
+    * over materialized per-file lists; [[roundRobinQuotas]] is its
+    * counts-only twin, and [[cappedCandidates]] its in-plan form.
     */
   def capRoundRobin(
       perFile: Seq[(String, Array[Int])], cap: Int): Seq[(String, Array[Int])] = {
@@ -235,6 +232,43 @@ object VectorTopK {
       }
     }
     perFile.zipWithIndex.map { case ((file, _), i) => (file, out(i).result().toArray) }
+  }
+
+  /** Per-file quotas of the round-robin cap, computed from candidate COUNTS
+    * only: how many of each file's candidates [[capRoundRobin]] takes.
+    *
+    * Closed-form water-fill, O(files log files) regardless of cap (a
+    * 1-per-round simulation would be O(cap × files)): after L complete
+    * rounds every file holds min(count, L); find the largest affordable L
+    * by walking the sorted counts, then hand the remainder out one each to
+    * the first unsaturated files in index order — exactly the state the
+    * round-robin loop ends in.
+    */
+  def roundRobinQuotas(counts: Array[Long], cap: Long): Array[Long] = {
+    require(cap >= 0, s"cap must be >= 0, got $cap")
+    val n = counts.length
+    if (n == 0) return Array.emptyLongArray
+    val total = counts.sum
+    if (cap >= total) return counts.clone()
+    val sorted = counts.sorted
+    var j = 0 // sorted files below j saturate at level L
+    var satSum = 0L
+    var level = 0L
+    var found = false
+    while (!found && j < n) {
+      val lCand = (cap - satSum) / (n - j)
+      if (lCand < sorted(j)) { level = lCand; found = true }
+      else { satSum += sorted(j); j += 1 }
+    }
+    // cap < total guarantees `found`; hand out the partial-round remainder
+    var rem = cap - (satSum + level * (n - j))
+    val quotas = counts.map(c => math.min(c, level))
+    var i = 0
+    while (rem > 0 && i < n) {
+      if (counts(i) > level) { quotas(i) += 1; rem -= 1 }
+      i += 1
+    }
+    quotas
   }
 
   /** Rank order of the query's metric over payload rows: an angular winner
@@ -309,33 +343,10 @@ object VectorTopK {
       }
     }
 
-  /** Candidate-pruned scan — the plan-integrated (semi-join) fetch behind
-    * the filtered [[indexed]].
-    */
-  private def candidateScan(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      options: Options,
-      store: IndexStore): DataFrame = {
-    val files = tableFiles(spark, path)
-    val q = query.toArray
-    validate(files, column, q, store)
-    graft.Graft.installStrategy(spark)
-    val candSide = graft.plans.IvfCandidateScan.feed(
-      spark, column, q, options.nprobe, options.maxCandidates, files, store, options.cosine)
-    scan(spark, path, files, store)
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__ri", col("_metadata.row_index"))
-      .join(candSide, Seq("__file", "__ri"), "left_semi")
-      .drop("__file", "__ri")
-  }
-
   /** Wrap in the fetch-metering node (`embeddings_fetched` /
     * `batches_fetched` SQLMetrics, post-filter like the reference).
     * Installs the planner strategy first (idempotent): a MeteredFetch node
-    * in a session where no candidate-scan path ran yet would otherwise hit
+    * in a session where no payload path ran yet would otherwise hit
     * "No plan for MeteredFetch" at planning time — the order-dependent
     * zq6 Verify failure.
     */
@@ -372,13 +383,15 @@ object VectorTopK {
     * and `extend` ranks the appended rows too. A table holding a column
     * the page reader does not cover (struct, map, a list other than the
     * vector) or a `list<double>` vector (whose payload must stay double)
-    * takes the lazy `scan ⋉ winner feed` semi-join instead over the files
-    * listed at construction; the reason ([[graft.plans.WinnerPayload.refusal]],
+    * takes the lazy `scan ⋉ feed` semi-join instead over the files listed
+    * at construction; the reason ([[graft.plans.WinnerPayload.refusal]],
     * which the SQL rewrite shares) is logged.
     *
     * @param filter residual predicate applied AFTER candidate pruning
     *               (post-filter semantics, like the reference); needs the
     *               float tier, which hands the filter every candidate row.
+    *               The payload then reads every candidate's row, not only
+    *               the k winners'.
     */
   def indexed(
       spark: SparkSession,
@@ -390,45 +403,42 @@ object VectorTopK {
       filter: Option[Column] = None,
       store: IndexStore = IndexStore.default): DataFrame = {
     require(k > 0, "k must be > 0")
-    val ordering = rankOrder(column, query, options.metric)
-    filter match {
-      case Some(residual) =>
-        require(
-          options.tier == Tier.Float,
-          s"a residual filter must see every candidate row before the top-k, so it " +
-            s"runs the exact float feed — tier ${options.tier.name} would cap the rows it sees")
-        // post-filter semantics: the residual prunes candidates BEFORE the
-        // top-k, so full candidate rows must be fetched — one-phase plan
-        val scan = candidateScan(spark, path, column, query, options, store)
-        meterFetch(spark, scan.where(residual)).orderBy(ordering).limit(k)
+    if (filter.nonEmpty) require(
+      options.tier == Tier.Float,
+      s"a residual filter must see every candidate row before the top-k, so it " +
+        s"runs the exact float feed — tier ${options.tier.name} would cap the rows it sees")
+    val listing = IndexManager.listTable(spark, path)
+    val files = nonEmpty(listing.files, path)
+    val schema = IndexManager.tableSchema(spark, path, files, store)
+    val conf = spark.sessionState.conf
+    // the k winners, or — post-filter semantics — every candidate
+    def feed(withVec: Boolean, relist: Option[() => Seq[String]]): DataFrame = {
+      val all = winnerFeed(spark, files, column, query, k, options, store, relist, withVec)
+      if (filter.isEmpty) all.orderBy(col("_dist").asc_nulls_last).limit(k) else all
+    }
+    def ranked(rows: DataFrame): DataFrame =
+      meterFetch(spark, filter.fold(rows)(rows.where))
+        .orderBy(rankOrder(column, query, options.metric)).limit(k)
+    graft.plans.WinnerPayload.refusal(schema, column, listing.partitionColumns, conf) match {
       case None =>
-        // two-phase: rank the winner feed, keep k, fetch their payload rows
-        val listing = IndexManager.listTable(spark, path)
-        val files = nonEmpty(listing.files, path)
-        val schema = IndexManager.tableSchema(spark, path, files, store)
-        val conf = spark.sessionState.conf
-        def topK(feed: DataFrame) = feed.orderBy(col("_dist").asc_nulls_last).limit(k)
-        graft.plans.WinnerPayload.refusal(schema, column, listing.partitionColumns, conf) match {
-          case None =>
-            // the winners arrive in `_dist` order, which is the metric's
-            // order (`1 − cos` ascending for cosine), and keep it
-            graft.Graft.installStrategy(spark)
-            val feed = winnerFeed(
-              spark, files, column, query, k, options, store,
-              relist = Some(() => IndexManager.listFiles(spark, path)), withVec = true)
-            graft.plans.WinnerPayload.df(spark, topK(feed), schema,
-              graft.plans.WinnerPayload.spec(path, column, listing.partitionColumns, conf))
-          case Some(reason) =>
-            log.info(s"graft indexed payload: scan semi-join winner feed ($reason)")
-            val winners = topK(winnerFeed(spark, files, column, query, k, options, store))
-              .select(col("_file").as("__file"), col("_ri").as("__ri"))
-            val payload = scan(spark, path, files, store)
-              .withColumn("__file", col("_metadata.file_path"))
-              .withColumn("__ri", col("_metadata.row_index"))
-              .join(broadcast(winners), Seq("__file", "__ri"), "left_semi")
-              .drop("__file", "__ri")
-            meterFetch(spark, payload).orderBy(ordering).limit(k)
-        }
+        // the k winners arrive in `_dist` order, which is the metric's
+        // order (`1 − cos` ascending for cosine), and keep it
+        graft.Graft.installStrategy(spark)
+        val rows = graft.plans.WinnerPayload.df(spark,
+          feed(withVec = true, relist = Some(() => IndexManager.listFiles(spark, path))), schema,
+          graft.plans.WinnerPayload.spec(path, column, listing.partitionColumns, conf))
+        if (filter.isEmpty) rows else ranked(rows)
+      case Some(reason) =>
+        log.info(s"graft indexed payload: scan semi-join feed ($reason)")
+        // k winners broadcast; an unbounded candidate set is left to Spark's
+        // join planning
+        val keys = feed(withVec = false, relist = None)
+          .select(col("_file").as("__file"), col("_ri").as("__ri"))
+        ranked(scan(spark, path, files, store)
+          .withColumn("__file", col("_metadata.file_path"))
+          .withColumn("__ri", col("_metadata.row_index"))
+          .join(if (filter.isEmpty) broadcast(keys) else keys, Seq("__file", "__ri"), "left_semi")
+          .drop("__file", "__ri"))
     }
   }
 
@@ -557,16 +567,15 @@ object VectorTopK {
 
   /** Candidates under the reference's round-robin `max_candidates` fairness
     * cap, computed entirely INSIDE the plan — no job at construction time,
-    * which is what lets [[graft.plans.VectorTopKRule]] keep the two-phase
-    * winner-first shape under a cap (a rule must not run Spark jobs at
-    * optimization time, so the driver-side quota water-fill of
-    * [[graft.plans.IvfCandidateScanExec]] is off limits there).
+    * which is what lets [[graft.plans.VectorTopKRule]] plan a capped query
+    * (a rule must not run Spark jobs at optimization time, so a driver-side
+    * quota water-fill over per-file counts is off limits there).
     *
     * The trick: round-robin selection across files in probe order IS the
     * `cap`-prefix of candidates sorted by `(probe-order position,
     * file index)` — round p takes every file's p-th candidate in file
     * order, exactly the water-fill + remainder state
-    * ([[graft.plans.IvfCandidateScan.roundRobinQuotas]]). Each task emits
+    * ([[roundRobinQuotas]]). Each task emits
     * its files' candidates tagged with position; `orderBy(pos, fileIdx)
     * .limit(cap)` plans as a distributed TakeOrdered bounded by `cap`.
     *
@@ -629,83 +638,54 @@ object VectorTopK {
       .toDF("_file", "_ri", "_dist")
   }
 
-  /** RANGE search winner feed `(_file, _ri, _dist)`: all rows with
-    * `array_distance(vec, query) < radius`, served from the IVF index with
-    * EXACT per-cell pruning — cell i is read only when the triangle
-    * inequality admits an in-range member
+  /** RANGE search feed `(_file, _ri, _dist, _vec)` over `files`, served
+    * from the IVF index with EXACT per-cell pruning — cell i is read only
+    * when the triangle inequality admits an in-range member
     * (`d(q, c_i) <= radius + maxMemberRadius_i`, see
     * [[IvfIndex.rangeProbeCells]]), so IO scales with the in-range
-    * neighborhood, not the table. Unlike top-k, range pruning is LOSSLESS:
-    * the result equals the brute filter for any radius, no nprobe knob.
-    * Files without a radius sidecar (reference-built indexes) degrade to
-    * probing every cell of that file — still exact; run
+    * neighborhood, not the table. With `strict`, only the rows with
+    * `array_distance(vec, query) < radius`: unlike top-k, range pruning is
+    * LOSSLESS, so the result equals the brute filter for any radius, no
+    * nprobe knob. Without it, every member of every admitted cell — the
+    * SQL rewrite's feed, whose untouched Filter applies the exact
+    * predicate. Files without a radius sidecar (reference-built indexes)
+    * degrade to probing every cell of that file — still exact; run
     * [[IvfBuilder.ensureRadii]] to backfill.
     */
-  private def rangeWinners(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      radius: Float,
-      store: IndexStore): DataFrame = {
-    import spark.implicits._
-    require(radius >= 0, s"radius must be >= 0, got $radius")
-    val files = tableFiles(spark, path)
-    val q = query.toArray
-    validate(files, column, q, store)
-    val colName = column
-    val r = radius
-    val results = overFiles(spark, () => files).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      val radii = IndexManager.validRadii(store, file, colName, index)
-      val cells = index.rangeProbeCells(q, r, radii)
-      val cands = cells.flatMap(index.invertedLists)
-      java.util.Arrays.sort(cands)
-      SelectiveFetch.embeddings(file, colName, cands).iterator.flatMap {
-        case (ri, vec) if vec.length == q.length =>
-          val d = math
-            .sqrt(VectorKernels.squaredL2(vec, q).toDouble)
-            .toFloat
-          if (d < r) Iterator.single((file, ri, d)) else Iterator.empty
-        case _ => Iterator.empty
-      }
-    }
-    spark.createDataset(results).toDF("_file", "_ri", "_dist")
-  }
-
-  /** Range CANDIDATE feed for the SQL rewrite: `(_file, _ri)` of every
-    * member of every cell the triangle-inequality bound admits — a pure
-    * posting-list projection with NO embedding reads (the rewritten plan's
-    * untouched Filter recomputes the exact predicate on fetched rows via
-    * the codegen'd distance expression, so the feed only needs to be a
-    * superset of the in-range rows, which lossless cell pruning guarantees).
-    */
-  private[graft] def rangeCandidatesByFiles(
+  private[graft] def rangeFeed(
       spark: SparkSession,
       files: Seq[String],
       column: String,
       query: Seq[Float],
       radius: Float,
-      store: IndexStore): DataFrame = {
-    import spark.implicits._
+      store: IndexStore,
+      strict: Boolean): DataFrame = {
     require(files.nonEmpty, "no parquet files to search")
     require(radius >= 0, s"radius must be >= 0, got $radius")
     val q = query.toArray
     val colName = column
     val r = radius
-    val results = overFiles(spark, () => files).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      val radii = IndexManager.validRadii(store, file, colName, index)
-      index.rangeProbeCells(q, r, radii).iterator.flatMap { c =>
-        index.invertedLists(c).iterator.map(ri => (file, ri.toLong))
-      }
-    }
-    spark.createDataset(results).toDF("_file", "_ri")
+    org.apache.spark.sql.graft.Bridge.ofInternalRows(spark,
+      overFiles(spark, () => files).flatMap { file =>
+        val index = IndexManager.loadIndex(store, file, colName)
+        val radii = IndexManager.validRadii(store, file, colName, index)
+        val cands = index.rangeProbeCells(q, r, radii).flatMap(index.invertedLists)
+        java.util.Arrays.sort(cands)
+        val utf8 = UTF8String.fromString(file)
+        SelectiveFetch.embeddings(file, colName, cands).iterator.flatMap {
+          case (ri, vec) if vec.length == q.length =>
+            val d = math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat
+            if (!strict || d < r)
+              Iterator.single(InternalRow(utf8, ri, d, UnsafeArrayData.fromPrimitiveArray(vec)))
+            else Iterator.empty
+          case _ => Iterator.empty
+        }
+      },
+      VecFeedSchema)
   }
 
   /** Sampled estimate of the range query's (candidate rows, total rows)
-    * across the table — shared by the SQL rewrite's selectivity bailout
-    * (`VectorTopKRule.buildRangePrunedLeaf`) and the API paths: up to
+    * across the table, for [[rangeBails]]: up to
     * [[RangeEstimateSampleFiles]] evenly-spaced files' indexes are probed
     * driver-side (cheap: decoded indexes come from the LRU) and scaled to
     * the file count. A single-file estimate misjudges CLUSTERED layouts,
@@ -714,7 +694,7 @@ object VectorTopK {
     * sorted file list averages blob-holding and empty files.
     */
   private val RangeEstimateSampleFiles = 4
-  private[graft] def estimateRangeCandidates(
+  private def estimateRangeCandidates(
       files: Seq[String],
       column: String,
       query: Array[Float],
@@ -743,28 +723,26 @@ object VectorTopK {
     else ((cand * files.size) / seen, (total * files.size) / seen)
   }
 
-  /** Candidate estimate plus the bail decision, computed ONCE per call
-    * (callers need both): `bail` is true when the estimated candidate
-    * fraction exceeds `spark.graft.ivf.rangeMaxSelectivity` (default 0.5,
-    * shared with the SQL rewrite) — a barely-pruning radius makes the
-    * vectorized full scan cheaper than point-read fetch, the classic
-    * index-vs-scan crossover (measured at sf0.1: a ~10%-in-range radius
-    * with cell-wide spread ran 0.31 s pruned vs 0.14 s brute, BENCHNOTES
-    * round-5).
+  /** The selectivity bailout, shared by the SQL rewrite and the API paths:
+    * true when the estimated candidate fraction exceeds
+    * `spark.graft.ivf.rangeMaxSelectivity` (default 0.05) — a
+    * barely-pruning radius makes the vectorized full scan cheaper than
+    * point-read fetch, the classic index-vs-scan crossover (measured at
+    * sf0.1: a ~10%-in-range radius with cell-wide spread ran 0.31 s pruned
+    * vs 0.14 s brute, BENCHNOTES round-5).
     */
-  private def rangeEstimate(
+  private[graft] def rangeBails(
       spark: SparkSession,
       files: Seq[String],
       column: String,
       query: Array[Float],
       radius: Float,
-      store: IndexStore): (Long, Boolean) = {
-    val (est, total) =
-      estimateRangeCandidates(files, column, query, radius, store)
+      store: IndexStore): Boolean = {
+    val (est, total) = estimateRangeCandidates(files, column, query, radius, store)
     val maxSel = spark.conf
       .getOption(graft.plans.VectorTopKRule.RangeMaxSelectivityKey)
       .getOrElse(graft.plans.VectorTopKRule.RangeMaxSelectivityDefault).toDouble
-    (est, total > 0 && est.toDouble / total > maxSel)
+    total > 0 && est.toDouble / total > maxSel
   }
 
   /** Programmatic range search ([[SearchResult]] rows, distance ascending):
@@ -783,14 +761,16 @@ object VectorTopK {
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     import spark.implicits._
     val files = tableFiles(spark, path)
-    val (_, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
     val winners =
-      if (bail) {
+      if (rangeBails(spark, files, column, query.toArray, radius, store)) {
         // brute twin through the SAME kernel as the pruned path so both
         // branches agree bit-for-bit at the radius boundary
         bruteDistances(spark, path, files, column, query, store)
           .where(col("_dist") < lit(radius))
-      } else rangeWinners(spark, path, column, query, radius, store)
+      } else {
+        validate(files, column, query.toArray, store)
+        rangeFeed(spark, files, column, query, radius, store, strict = true)
+      }
     winners
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
       .orderBy(col("distance").asc_nulls_last, col("row_idx"))
@@ -800,14 +780,16 @@ object VectorTopK {
   /** Plan-integrated range search: full payload rows whose vector is
     * strictly within `radius` of `query` — equivalent to
     * `df.where(array_distance(col, query) < radius)` but reading only the
-    * cells the triangle-inequality bound admits, then only the winners'
-    * payload rows (the two-phase shape: in-range IO, not table IO).
+    * cells the triangle-inequality bound admits, then only the in-range
+    * rows' pages, through the [[graft.plans.WinnerPayload]] node that
+    * [[indexed]] uses (in-range IO, not table IO).
     *
     * Selectivity: point-read pruning wins when the radius is SELECTIVE (a
     * small, localized in-range neighborhood). Past
-    * `spark.graft.ivf.rangeMaxSelectivity` (default 0.5, same estimate and
-    * default as the SQL rewrite) this falls back to the vectorized full
-    * scan with the codegen'd predicate — identical rows, cheaper plan.
+    * `spark.graft.ivf.rangeMaxSelectivity` (default 0.05, same estimate and
+    * default as the SQL rewrite), or on a table the payload refuses
+    * ([[graft.plans.WinnerPayload.refusal]]), this is the vectorized full
+    * scan with the codegen'd predicate — identical rows.
     */
   def rangeRows(
       spark: SparkSession,
@@ -816,23 +798,19 @@ object VectorTopK {
       query: Seq[Float],
       radius: Float,
       store: IndexStore = IndexStore.default): DataFrame = {
-    val files = tableFiles(spark, path)
-    val (est, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
-    if (bail) {
+    val listing = IndexManager.listTable(spark, path)
+    val files = nonEmpty(listing.files, path)
+    val schema = IndexManager.tableSchema(spark, path, files, store)
+    val conf = spark.sessionState.conf
+    if (rangeBails(spark, files, column, query.toArray, radius, store) ||
+        graft.plans.WinnerPayload.refusal(schema, column, listing.partitionColumns, conf).nonEmpty)
       return scan(spark, path, files, store)
         .where(array_distance(col(column), float_vector(query)) < lit(radius))
-    }
-    val winners = rangeWinners(spark, path, column, query, radius, store)
-      .select(col("_file"), col("_ri"))
-    // stats-driven broadcast like candidateScan: even below the bailout a
-    // broad radius can make the key set too large to broadcast safely
-    val winnerSide = graft.plans.IvfCandidateScan.broadcastIfSmall(spark, winners, est, files)
-    val fetched = scan(spark, path, files, store)
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_ri", col("_metadata.row_index"))
-      .join(winnerSide, Seq("_file", "_ri"), "left_semi")
-      .drop("_file", "_ri")
-    meterFetch(spark, fetched)
+    validate(files, column, query.toArray, store)
+    graft.Graft.installStrategy(spark)
+    graft.plans.WinnerPayload.df(spark,
+      rangeFeed(spark, files, column, query, radius, store, strict = true), schema,
+      graft.plans.WinnerPayload.spec(path, column, listing.partitionColumns, conf))
   }
 
   /** Everything a task needs to probe and exactly score one file for one

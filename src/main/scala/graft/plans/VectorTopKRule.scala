@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.util.{Left, Right}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -9,7 +11,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, MetadataColumnHelper}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
-import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
 import graft.functions.{ArrayCosineSimilarity, ArrayDistance, ArraySquaredL2}
@@ -19,36 +20,42 @@ import graft.ivf.VectorTopK.{Metric, Tier}
 
 /** SQL-transparent IVF acceleration: rewrites
   * `ORDER BY array_distance(col, literal-vector) ASC LIMIT k` (or cosine
-  * similarity DESC, or a select-list alias of either) over a single
-  * indexed Parquet relation so the query only reads IVF candidate rows.
+  * similarity DESC, or a select-list alias of either), and a range
+  * predicate `WHERE array_distance(col, literal-vector) < radius`, over a
+  * single indexed Parquet relation so the query only reads IVF candidate
+  * rows.
   *
   * This is the Spark analog of the reference's
-  * `VectorTopKPhysicalOptimizerRule` (`/root/reference/src/df_vector/
-  * physical.rs:20-196`), re-expressed as a logical rewrite of the parquet
-  * leaf; the original Filter/Project chain plus Sort+Limit stay untouched
-  * above it. What replaces the leaf depends on what sits below the top-k:
-  *  - FILTER-FREE queries get the plan `VectorTopK.indexed` runs: the
-  *    winner feed ranks every probed candidate on selective single-column
-  *    reads (or a quantized tier's code sidecar plus the exact refine),
-  *    `orderBy(_dist).limit(k)` keeps the k winners, and a [[WinnerPayload]]
-  *    reads only their pages, with the leaf's own attributes as its output
-  *    — no scan, no join, no alias, nothing re-optimized or cached.
+  * `VectorTopKPhysicalOptimizerRule` (`src/df_vector/physical.rs:20-196`),
+  * re-expressed as a logical rewrite of the parquet leaf; the original
+  * Filter/Project chain plus Sort+Limit stay untouched above it. Every
+  * shape puts the same node in place of the leaf: a [[WinnerPayload]],
+  * which reads the table's rows of a `(_file, _ri, _vec)` feed
+  * page-selectively, with the leaf's own attributes — only those the plan
+  * reads — as its output. No scan, no join, no alias, nothing
+  * re-optimized or cached: the query vector lives only in the feed, which
+  * runs when the plan runs. What differs per shape is the feed:
+  *  - FILTER-FREE top-k: the plan `VectorTopK.indexed` runs. The winner
+  *    feed ranks every probed candidate (its tier's coarse pass, then the
+  *    exact refine) and `orderBy(_dist).limit(k)` keeps the k winners.
   *    Collected at the root, [[GraftStrategy]] plans a [[TopKCollectExec]],
   *    so the query runs as the one scoring stage and the driver merges the
   *    winners and reads their payload, as the API does;
-  *  - queries with residual filters, a range predicate, `twoPhase=false`,
-  *    or a table [[WinnerPayload.refusal]] names get a broadcast semi-join
-  *    of a re-read scan against a candidate feed (the full candidate feed
-  *    under a filter, because post-filter semantics must see every
-  *    candidate row before the top-k), re-optimized and served from the
-  *    rewritten-plan cache. Catalyst plans the Sort+Limit as
-  *    `TakeOrderedAndProjectExec` (bounded heap — the reference's exact
-  *    re-rank) and pushes residual predicates over candidate rows only (the
-  *    reference's post-filter semantics,
-  *    `src/df_vector/exec.rs`/`tests.rs:151-241`).
-  * The rewritten Sort carries [[TierTag]], [[TierReasonTag]] and
-  * [[PayloadTag]], which say which tier ran, why, and which of the two
-  * plans read the rows.
+  *  - FILTERED top-k: every probed candidate (the float feed without the
+  *    limit, the round-robin-capped candidates under `maxCandidates`, or a
+  *    quantized tier's `k·oversample` survivors under the
+  *    [[FilteredTierKey]] opt-in). The untouched Filter sees every
+  *    candidate row before the top-k — the reference's post-filter
+  *    semantics (`src/df_vector/exec.rs`/`tests.rs:151-241`) — and Catalyst
+  *    plans the Sort+Limit as `TakeOrderedAndProjectExec` (bounded heap,
+  *    the reference's exact re-rank), so each task sends k rows;
+  *  - RANGE predicate: every member of every cell the triangle-inequality
+  *    bound admits; the untouched Filter applies the exact predicate.
+  * A table [[WinnerPayload.refusal]] names makes the rule decline: Spark's
+  * own plan runs, exactly. The Sort (or range Filter) carries
+  * [[PayloadTag]] — `page`, or `declined: <reason>` — and a rewritten Sort
+  * also [[TierTag]] and [[TierReasonTag]], which say which tier ran and
+  * why.
   *
   * Guard matrix mirrors `physical.rs:134-177`: single sort expression,
   * ascending, `array_distance(col, literal)` in either argument order with
@@ -66,96 +73,20 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def conf(key: String, default: String): String =
     spark.conf.getOption(key).getOrElse(default)
 
-  /** Scopes plan-cache entries to THIS session: the cache is JVM-global
-    * while cached subtrees embed relations bound to the building session
-    * and were optimized under its non-graft confs (which the key does not
-    * enumerate) — serving them to a sibling `newSession()` would run one
-    * session's plan under another's state. Entries of dropped sessions
-    * age out of the LRU.
-    *
-    * The non-graft-conf CONTRACT (spec-pinned in PlanCacheSpec "conf
-    * boundary"): `spark.sql.autoBroadcastJoinThreshold` is part of the
-    * cache key (it decides the candidate feed's broadcast-vs-shuffle
-    * shape); every OTHER plan-affecting non-graft conf (AQE flags,
-    * parquet pushdown toggles, …) is consciously NOT keyed — a
-    * mid-session change serves the subtree optimized under the old conf.
-    * That staleness is perf-only, never correctness: the grafted semi-join
-    * subtree's results do not depend on those confs. Fix if it ever
-    * bites: fingerprint a conf epoch into the key.
-    */
-  private lazy val sessionKey: String = VectorTopKRule.sessionKeyFor(spark)
-
-  /** Serve a cached rewrite: present, dir-identity still valid, not yet
-    * embedded in this tree (duplicate internal exprIds under a self-join),
-    * rebindable to this leaf's attribute ids.
-    */
-  private def serveCachedRewrite(
-      cacheKey: String,
-      leaf: ParquetLeaf,
-      served: scala.collection.mutable.Set[String]): Option[(LogicalPlan, String, String)] =
-    VectorTopKRule.planCacheGet(cacheKey).flatMap { c =>
-      if (!served.contains(cacheKey) && !c.identity.contains("absent") &&
-          IndexStore.identityOf(c.dirs) == c.identity)
-        aliasOutput(leaf, c.plan.clone()).map { p =>
-          served += cacheKey
-          VectorTopKRule.planCacheHits.incrementAndGet()
-          (p, c.tier, c.reason)
-        }
-      else None
-    }
-
-  /** TOCTOU-disciplined insert: cache only when the dir-identity snapshot
-    * taken BEFORE the build still holds after it (the same discipline as
-    * IndexStore.memoizedEntry — a build racing a concurrent store write
-    * must not pin its answer under the pre-write identity).
-    */
-  private def cacheRewriteIfUnchanged(
-      cacheKey: String,
-      dirs: Seq[String],
-      idBefore: String,
-      pruned: LogicalPlan,
-      tier: String,
-      reason: String,
-      served: scala.collection.mutable.Set[String]): Unit =
-    if (!idBefore.contains("absent") && IndexStore.identityOf(dirs) == idBefore) {
-      // store a DETACHED clone: the `pruned` instance is about to be embedded
-      // in the live query's tree, and TreeNode state (tags, statsCache) is
-      // mutable — if the cache held the same instance, per-query mutation of
-      // the live subtree would bleed into every future serve (serves already
-      // hand out `c.plan.clone()`; the builder's own copy must be just as
-      // isolated)
-      VectorTopKRule.planCachePut(
-        cacheKey,
-        VectorTopKRule.CachedRewrite(dirs, idBefore, pruned.clone(), tier, reason))
-      served += cacheKey
-    }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf(EnabledKey, "true") != "true") return plan
-    // guards the rewritten-plan cache against serving ONE cached subtree
-    // twice into THIS tree (a self-join of two identical top-k subqueries
-    // would then carry duplicate internal exprIds) — the second occurrence
-    // rebuilds instead
-    val served = scala.collection.mutable.HashSet.empty[String]
     plan.transformDown {
       case limit @ Limit(IntegerLiteral(k), lchild) =>
         // column pruning may leave Projects between the limit and the sort
         val (projects, sortCandidate) = peelProjects(lchild)
         sortCandidate match {
-          case sort @ Sort(Seq(order), true, child, _)
-              if sort.getTagValue(RewrittenTag).isEmpty =>
-            // the leaf columns the plan reads: what leaves the limit (a
-            // parent may take it by position) and what every node between
-            // the limit and the leaf references
-            val used = AttributeSet(limit.output) ++
-              AttributeSet((projects :+ sort).flatMap(_.references) ++ child.flatMap(_.references))
-            tryRewrite(k, order, child, used, served) match {
-              case Some(Rewrite(newChild, tier, tierReason, payload)) =>
+          case sort @ Sort(Seq(order), true, child, _) if !rewritten(sort) =>
+            tryRewrite(k, order, child, used(limit)) match {
+              case Some(Right(Rewrite(newChild, tier, tierReason))) =>
                 val newSort = sort.copy(child = newChild)
-                newSort.setTagValue(RewrittenTag, ())
                 newSort.setTagValue(TierTag, tier)
                 newSort.setTagValue(TierReasonTag, tierReason)
-                newSort.setTagValue(PayloadTag, payload)
+                newSort.setTagValue(PayloadTag, PagePayload)
                 val rebuilt = projects.foldRight(newSort: LogicalPlan) {
                   (pr, acc) => pr.copy(child = acc)
                 }
@@ -164,35 +95,51 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
                     gl.copy(child = ll.copy(child = rebuilt))
                   case other => other
                 }
+              case Some(Left(reason)) => declined(sort, reason); limit
               case None => limit
             }
           case _ => limit
         }
       // RANGE shape: `WHERE array_distance(col, literal) < radius` (any
       // conjunct position, either comparison orientation, squared form
-      // accepted). The ORIGINAL Filter stays — the semi-join only prunes
-      // cells the triangle-inequality bound proves empty, the filter still
+      // accepted). The ORIGINAL Filter stays — the feed only prunes cells
+      // the triangle-inequality bound proves empty, the filter still
       // applies the exact predicate to every fetched row. Lossless, so the
       // rewrite needs no exactness knob at all.
-      case f @ Filter(cond, fchild)
-          if conf(RangeEnabledKey, "true") == "true" &&
-            f.getTagValue(RangeRewrittenTag).isEmpty =>
+      case f @ Filter(cond, fchild) if !rewritten(f) =>
         val res = for {
           (attr, query, radius) <- extractRangePredicate(cond)
           leaf <- findSingleParquetLeaf(fchild)
           column <- leaf.output.find(_.exprId == attr.exprId).map(_.name)
-          rewritten <- buildRangePrunedLeaf(leaf, column, query, radius, served)
-        } yield {
-          val nf = f.copy(child = fchild.transformUp {
-            case l if l.eq(leaf.node) => rewritten
-          })
-          nf.setTagValue(RangeRewrittenTag, ())
-          nf.setTagValue(PayloadTag, SemiJoinPrefix + "range predicate")
-          nf: LogicalPlan
+          outcome <- rangeLeaf(leaf, column, query, radius, used(f))
+        } yield outcome match {
+          case Right(payload) =>
+            val nf = f.copy(child = fchild.transformUp { case l if l.eq(leaf.node) => payload })
+            nf.setTagValue(PayloadTag, PagePayload)
+            nf
+          case Left(reason) => declined(f, reason); f
         }
         res.getOrElse(f)
     }
   }
+
+  /** The leaf columns a payload in place of the leaf under `node` must
+    * output: `node`'s own output (a parent such as a Union or a write takes
+    * it by position, referencing none of it) and what `node` and every node
+    * down to the leaf reference.
+    */
+  private def used(node: LogicalPlan): AttributeSet =
+    node.outputSet ++ AttributeSet(node.flatMap(_.references))
+
+  private def rewritten(node: LogicalPlan): Boolean =
+    node.getTagValue(PayloadTag).contains(PagePayload)
+
+  /** Records why the rule left `node` as it is. The tag goes on the node
+    * itself (an unchanged subtree keeps its instances), and a later
+    * optimization of a plan sharing it decides again.
+    */
+  private def declined(node: LogicalPlan, reason: String): Unit =
+    node.setTagValue(PayloadTag, DeclinedPrefix + reason)
 
   private def peelProjects(p: LogicalPlan): (Seq[Project], LogicalPlan) = p match {
     case pr @ Project(_, c) =>
@@ -245,8 +192,8 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** A matched parquet scan leaf, abstracted over Spark's two file-source
     * code paths (V1 `LogicalRelation(HadoopFsRelation)` — the default — and
-    * DSv2 `DataSourceV2ScanRelation(ParquetScan)` when
-    * `spark.sql.sources.useV1SourceList` excludes parquet).
+    * DSv2 `DataSourceV2ScanRelation(ParquetScan)` when the session's V1
+    * source list excludes parquet).
     */
   private case class ParquetLeaf(
       node: LogicalPlan,
@@ -307,9 +254,13 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  /** The top-k in place of `child`'s parquet leaf: None when the query
+    * does not match (or some file lacks an index), Left(reason) when the
+    * payload refuses the table.
+    */
   private def tryRewrite(
-      k: Int, order: SortOrder, child: LogicalPlan, used: AttributeSet,
-      served: scala.collection.mutable.Set[String]): Option[Rewrite] = {
+      k: Int, order: SortOrder, child: LogicalPlan,
+      used: AttributeSet): Option[Either[String, Rewrite]] = {
     // `ORDER BY <alias>`: the sort key is an attribute the Project right
     // below the Sort defines as the distance expression
     val key = (stripCast(order.child), child) match {
@@ -335,10 +286,24 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       leaf <- findSingleParquetLeaf(child)
       // the sorted attribute must be a physical column of the scan
       column <- leaf.output.find(_.exprId == attr.exprId).map(_.name)
-      r <- buildPrunedLeaf(leaf, column, query, k, filterFree(child), cosine, used, served)
-    } yield r.copy(plan = MeteredFetch(child.transformUp {
-      case l if l.eq(leaf.node) => r.plan
-    }))
+      target <- payloadTarget(leaf, column, query.length, used)
+    } yield target.map { p =>
+      val rowComplete = filterFree(child)
+      val maxCandidates = conf(MaxCandidatesKey, "").toIntOption
+      val (tier, reason) = resolveTier(p.files, column, rowComplete, maxCandidates, p.store)
+      val feed = VectorTopK.winnerFeed(spark, p.files, column, query.toIndexedSeq, k,
+        feedOptions(tier, cosine, maxCandidates), p.store, withVec = true).queryExecution.analyzed
+      // filter-free: `orderBy(_dist).limit(k)`, built as the plan it
+      // analyzes to; under a filter, every candidate
+      val rows =
+        if (!rowComplete) feed
+        else {
+          val dist = feed.output.find(_.name == "_dist").get
+          Limit(Literal(k), Sort(Seq(SortOrder(dist, Ascending, NullsLast, Nil)), true, feed))
+        }
+      Rewrite(MeteredFetch(child.transformUp { case l if l.eq(leaf.node) => p.over(rows) }),
+        tier.name, reason)
+    }
   }
 
   /** True when every file carries an index of `dim` on `column` — false on
@@ -352,6 +317,26 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       s"table-peek-dim-$dim", column, files, store.dir)(
       IndexStore.forallFiles(files)(file =>
         graft.ivf.IndexManager.cachedPeek(store, file, column).exists(_._1 == dim)))
+
+  /** What a [[WinnerPayload]] in place of `leaf` reads from: None when some
+    * file lacks an index of `dim` on `column` (the rule does not match),
+    * Left(reason) when [[WinnerPayload.refusal]] names one.
+    */
+  private def payloadTarget(
+      leaf: ParquetLeaf, column: String, dim: Int,
+      used: AttributeSet): Option[Either[String, PayloadTarget]] = {
+    val store = new IndexStore(conf(IndexDirKey, IndexStore.default.dir))
+    val files = VectorTopKRule.internedFileList(leaf.rootPaths, leaf.inputFiles)
+    if (!allIndexed(files, column, dim, store)) return None
+    val output = leaf.output.filter(used.contains)
+    val sqlConf = spark.sessionState.conf
+    Some(WinnerPayload.refusal(
+      StructType(leaf.dataSchema.filter(f => f.name == column || output.exists(_.name == f.name))),
+      column, leaf.partitionColumns, sqlConf,
+      leaf.rootPaths.size, leaf.output.exists(_.isMetadataCol)
+    ).toLeft(PayloadTarget(files, store, output,
+      WinnerPayload.spec(leaf.rootPaths.head, column, leaf.partitionColumns, sqlConf))))
+  }
 
   /** The coarse tier to rank `files` with, and why: the requested one when
     * `tierOk`, else the exact float feed.
@@ -376,159 +361,10 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       conf(NprobeKey, "5").toInt, maxCandidates, if (cosine) Metric.Cosine else Metric.L2, tier,
       if (tier == Tier.Float) None else spark.conf.getOption(OversampleKey).map(_.toInt))
 
-  /** Put the IVF rewrite in place of `leaf`. A filter-free top-k whose table
-    * the payload can read gets the API's plan ([[payloadLeaf]]); every
-    * other shape grafts `scan ⋉ candidate feed` ([[semiJoinLeaf]]).
-    */
-  private def buildPrunedLeaf(
-      leaf: ParquetLeaf,
-      column: String,
-      query: Array[Float],
-      k: Int,
-      filterFree: Boolean,
-      cosine: Boolean,
-      used: AttributeSet,
-      served: scala.collection.mutable.Set[String]): Option[Rewrite] = {
-    val twoPhaseOk = filterFree && conf(TwoPhaseKey, "true") == "true"
-    val output = leaf.output.filter(used.contains)
-    val refusal =
-      if (!filterFree) Some("a filter sits below the top-k")
-      else if (!twoPhaseOk) Some(s"$TwoPhaseKey=false")
-      else WinnerPayload.refusal(
-        StructType(leaf.dataSchema.filter(f => f.name == column || output.exists(_.name == f.name))),
-        column, leaf.partitionColumns, spark.sessionState.conf,
-        leaf.rootPaths.size, leaf.output.exists(_.isMetadataCol))
-    refusal match {
-      case None => payloadLeaf(leaf, output, column, query, k, cosine)
-      case Some(reason) =>
-        semiJoinLeaf(leaf, column, query, k, filterFree, twoPhaseOk, cosine, served)
-          .map(r => r.copy(payload = SemiJoinPrefix + reason))
-    }
-  }
-
-  /** The filter-free top-k as `VectorTopK.indexed` plans it: the winner
-    * feed ranks every probed candidate (its tier's coarse pass, then the
-    * exact refine), `orderBy(_dist).limit(k)` keeps the k winners, and a
-    * [[WinnerPayload]] reads their rows page-selectively, with the leaf's
-    * own attributes — only those the plan above reads — as its output.
-    * No scan, no join, nothing re-optimized and nothing cached: the query
-    * vector lives only in the feed, which runs when the plan runs.
-    */
-  private def payloadLeaf(
-      leaf: ParquetLeaf,
-      output: Seq[Attribute],
-      column: String,
-      query: Array[Float],
-      k: Int,
-      cosine: Boolean): Option[Rewrite] = {
-    val store = new IndexStore(conf(IndexDirKey, IndexStore.default.dir))
-    val files = VectorTopKRule.internedFileList(leaf.rootPaths, leaf.inputFiles)
-    if (!allIndexed(files, column, query.length, store)) return None
-    val maxCandidates = conf(MaxCandidatesKey, "").toIntOption
-    val (tier, reason) = resolveTier(files, column, tierOk = true, maxCandidates, store)
-    val feed = VectorTopK.winnerFeed(spark, files, column, query.toIndexedSeq, k,
-      feedOptions(tier, cosine, maxCandidates), store, withVec = true).queryExecution.analyzed
-    // `orderBy(_dist).limit(k)`, built as the plan it analyzes to
-    val dist = feed.output.find(_.name == "_dist").get
-    val winners = Limit(Literal(k), Sort(Seq(SortOrder(dist, Ascending, NullsLast, Nil)), true, feed))
-    val spec = WinnerPayload.spec(
-      leaf.rootPaths.head, column, leaf.partitionColumns, spark.sessionState.conf)
-    Some(Rewrite(WinnerPayload(winners, output, spec), tier.name, reason, PagePayload))
-  }
-
-  /** Header-peek every file's index (cheap, driver-side) and graft
-    * `scan -> semi-join(distributed candidate feed)` in place of the bare
-    * relation, aliasing output back to the original attribute ids so the
-    * untouched parent operators still resolve. Probing itself happens
-    * executor-side inside `IvfCandidateScanExec`.
-    */
-  private def semiJoinLeaf(
-      leaf: ParquetLeaf,
-      column: String,
-      query: Array[Float],
-      k: Int,
-      filterFree: Boolean,
-      tierOk: Boolean,
-      cosine: Boolean,
-      served: scala.collection.mutable.Set[String]): Option[Rewrite] = {
-    val storeDir = conf(IndexDirKey, IndexStore.default.dir)
-    // ── rewritten-plan cache (round-12 verdict item #2) ──────────────────
-    // The probe memo made repeat-plan IO O(1), but CONSTRUCTING the grafted
-    // subtree stayed O(F): canonicalize+sort F paths, slice F-element
-    // parallelize feeds, re-list the V1 re-read, re-optimize the subtree —
-    // measured 0.36 s at 8k files, extrapolating ~4 s CPU per plan at 100k
-    // files (PlanLatencyProbe). The reference keeps ALL per-file work
-    // execution-side (`/root/reference/src/df_vector/index_exec.rs:96-143`);
-    // plan time must not scale with the file list. So the finished pre-alias
-    // subtree is cached keyed by everything it was built from — root paths,
-    // file-list count + unordered content hash, schema, output columns,
-    // query vector digest, k, metric, and every consumed conf — and
-    // validated like memoizedTableProbe: the stat identity of the sidecar
-    // store dir + each data parent dir (every write here lands by atomic
-    // rename, which bumps the parent dir's mtime). A hit costs those stats
-    // plus a clone — flat in F. Re-aliasing to THIS query's attribute ids
-    // happens per serve; `served` keeps one tree from embedding the same
-    // cached subtree twice (duplicate internal exprIds under a self-join).
-    val cacheKey = VectorTopKRule.rewriteCacheKey(
-      leaf.rootPaths, leaf.inputFiles, leaf.dataSchema, leaf.output.map(_.name),
-      column, query, k, cosine, filterFree,
-      sessionKey +: Seq(NprobeKey, MaxCandidatesKey, TierKey, StorageProfileKey,
-        OversampleKey, FilteredTierKey, TwoPhaseKey).map(kk => conf(kk, "")) :+
-        storeDir :+ spark.sessionState.conf.autoBroadcastJoinThreshold.toString)
-    serveCachedRewrite(cacheKey, leaf, served).foreach { case (p, tier, reason) =>
-      return Some(Rewrite(p, tier, reason, ""))
-    }
-    VectorTopKRule.planCacheMisses.incrementAndGet()
-    // canonical form matches `_metadata.file_path`, which the semi-join
-    // compares against
-    val files = VectorTopKRule.internedFileList(leaf.rootPaths, leaf.inputFiles)
-    if (files.isEmpty) return None
-    // identity snapshot BEFORE the build; cached only if unchanged after —
-    // the same TOCTOU discipline as IndexStore.memoizedEntry
-    val cacheDirs = IndexStore.tableDirs(files, storeDir)
-    val idBefore = IndexStore.identityOf(cacheDirs)
-    val store = new IndexStore(storeDir)
-    if (!allIndexed(files, column, query.length, store)) return None
-    val maxCandidates = conf(MaxCandidatesKey, "").toIntOption
-    val (tier, tierReason) = resolveTier(files, column, tierOk, maxCandidates, store)
-    val candDf = if (tier != Tier.Float) {
-      // a quantized tier's winner feed: the k·oversample coarse-ranked,
-      // exact-refined survivors grafted whole as the semi-join side. A
-      // FILTERED shape (opt-in) lets the untouched Filter re-apply its
-      // predicate to the fetched rows and the untouched Sort re-rank
-      // them exactly. Post-FILTER semantics are preserved by
-      // construction (every emitted row passed the original predicate —
-      // the reference's composition seam,
-      // `src/df_vector/access.rs:65-105`); what the tier
-      // narrows is the CANDIDATE set handed to the filter: k·oversample
-      // nearest rows instead of every probed-cell member, so a selective
-      // predicate can return fewer than k rows — oversample doubles as
-      // the filter-headroom control. Exhaustive nprobe + covering
-      // oversample make the feed ALL candidate rows, collapsing this to
-      // the float one-phase semantics (vq24/vq25). The feed is bounded
-      // by k·oversample rows, so broadcasting is safe.
-      val feed = VectorTopK.winnerFeed(spark, files, column, query.toIndexedSeq, k,
-        feedOptions(tier, cosine, maxCandidates), store)
-      broadcast(feed.select(col("_file").as("__file"), col("_ri").as("__ri")))
-    } else {
-      // one-phase candidate feed — for cosine queries the probe ranks
-      // cells by centroid cosine instead of L2, so the angular top-k's
-      // candidates are the angular neighborhood; the untouched Sort
-      // above re-ranks exactly
-      IvfCandidateScan.feed(spark, column, query, conf(NprobeKey, "5").toInt,
-        maxCandidates, files, store, cosine)
-    }
-    val pruned = graftSubtree(leaf, candDf)
-    aliasOutput(leaf, pruned).map { p =>
-      cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, tier.name, tierReason, served)
-      Rewrite(p, tier.name, tierReason, "")
-    }
-  }
-
   /** Extract `(vector attribute, query literal, true-L2 radius)` from a
     * range predicate conjunct: `array_distance(col, lit) < r` (or `<=`, or
     * the flipped `r > dist` forms); the squared kernel bounds on `sqrt(r)`.
-    * Only the FIRST matching conjunct is used — one semi-join prunes, the
+    * Only the FIRST matching conjunct is used — one feed prunes, the
     * untouched Filter applies everything (including that conjunct) exactly.
     */
   private def extractRangePredicate(
@@ -573,128 +409,43 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }.headOption
   }
 
-  /** Range analog of [[buildPrunedLeaf]]: the candidate feed is every
-    * member of every cell the triangle-inequality bound admits
-    * ([[graft.ivf.IvfIndex.rangeProbeCells]]) — a pure posting-list
-    * projection, NO embedding reads in the feed at all; the untouched
-    * Filter above recomputes the exact predicate on the fetched rows via
-    * the codegen'd distance expression.
+  /** The range predicate's payload in place of `leaf`: every member of
+    * every cell the triangle-inequality bound admits
+    * ([[graft.ivf.IvfIndex.rangeProbeCells]]), each vector read by
+    * `SelectiveFetch.embeddings`; the untouched Filter above recomputes the
+    * exact predicate on the fetched rows via the codegen'd distance
+    * expression. None when the selectivity bailout keeps the scan: when
+    * the radius bound keeps most cells, the vectorized full scan beats the
+    * point-read fetch (index-vs-scan crossover; measured at sf0.1: a
+    * ~10%-selective radius runs 0.2 s brute vs 0.3-0.4 s pruned when
+    * pruning keeps most cells, BENCHNOTES round-5).
     */
-  private def buildRangePrunedLeaf(
+  private def rangeLeaf(
       leaf: ParquetLeaf,
       column: String,
       query: Array[Float],
       radius: Float,
-      served: scala.collection.mutable.Set[String] =
-        scala.collection.mutable.HashSet.empty): Option[LogicalPlan] = {
-    val storeDir = conf(IndexDirKey, IndexStore.default.dir)
-    // same rewritten-plan cache as the top-k shape (the range feed has the
-    // identical O(F) construction costs); radius rides in the conf slot.
-    // A range rewrite carries no tier, so tier/reason are unused markers.
-    val cacheKey = VectorTopKRule.rewriteCacheKey(
-      leaf.rootPaths, leaf.inputFiles, leaf.dataSchema, leaf.output.map(_.name),
-      column, query, k = -1, cosine = false, filterFree = false,
-      Seq(sessionKey, "range", radius.toString,
-        conf(RangeMaxSelectivityKey, RangeMaxSelectivityDefault),
-        storeDir, spark.sessionState.conf.autoBroadcastJoinThreshold.toString))
-    serveCachedRewrite(cacheKey, leaf, served).foreach { case (p, _, _) => return Some(p) }
-    VectorTopKRule.planCacheMisses.incrementAndGet()
-    val files = VectorTopKRule.internedFileList(leaf.rootPaths, leaf.inputFiles)
-    if (files.isEmpty) return None
-    val cacheDirs = IndexStore.tableDirs(files, storeDir)
-    val idBefore = IndexStore.identityOf(cacheDirs)
-    val store = new IndexStore(storeDir)
-    if (!allIndexed(files, column, query.length, store)) return None
-    val candDf = VectorTopK
-      .rangeCandidatesByFiles(spark, files, column, query.toIndexedSeq, radius, store)
-      .toDF("__file", "__ri")
-    // sampled-files estimate (shared with the API paths) drives (a) the
-    // selectivity bailout — when the radius bound keeps most cells, the
-    // vectorized full scan beats the point-read fetch (index-vs-scan
-    // crossover; measured at sf0.1: a ~10%-selective radius runs 0.2 s
-    // brute vs 0.3-0.4 s pruned when pruning keeps most cells, BENCHNOTES
-    // round-5) and (b) the broadcast-vs-shuffle choice
-    val (est, totalEst) = VectorTopK
-      .estimateRangeCandidates(files, column, query, radius, store)
-    val maxSelectivity = conf(RangeMaxSelectivityKey, RangeMaxSelectivityDefault).toDouble
-    if (totalEst > 0 && est.toDouble / totalEst > maxSelectivity) return None
-    val pruned = graftSubtree(leaf, IvfCandidateScan.broadcastIfSmall(spark, candDf, est, files))
-    aliasOutput(leaf, pruned).map { p =>
-      cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, "float", "range", served)
-      p
+      used: AttributeSet): Option[Either[String, LogicalPlan]] =
+    payloadTarget(leaf, column, query.length, used).flatMap {
+      case Left(reason) => Some(Left(reason))
+      case Right(p) =>
+        if (VectorTopK.rangeBails(spark, p.files, column, query, radius, p.store)) None
+        else Some(Right(p.over(VectorTopK.rangeFeed(spark, p.files, column, query.toIndexedSeq,
+          radius, p.store, strict = false).queryExecution.analyzed)))
     }
-  }
-
-  /** The pre-alias grafted subtree — `V1 scan semi-join candidate feed`,
-    * re-optimized: everything that depends only on the scanned table +
-    * candidate feed (not this query's attribute ids), and therefore what
-    * the rewritten-plan cache stores; [[aliasOutput]] rebinds per query.
-    */
-  private def graftSubtree(
-      leaf: ParquetLeaf,
-      candSide: org.apache.spark.sql.DataFrame): LogicalPlan = {
-    val paths = leaf.rootPaths
-    // the semi-join feed keys on `_metadata.file_path`/`row_index`, which
-    // only the V1 file relation exposes — pin the INTERNAL subtree to the
-    // V1 source path even when the session routes parquet to DSv2 (the
-    // V1-vs-V2 choice is made eagerly inside DataFrameReader.load, so the
-    // override can be scoped to exactly that call)
-    val v1Key = "spark.sql.sources.useV1SourceList"
-    // the set/read/restore dance must not interleave across threads
-    // optimizing concurrently on the same session: thread B reading A's
-    // transient value and "restoring" it later would leave the session
-    // permanently V1-pinned — serialize the critical section
-    val scan = VectorTopKRule.v1PinLock.synchronized {
-      val prevV1 = spark.conf.get(v1Key)
-      val hasParquet = prevV1.split(",").exists(_.trim.equalsIgnoreCase("parquet"))
-      if (hasParquet) spark.read.schema(leaf.dataSchema).parquet(paths: _*)
-      else {
-        spark.conf.set(v1Key, if (prevV1.trim.isEmpty) "parquet" else s"$prevV1,parquet")
-        try spark.read.schema(leaf.dataSchema).parquet(paths: _*)
-        finally spark.conf.set(v1Key, prevV1)
-      }
-    }
-    val base = scan
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__ri", col("_metadata.row_index"))
-    // narrow to the leaf's (possibly column-pruned, for DSv2) output before
-    // the join so the standalone optimize below can push the pruning into
-    // the scan — the outer plan is not re-optimized after this rule; a
-    // `_metadata` the leaf outputs is the re-read's own hidden column
-    val needed = leaf.output.map(_.name)
-    val narrowed =
-      if (needed.forall(n => base.columns.contains(n) || n == "_metadata"))
-        base.select(needed.map(col) ++ Seq(col("__file"), col("__ri")): _*)
-      else base
-    val pruned = narrowed
-      .join(candSide, Seq("__file", "__ri"), "left_semi")
-      .drop("__file", "__ri")
-    // This rule runs in extraOptimizations, AFTER the main optimizer
-    // batches — optimize the injected subtree explicitly so hint
-    // elimination, pushdown, and pruning still apply inside it. (Our own
-    // rule sees no Limit+Sort in the subtree, so this cannot recurse.)
-    spark.sessionState.optimizer.execute(pruned.queryExecution.analyzed)
-  }
-
-  /** Rebind a grafted subtree's output to the original leaf's attribute
-    * ids so the untouched parent operators still resolve.
-    */
-  private def aliasOutput(
-      leaf: ParquetLeaf, prunedPlan: LogicalPlan): Option[LogicalPlan] = {
-    val byName = prunedPlan.output.map(a => a.name -> a).toMap
-    val aliases = leaf.output.map { old =>
-      byName.get(old.name) match {
-        case Some(na) => Alias(na, old.name)(exprId = old.exprId)
-        case None => return None
-      }
-    }
-    Some(Project(aliases, prunedPlan))
-  }
 }
 
 object VectorTopKRule {
-  /** A rewritten Sort's new child, its tier and why, and its [[PayloadTag]]. */
-  private final case class Rewrite(plan: LogicalPlan, tier: String, tierReason: String, payload: String)
+  /** A rewritten Sort's new child, and its tier and why. */
+  private final case class Rewrite(plan: LogicalPlan, tier: String, tierReason: String)
+
+  /** The files, sidecar store, output and spec of a [[WinnerPayload]] in
+    * place of a parquet leaf.
+    */
+  private final case class PayloadTarget(
+      files: Seq[String], store: IndexStore, output: Seq[Attribute], spec: WinnerPayload.Spec) {
+    def over(feed: LogicalPlan): WinnerPayload = WinnerPayload(feed, output, spec)
+  }
 
   val EnabledKey = "spark.graft.ivf.enabled"
   val NprobeKey = "spark.graft.ivf.nprobe"
@@ -732,7 +483,7 @@ object VectorTopKRule {
 
   /** Opt-in: let a non-`float` [[TierKey]] serve FILTERED top-k queries
     * too (`WHERE … ORDER BY dist LIMIT k`). The k·oversample coarse-ranked,
-    * exact-refined survivors become the semi-join feed; the untouched
+    * exact-refined survivors become the payload's feed; the untouched
     * Filter and Sort then apply exact semantics to those rows. Off by
     * default because under a filter the tier caps how many candidate rows
     * the predicate gets to see — k·oversample nearest instead of every
@@ -742,17 +493,6 @@ object VectorTopKRule {
     * result is exact (the vq24/vq25 gate).
     */
   val FilteredTierKey = "spark.graft.ivf.filteredTier"
-
-  /** Filter-free queries use the winner-first two-phase feed (rank on
-    * selective reads, fetch k payload rows); set false to force the
-    * one-phase candidate semi-join everywhere.
-    */
-  val TwoPhaseKey = "spark.graft.ivf.twoPhase"
-
-  /** Range-predicate rewrite master switch (lossless, so there is no
-    * exactness knob — this exists only to isolate plans when debugging).
-    */
-  val RangeEnabledKey = "spark.graft.ivf.rangeEnabled"
 
   /** Bail out of the range rewrite when the estimated candidate fraction
     * exceeds this (first-file estimate): a barely-pruning radius makes the
@@ -771,9 +511,6 @@ object VectorTopKRule {
     */
   val RangeMaxSelectivityDefault = "0.05"
 
-  /** Prevents re-matching the rewritten Sort on later rule iterations. */
-  private[plans] val RewrittenTag = TreeNodeTag[Unit]("graft.ivf.rewritten")
-
   /** Which coarse tier the rewrite actually used for this Sort ("float",
     * "sq8", "pq", "pqr") — observable on the optimized plan, so specs and
     * users can confirm a requested tier really engaged (vs fell back).
@@ -789,59 +526,21 @@ object VectorTopKRule {
     */
   val TierReasonTag = TreeNodeTag[String]("graft.ivf.tierReason")
 
-  /** How the rewrite reads the rows it hands the plan above: [[PagePayload]]
-    * (`page`) when a [[WinnerPayload]] reads the k winners' pages, else
-    * `semi-join: <reason>` — the scan semi-joined to a candidate feed, and
-    * why (a filter below the top-k, `twoPhase=false`, a range predicate, or
-    * what [[WinnerPayload.refusal]] names). Set on the rewritten Sort (and
-    * a rewritten range Filter); read by `Graft.payloadResolution`.
+  /** How the rule handled a matched Sort (or range Filter): [[PagePayload]]
+    * (`page`) when a [[WinnerPayload]] reads the rows in place of the
+    * leaf, or `declined: <reason>` when [[WinnerPayload.refusal]] names a
+    * reason and Spark's own plan runs. `page` also keeps the rule from
+    * matching the node again. Read by `Graft.payloadResolution`.
     */
   val PayloadTag = TreeNodeTag[String]("graft.ivf.payload")
   val PagePayload = "page"
-  private[plans] val SemiJoinPrefix = "semi-join: "
+  private[plans] val DeclinedPrefix = "declined: "
 
-  /** Prevents re-matching a rewritten range Filter. */
-  private[plans] val RangeRewrittenTag = TreeNodeTag[Unit]("graft.ivf.rangeRewritten")
-
-  /** Serializes the useV1SourceList set/read/restore in [[graftSubtree]]
-    * (process-wide: runtime confs are session-scoped but cloned sessions
-    * share the underlying SQLConf in some paths — one lock is cheap).
-    */
-  private[plans] val v1PinLock = new Object
-
-  // ── rewritten-plan cache (flat warm-plan latency; round-12 item #2) ────
-  // Keyed by everything the grafted subtree was built from; validated on
-  // every hit against the stat identity of the sidecar store dir + data
-  // parent dirs (same scheme and staleness posture as
-  // IndexStore.memoizedTableProbe — atomic-rename writes bump dir mtimes;
-  // an in-place content overwrite is caught execution-side by binding
-  // stamps). Entries hold finished pre-alias LOGICAL subtrees; serving one
-  // costs dir stats + a clone + re-aliasing, independent of file count.
-  // Known tradeoff: the key enumerates the graft confs + the broadcast
-  // threshold + a session identity, NOT every Spark optimizer conf — a
-  // user toggling e.g. spark.sql.optimizer.excludedRules mid-session can
-  // be served a subtree optimized under the previous setting (the
-  // OUTER plan always reflects current confs; only the injected subtree's
-  // internal optimization is pinned). Disable via EnabledKey or
-  // clearPlanCache() when experimenting with optimizer confs.
-  private[plans] final case class CachedRewrite(
-      dirs: Seq[String], identity: String, plan: LogicalPlan,
-      tier: String, reason: String)
-
-  /** Bounds driver memory: each entry pins a plan subtree whose feed
-    * captures the table's canonicalized file list — INTERNED per table
-    * ([[internedFileList]]), so 64 entries over K tables hold K lists
-    * (~10 MB per 100k-file table), not 64.
-    */
-  private val PlanCacheCap = 64
-
-  /** One canonical sorted file list per table content: every cached plan
-    * (and every cache-miss rebuild) for the same unchanged table shares
-    * ONE Seq instance instead of re-canonicalizing, re-sorting, and
-    * capturing a private copy in its feed closures. Keyed by root paths +
-    * count + the same unordered content mix as the plan-cache key; a
-    * changed file set changes the key, and the plan cache's dir-identity
-    * validation backstops staleness downstream.
+  /** One canonical sorted file list per table content: every plan over
+    * the same unchanged table shares ONE Seq instance instead of
+    * re-canonicalizing, re-sorting, and capturing a private copy in its
+    * feed closures. Keyed by root paths + count + an unordered content
+    * mix; a changed file set changes the key.
     */
   private val fileListCache =
     new java.util.LinkedHashMap[String, Seq[String]](16, 0.75f, true) {
@@ -862,8 +561,7 @@ object VectorTopKRule {
   }
 
   /** Two independent single-pass unordered mixes over a path list — no
-    * sort, no canonicalization; shared by the plan-cache key and the
-    * file-list intern key.
+    * sort, no canonicalization: the file-list intern key.
     */
   private def unorderedMix(files: Seq[String]): String = {
     var hx = 0L; var hs = 0L
@@ -874,62 +572,11 @@ object VectorTopKRule {
     }
     s"$hx:$hs"
   }
-  private val planCache =
-    new java.util.LinkedHashMap[String, CachedRewrite](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, CachedRewrite]): Boolean =
-        size() > PlanCacheCap
-    }
-  /** Stable per-session identity for cache keys (weak: dropped sessions
-    * don't stay reachable through the identity map; their cache entries
-    * age out of the LRU).
+  /** (hits, misses) of the rewritten-plan cache, which no longer exists:
+    * no plan is cached, so both read 0. Kept for the benchmark harness,
+    * which reads it.
     */
-  private val sessionKeys =
-    new java.util.WeakHashMap[SparkSession, String]()
-  private[plans] def sessionKeyFor(s: SparkSession): String =
-    sessionKeys.synchronized {
-      Option(sessionKeys.get(s)).getOrElse {
-        val k = java.util.UUID.randomUUID().toString
-        sessionKeys.put(s, k)
-        k
-      }
-    }
-
-  private[plans] def planCacheGet(k: String): Option[CachedRewrite] =
-    planCache.synchronized(Option(planCache.get(k)))
-  private[plans] def planCachePut(k: String, v: CachedRewrite): Unit =
-    planCache.synchronized(planCache.put(k, v)): Unit
-  private[plans] val planCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private[plans] val planCacheMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** (hits, misses) of the rewritten-plan cache since JVM start. */
-  def planCacheStats: (Long, Long) = (planCacheHits.get(), planCacheMisses.get())
-
-  private[plans] def planCacheSize: Int = planCache.synchronized(planCache.size)
-
-  /** Test hook — identity keys self-invalidate in production. */
-  private[graft] def clearPlanCache(): Unit = planCache.synchronized(planCache.clear())
-
-  /** Cache key over every rewrite input. The file list enters as count +
-    * two independent unordered single-pass mixes (no sort, no per-path
-    * canonicalization — key construction must stay cheap in F); the query
-    * vector and schema enter as a SHA-1 digest.
-    */
-  private[plans] def rewriteCacheKey(
-      rootPaths: Seq[String], inputFiles: Seq[String], schema: StructType,
-      outputNames: Seq[String], column: String, query: Array[Float],
-      k: Int, cosine: Boolean, filterFree: Boolean, confs: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    val qb = java.nio.ByteBuffer.allocate(4 * query.length)
-    query.foreach(qb.putFloat)
-    md.update(qb.array())
-    md.update(schema.catalogString.getBytes("UTF-8"))
-    val qDigest = md.digest().map("%02x".format(_)).mkString
-    (Seq("topk", rootPaths.mkString(","), outputNames.mkString(","), column,
-      k.toString, cosine.toString, filterFree.toString, qDigest,
-      inputFiles.length.toString, unorderedMix(inputFiles)) ++ confs)
-      .mkString("\u0000")
-  }
+  def planCacheStats: (Long, Long) = (0L, 0L)
 
   /** Runtime installation on an existing session (no extensions config
     * needed): appends to `spark.experimental.extraOptimizations`.

@@ -144,14 +144,14 @@ class IvfIndexSpec extends AnyFunSuite {
         s"f$i" -> Array.tabulate(rnd.nextInt(12))(identity))
       val cap = 1 + rnd.nextInt(25)
       val capped = VectorTopK.capRoundRobin(perFile, cap)
-      val quotas = graft.plans.IvfCandidateScan
+      val quotas = VectorTopK
         .roundRobinQuotas(perFile.map(_._2.length.toLong).toArray, cap.toLong)
       assert(capped.map(_._2.length.toLong) == quotas.toSeq)
     }
   }
 
   test("roundRobinQuotas closed form: edge cases and huge caps") {
-    import graft.plans.IvfCandidateScan.roundRobinQuotas
+    import VectorTopK.roundRobinQuotas
     assert(roundRobinQuotas(Array.emptyLongArray, 10L).isEmpty)
     assert(roundRobinQuotas(Array(3L, 5L), 0L).toSeq == Seq(0L, 0L))
     // cap >= total: everything taken

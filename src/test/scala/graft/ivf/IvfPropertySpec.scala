@@ -37,14 +37,14 @@ class IvfPropertySpec extends SparkSpec {
     // the lazy in-plan cap (VectorTopK.cappedCandidates sorts candidates
     // by probe-order position then file index and takes the cap-prefix) must
     // select exactly the per-file counts the reference-shaped water-fill
-    // (IvfCandidateScan.roundRobinQuotas) hands out — for ANY counts and cap
+    // (VectorTopK.roundRobinQuotas) hands out — for ANY counts and cap
     val countsAndCap = for {
       n <- Gen.choose(1, 12)
       counts <- Gen.listOfN(n, Gen.choose(0L, 50L))
       cap <- Gen.choose(0L, 200L)
     } yield (counts.toArray, cap)
     forAllSeeded(countsAndCap, 200) { case (counts, cap) =>
-      val quotas = graft.plans.IvfCandidateScan.roundRobinQuotas(counts, cap)
+      val quotas = VectorTopK.roundRobinQuotas(counts, cap)
       // simulate the sorted-prefix selection
       val tagged = for {
         fi <- counts.indices

@@ -144,20 +144,20 @@ class RangeSearchSpec extends SparkSpec {
     // global radius: every cell survives the triangle bound → fraction 1.0
     val wide = VectorTopK.rangeRows(spark, dir, "vec", near, 40.0f, store)
     val widePlan = wide.queryExecution.optimizedPlan.toString
-    assert(!widePlan.contains("LeftSemi"), widePlan)
+    assert(!widePlan.contains("WinnerPayload"), widePlan)
     assert(wide.select("id").as[Long].collect().sorted.toSeq == brute(dir, near, 40.0f))
     // tight radius on this 300-row fixture: one blob of three survives the
     // triangle bound (~1/3 candidate fraction), which the measurement-driven
     // default crossover (0.05, VectorTopKRule.RangeMaxSelectivityDefault)
     // correctly refuses — the scan is cheaper at that fraction
     val tightDefault = VectorTopK.rangeRows(spark, dir, "vec", near, 0.3f, store)
-    assert(!tightDefault.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-    // pinned up, pruning engages (semi-join shape) and stays exact
+    assert(!tightDefault.queryExecution.optimizedPlan.toString.contains("WinnerPayload"))
+    // pinned up, pruning engages (the page-level payload) and stays exact
     spark.conf.set(graft.plans.VectorTopKRule.RangeMaxSelectivityKey, "0.5")
     try {
       val tight = VectorTopK.rangeRows(spark, dir, "vec", near, 0.3f, store)
       val tightPlan = tight.queryExecution.optimizedPlan.toString
-      assert(tightPlan.contains("LeftSemi"), tightPlan)
+      assert(tightPlan.contains("WinnerPayload"), tightPlan)
       assert(tight.select("id").as[Long].collect().sorted.toSeq == brute(dir, near, 0.3f))
     } finally spark.conf.unset(graft.plans.VectorTopKRule.RangeMaxSelectivityKey)
     // rangeSearch's bail branch: kernel-identical distances, same rows

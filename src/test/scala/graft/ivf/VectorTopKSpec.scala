@@ -181,10 +181,11 @@ class VectorTopKSpec extends SparkSpec {
     // embeddings_fetched = 3 post-filter rows
     assert(metered.get.metrics("embeddingsFetched").value == 3L)
     assert(metered.get.metrics("batchesFetched").value >= 1L)
-    val candScan = nodes.collectFirst { case c: graft.plans.IvfCandidateScanExec => c }
-    assert(candScan.isDefined, df.queryExecution.executedPlan.toString)
-    assert(candScan.get.metrics("candidateRows").value == 6L)
-    assert(candScan.get.metrics("filesScanned").value == 1L)
+    // the payload reads every candidate's row: 6 candidates in 1 file
+    val payload = nodes.collectFirst { case p: graft.plans.WinnerPayloadExec => p }
+    assert(payload.isDefined, df.queryExecution.executedPlan.toString)
+    assert(payload.get.metrics("candidateRows").value == 6L)
+    assert(payload.get.metrics("filesScanned").value == 1L)
   }
 
   test("incremental extend indexes only new files with the shared centroids") {
@@ -427,11 +428,15 @@ class VectorTopKSpec extends SparkSpec {
   }
 
   test("autoBroadcastJoinThreshold=-1 disables the candidate broadcast") {
-    // the filtered (one-phase) path joins the UNBOUNDED candidate feed, so
-    // it must honor the user's broadcast opt-out; the no-filter two-phase
-    // path only ever broadcasts the k winners (bounded), tested below
+    // the filtered (one-phase) path on a table the page reader refuses (a
+    // struct column) semi-joins the scan to the UNBOUNDED candidate feed,
+    // so it must honor the user's broadcast opt-out; the no-filter
+    // two-phase path only ever broadcasts the k winners (bounded)
     val vecs = Seq(Seq(0f, 0f), Seq(1f, 0f), Seq(0f, 2f), Seq(5f, 5f))
-    val path = writeFixture(vecs)
+    val path = Files.createTempDirectory("graft-fixture-struct").toString
+    spark.read.parquet(writeFixture(vecs))
+      .withColumn("st", org.apache.spark.sql.functions.struct(col("id")))
+      .coalesce(1).write.mode("overwrite").parquet(path)
     val store = tmpStore
     IvfBuilder.build(spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
     val key = "spark.sql.autoBroadcastJoinThreshold"
@@ -477,9 +482,39 @@ class VectorTopKSpec extends SparkSpec {
     val payload = allNodes(df.queryExecution.executedPlan).collectFirst {
       case p: graft.plans.WinnerPayloadExec => p
     }.getOrElse(fail(df.queryExecution.executedPlan.toString))
-    assert(payload.metrics("payloadFiles").value == 1L)
-    assert(payload.metrics("payloadRows").value == 3L)
+    assert(payload.metrics("filesScanned").value == 1L)
+    assert(payload.metrics("candidateRows").value == 3L)
     assert(payload.metrics("payloadPages").value >= 1L)
+  }
+
+  test("a filtered payload opens each candidate file once, several files per task") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val vecs = (0 until 240).map(_ => Seq.fill(4)(rnd.nextFloat()))
+    val dir = java.nio.file.Files.createTempDirectory("graft-runs").toString
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .repartition(12).write.mode("overwrite").parquet(dir)
+    val store = tmpStore
+    IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    val files = spark.read.parquet(dir).inputFiles.length
+    assert(files > spark.sparkContext.defaultParallelism)
+    val query = Seq.fill(4)(0.5f)
+    val df = VectorTopK.indexed(spark, dir, "vec", query, 5,
+      VectorTopK.Options(nprobe = 64), filter = Some(col("id") % 2 === 0), store = store)
+    val ids = df.collect().map(_.getAs[Long]("id")).toSeq
+    val expected = vecs.zipWithIndex.filter(_._2 % 2 == 0).map { case (v, i) =>
+      (i.toLong, graft.functions.VectorKernels.squaredL2(v.toArray, query.toArray))
+    }.sortBy { case (id, d) => (d, id) }.take(5).map(_._1)
+    assert(ids == expected)
+    // every row is a candidate at exhaustive nprobe; the feed's same-file
+    // runs open each file once
+    val payload = allNodes(df.queryExecution.executedPlan).collectFirst {
+      case p: graft.plans.WinnerPayloadExec => p
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+    assert(payload.metrics("filesScanned").value == files.toLong)
+    assert(payload.metrics("candidateRows").value == 240L)
   }
 
   /** Spark jobs started while `f` runs: job starts are tagged with a job

@@ -52,20 +52,21 @@ class VectorTopKRuleSpec extends SparkSpec {
   private def register(): Unit =
     spark.read.parquet(dataDir).createOrReplaceTempView("graft_vecs")
 
-  /** The rewrite fired: its payload tag is set, and the plan has the shape
-    * the tag names — a `WinnerPayload` for `page`, a `LeftSemi` join for
-    * `semi-join: …` (filtered, range, `twoPhase=false`, refused tables).
+  /** The rewrite fired: its payload tag reads `page`, and a
+    * `WinnerPayload` sits in the plan (every shape: filter-free, filtered,
+    * range).
     */
-  private def fired(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.optimizedPlan.toString
-    graft.Graft.payloadResolution(df).exists { p =>
-      if (p == VectorTopKRule.PagePayload) plan.contains("WinnerPayload")
-      else p.startsWith("semi-join: ") && plan.contains("LeftSemi")
-    }
-  }
+  private def fired(df: DataFrame): Boolean =
+    graft.Graft.payloadResolution(df).contains(VectorTopKRule.PagePayload) &&
+      df.queryExecution.optimizedPlan.toString.contains("WinnerPayload")
 
   private def payload(df: DataFrame): String =
-    graft.Graft.payloadResolution(df).getOrElse(fail("the rewrite did not fire"))
+    graft.Graft.payloadResolution(df).getOrElse(fail("the rule did not match"))
+
+  /** The optimized plan's one [[WinnerPayload]]. */
+  private def payloadNode(df: DataFrame): WinnerPayload =
+    df.queryExecution.optimizedPlan.collectFirst { case w: WinnerPayload => w }
+      .getOrElse(fail(df.queryExecution.optimizedPlan.toString))
 
   test("rewrite fires on ORDER BY array_distance ASC LIMIT k and stays exact") {
     register()
@@ -77,8 +78,9 @@ class VectorTopKRuleSpec extends SparkSpec {
       assert(payload(df) == "page")
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("_dist"), optimized)
-      assert(!optimized.contains("IvfCandidateScan"), optimized)
       assert(!optimized.contains("LeftSemi"), optimized)
+      // the k winners: a bounded feed
+      assert(payloadNode(df).child.maxRows.contains(5L), optimized)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlTopk()
       assert(!fired(brute))
@@ -87,35 +89,18 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("twoPhase=false forces the one-phase candidate feed and stays exact") {
-    register()
-    withRule(nprobe = 8) {
-      spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-      try {
-        val df = sqlTopk()
-        assert(fired(df), df.queryExecution.optimizedPlan.toString)
-        assert(payload(df) == s"semi-join: ${VectorTopKRule.TwoPhaseKey}=false")
-        // candidate feed is the metered custom node, planned by GraftStrategy
-        assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
-        assert(df.queryExecution.executedPlan.toString.contains("IvfCandidateScanExec"))
-        spark.conf.set(VectorTopKRule.EnabledKey, "false")
-        val brute = sqlTopk()
-        spark.conf.set(VectorTopKRule.EnabledKey, "true")
-        assert(df.collect().map(_.getLong(0)).toSeq ==
-          brute.collect().map(_.getLong(0)).toSeq)
-      } finally spark.conf.unset(VectorTopKRule.TwoPhaseKey)
-    }
-  }
-
   test("residual WHERE keeps the one-phase candidate feed (post-filter)") {
     register()
     withRule(nprobe = 8) {
       val df = sqlTopk(extra = "WHERE label >= 2")
       assert(fired(df))
-      assert(payload(df) == "semi-join: a filter sits below the top-k")
       // a filter below the top-k must see full candidate rows — the
-      // winner-first shortcut must NOT engage
-      assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
+      // winner-first shortcut must NOT engage: the payload's feed is every
+      // candidate, and Spark's TakeOrdered ranks the filtered rows
+      assert(payloadNode(df).child.maxRows.isEmpty, df.queryExecution.optimizedPlan.toString)
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("TakeOrderedAndProject") && !physical.contains("TopKCollect"),
+        physical)
     }
   }
 
@@ -151,26 +136,22 @@ class VectorTopKRuleSpec extends SparkSpec {
       try {
         val df = sqlTopk()
         assert(fired(df))
-        // the cap no longer forces one-phase: filter-free keeps the
-        // winner-first feed, with round-robin capping inside the plan
+        // the cap keeps the winner-first feed, with round-robin capping
+        // inside the plan
         val optimized = df.queryExecution.optimizedPlan.toString
-        assert(!optimized.contains("IvfCandidateScan"), optimized)
         assert(optimized.contains("_pos"), optimized)
         // 200 rows, exhaustive probe, but only 2 candidates survive the cap
         assert(df.collect().length == 2)
 
-        // semantic twin: the one-phase path (twoPhase=false) must select
-        // the SAME round-robin-capped candidate set
-        spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-        val onePhase = sqlTopk()
-        assert(onePhase.queryExecution.optimizedPlan.toString
-          .contains("IvfCandidateScan"))
+        // semantic twin: a capped filter that keeps every row reads every
+        // capped candidate, so it must select the SAME round-robin-capped
+        // candidate set
+        val filtered = sqlTopk(extra = "WHERE label >= 0")
+        assert(fired(filtered))
+        assert(payloadNode(filtered).child.maxRows.isEmpty)
         assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
-          onePhase.collect().map(_.getLong(0)).sorted.toSeq)
-      } finally {
-        spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
-        spark.conf.unset(VectorTopKRule.TwoPhaseKey)
-      }
+          filtered.collect().map(_.getLong(0)).sorted.toSeq)
+      } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
     }
   }
 
@@ -181,7 +162,9 @@ class VectorTopKRuleSpec extends SparkSpec {
       try {
         val df = sqlTopk(extra = "WHERE label >= 0")
         assert(fired(df))
-        assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
+        val optimized = df.queryExecution.optimizedPlan.toString
+        assert(optimized.contains("_pos"), optimized)
+        assert(payloadNode(df).child.maxRows.isEmpty, optimized)
         assert(df.collect().length == 4)
       } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
     }
@@ -201,7 +184,6 @@ class VectorTopKRuleSpec extends SparkSpec {
       assert(payload(df) == "page")
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("_dist"), optimized)
-      assert(!optimized.contains("IvfCandidateScan"), optimized)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlCosineTopk()
       assert(!fired(brute))
@@ -223,9 +205,7 @@ class VectorTopKRuleSpec extends SparkSpec {
       val df = sqlCosineTopk(extra = "WHERE label >= 2")
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
       // post-filter semantics need the full candidate feed, probed angularly
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("IvfCandidateScan"), optimized)
-      assert(optimized.contains("metric=cosine"), optimized)
+      assert(payloadNode(df).child.maxRows.isEmpty, df.queryExecution.optimizedPlan.toString)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlCosineTopk(extra = "WHERE label >= 2")
       assert(!fired(brute))
@@ -233,19 +213,15 @@ class VectorTopKRuleSpec extends SparkSpec {
       assert(df.collect().map(_.getLong(0)).toSeq ==
         brute.collect().map(_.getLong(0)).toSeq)
 
-      // twoPhase=false: filter-free cosine also drops to the angular
-      // one-phase feed instead of bailing
-      spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-      try {
-        val one = sqlCosineTopk()
-        assert(fired(one), one.queryExecution.optimizedPlan.toString)
-        assert(one.queryExecution.optimizedPlan.toString.contains("metric=cosine"))
-        spark.conf.set(VectorTopKRule.EnabledKey, "false")
-        val b2 = sqlCosineTopk()
-        spark.conf.set(VectorTopKRule.EnabledKey, "true")
-        assert(one.collect().map(_.getLong(0)).toSeq ==
-          b2.collect().map(_.getLong(0)).toSeq)
-      } finally spark.conf.unset(VectorTopKRule.TwoPhaseKey)
+      // the filter-free cosine twin reads the k winners and equals brute
+      // force too
+      val ff = sqlCosineTopk()
+      assert(fired(ff), ff.queryExecution.optimizedPlan.toString)
+      assert(payloadNode(ff).child.maxRows.contains(5L))
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val b2 = sqlCosineTopk()
+      spark.conf.set(VectorTopKRule.EnabledKey, "true")
+      assert(ff.collect().map(_.getLong(0)).toSeq == b2.collect().map(_.getLong(0)).toSeq)
     }
   }
 
@@ -256,6 +232,8 @@ class VectorTopKRuleSpec extends SparkSpec {
       assert(fired(df))
       val ids = df.collect().map(_.getLong(0)).toSeq
       assert(ids.nonEmpty && ids.length <= 5)
+      // the candidates are the cells nearest by centroid COSINE
+      assert(ids == annOracle("label >= 2", cosine = true, nprobe = 2))
     }
   }
 
@@ -267,7 +245,7 @@ class VectorTopKRuleSpec extends SparkSpec {
         val df = sqlCosineTopk(extra = "WHERE label >= 0") // filter keeps all
         assert(fired(df))
         val optimized = df.queryExecution.optimizedPlan.toString
-        assert(optimized.contains("metric=cosine"), optimized)
+        assert(optimized.contains("_pos"), optimized)
         // exhaustive probe over 200 rows, but only 4 candidates survive
         assert(df.collect().length == 4)
       } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
@@ -288,7 +266,7 @@ class VectorTopKRuleSpec extends SparkSpec {
           .select("id")
         val df = q
         assert(fired(df), df.queryExecution.optimizedPlan.toString)
-        assert(df.queryExecution.optimizedPlan.toString.contains("metric=cosine"))
+        assert(payloadNode(df).child.maxRows.isEmpty)
         spark.conf.set(VectorTopKRule.EnabledKey, "false")
         val brute = q
         assert(!fired(brute))
@@ -378,6 +356,81 @@ class VectorTopKRuleSpec extends SparkSpec {
 
   private def vecLit: String = s"array(${Seq.fill(8)("0.5F").mkString(",")})"
 
+  /** The ids an ANN top-k at `nprobe` must return on the one-file fixture:
+    * brute force over the members of the probed cells (in the metric's
+    * probe order; the first `cap` of them under a cap) — the candidate set
+    * the rewrite has always read.
+    */
+  private def annOracle(
+      where: String, cosine: Boolean, nprobe: Int, cap: Option[Int] = None): Seq[Long] = {
+    val files = graft.ivf.IndexManager.listFiles(spark, dataDir)
+    assert(files.size == 1)
+    val index = graft.ivf.IndexManager.loadIndex(new IndexStore(storeDir), files.head, "vec")
+    val probed = index.probeCells(Array.fill(8)(0.5f), nprobe, cosine).flatMap(index.invertedLists)
+    val kept = cap.fold(probed)(probed.take).map(_.toLong).toSeq
+    val order =
+      if (cosine) s"array_cosine_similarity(vec, $vecLit) DESC"
+      else s"array_distance(vec, $vecLit) ASC"
+    spark.read.parquet(dataDir)
+      .where(col("_metadata.row_index").isin(kept: _*))
+      .createOrReplaceTempView("graft_ann_oracle")
+    spark.conf.set(VectorTopKRule.EnabledKey, "false")
+    try spark.sql(s"SELECT id FROM graft_ann_oracle WHERE $where ORDER BY $order LIMIT 5")
+      .collect().map(_.getLong(0)).toSeq
+    finally spark.conf.set(VectorTopKRule.EnabledKey, "true")
+  }
+
+  test("nprobe 2: filtered and capped shapes return the probed cells' top-k") {
+    register()
+    withRule(nprobe = 2) {
+      def ids(df: DataFrame) = {
+        assert(fired(df), df.queryExecution.optimizedPlan.toString)
+        df.collect().map(_.getLong(0)).toSeq
+      }
+      assert(ids(sqlTopk(extra = "WHERE label >= 2")) ==
+        annOracle("label >= 2", cosine = false, nprobe = 2))
+      assert(ids(sqlCosineTopk(extra = "WHERE label >= 2")) ==
+        annOracle("label >= 2", cosine = true, nprobe = 2))
+      spark.conf.set(VectorTopKRule.MaxCandidatesKey, "12")
+      try {
+        assert(ids(sqlTopk(extra = "WHERE label >= 1")) ==
+          annOracle("label >= 1", cosine = false, nprobe = 2, cap = Some(12)))
+        assert(ids(sqlCosineTopk(extra = "WHERE label >= 1")) ==
+          annOracle("label >= 1", cosine = true, nprobe = 2, cap = Some(12)))
+        assert(ids(sqlTopk()) == annOracle("true", cosine = false, nprobe = 2, cap = Some(12)))
+      } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
+      assert(ids(sqlTopk()) == annOracle("true", cosine = false, nprobe = 2))
+    }
+  }
+
+  test("filteredTier opt-in reads the tier's survivors through the payload, exactly") {
+    register()
+    withRule(nprobe = 8) {
+      graft.ivf.Sq8Sidecar.ensure(spark, dataDir, "vec", new IndexStore(storeDir))
+      spark.conf.set(VectorTopKRule.TierKey, "sq8")
+      spark.conf.set(VectorTopKRule.FilteredTierKey, "true")
+      // 200 rows: k·oversample = 5·40 covers every candidate → exact
+      spark.conf.set(VectorTopKRule.OversampleKey, "40")
+      try {
+        val df = sqlTopk(extra = "WHERE label >= 2")
+        assert(fired(df), df.queryExecution.optimizedPlan.toString)
+        val tiers = df.queryExecution.optimizedPlan.collect {
+          case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
+            s.getTagValue(VectorTopKRule.TierTag)
+        }.flatten
+        assert(tiers == Seq("sq8"), tiers.toString)
+        assert(payloadNode(df).child.maxRows.isEmpty)
+        val got = df.collect().map(_.getLong(0)).toSeq
+        spark.conf.set(VectorTopKRule.EnabledKey, "false")
+        assert(got == sqlTopk(extra = "WHERE label >= 2").collect().map(_.getLong(0)).toSeq)
+      } finally {
+        spark.conf.unset(VectorTopKRule.TierKey)
+        spark.conf.unset(VectorTopKRule.FilteredTierKey)
+        spark.conf.unset(VectorTopKRule.OversampleKey)
+      }
+    }
+  }
+
   private def rows(df: DataFrame): Seq[(Long, Float)] =
     df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
@@ -418,13 +471,14 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  /** Runs `sql` with the rule on and off: the rule fires with the payload
-    * reason `reason`, and both return the same ids in the same order.
+  /** Runs `sql` with the rule on and off: the rule declines with `reason`,
+    * leaving Spark's own plan, and both return the same ids in the same
+    * order.
     */
   private def assertRefused(sql: String, reason: String): Unit = {
     val df = spark.sql(sql)
-    assert(fired(df), df.queryExecution.optimizedPlan.toString)
-    assert(payload(df) == s"semi-join: $reason")
+    assert(payload(df) == s"declined: $reason")
+    assert(!fired(df), df.queryExecution.optimizedPlan.toString)
     val got = df.collect().map(_.getLong(0)).toSeq
     spark.conf.set(VectorTopKRule.EnabledKey, "false")
     try assert(got == spark.sql(sql).collect().map(_.getLong(0)).toSeq)
@@ -552,6 +606,17 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
+  test("a collected filtered top-k runs as one job: scoring, payload and TakeOrdered") {
+    register()
+    withRule(nprobe = 8) {
+      val df = sqlTopk(extra = "WHERE label >= 2")
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("TakeOrderedAndProject") && physical.contains("WinnerPayloadExec"),
+        physical)
+      assert(stagesPerJob(df.collect(): Unit) == Seq(1))
+    }
+  }
+
   private def sqlRange(pred: String): DataFrame =
     spark.sql(s"SELECT id FROM graft_vecs WHERE $pred")
 
@@ -561,15 +626,16 @@ class VectorTopKRuleSpec extends SparkSpec {
       val pred = s"array_distance(vec, $vecLit) < 0.55"
       val df = sqlRange(pred)
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
-      assert(payload(df) == "semi-join: range predicate")
-      spark.conf.set(VectorTopKRule.RangeEnabledKey, "false")
-      try {
-        val brute = sqlRange(pred)
-        assert(!fired(brute))
-        val expected = brute.collect().map(_.getLong(0)).sorted.toSeq
-        assert(expected.nonEmpty, "fixture radius catches no rows")
-        assert(df.collect().map(_.getLong(0)).sorted.toSeq == expected)
-      } finally spark.conf.unset(VectorTopKRule.RangeEnabledKey)
+      assert(payload(df) == "page")
+      // the feed is every member of the admitted cells; the Filter stays
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("Filter") && payloadNode(df).child.maxRows.isEmpty, optimized)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val brute = sqlRange(pred)
+      assert(!fired(brute))
+      val expected = brute.collect().map(_.getLong(0)).sorted.toSeq
+      assert(expected.nonEmpty, "fixture radius catches no rows")
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq == expected)
     }
   }
 
@@ -584,9 +650,9 @@ class VectorTopKRuleSpec extends SparkSpec {
       forms.foreach { pred =>
         val df = sqlRange(pred)
         assert(fired(df), s"$pred: ${df.queryExecution.optimizedPlan}")
-        spark.conf.set(VectorTopKRule.RangeEnabledKey, "false")
+        spark.conf.set(VectorTopKRule.EnabledKey, "false")
         val brute = sqlRange(pred)
-        spark.conf.unset(VectorTopKRule.RangeEnabledKey)
+        spark.conf.set(VectorTopKRule.EnabledKey, "true")
         assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
           brute.collect().map(_.getLong(0)).sorted.toSeq, pred)
       }
@@ -596,7 +662,7 @@ class VectorTopKRuleSpec extends SparkSpec {
   test("selectivity bailout: a barely-pruning radius keeps the plain scan") {
     register()
     withRule(nprobe = 8) {
-      // radius covering everything → candidate fraction 1.0 > 0.5 default
+      // radius covering everything → candidate fraction 1.0 > 0.5
       spark.conf.set(VectorTopKRule.RangeMaxSelectivityKey, "0.5")
       val wide = sqlRange(s"array_distance(vec, $vecLit) < 100.0")
       assert(!fired(wide), wide.queryExecution.optimizedPlan.toString)
@@ -622,6 +688,68 @@ class VectorTopKRuleSpec extends SparkSpec {
       spark.read.parquet(plainDir).createOrReplaceTempView("graft_plain")
       assert(!fired(spark.sql(
         s"SELECT id FROM graft_plain WHERE array_distance(vec, $vecLit) < 0.5")))
+    }
+  }
+
+  /** Every row of `df` as strings, sorted: a whole-row comparison that
+    * sees each column by position.
+    */
+  private def allRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+
+  /** `sql` with the rule on: it fired in `branches` payloads, and its rows
+    * equal the rule-off plan's.
+    */
+  private def assertPositional(sql: String, branches: Int): Unit = {
+    val df = spark.sql(sql)
+    val payloads = df.queryExecution.optimizedPlan.collect { case w: WinnerPayload => w }
+    assert(payloads.size == branches, df.queryExecution.optimizedPlan.toString)
+    // a Union takes each branch's columns by position: every leaf column
+    payloads.foreach(w => assert(w.output.map(_.name) == Seq("id", "vec", "label"), w))
+    spark.conf.set(VectorTopKRule.EnabledKey, "false")
+    val expected = allRows(spark.sql(sql))
+    spark.conf.set(VectorTopKRule.EnabledKey, "true")
+    assert(expected.nonEmpty)
+    assert(allRows(df) == expected, sql)
+  }
+
+  test("UNION ALL of two SELECT * top-ks keeps every column of each branch") {
+    register()
+    withRule(nprobe = 8) {
+      def topk(where: String, v: String) =
+        s"(SELECT * FROM graft_vecs $where ORDER BY array_distance(vec, " +
+          s"array(${Seq.fill(8)(v).mkString(",")})) ASC LIMIT 5)"
+      assertPositional(s"${topk("", "0.5F")} UNION ALL ${topk("", "0.2F")}", 2)
+      assertPositional(
+        s"${topk("WHERE label >= 2", "0.5F")} UNION ALL ${topk("WHERE label < 2", "0.2F")}", 2)
+    }
+  }
+
+  test("UNION ALL of two SELECT * range predicates keeps every column of each branch") {
+    register()
+    withRule(nprobe = 8) {
+      assertPositional(
+        s"SELECT * FROM graft_vecs WHERE array_distance(vec, $vecLit) < 0.55 UNION ALL " +
+          s"SELECT * FROM graft_vecs WHERE array_distance(vec, $vecLit) < 0.5", 2)
+    }
+  }
+
+  test("a written SELECT * top-k keeps every column") {
+    register()
+    withRule(nprobe = 8) {
+      val sql = s"SELECT * FROM graft_vecs WHERE label >= 1 " +
+        s"ORDER BY array_distance(vec, $vecLit) ASC LIMIT 5"
+      val out = Files.createTempDirectory("graft-rule-write").toString
+      val df = spark.sql(sql)
+      assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      df.write.mode("overwrite").parquet(out)
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      val expected = allRows(spark.sql(sql))
+      spark.conf.set(VectorTopKRule.EnabledKey, "true")
+      assert(allRows(spark.read.parquet(out)) == expected)
     }
   }
 }
