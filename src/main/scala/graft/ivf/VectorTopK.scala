@@ -4,9 +4,10 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField,
   StructType}
@@ -195,6 +196,9 @@ object VectorTopK {
     */
   final case class SearchResult(row_idx: Long, distance: Float)
 
+  /** Derived once: [[search]] and [[rangeSearch]] build a frame per call. */
+  private val SearchResultEncoder = Encoders.product[SearchResult]
+
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def distanceCol(column: String, query: Seq[Float]): Column =
@@ -209,7 +213,7 @@ object VectorTopK {
   /** Round-robin fairness cap across files so one file cannot starve the
     * others (reference `CandidateCursor`: `src/df_vector/access.rs:193-243`),
     * over materialized per-file lists; [[roundRobinQuotas]] is its
-    * counts-only twin, and [[cappedCandidates]] its in-plan form.
+    * counts-only twin, which [[winnerFeed]]'s capped refine uses.
     */
   def capRoundRobin(
       perFile: Seq[(String, Array[Int])], cap: Int): Seq[(String, Array[Int])] = {
@@ -331,15 +335,15 @@ object VectorTopK {
       column: String,
       q: Array[Float],
       store: IndexStore,
-      scorer: CoarseScorer = FloatScorer): Unit =
+      scorer: Option[CoarseScorer] = None): Unit =
     IndexStore.memoizedTableProbe(
-      s"validate-${scorer.tag}-${q.length}", column, files, store.dir) {
+      s"validate-${scorer.fold("float")(_.tag)}-${q.length}", column, files, store.dir) {
       files.foreach { file =>
         val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
           .getOrElse(throw new IllegalStateException(
             s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
         require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-        scorer.requireSidecar(store, file, column)
+        scorer.foreach(_.requireSidecar(store, file, column))
       }
     }
 
@@ -375,8 +379,9 @@ object VectorTopK {
     * holding its winners in each column — payload IO is the k winners'
     * pages, not a table scan, and the vector column is not read twice.
     * Rows come in the winners' `_dist` order (the metric's order). Collected
-    * directly, the plan runs as one single-stage job and the driver reads
-    * the payload.
+    * directly, the plan runs as one single-stage job (two for sq8/pq/pqr:
+    * the coarse scoring, then the exact refine) and the driver reads the
+    * payload.
     * Building the frame runs no Spark job (the table's inferred schema is
     * memoized per file set, [[IndexManager.tableSchema]]); the table is
     * listed again when the plan runs, so a frame built before an append
@@ -463,12 +468,11 @@ object VectorTopK {
       options: Options = Options(),
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     require(k > 0, "k must be > 0")
-    import spark.implicits._
     winnerFeed(spark, tableFiles(spark, path), column, query, k, options, store)
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
       .orderBy(col("distance").asc_nulls_last)
       .limit(k)
-      .as[SearchResult]
+      .as(SearchResultEncoder)
   }
 
   /** The one top-k pipeline, as a lazy `(_file, _ri, _dist)` feed with
@@ -478,18 +482,26 @@ object VectorTopK {
     * [[graft.plans.VectorTopKRule]]:
     *
     *  1. validate — driver-side header peeks plus the tier's sidecar check;
-    *  2. score — each task scores its files' probed candidates with the
-    *     tier's [[CoarseScorer]]. Float reads ONLY the embedding column of
-    *     only the row groups holding candidates ([[SelectiveFetch]]) and is
-    *     done; sq8/pq rank on code sidecars, a per-file bounded heap keeping
+    *  2. score — each task scores its files' probed candidates. Float reads
+    *     ONLY the embedding column of only the row groups holding candidates
+    *     ([[SelectiveFetch]]) and is done; sq8/pq rank on code sidecars
+    *     with the tier's [[CoarseScorer]], a per-file bounded heap keeping
     *     the `k·oversample` best, so no full candidate list leaves a task;
-    *  3. survive — the coarse keys merge through `orderBy(key, file, ri)
-    *     .limit(k·oversample)`, a distributed TakeOrdered;
-    *  4. refine — the survivors regroup per file and only THEIR floats are
-    *     read for the exact distance.
+    *  3. survive — the quantized tiers collect those heaps (a job of one
+    *     stage, each task already cut to `k·oversample`) and the driver
+    *     takes the `k·oversample` best by `(key, file, ri)` in Spark's sort
+    *     order ([[coarseCut]]);
+    *  4. refine — one task per slice of the files holding survivors reads
+    *     only THEIR floats for the exact distance.
     *
-    * A `maxCandidates` cap swaps steps 2–3 for the in-plan round-robin cap
-    * ([[cappedCandidates]]) ahead of the same refine.
+    * A `maxCandidates` cap swaps steps 2–3 for a job that counts each
+    * file's probed candidates and the driver's round-robin quotas
+    * ([[roundRobinQuotas]]); the refine then reads each file's first
+    * `quota` candidates in probe order, and a capped feed carries each
+    * row's probe-order position as `_pos`, the round of the cap that took
+    * it. Step 3 and the cap's count run when the feed's partitions are
+    * first asked for ([[FilesRDD]]): building the frame, or planning it,
+    * runs no job, and nothing shuffles.
     *
     * [[indexed]]'s feed differs in two ways: `relist` replaces `files` with
     * the table's files when the plan runs (the construction-time `files`
@@ -506,106 +518,98 @@ object VectorTopK {
       store: IndexStore,
       relist: Option[() => Seq[String]] = None,
       withVec: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(k > 0, "k must be > 0")
     require(files.nonEmpty, "no parquet files to search")
     val p = Probe(store, column, query.toArray, options.nprobe, options.cosine)
     val scorer = CoarseScorer(options.tier)
     validate(files, column, p.q, store, scorer)
     val source = relist.getOrElse(() => files)
-    options.maxCandidates match {
-      case Some(cap) => refine(spark, p, cappedCandidates(spark, source, p, cap), withVec)
-      case None =>
-        val keep = options.keep(k)
-        if (options.tier == Tier.Float && withVec)
-          // Catalyst rows, so building the frame derives and resolves no
-          // encoder: the SQL rewrite builds this feed on every planned query
-          org.apache.spark.sql.graft.Bridge.ofInternalRows(spark,
-            overFiles(spark, source).flatMap(f =>
-              p.exactVecRows(f, p.candidates(p.index(f))).map { case (file, ri, d, vec) =>
-                InternalRow(UTF8String.fromString(file), ri, d, UnsafeArrayData.fromPrimitiveArray(vec))
-              }),
-            VecFeedSchema)
-        else {
-          val scored = spark
-            .createDataset(overFiles(spark, source).flatMap(scorer.score(_, p, keep)))
-            .toDF("_file", "_ri", "_key")
-          // float keys are exact float distances widened to Double, so the
-          // narrowing cast is lossless
-          if (options.tier == Tier.Float)
-            scored.select(col("_file"), col("_ri"), col("_key").cast("float").as("_dist"))
-          else
-            refine(spark, p, scored
-              .orderBy(col("_key"), col("_file"), col("_ri"))
-              .limit(keep)
-              .select(col("_file"), col("_ri")), withVec)
+    (options.maxCandidates, scorer) match {
+      case (Some(cap), _) =>
+        def quotas(): Seq[(String, Long)] = {
+          val files = source()
+          val counts = overFiles(spark, () => files)
+            .map(f => p.candidates(p.index(f)).length.toLong).collect()
+          files.zip(roundRobinQuotas(counts, cap)).filter(_._2 > 0)
         }
+        exactFeed(spark, p, withVec, quotas _, capped = true) { case (file, quota) =>
+          (file, p.candidates(p.index(file)).take(quota.toInt))
+        }
+      case (None, None) =>
+        exactFeed(spark, p, withVec, source)(f => (f, p.candidates(p.index(f))))
+      case (None, Some(coarse)) =>
+        val keep = options.keep(k)
+        def survivors(): Seq[(String, Array[Int])] = {
+          val files = source()
+          val cut = coarseCut(overFiles(spark, () => files)
+            .flatMap(coarse.score(_, p, keep))
+            .mapPartitions(heaps => coarseCut(heaps, keep).iterator)
+            .collect().iterator, keep)
+          val byFile = cut.groupBy(_._1)
+          files.flatMap(f => byFile.get(f).map(rows => (f, rows.map(_._2.toInt).sorted)))
+        }
+        exactFeed(spark, p, withVec, survivors _)(identity)
     }
   }
 
-  /** The `(_file, _ri, _dist, _vec)` feed's schema. */
-  private val VecFeedSchema = StructType(Seq(
-    StructField("_file", StringType), StructField("_ri", LongType, nullable = false),
-    StructField("_dist", FloatType, nullable = false),
-    StructField("_vec", ArrayType(FloatType, containsNull = false))))
-
-  /** Exact refine of `(_file, _ri)` survivors: regroup per file, read only
-    * their floats, emit `(_file, _ri, _dist)` (and `_vec` with `withVec`).
+  /** The `keep` best of coarse `(file, ordinal, key)` triples in the order
+    * of Spark's `ORDER BY key, file, ordinal`: keys compare as SQL doubles
+    * (`-0.0 = 0.0`, NaN last), files by their UTF-8 bytes, then ordinals.
+    * Taking the `keep` best of each task's heaps and then of their union
+    * selects the same survivors as one cut over every file's heap.
     */
-  private def refine(
-      spark: SparkSession, p: Probe, survivors: DataFrame, withVec: Boolean): DataFrame = {
-    import spark.implicits._
-    val byFile = survivors.as[(String, Long)].groupByKey(_._1)
-    def ordinals(rows: Iterator[(String, Long)]) = rows.map(_._2.toInt).toArray.sorted
-    if (withVec)
-      byFile.flatMapGroups((file, rows) => p.exactVecRows(file, ordinals(rows)))
-        .toDF("_file", "_ri", "_dist", "_vec")
-    else
-      byFile.flatMapGroups((file, rows) => p.exactRows(file, ordinals(rows)))
-        .toDF("_file", "_ri", "_dist")
+  private[graft] def coarseCut(
+      scored: Iterator[(String, Long, Double)], keep: Int): Array[(String, Long, Double)] = {
+    val utf8 = scala.collection.mutable.HashMap.empty[String, UTF8String]
+    def bytes(file: String) = utf8.getOrElseUpdate(file, UTF8String.fromString(file))
+    scored.toArray.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(a._3, b._3)
+      val byFile = if (c != 0 || a._1 == b._1) c else bytes(a._1).compareTo(bytes(b._1))
+      if (byFile != 0) byFile < 0 else a._2 < b._2
+    }.take(keep)
   }
 
-  /** Candidates under the reference's round-robin `max_candidates` fairness
-    * cap, computed entirely INSIDE the plan — no job at construction time,
-    * which is what lets [[graft.plans.VectorTopKRule]] plan a capped query
-    * (a rule must not run Spark jobs at optimization time, so a driver-side
-    * quota water-fill over per-file counts is off limits there).
-    *
-    * The trick: round-robin selection across files in probe order IS the
-    * `cap`-prefix of candidates sorted by `(probe-order position,
-    * file index)` — round p takes every file's p-th candidate in file
-    * order, exactly the water-fill + remainder state
-    * ([[roundRobinQuotas]]). Each task emits
-    * its files' candidates tagged with position; `orderBy(pos, fileIdx)
-    * .limit(cap)` plans as a distributed TakeOrdered bounded by `cap`.
-    *
-    * The limit funnels `cap` rows through one partition — fine for what
-    * the cap IS (a small-result fairness knob, like the reference's
-    * `max_candidates`); a cap large enough to make that a bottleneck is
-    * equivalent to no cap, where the uncapped winner feed applies — caps
-    * past [[CapFunnelWarnRows]] log a warning to that effect.
+  /** The `(_file, _ri, _dist)` feed's schema; `withVec` adds `_vec`, and
+    * `capped` the cap's `_pos`.
     */
-  private[graft] val CapFunnelWarnRows = 1000000
+  private def feedSchema(withVec: Boolean, capped: Boolean): StructType = StructType(
+    Seq(StructField("_file", StringType), StructField("_ri", LongType, nullable = false),
+      StructField("_dist", FloatType, nullable = false)) ++
+      (if (withVec) Seq(StructField("_vec", ArrayType(FloatType, containsNull = false)))
+       else Nil) ++
+      (if (capped) Seq(StructField("_pos", LongType, nullable = false)) else Nil))
 
-  private def cappedCandidates(
-      spark: SparkSession, files: () => Seq[String], p: Probe, cap: Int): DataFrame = {
-    import spark.implicits._
-    if (cap > CapFunnelWarnRows) {
-      log.warn(
-        s"maxCandidates=$cap funnels the cap-prefix through a single " +
-          s"partition (fairness-cap semantics); caps past ~$CapFunnelWarnRows " +
-          "rows approximate no cap — consider dropping maxCandidates to use " +
-          "the uncapped winner feed instead")
+  /** The exact feed: one task per slice of `items`, each reading the floats
+    * of only the ordinals `pick` names in its item's file and emitting
+    * Catalyst rows, so building the frame derives and resolves no encoder
+    * (the SQL rewrite builds a feed on every planned query). `items` is
+    * evaluated on the driver when the plan runs ([[FilesRDD]]). `capped`:
+    * `pick`'s ordinals are in probe order, and each row's position there is
+    * its `_pos`.
+    */
+  private def exactFeed[T: ClassTag](
+      spark: SparkSession,
+      p: Probe,
+      withVec: Boolean,
+      items: () => Seq[T],
+      capped: Boolean = false)(pick: T => (String, Array[Int])): DataFrame = {
+    val schema = feedSchema(withVec, capped)
+    val width = schema.length
+    val rows = overFiles(spark, items).flatMap { item =>
+      val (file, ordinals) = pick(item)
+      val utf8 = UTF8String.fromString(file)
+      val pos = if (capped) ordinals.zipWithIndex.toMap else Map.empty[Int, Int]
+      p.exactVecRows(file, ordinals).map { case (ri, d, vec) =>
+        val row = new GenericInternalRow(width)
+        row.update(0, utf8)
+        row.setLong(1, ri)
+        row.setFloat(2, d)
+        if (withVec) row.update(3, UnsafeArrayData.fromPrimitiveArray(vec))
+        if (capped) row.setLong(width - 1, pos(ri.toInt).toLong)
+        row: InternalRow
+      }
     }
-    val positioned = overFiles(spark, () => files().zipWithIndex).flatMap { case (file, fi) =>
-      val cands = p.candidates(p.index(file))
-      Iterator.tabulate(cands.length)(pos => (file, fi, pos, cands(pos).toLong))
-    }
-    spark.createDataset(positioned)
-      .toDF("_file", "_fi", "_pos", "_ri")
-      .orderBy(col("_pos"), col("_fi"))
-      .limit(cap)
-      .select(col("_file"), col("_ri"))
+    org.apache.spark.sql.graft.Bridge.ofInternalRows(spark, rows, schema)
   }
 
   /** Brute `(_file, _ri, _dist)` over the whole table in ONE vectorized
@@ -681,7 +685,7 @@ object VectorTopK {
           case _ => Iterator.empty
         }
       },
-      VecFeedSchema)
+      feedSchema(withVec = true, capped = false))
   }
 
   /** Sampled estimate of the range query's (candidate rows, total rows)
@@ -759,7 +763,6 @@ object VectorTopK {
       query: Seq[Float],
       radius: Float,
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    import spark.implicits._
     val files = tableFiles(spark, path)
     val winners =
       if (rangeBails(spark, files, column, query.toArray, radius, store)) {
@@ -774,7 +777,7 @@ object VectorTopK {
     winners
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
       .orderBy(col("distance").asc_nulls_last, col("row_idx"))
-      .as[SearchResult]
+      .as(SearchResultEncoder)
   }
 
   /** Plan-integrated range search: full payload rows whose vector is
@@ -839,23 +842,19 @@ object VectorTopK {
       if (cosine) 1.0f - VectorKernels.cosine(vec, q)
       else math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat
 
-    /** Exact `(file, ordinal, distance)` of `ordinals`, read selectively;
-      * vectors of another dim are skipped.
+    /** Exact `(ordinal, distance, vector)` of `ordinals` in `file`, read
+      * selectively, ascending ordinal; vectors of another dim are skipped.
       */
-    def exactRows(file: String, ordinals: Array[Int]): Iterator[(String, Long, Float)] =
-      exactVecRows(file, ordinals).map(r => (r._1, r._2, r._3))
-
-    /** [[exactRows]] with each row's vector. */
-    def exactVecRows(
-        file: String, ordinals: Array[Int]): Iterator[(String, Long, Float, Array[Float])] =
+    def exactVecRows(file: String, ordinals: Array[Int]): Iterator[(Long, Float, Array[Float])] =
       SelectiveFetch.embeddings(file, column, ordinals).iterator.collect {
-        case (ri, vec) if vec.length == q.length => (file, ri, exact(vec), vec)
+        case (ri, vec) if vec.length == q.length => (ri, exact(vec), vec)
       }
   }
 
-  /** The one stage of the top-k pipeline that differs per [[Tier]]: how ONE
-    * file's probed candidates are scored. A scorer owns its loop over the
-    * file's candidates, so the hot loops stay monomorphic.
+  /** The one stage of the top-k pipeline that differs per quantized
+    * [[Tier]]: how ONE file's probed candidates are coarse-ranked. A scorer
+    * owns its loop over the file's candidates, so the hot loops stay
+    * monomorphic.
     */
   private sealed trait CoarseScorer extends Serializable {
     /** Memo-key tag of the driver-side validation. */
@@ -864,30 +863,19 @@ object VectorTopK {
     /** Refuses a file whose sidecar this tier cannot read. */
     def requireSidecar(store: IndexStore, file: String, column: String): Unit
 
-    /** `(file, ordinal, key)` rows of one file, ascending key = better:
-      * the exact distance (float), or the `keep` best coarse keys.
+    /** The `keep` best `(file, ordinal, key)` rows of one file, ascending
+      * key = better.
       */
     def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)]
   }
 
   private object CoarseScorer {
-    def apply(tier: Tier): CoarseScorer = tier match {
-      case Tier.Float => FloatScorer
-      case Tier.Sq8 => Sq8Scorer
-      case Tier.Pq(residual) => PqScorer(residual)
+    /** None for float, whose exact distances need no coarse rank. */
+    def apply(tier: Tier): Option[CoarseScorer] = tier match {
+      case Tier.Float => None
+      case Tier.Sq8 => Some(Sq8Scorer)
+      case Tier.Pq(residual) => Some(PqScorer(residual))
     }
-  }
-
-  /** Exact distances on selectively read embeddings — IO proportional to
-    * candidates, not file size.
-    */
-  private case object FloatScorer extends CoarseScorer {
-    val tag = "float"
-    def requireSidecar(store: IndexStore, file: String, column: String): Unit = ()
-    def score(file: String, p: Probe, keep: Int): Iterator[(String, Long, Double)] =
-      SelectiveFetch.embeddings(file, p.column, p.candidates(p.index(file))).iterator.collect {
-        case (ri, vec) if vec.length == p.q.length => (file, ri, p.exact(vec).toDouble)
-      }
   }
 
   /** Integer code-space distance on the [[Sq8Sidecar]] (`dim` bytes per

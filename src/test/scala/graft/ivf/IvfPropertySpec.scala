@@ -34,10 +34,10 @@ class IvfPropertySpec extends SparkSpec {
     Array.tabulate(k)(c => cells.indices.filter(cells(_) == c).toArray))
 
   test("round-robin cap: the (pos, fileIdx) sorted prefix equals the quota water-fill") {
-    // the lazy in-plan cap (VectorTopK.cappedCandidates sorts candidates
-    // by probe-order position then file index and takes the cap-prefix) must
-    // select exactly the per-file counts the reference-shaped water-fill
-    // (VectorTopK.roundRobinQuotas) hands out — for ANY counts and cap
+    // the capped refine (VectorTopK.winnerFeed reads each file's first
+    // roundRobinQuotas(counts, cap) candidates in probe order) must select
+    // exactly the cap-prefix of candidates sorted by probe-order position
+    // then file index, the reference's round-robin — for ANY counts and cap
     val countsAndCap = for {
       n <- Gen.choose(1, 12)
       counts <- Gen.listOfN(n, Gen.choose(0L, 50L))

@@ -837,6 +837,44 @@ class VectorTopKSpec extends SparkSpec {
     } finally keys.foreach(spark.conf.unset)
   }
 
+  test("a quantized indexed or search frame runs no job until it is collected") {
+    val (dir, store, q) = matrix
+    val options = VectorTopK.Options(nprobe = 2, tier = VectorTopK.Tier.Sq8, oversample = Some(2))
+    // the first call infers (and memoizes) the table schema
+    VectorTopK.indexed(spark, dir, "vec", q, matrixK, options, store = store)
+    var indexed: org.apache.spark.sql.DataFrame = null
+    var search: org.apache.spark.sql.Dataset[VectorTopK.SearchResult] = null
+    assert(jobsDuring {
+      indexed = VectorTopK.indexed(spark, dir, "vec", q, matrixK, options, store = store)
+      search = VectorTopK.search(spark, dir, "vec", q, matrixK, options, store)
+    } == 0)
+    // collected: the coarse job, then the refine job
+    assert(jobsDuring(indexed.collect(): Unit) == 2)
+    assert(jobsDuring(search.collect(): Unit) == 2)
+  }
+
+  test("the coarse cut keeps the survivors of ORDER BY key, file, ordinal") {
+    import spark.implicits._
+    // U+FF21 sorts after U+1F600 in UTF-16 but before it in UTF-8 bytes,
+    // which is Spark's string order; Spark's sort ties -0.0 with 0.0
+    val (a, b) = ("/t/part-\uFF21.parquet", "/t/part-\uD83D\uDE00.parquet")
+    val scored = Seq(
+      (a, 3L, 1.0), (b, 2L, 1.0), (a, 1L, 1.0), (b, 7L, 0.5), (a, 9L, 2.0),
+      (b, 4L, 1.0), (b, 5L, -0.0), (a, 0L, 0.0), (a, 8L, Double.NaN), (b, 6L, 2.0))
+    val frame = scored.toDF("_file", "_ri", "_key")
+    for (keep <- 0 to scored.size + 1) {
+      val expected = frame.orderBy(col("_key"), col("_file"), col("_ri")).limit(keep)
+        .select("_file", "_ri").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val got = VectorTopK.coarseCut(scored.iterator, keep).map(t => (t._1, t._2)).toSeq
+      assert(got == expected, s"keep=$keep")
+    }
+    // the cut of per-task cuts is the cut of the union
+    val (left, right) = scored.splitAt(4)
+    assert(VectorTopK.coarseCut(
+      (VectorTopK.coarseCut(left.iterator, 5) ++ VectorTopK.coarseCut(right.iterator, 5)).iterator,
+      5).toSeq == VectorTopK.coarseCut(scored.iterator, 5).toSeq)
+  }
+
   test("an explicit PQ tier refuses a table without its sidecar") {
     val path = writeFixture(Seq.tabulate(8)(i => Seq(i.toFloat, 0f)))
     val store = tmpStore

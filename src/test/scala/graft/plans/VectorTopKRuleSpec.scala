@@ -495,7 +495,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     dir
   }
 
-  test("payload refusal: a non-atomic column takes the semi-join, exactly") {
+  test("payload refusal: a non-atomic column declines to Spark's plan, exactly") {
     withRule(nprobe = 8) {
       spark.read.parquet(indexedVariant("id", "vec", "named_struct('l', label) AS st"))
         .createOrReplaceTempView("graft_struct")
@@ -505,7 +505,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("payload refusal: a list<double> vector takes the semi-join, exactly") {
+  test("payload refusal: a list<double> vector declines to Spark's plan, exactly") {
     withRule(nprobe = 8) {
       spark.read.parquet(indexedVariant("id", "CAST(vec AS array<double>) AS vec"))
         .createOrReplaceTempView("graft_double")
@@ -515,7 +515,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("payload refusal: INT96 timestamp conversion takes the semi-join, exactly") {
+  test("payload refusal: INT96 timestamp conversion declines to Spark's plan, exactly") {
     register()
     withRule(nprobe = 8) {
       val key = "spark.sql.parquet.int96TimestampConversion"
@@ -527,7 +527,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("payload refusal: a scan of two root paths takes the semi-join, exactly") {
+  test("payload refusal: a scan of two root paths declines to Spark's plan, exactly") {
     withRule(nprobe = 8) {
       spark.read.parquet(dataDir,
           indexedVariant("id + 1000 AS id", "transform(vec, x -> x * 0.9F) AS vec", "label"))
@@ -538,7 +538,7 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("payload refusal: a _metadata column in the scan takes the semi-join, exactly") {
+  test("payload refusal: a _metadata column in the scan declines to Spark's plan, exactly") {
     withRule(nprobe = 8) {
       spark.read.parquet(dataDir).select(col("*"), col("_metadata"))
         .createOrReplaceTempView("graft_meta")
@@ -549,16 +549,30 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  /** The stage count of each Spark job `f` runs: its jobs carry a job
-    * group, then a fence job proves the listener bus has delivered them.
+  /** One Spark job: its stages' task counts and the shuffle bytes its
+    * completed stages wrote and read.
     */
-  private def stagesPerJob(f: => Unit): Seq[Int] = {
+  private final case class JobShape(tasksPerStage: Seq[Int], shuffleBytes: Long)
+
+  /** The Spark jobs `f` runs, in start order: its jobs carry a job group,
+    * then a fence job proves the listener bus has delivered them.
+    */
+  private def jobsOf(f: => Unit): Seq[JobShape] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
     val sc = spark.sparkContext
     val group = "graft-rule-spec-" + java.util.UUID.randomUUID()
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")), e.stageInfos.size))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[(Int, Int)])]()
+    val shuffled = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
+          e.stageInfos.map(s => (s.stageId, s.numTasks))))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        shuffled.put(e.stageInfo.stageId,
+          m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -567,12 +581,18 @@ class VectorTopKRuleSpec extends SparkSpec {
       sc.setJobGroup(group + "-fence", "fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 10000000000L
-      def fenced = seen.toArray.exists(_.asInstanceOf[(String, Int)]._1 == group + "-fence")
+      def fenced = jobs.toArray.exists(_.asInstanceOf[(String, _)]._1 == group + "-fence")
       while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
       assert(fenced, "fence job never reached the listener")
-      seen.toArray.toSeq.map(_.asInstanceOf[(String, Int)]).collect { case (`group`, n) => n }
+      jobs.toArray.toSeq.map(_.asInstanceOf[(String, Seq[(Int, Int)])]).collect {
+        case (`group`, stages) =>
+          JobShape(stages.map(_._2), stages.map(s => shuffled.getOrDefault(s._1, 0L)).sum)
+      }
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The stage count of each Spark job `f` runs. */
+  private def stagesPerJob(f: => Unit): Seq[Int] = jobsOf(f).map(_.tasksPerStage.size)
 
   test("a Hive-partitioned table reads its partition column on the payload") {
     withRule(nprobe = 8) {
@@ -617,10 +637,66 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
+  /** The fixture's rows in four files, with sq8 and pq sidecars. */
+  private lazy val quantizedDir: String = {
+    val dir = Files.createTempDirectory("graft-rule-quantized").toString
+    spark.read.parquet(dataDir).repartition(4).write.mode("overwrite").parquet(dir)
+    val store = new IndexStore(storeDir)
+    IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    graft.ivf.Sq8Sidecar.ensure(spark, dir, "vec", store)
+    graft.ivf.PqSidecar.ensure(spark, dir, "vec", m = 4, store)
+    dir
+  }
+
+  /** `body` for each quantized tier over [[quantizedDir]], registered as
+    * `graft_quantized`, at an exhaustive probe and an oversample that
+    * covers the table (5·40 = 200 rows), so every tier is exact.
+    */
+  private def withQuantized(body: String => Unit): Unit =
+    withRule(nprobe = 4) {
+      spark.read.parquet(quantizedDir).createOrReplaceTempView("graft_quantized")
+      spark.conf.set(VectorTopKRule.OversampleKey, "40")
+      try Seq("sq8", "pq").foreach { tier =>
+        spark.conf.set(VectorTopKRule.TierKey, tier)
+        body(tier)
+      } finally {
+        spark.conf.unset(VectorTopKRule.TierKey)
+        spark.conf.unset(VectorTopKRule.OversampleKey)
+      }
+    }
+
+  private def quantizedTopk(): DataFrame = spark.sql(
+    s"SELECT id FROM graft_quantized ORDER BY array_distance(vec, $vecLit) LIMIT 5")
+
+  test("a collected quantized top-k runs a coarse job and a refine job, one stage each, no shuffle") {
+    withQuantized { tier =>
+      val df = quantizedTopk()
+      assert(graft.Graft.tierResolution(df).exists(_.contains(s"resolved=$tier")),
+        graft.Graft.tierResolution(df).toString)
+      var got: Seq[Long] = Nil
+      val jobs = jobsOf { got = df.collect().map(_.getLong(0)).toSeq }
+      assert(jobs.map(_.tasksPerStage.size) == Seq(1, 1), s"$tier: $jobs")
+      assert(jobs.map(_.shuffleBytes).sum == 0L, s"$tier: $jobs")
+      // every one of the four files holds survivors: the refine is parallel
+      assert(jobs(1).tasksPerStage.head > 1, s"$tier: $jobs")
+      spark.conf.set(VectorTopKRule.EnabledKey, "false")
+      try assert(got == quantizedTopk().collect().map(_.getLong(0)).toSeq, tier)
+      finally spark.conf.set(VectorTopKRule.EnabledKey, "true")
+    }
+  }
+
+  test("planning a quantized top-k runs no job") {
+    withQuantized { tier =>
+      val df = quantizedTopk()
+      assert(jobsOf(df.queryExecution.executedPlan: Unit).isEmpty, tier)
+      assert(graft.Graft.tierResolution(df).exists(_.contains(s"resolved=$tier")))
+    }
+  }
+
   private def sqlRange(pred: String): DataFrame =
     spark.sql(s"SELECT id FROM graft_vecs WHERE $pred")
 
-  test("range WHERE rewrites to a pruned semi-join and stays exact") {
+  test("range WHERE reads the admitted cells' candidates on the page payload, exactly") {
     register()
     withRule(nprobe = 8) {
       val pred = s"array_distance(vec, $vecLit) < 0.55"
