@@ -1,7 +1,7 @@
 package graft.ivf
 
 import java.io.IOException
-import java.nio.{ByteOrder, FloatBuffer}
+import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder, FloatBuffer}
 import java.util.stream.{IntStream, LongStream}
 
 import scala.collection.mutable.ArrayBuffer
@@ -12,6 +12,7 @@ import org.apache.parquet.bytes.{ByteBufferInputStream, BytesInput, BytesUtils}
 import org.apache.parquet.column.{ColumnDescriptor, Dictionary, Encoding, ValuesType}
 import org.apache.parquet.column.page.{DataPage, DataPageV1, DataPageV2, PageReadStore, PageReader}
 import org.apache.parquet.column.values.ValuesReader
+import org.apache.parquet.column.values.bitpacking.Packer
 import org.apache.parquet.column.values.rle.RunLengthBitPackingHybridDecoder
 import org.apache.parquet.internal.filter2.columnindex.RowRanges
 import org.apache.parquet.io.ParquetDecodingException
@@ -48,19 +49,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reads go through Hadoop's local filesystem, so `.crc` checksums are
   * verified. The pages are decoded page by page ([[PageDecoder]]), not
-  * through parquet-mr's record assembly: the repetition and definition
-  * levels of each `DataPage` (V1 or V2) are decoded into int arrays, one
-  * pass maps records to value offsets, and only wanted rows are
+  * through parquet-mr's record assembly, and only wanted rows are
   * materialized. Encoding coverage:
-  *   - levels (RLE/bit-packed hybrid, or the deprecated `BIT_PACKED`) go
-  *     through parquet's own level decoders;
+  *   - vector levels: a page whose levels are RLE/bit-packed hybrid runs
+  *     (V1 or V2), all fully defined, and which starts a record is read in
+  *     run mode: its record starts come from the repetition runs, in
+  *     O(records + runs), and its value index is its entry index. Every
+  *     other page (a null vector, null element or empty list on it, the
+  *     deprecated `BIT_PACKED` levels, a page that starts inside a record)
+  *     decodes each level through parquet's own decoders into int arrays
+  *     and maps records to value offsets in one pass over its entries
+  *     ([[LeafPages]]);
   *   - PLAIN float pages are read straight out of a little-endian
   *     `FloatBuffer` view, with one bulk copy per row;
   *   - every other value encoding (PLAIN doubles, dictionary pages,
   *     `BYTE_STREAM_SPLIT`, …) is decoded through parquet's own
   *     `ValuesReader` into a reusable array;
-  *   - flat payload columns read each wanted value through parquet's own
-  *     (dictionary-based) `ValuesReader` and skip the others.
+  *   - flat payload columns decode their levels per value, and read each
+  *     wanted value through parquet's own (dictionary-based)
+  *     `ValuesReader`, skipping the others.
   * A page that cannot be decoded (truncated or corrupt) is refused with an
   * `IllegalStateException` naming the file and row group; a column that is
   * not a list of float or double is refused with an
@@ -95,14 +102,16 @@ object SelectiveFetch {
     (projected, desc)
   }
 
-  /** Open `file` with only `column` requested, and decode it with `f`. */
-  private def withColumn[T](file: String, column: String)(
+  /** Open `file` with only `column` requested, and decode it with `f`;
+    * `runs = false` decodes every page per value (see [[LeafPages]]).
+    */
+  private[ivf] def withColumn[T](file: String, column: String, runs: Boolean = true)(
       f: (ParquetFileReader, PageDecoder) => T): T = {
     val reader = IndexStore.openParquet(IndexStore.localPath(file))
     try {
       val (projected, desc) = project(reader.getFooter.getFileMetaData.getSchema, column, file)
       reader.setRequestedSchema(projected)
-      f(reader, new PageDecoder(desc, file))
+      f(reader, new PageDecoder(desc, file, runs))
     } finally reader.close()
   }
 
@@ -130,17 +139,22 @@ object SelectiveFetch {
     * summarizes.
     */
   def scanFile(file: String, column: String)(visit: (Long, Array[Float]) => Unit): ColumnSummary =
-    withColumn(file, column) { (reader, decoder) =>
-      var groupStart = 0L
-      reader.getRowGroups.asScala.indices.foreach { blockIdx =>
-        // typed as the interface: see embeddings
-        val pages: PageReadStore = reader.readRowGroup(blockIdx)
-        try decoder.scanGroup(pages, blockIdx, groupStart, visit)
-        finally pages.close()
-        groupStart += pages.getRowCount
-      }
-      decoder.summary
+    withColumn(file, column)(scan(_, _, visit))
+
+  /** [[scanFile]] over an open file. */
+  private[ivf] def scan(
+      reader: ParquetFileReader, decoder: PageDecoder,
+      visit: (Long, Array[Float]) => Unit): ColumnSummary = {
+    var groupStart = 0L
+    reader.getRowGroups.asScala.indices.foreach { blockIdx =>
+      // typed as the interface: see fetch
+      val pages: PageReadStore = reader.readRowGroup(blockIdx)
+      try decoder.scanGroup(pages, blockIdx, groupStart, visit)
+      finally pages.close()
+      groupStart += pages.getRowCount
     }
+    decoder.summary
+  }
 
   /** Read the vectors at `ordinals` (file-absolute row ordinals, any order)
     * from `file`'s `column`. Returns (ordinal, vector) pairs, ordinal
@@ -150,17 +164,23 @@ object SelectiveFetch {
   def embeddings(
       file: String, column: String, ordinals: Array[Int]): Seq[(Long, Array[Float])] = {
     val sorted = ordinals.filter(_ >= 0).distinct.sorted
-    if (sorted.isEmpty) return Seq.empty
+    if (sorted.isEmpty) Seq.empty else withColumn(file, column)(fetch(_, _, sorted))
+  }
+
+  /** [[embeddings]] over an open file, of `sorted` (ascending, distinct,
+    * non-negative ordinals).
+    */
+  private[ivf] def fetch(
+      reader: ParquetFileReader, decoder: PageDecoder,
+      sorted: Array[Int]): Seq[(Long, Array[Float])] = {
     val out = new ArrayBuffer[(Long, Array[Float])](sorted.length)
-    withColumn(file, column) { (reader, decoder) =>
-      eachGroup(reader, sorted) { (blockIdx, groupStart, groupCands) =>
-        val ranges = pageRanges(reader, blockIdx, groupStart, groupCands, decoder.desc, file)
-        // typed as the interface: the concrete ColumnChunkPageReadStore's
-        // covariant close() override is package-private to callers
-        val pages: PageReadStore = reader.readFilteredRowGroup(blockIdx, ranges)
-        try decoder.decodeGroup(pages, blockIdx, groupStart, groupCands, out)
-        finally pages.close()
-      }
+    eachGroup(reader, sorted) { (blockIdx, groupStart, groupCands) =>
+      val ranges = pageRanges(reader, blockIdx, groupStart, groupCands, decoder.desc, decoder.file)
+      // typed as the interface: the concrete ColumnChunkPageReadStore's
+      // covariant close() override is package-private to callers
+      val pages: PageReadStore = reader.readFilteredRowGroup(blockIdx, ranges)
+      try decoder.decodeGroup(pages, blockIdx, groupStart, groupCands, out)
+      finally pages.close()
     }
     out.toSeq
   }
@@ -368,23 +388,61 @@ object SelectiveFetch {
   }
 
   /** Page plumbing shared by the leaf decoders: decodes each `DataPage`'s
-    * (V1 or V2) repetition and definition levels into int arrays and hands
-    * its value section to [[loadValues]]. Holds reusable buffers, so one
-    * instance serves every row group of one file; not thread-safe.
+    * (V1 or V2) repetition and definition levels and hands its value
+    * section to [[loadValues]]. Holds reusable buffers, so one instance
+    * serves every row group of one file; not thread-safe.
+    *
+    * A page is decoded in one of two modes:
+    *   - run mode (only with `runs`, for a list leaf): when both level
+    *     sections use the RLE/bit-packed hybrid encoding (V1 with its
+    *     4-byte length prefixes, or V2's own sections), every entry is at
+    *     `maxDef` and the first entry starts a record, the levels are read
+    *     run by run, never value by value. The definition runs are only
+    *     checked (an RLE run is one comparison, a bit-packed group one
+    *     unpack); the repetition runs (bit width 1) give [[starts]], the
+    *     entry at which each record starts: an RLE run of 1s is skipped in
+    *     one step, a bit-packed byte is scanned by its zero bits. Every
+    *     entry then holds a value, so record r's values are entries
+    *     `[starts(r), starts(r + 1))` (the last record ends at the page's
+    *     end). A level section that is truncated or malformed (a run past
+    *     its end, an empty run, a repetition level above 1) is refused,
+    *     never handed on;
+    *   - per value (every other page: a null vector, a null element or an
+    *     empty list on it, `BIT_PACKED` levels, a page that starts inside a
+    *     record): each level is decoded into `reps`/`defs` through
+    *     parquet's own level decoders.
     */
-  private[ivf] abstract class LeafPages(val desc: ColumnDescriptor, protected val file: String) {
+  private[ivf] abstract class LeafPages(
+      val desc: ColumnDescriptor, val file: String, runs: Boolean) {
     protected val maxRep: Int = desc.getMaxRepetitionLevel
     protected val maxDef: Int = desc.getMaxDefinitionLevel
     protected var reps = new Array[Int](0)
     protected var defs = new Array[Int](0)
 
+    /** A run-mode page's record starts: `starts(0 until nRecords)`,
+      * ascending entry indexes, the first 0.
+      */
+    protected var starts = new Array[Int](0)
+    protected var nRecords = 0
+
     /** Data pages decoded so far. */
     var pagesRead = 0
 
+    /** Of [[pagesRead]], the pages decoded in run mode. */
+    var runPages = 0
+
+    private val defWidth = BytesUtils.getWidthFromMaxInt(maxDef)
+    private val defPacker = Packer.LITTLE_ENDIAN.newBytePacker(defWidth)
+    private val unpacked = new Array[Int](8)
+    // the level-run reader's cursor: the next byte and the section's end
+    private var runPos = 0
+    private var runEnd = 0
+
     /** Set up a page's values from its value section (`in`), which holds
-      * one value per entry at `maxDef` among `n`.
+      * `nVals` values among `n` entries: one per entry at `maxDef`.
       */
-    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit
+    protected def loadValues(
+        enc: Encoding, in: ByteBufferInputStream, n: Int, nVals: Int, dict: Dictionary): Unit
 
     protected def dictionary(reader: PageReader): Dictionary = {
       val dictPage = reader.readDictionaryPage()
@@ -400,40 +458,225 @@ object SelectiveFetch {
         throw new ParquetDecodingException("dictionary-encoded page without a dictionary page")
       else enc.getDictionaryBasedValuesReader(desc, ValuesType.VALUES, dict)
 
-    /** Decode `page`'s levels into `reps`/`defs` and set up its values. A
-      * page that cannot be decoded is refused naming the file and row group.
+    /** Decode `page`'s levels and set up its values: in run mode (true;
+      * see the class comment) into [[starts]], else into `reps`/`defs`. A
+      * page that cannot be decoded is refused naming the file and row
+      * group.
       */
-    protected def loadPage(page: DataPage, dict: Dictionary, blockIdx: Int): Unit = {
+    protected def loadPage(page: DataPage, dict: Dictionary, blockIdx: Int): Boolean = {
       val n = page.getValueCount
-      if (reps.length < n) {
-        reps = new Array[Int](n)
-        defs = new Array[Int](n)
-      }
       pagesRead += 1
-      refusing(blockIdx) {
+      val run = refusing(blockIdx) {
         page match {
           case p: DataPageV1 =>
-            val in = p.getBytes.toInputStream
-            levelsV1(p.getRlEncoding, ValuesType.REPETITION_LEVEL, maxRep, in, n, reps)
-            levelsV1(p.getDlEncoding, ValuesType.DEFINITION_LEVEL, maxDef, in, n, defs)
-            loadValues(p.getValueEncoding, in, n, dict)
+            val bytes = buffer(p.getBytes)
+            val valuesAt =
+              if (runs && n > 0 && p.getRlEncoding == Encoding.RLE && p.getDlEncoding == Encoding.RLE)
+                runsV1(bytes, n)
+              else -1
+            if (valuesAt >= 0) {
+              loadValues(p.getValueEncoding, ByteBufferInputStream.wrap(bytes.position(valuesAt)),
+                n, n, dict)
+              true
+            } else {
+              val in = ByteBufferInputStream.wrap(bytes)
+              levelArrays(n)
+              levelsV1(p.getRlEncoding, ValuesType.REPETITION_LEVEL, maxRep, in, n, reps)
+              levelsV1(p.getDlEncoding, ValuesType.DEFINITION_LEVEL, maxDef, in, n, defs)
+              loadValues(p.getValueEncoding, in, n, defined(n), dict)
+              false
+            }
           case p: DataPageV2 =>
-            levelsV2(p.getRepetitionLevels, maxRep, n, reps)
-            levelsV2(p.getDefinitionLevels, maxDef, n, defs)
-            loadValues(p.getDataEncoding, p.getData.toInputStream, n, dict)
+            val rl = buffer(p.getRepetitionLevels)
+            val dl = buffer(p.getDefinitionLevels)
+            val run = runs && n > 0 &&
+              allDefined(dl, dl.position, dl.limit, n) && recordStarts(rl, rl.position, rl.limit, n)
+            if (!run) {
+              levelArrays(n)
+              levelsV2(rl, maxRep, n, reps)
+              levelsV2(dl, maxDef, n, defs)
+            }
+            loadValues(p.getDataEncoding, p.getData.toInputStream, n, if (run) n else defined(n), dict)
+            run
           case other =>
             throw new IllegalStateException(s"unsupported page type ${other.getClass} in $file")
         }
       }
+      if (run) runPages += 1
+      run
     }
 
-    /** Runs `f`, refusing a decoding failure naming the file and row group. */
+    /** Runs `f`, refusing a decoding failure (parquet's own, an IO error,
+      * or a read past a buffer or array bound) naming the file and row
+      * group.
+      */
     protected def refusing[T](blockIdx: Int)(f: => T): T =
       try f
       catch {
-        case e @ (_: ParquetDecodingException | _: IOException) =>
+        case e @ (_: ParquetDecodingException | _: IOException | _: IllegalArgumentException |
+            _: BufferUnderflowException | _: IndexOutOfBoundsException) =>
           throw new IllegalStateException(s"unreadable page in row group $blockIdx of $file", e)
       }
+
+    /** Room for a per-value page's `n` levels in `reps`/`defs`. */
+    private def levelArrays(n: Int): Unit =
+      if (reps.length < n) {
+        reps = new Array[Int](n)
+        defs = new Array[Int](n)
+      }
+
+    /** A section's bytes as one little-endian buffer, read once. */
+    private def buffer(bytes: BytesInput): ByteBuffer = {
+      val in = bytes.toInputStream
+      in.slice(in.available()).order(ByteOrder.LITTLE_ENDIAN)
+    }
+
+    /** Run mode over a V1 page (`b`: its bytes, two length-prefixed level
+      * sections, then the values): the values' offset, or -1 when the page
+      * does not qualify.
+      */
+    private def runsV1(b: ByteBuffer, n: Int): Int = {
+      val repEnd = sectionEnd(b, b.position)
+      val defEnd = sectionEnd(b, repEnd)
+      if (allDefined(b, repEnd + 4, defEnd, n) && recordStarts(b, b.position + 4, repEnd, n)) defEnd
+      else -1
+    }
+
+    /** The end of the length-prefixed level section at `at`. */
+    private def sectionEnd(b: ByteBuffer, at: Int): Int = {
+      val len = if (b.limit - at < 4) -1 else b.getInt(at)
+      if (len < 0 || len > b.limit - at - 4)
+        throw new ParquetDecodingException(s"level section at byte $at overruns its page")
+      at + 4 + len
+    }
+
+    /** Whether the first `n` definition levels in `b[from, to)` are all
+      * `maxDef`.
+      */
+    private def allDefined(b: ByteBuffer, from: Int, to: Int, n: Int): Boolean = {
+      runPos = from
+      runEnd = to
+      var i = 0
+      while (i < n) {
+        val header = runHeader(b)
+        val count = header >>> 1 // RLE: entries; bit-packed: groups of 8
+        if ((header & 1) == 0) {
+          if (runValue(b, defWidth) != maxDef) return false
+          i = if (count >= n - i) n else i + count
+        } else {
+          val end = runPos + packedBytes(count, defWidth)
+          while (runPos < end && i < n) {
+            defPacker.unpack8Values(b, runPos, unpacked, 0)
+            val m = math.min(8, n - i)
+            var k = 0
+            while (k < m) {
+              if (unpacked(k) != maxDef) return false
+              k += 1
+            }
+            i += m
+            runPos += defWidth
+          }
+          runPos = end
+        }
+      }
+      true
+    }
+
+    /** Read the first `n` repetition levels (bit width 1) in `b[from, to)`
+      * into [[starts]]; whether the first entry starts a record.
+      */
+    private def recordStarts(b: ByteBuffer, from: Int, to: Int, n: Int): Boolean = {
+      runPos = from
+      runEnd = to
+      var i = 0
+      var k = 0
+      while (i < n) {
+        val header = runHeader(b)
+        val count = header >>> 1
+        if ((header & 1) == 0) {
+          val level = runValue(b, 1)
+          val m = if (count >= n - i) n - i else count
+          if (level == 0) {
+            startsRoom(k + m)
+            var j = 0
+            while (j < m) { starts(k) = i + j; k += 1; j += 1 }
+          } else if (level != 1)
+            throw new ParquetDecodingException(s"repetition level $level above the maximum 1")
+          i += m
+        } else {
+          val end = runPos + packedBytes(count, 1)
+          while (runPos < end && i < n) {
+            startsRoom(k + 8)
+            var zeros = ~b.get(runPos) & 0xff
+            if (n - i < 8) zeros &= (1 << (n - i)) - 1
+            while (zeros != 0) {
+              starts(k) = i + Integer.numberOfTrailingZeros(zeros)
+              k += 1
+              zeros &= zeros - 1
+            }
+            i += 8
+            runPos += 1
+          }
+          runPos = end
+        }
+      }
+      nRecords = k
+      k > 0 && starts(0) == 0
+    }
+
+    /** Room for `k` record starts. */
+    private def startsRoom(k: Int): Unit =
+      if (starts.length < k) starts = java.util.Arrays.copyOf(starts, math.max(k, 2 * starts.length))
+
+    /** The next run's header (an unsigned varint, at most 5 bytes) of a
+      * nonempty run.
+      */
+    private def runHeader(b: ByteBuffer): Int = {
+      var header = 0
+      var shift = 0
+      var byte = 0x80
+      while ((byte & 0x80) != 0) {
+        if (runPos >= runEnd || shift > 28)
+          throw new ParquetDecodingException(s"level run header overruns its section at byte $runPos")
+        byte = b.get(runPos) & 0xff
+        runPos += 1
+        header |= (byte & 0x7f) << shift
+        shift += 7
+      }
+      if ((header >>> 1) == 0)
+        throw new ParquetDecodingException(s"empty level run before byte $runPos")
+      header
+    }
+
+    /** An RLE run's value: `width` bits, padded to whole bytes. */
+    private def runValue(b: ByteBuffer, width: Int): Int = {
+      val bytes = (width + 7) / 8
+      if (runEnd - runPos < bytes)
+        throw new ParquetDecodingException(s"level run value overruns its section at byte $runPos")
+      var v = 0
+      var k = 0
+      while (k < bytes) { v |= (b.get(runPos + k) & 0xff) << (8 * k); k += 1 }
+      runPos += bytes
+      v
+    }
+
+    /** The bytes of a bit-packed run of `groups` groups of 8, which must
+      * lie within the section.
+      */
+    private def packedBytes(groups: Int, width: Int): Int = {
+      val bytes = groups.toLong * width
+      if (bytes > runEnd - runPos)
+        throw new ParquetDecodingException(s"bit-packed level run overruns its section at byte $runPos")
+      bytes.toInt
+    }
+
+    /** The entries at `maxDef` among a per-value page's first `n`. */
+    private def defined(n: Int): Int = {
+      var nVals = 0
+      var i = 0
+      while (i < n) { if (defs(i) == maxDef) nVals += 1; i += 1 }
+      nVals
+    }
 
     /** V1 levels (RLE with its length prefix, or `BIT_PACKED`); none
       * stored at level 0.
@@ -450,11 +693,11 @@ object SelectiveFetch {
       }
 
     /** V2 levels: RLE without a length prefix; none stored at level 0. */
-    private def levelsV2(bytes: BytesInput, maxLevel: Int, n: Int, dst: Array[Int]): Unit =
+    private def levelsV2(bytes: ByteBuffer, maxLevel: Int, n: Int, dst: Array[Int]): Unit =
       if (maxLevel == 0) java.util.Arrays.fill(dst, 0, n, 0)
       else {
         val d = new RunLengthBitPackingHybridDecoder(
-          BytesUtils.getWidthFromMaxInt(maxLevel), bytes.toInputStream)
+          BytesUtils.getWidthFromMaxInt(maxLevel), ByteBufferInputStream.wrap(bytes))
         var i = 0
         while (i < n) { dst(i) = d.readInt(); i += 1 }
       }
@@ -465,10 +708,11 @@ object SelectiveFetch {
     */
   private[ivf] final class FlatDecoder(
       desc: ColumnDescriptor, file: String, read: ValuesReader => Any)
-      extends LeafPages(desc, file) {
+      extends LeafPages(desc, file, runs = false) {
     private var values: ValuesReader = _
 
-    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit = {
+    protected def loadValues(
+        enc: Encoding, in: ByteBufferInputStream, n: Int, nVals: Int, dict: Dictionary): Unit = {
       values = valuesReader(enc, dict)
       values.initFromPage(n, in)
     }
@@ -526,9 +770,11 @@ object SelectiveFetch {
     }
   }
 
-  /** Page-level decoder of one `array<float|double>` leaf column. */
-  private[ivf] final class PageDecoder(desc: ColumnDescriptor, file: String)
-      extends LeafPages(desc, file) {
+  /** Page-level decoder of one `array<float|double>` leaf column; `runs =
+    * false` decodes every page per value (see [[LeafPages]]).
+    */
+  private[ivf] final class PageDecoder(desc: ColumnDescriptor, file: String, runs: Boolean = true)
+      extends LeafPages(desc, file, runs) {
     private val isDouble =
       desc.getPrimitiveType.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.DOUBLE
 
@@ -581,27 +827,45 @@ object SelectiveFetch {
       var page = reader.readPage()
       while (page != null) {
         val n = page.getValueCount
-        loadPage(page, dict, blockIdx)
-        val reps = this.reps
-        val defs = this.defs
         var v = 0 // value index within the page
-        var i = 0
-        while (i < n) {
-          if (reps(i) == 0 || !open) {
-            if (open) finish(ordinal, slots, isNull, nullElem, segStart, v, visit)
+        if (loadPage(page, dict, blockIdx)) {
+          // run mode: whole records of defined entries, the first at entry 0
+          val starts = this.starts
+          var r = 0
+          while (r < nRecords) {
+            val s = starts(r)
+            if (open) finish(ordinal, slots, isNull, nullElem, segStart, s, visit)
             open = true
             ordinal += 1
-            slots = 0
+            slots = (if (r + 1 < nRecords) starts(r + 1) else n) - s
             isNull = false
             nullElem = false
-            segStart = v
+            segStart = s
             accLen = 0
+            r += 1
           }
-          val d = defs(i)
-          if (d == maxDef) { v += 1; slots += 1 }
-          else if (d >= slotDef) { slots += 1; nullElem = true }
-          else if (d < slotDef - 1) isNull = true
-          i += 1
+          v = n
+        } else {
+          val reps = this.reps
+          val defs = this.defs
+          var i = 0
+          while (i < n) {
+            if (reps(i) == 0 || !open) {
+              if (open) finish(ordinal, slots, isNull, nullElem, segStart, v, visit)
+              open = true
+              ordinal += 1
+              slots = 0
+              isNull = false
+              nullElem = false
+              segStart = v
+              accLen = 0
+            }
+            val d = defs(i)
+            if (d == maxDef) { v += 1; slots += 1 }
+            else if (d >= slotDef) { slots += 1; nullElem = true }
+            else if (d < slotDef - 1) isNull = true
+            i += 1
+          }
         }
         // the open record may continue on the next page
         if (open && visit != null && !isNull && !nullElem) carry(segStart, v)
@@ -663,32 +927,51 @@ object SelectiveFetch {
       var page = reader.readPage()
       while (page != null) {
         val n = page.getValueCount
-        loadPage(page, dict, blockIdx)
-        val reps = this.reps
-        val defs = this.defs
-        if (filtered && n > 0 && reps(0) != 0)
-          throw new IllegalStateException(
-            s"page in row group $blockIdx of $file starts inside a record " +
-              s"(repetition level ${reps(0)}); its rows cannot be taken from the offset index")
-        // one pass: a record starts at repetition level 0 (or at the chunk's
-        // first entry, as in parquet's own reader); only defined entries
-        // hold a value
         var v = 0 // value index within the page
-        var i = 0
-        while (i < n) {
-          if (reps(i) == 0 || !open) {
-            if (keep) emit(ordinal, segStart, v, out)
+        if (loadPage(page, dict, blockIdx)) {
+          // run mode: whole records of defined entries, the first at entry
+          // 0; a record's values are its entries
+          val starts = this.starts
+          var r = 0
+          while (r < nRecords) {
+            if (keep) emit(ordinal, segStart, starts(r), out)
             if (cj == cands.length) return // no candidate left in this group
-            ordinal = groupStart + rowIdx.nextLong()
+            ordinal = groupStart + nextRow(rowIdx, blockIdx)
             while (cj < cands.length && cands(cj) < ordinal) cj += 1
             keep = cj < cands.length && cands(cj) == ordinal
             if (keep) cj += 1
             open = true
-            segStart = v
+            segStart = starts(r)
             accLen = 0
+            r += 1
           }
-          if (defs(i) == maxDef) v += 1 else keep = false
-          i += 1
+          v = n
+        } else {
+          val reps = this.reps
+          val defs = this.defs
+          if (filtered && n > 0 && reps(0) != 0)
+            throw new IllegalStateException(
+              s"page in row group $blockIdx of $file starts inside a record " +
+                s"(repetition level ${reps(0)}); its rows cannot be taken from the offset index")
+          // one pass: a record starts at repetition level 0 (or at the
+          // chunk's first entry, as in parquet's own reader); only defined
+          // entries hold a value
+          var i = 0
+          while (i < n) {
+            if (reps(i) == 0 || !open) {
+              if (keep) emit(ordinal, segStart, v, out)
+              if (cj == cands.length) return // no candidate left in this group
+              ordinal = groupStart + nextRow(rowIdx, blockIdx)
+              while (cj < cands.length && cands(cj) < ordinal) cj += 1
+              keep = cj < cands.length && cands(cj) == ordinal
+              if (keep) cj += 1
+              open = true
+              segStart = v
+              accLen = 0
+            }
+            if (defs(i) == maxDef) v += 1 else keep = false
+            i += 1
+          }
         }
         // the open record may continue on the next page (whole-group path)
         if (keep) carry(segStart, v)
@@ -698,6 +981,14 @@ object SelectiveFetch {
       }
       if (keep) emit(ordinal, 0, 0, out)
     }
+
+    /** The row of the next record of a group; a group whose pages hold
+      * more records than rows is refused.
+      */
+    private def nextRow(rowIdx: java.util.PrimitiveIterator.OfLong, blockIdx: Int): Long =
+      if (rowIdx.hasNext) rowIdx.nextLong()
+      else throw new IllegalStateException(
+        s"pages of row group $blockIdx of $file hold more records than the rows they cover")
 
     /** Emit a record: its values on earlier pages (`acc`), then values
       * `[segStart, end)` of the current page.
@@ -725,14 +1016,12 @@ object SelectiveFetch {
       if (floats != null) floats.get(from, dst, off, len)
       else System.arraycopy(vals, from, dst, off, len)
 
-    /** Set up the page's values from its value section (`in`), which holds
-      * one value per defined entry among `n`: a view for PLAIN floats, else
-      * parquet's own (dictionary-based) `ValuesReader` into `vals`.
+    /** Set up the page's `nVals` values from its value section (`in`): a
+      * view for PLAIN floats, else parquet's own (dictionary-based)
+      * `ValuesReader` into `vals`.
       */
-    protected def loadValues(enc: Encoding, in: ByteBufferInputStream, n: Int, dict: Dictionary): Unit = {
-      var nVals = 0
-      var i = 0
-      while (i < n) { if (defs(i) == maxDef) nVals += 1; i += 1 }
+    protected def loadValues(
+        enc: Encoding, in: ByteBufferInputStream, n: Int, nVals: Int, dict: Dictionary): Unit = {
       if (enc == Encoding.PLAIN && !isDouble) {
         floats = in.slice(in.available()).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
         if (floats.remaining < nVals)

@@ -317,8 +317,13 @@ object VectorTopK {
       }
     }
 
-    override def compute(split: Partition, context: TaskContext): Iterator[T] =
+    /** The task's page reads (`SelectiveFetch`, through Hadoop's
+      * filesystem) count into its input metrics.
+      */
+    override def compute(split: Partition, context: TaskContext): Iterator[T] = {
+      org.apache.spark.sql.graft.Bridge.countTaskInputBytes(context)
       split.asInstanceOf[FilesSlice[T]].items.iterator
+    }
   }
 
   private final case class FilesSlice[T](index: Int, items: Array[T]) extends Partition

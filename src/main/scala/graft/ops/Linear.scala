@@ -106,8 +106,11 @@ object Linear {
     df.select(labelCol.cast("bigint").as("_y"), sorted.as("_s"))
       .withColumn("_st", runStarts)
       .withColumn("_p", pairs)
+      // blank/null text (`_s` null) has no feature entries, gated
+      // explicitly: with ANSI off, size(null) is -1, and the staged
+      // columns of a null `_s` are junk rather than null
       .select(explode(concat(
-        coalesce(concat(xx, xy, xs), emptyEntries), scalars)).as("_e"))
+        when(col("_s").isNotNull, concat(xx, xy, xs)).otherwise(emptyEntries), scalars)).as("_e"))
       .groupBy(col("_e.kind").as("kind"), col("_e.i").as("i"), col("_e.j").as("j"))
       .agg(sum(col("_e.v")).as("v"))
   }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, Data
 /** Minimal `private[sql]` bridge. Everything else in the engine lives in the
   * `graft` package; only the pieces that structurally need `sql`-private
   * types are here: the Column<->Expression converters, the DataFrame
-  * constructors over a logical plan and over internal rows, and the
+  * constructors over a logical plan and over internal rows, the task
+  * input-bytes hook (its metrics setters are private[spark]), and the
   * `inputTypes` declaration (Seq[AbstractDataType] is private[sql]).
   */
 object Bridge {
@@ -22,6 +23,17 @@ object Bridge {
   /** A DataFrame over rows already in Catalyst's form: no encoder to derive
     * or resolve.
     */
+  /** Count the Hadoop filesystem bytes this task's thread reads from now
+    * on into the task's input metrics when it completes (the pattern of
+    * Spark's `FileScanRDD`), so reads that bypass Spark's scans show in
+    * its task metrics.
+    */
+  def countTaskInputBytes(context: org.apache.spark.TaskContext): Unit = {
+    val metrics = context.taskMetrics().inputMetrics
+    val before = metrics.bytesRead
+    val bytesRead = org.apache.spark.deploy.SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+    context.addTaskCompletionListener[Unit](_ => metrics.setBytesRead(before + bytesRead()))
+  }
   def ofInternalRows(
       spark: org.apache.spark.sql.SparkSession,
       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],

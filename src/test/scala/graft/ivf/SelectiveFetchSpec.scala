@@ -487,4 +487,229 @@ class SelectiveFetchSpec extends SparkSpec {
     assert(e.getMessage.contains("row group 2") && e.getMessage.contains("synthetic.parquet"),
       e.getMessage)
   }
+
+  // ---- run mode against the per-value path ------------------------------
+
+  private def rawBits(v: Array[Float]): Seq[Int] = v.toSeq.map(java.lang.Float.floatToRawIntBits)
+
+  /** `f` over `file`'s `vec` in run mode or per value: its answer, the
+    * pages read, and how many of them in run mode.
+    */
+  private def decoding[T](file: String, runs: Boolean)(
+      f: (ParquetFileReader, SelectiveFetch.PageDecoder) => T): (T, Int, Int) =
+    SelectiveFetch.withColumn(file, "vec", runs)((r, d) => (f(r, d), d.pagesRead, d.runPages))
+
+  private def fetched(file: String, runs: Boolean, cands: Array[Int]) =
+    decoding(file, runs) { (r, d) =>
+      SelectiveFetch.fetch(r, d, cands.filter(_ >= 0).distinct.sorted).map { case (ri, v) =>
+        (ri, rawBits(v))
+      }
+    }
+
+  private def scanned(file: String, runs: Boolean) = decoding(file, runs) { (r, d) =>
+    val seen = ArrayBuffer[(Long, Seq[Int])]()
+    val summary = SelectiveFetch.scan(r, d, (ri, v) => seen += ((ri, rawBits(v))))
+    (summary, seen.toSeq)
+  }
+
+  /** A row for the run-mode differential: a vector of `dim` random
+    * floats, or (where `odd`) one of the shapes that keep a page per
+    * value: a null vector, a null element or an empty list.
+    */
+  private def runRow(rnd: Random, dim: Int, odd: Boolean): Option[Seq[Option[Double]]] =
+    if (!odd) Some(Seq.fill(dim)(Some(rnd.nextGaussian())))
+    else rnd.nextInt(3) match {
+      case 0 => None
+      case 1 => Some(Seq.fill(dim)(Some(rnd.nextGaussian())).updated(rnd.nextInt(dim), None))
+      case _ => Some(Seq.empty)
+    }
+
+  test("differential: run mode equals the per-value path and Spark's reader") {
+    var seed = 200
+    for {
+      double <- Seq(false, true)
+      limit <- Seq(Some(1), Some(7), None)
+      version <- Seq("v1", "v2")
+      dictionary <- Seq(true, false)
+    } {
+      seed += 1
+      val rnd = new Random(seed)
+      // dims vary per row (short ones bit-pack their levels, long ones
+      // make RLE runs); the odd rows sit in one stretch, so the row group
+      // that holds it mixes per-value pages with run-mode ones
+      val n = 300
+      val oddFrom = 100 + rnd.nextInt(50)
+      val rows = Seq.tabulate(n) { i =>
+        val dim = if (rnd.nextBoolean()) 1 + rnd.nextInt(7) else 8 + rnd.nextInt(40)
+        runRow(rnd, dim, odd = i >= oddFrom && i < oddFrom + 30 && rnd.nextInt(4) == 0)
+      }
+      val pages = limit.fold(Map.empty[String, String])(l => Map(
+        "parquet.page.row.count.limit" -> l.toString, "parquet.page.size.row.check.min" -> "1"))
+      val dir = Files.createTempDirectory("graft-selfetch-runs").toString
+      val file = writeSpark(dir, rows, double, pages ++ Map(
+        "parquet.block.size" -> "4096",
+        "parquet.enable.dictionary" -> dictionary.toString,
+        "parquet.writer.version" -> version))
+      val what = s"$file (double=$double limit=$limit $version dictionary=$dictionary)"
+      val truth = oracle(file, vectorized = true)
+      val (spans, _) = pageLayout(file)
+      candidateSets(new Random(seed), spans, n).foreach { cands =>
+        val (byRuns, _, _) = fetched(file, runs = true, cands)
+        val (perValue, _, perValueRuns) = fetched(file, runs = false, cands)
+        assert(byRuns == perValue, what)
+        assert(perValueRuns == 0, what)
+        assert(byRuns == cands.filter(c => truth.contains(c.toLong)).distinct.sorted.toSeq
+          .map(c => (c.toLong, truth(c.toLong))), what)
+      }
+      val ((summary, seen), read, runPages) = scanned(file, runs = true)
+      val ((summary0, seen0), read0, runPages0) = scanned(file, runs = false)
+      assert(summary == summary0 && seen == seen0 && read == read0 && runPages0 == 0, what)
+      assert(seen == truth.toSeq.sortBy(_._1), what)
+      val nonNull = rows.flatten
+      assert(summary == SelectiveFetch.ColumnSummary(
+        n.toLong, rows.count(_.isEmpty).toLong, nonNull.count(_.contains(None)).toLong,
+        nonNull.map(_.size).min, nonNull.map(_.size).max), what)
+      // the odd rows keep some pages per value; the rest go by runs
+      assert(runPages > 0 && runPages < read, s"$what: $runPages of $read pages by runs")
+    }
+  }
+
+  test("runPages counts every page of a plain table, and no page with a null element") {
+    val rnd = new Random(3)
+    val plain = writeSpark(Files.createTempDirectory("graft-selfetch-plain").toString,
+      Seq.fill(2000)(Some(Seq.fill(64)(Some(rnd.nextGaussian())))), double = false,
+      Map("parquet.page.size" -> "65536"))
+    val ((summary, seen), read, runs) = scanned(plain, runs = true)
+    assert(read > 1 && runs == read, s"$runs of $read pages by runs")
+    assert(summary.rows == 2000 && seen.size == 2000)
+    val (got, fetchRead, fetchRuns) = fetched(plain, runs = true, Array(0, 999, 1999))
+    assert(got.map(_._1) == Seq(0L, 999L, 1999L) && fetchRead > 0 && fetchRuns == fetchRead)
+    // one page, one null element in it
+    val nullElem = writeSpark(Files.createTempDirectory("graft-selfetch-nullelem").toString,
+      Seq(Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(3.0), None)), Some(Seq(Some(4.0), Some(5.0)))),
+      double = false, Map.empty)
+    val ((nullSummary, nullSeen), nullRead, nullRuns) = scanned(nullElem, runs = true)
+    assert(nullRead == 1 && nullRuns == 0)
+    assert(nullSummary.nullElements == 1 && nullSeen.map(_._1) == Seq(0L, 2L))
+  }
+
+  /** The first `vec` page of `file`, as read (decompressed). */
+  private def firstPage(file: String): DataPage = footerOf(file) { r =>
+    val desc = r.getFooter.getFileMetaData.getSchema.getColumns.asScala
+      .find(_.getPath.head == "vec").get
+    val pages = r.readNextRowGroup()
+    val page = pages.getPageReader(desc).readPage()
+    // materialize the bytes before the reader closes
+    page match {
+      case p: DataPageV1 =>
+        new DataPageV1(BytesInput.from(p.getBytes.toByteArray), p.getValueCount,
+          p.getUncompressedSize, p.getStatistics, p.getRlEncoding, p.getDlEncoding,
+          p.getValueEncoding)
+      case p: DataPageV2 =>
+        DataPageV2.uncompressed(p.getRowCount, p.getNullCount, p.getValueCount,
+          BytesInput.from(p.getRepetitionLevels.toByteArray),
+          BytesInput.from(p.getDefinitionLevels.toByteArray),
+          p.getDataEncoding, BytesInput.from(p.getData.toByteArray), p.getStatistics)
+    }
+  }
+
+  /** The offsets of the run headers in a level section of `bitWidth`. */
+  private def runHeaders(section: Array[Byte], bitWidth: Int): Seq[Int] = {
+    val out = ArrayBuffer[Int]()
+    var pos = 0
+    while (pos < section.length) {
+      out += pos
+      var header = 0
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) { b = section(pos) & 0xff; header |= (b & 0x7f) << shift; shift += 7; pos += 1 }
+      pos += (if ((header & 1) == 0) (bitWidth + 7) / 8 else (header >>> 1) * bitWidth)
+    }
+    out.toSeq
+  }
+
+  test("a damaged run-mode page decodes as the per-value path does, or is refused") {
+    val rnd = new Random(11)
+    // dims 1..20 with a stretch of 1-element rows: RLE and bit-packed
+    // repetition runs, RLE runs of record starts
+    val dims = Seq(20, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 9, 17, 2, 5)
+    val rows = dims.map(d => Some(Seq.fill(d)(Some(rnd.nextGaussian()))))
+    val desc = MessageTypeParser.parseMessageType(
+      "message m { optional group vec (LIST) { repeated group list { optional float element; } } }")
+      .getColumns.get(0)
+    for (version <- Seq("v1", "v2"); limit <- Seq("1", "100")) {
+      val file = writeSpark(Files.createTempDirectory("graft-selfetch-damage").toString, rows,
+        double = false, Map("parquet.writer.version" -> version,
+          "parquet.page.row.count.limit" -> limit, "parquet.page.size.row.check.min" -> "1",
+          "parquet.enable.dictionary" -> "false"))
+      val page = firstPage(file)
+      val nRows = if (limit == "1") 1 else dims.size
+      val cands = (100 until 100 + nRows).toArray
+      def decode(p: DataPage, runs: Boolean): (Seq[(Long, Seq[Int])], SelectiveFetch.ColumnSummary,
+          Seq[(Long, Seq[Int])]) = {
+        val out = ArrayBuffer[(Long, Array[Float])]()
+        new SelectiveFetch.PageDecoder(desc, "damaged.parquet", runs)
+          .decodeGroup(store(Seq(p), nRows, None), 2, 100L, cands, out)
+        val seen = ArrayBuffer[(Long, Seq[Int])]()
+        val scan = new SelectiveFetch.PageDecoder(desc, "damaged.parquet", runs)
+        scan.scanGroup(store(Seq(p), nRows, None), 2, 100L, (ri, v) => seen += ((ri, rawBits(v))))
+        (out.toSeq.map { case (ri, v) => (ri, rawBits(v)) }, scan.summary, seen.toSeq)
+      }
+      // the intact page goes by runs and reads every row
+      val intact = decode(page, runs = true)
+      assert(intact == decode(page, runs = false) && intact._1.size == nRows)
+      val probe = new SelectiveFetch.PageDecoder(desc, "damaged.parquet")
+      probe.scanGroup(store(Seq(page), nRows, None), 2, 100L, null)
+      assert(probe.runPages == 1, s"$version limit $limit: the intact page is not read by runs")
+
+      // (repetition section, definition section, rebuild from both)
+      val (rep, dfn, rebuild) = page match {
+        case p: DataPageV1 =>
+          val bytes = java.nio.ByteBuffer.wrap(p.getBytes.toByteArray)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          val repLen = bytes.getInt(0)
+          val defLen = bytes.getInt(4 + repLen)
+          val all = bytes.array()
+          val values = all.drop(8 + repLen + defLen)
+          def v1(r: Array[Byte], d: Array[Byte]): DataPage = {
+            val b = BytesInput.concat(BytesInput.fromInt(r.length), BytesInput.from(r),
+              BytesInput.fromInt(d.length), BytesInput.from(d), BytesInput.from(values))
+            new DataPageV1(b, p.getValueCount, b.size.toInt, p.getStatistics,
+              p.getRlEncoding, p.getDlEncoding, p.getValueEncoding)
+          }
+          (all.slice(4, 4 + repLen), all.slice(8 + repLen, 8 + repLen + defLen), v1 _)
+        case p: DataPageV2 =>
+          val data = p.getData.toByteArray
+          def v2(r: Array[Byte], d: Array[Byte]): DataPage = DataPageV2.uncompressed(
+            p.getRowCount, p.getNullCount, p.getValueCount, BytesInput.from(r), BytesInput.from(d),
+            p.getDataEncoding, BytesInput.from(data), p.getStatistics)
+          (p.getRepetitionLevels.toByteArray, p.getDefinitionLevels.toByteArray, v2 _)
+      }
+      val damaged =
+        (0 until rep.length).map(t => s"repetition cut at $t" -> rebuild(rep.take(t), dfn)) ++
+          (0 until dfn.length).map(t => s"definition cut at $t" -> rebuild(rep, dfn.take(t))) ++
+          (for {
+            (name, section, width) <- Seq(("repetition", rep, 1), ("definition", dfn, 2))
+            at <- runHeaders(section, width)
+            b <- Seq(0x00, 0x01, 0x02, 0x03, 0x7f, 0x80, 0xff, section(at) ^ 1, section(at) + 2,
+              section(at) - 2).map(_.toByte).distinct if b != section(at)
+          } yield {
+            val hit = section.updated(at, b)
+            s"$name header at $at set to ${b & 0xff}" ->
+              (if (name == "repetition") rebuild(hit, dfn) else rebuild(rep, hit))
+          })
+      assert(damaged.size > 20)
+      damaged.foreach { case (what, p) =>
+        val context = s"$version limit $limit, $what"
+        scala.util.Try(decode(p, runs = true)) match {
+          case scala.util.Success(got) =>
+            assert(got == decode(p, runs = false), s"$context: run mode differs from per value")
+          case scala.util.Failure(e: IllegalStateException) =>
+            assert(e.getMessage.contains("row group 2") && e.getMessage.contains("damaged.parquet"),
+              s"$context: ${e.getMessage}")
+          case scala.util.Failure(e) => fail(s"$context: neither an answer nor a refusal", e)
+        }
+      }
+    }
+  }
 }

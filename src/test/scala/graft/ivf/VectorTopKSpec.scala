@@ -2,6 +2,8 @@ package graft.ivf
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -569,6 +571,51 @@ class VectorTopKSpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(rows.map(_.getAs[Long]("id")).toSet == brute)
     assert(search.collect().length == 5)
+  }
+
+  test("a collected search counts its page reads into the tasks' input bytes") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-input-bytes").toString
+    (0 until 600).map(i => (i.toLong, Seq.fill(16)((i % 37) * 0.1f)))
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    val storeDir = Files.createTempDirectory("graft-input-bytes-store").toString
+    val store = new IndexStore(storeDir)
+    val build = IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    val search = VectorTopK.search(spark, dir, "vec", Seq.fill(16)(1f), 10,
+      VectorTopK.Options(nprobe = build.nClusters), store)
+    val sc = spark.sparkContext
+    val group = s"graft-input-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = String.valueOf(e.properties.getProperty("spark.jobGroup.id"))
+        if (g == group) e.stageInfos.foreach(s => stages.add(s.stageId))
+        if (g == group + "-fence") fenced.set(true)
+      }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.merge(e.stageId, e.taskMetrics.inputMetrics.bytesRead, (a: Long, b: Long) => a + b)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try assert(search.collect().length == 10) finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!fenced.get && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced.get, "fence job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    def tree(d: String): Long = {
+      val files = Files.walk(java.nio.file.Paths.get(d))
+      try files.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum finally files.close()
+    }
+    val read = stages.asScala.toSeq.map(s => bytes.getOrDefault(s, 0L)).sum
+    assert(read > 0 && read <= tree(dir) + tree(storeDir), s"$read input bytes")
   }
 
   test("an indexed frame built before an append and extend ranks the appended rows") {

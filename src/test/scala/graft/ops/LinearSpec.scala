@@ -69,4 +69,24 @@ class LinearSpec extends SparkSpec {
     intercept[IllegalArgumentException](Linear.fitRidge(moments, dim, ridge = 0.0))
     intercept[IllegalArgumentException](Linear.logitFp(col("text"), w.take(2), dim))
   }
+
+  test("blank and null texts give the same moments with ANSI off as with it on") {
+    val docs = Seq[(Long, String, Int)](
+      (0L, "alpha beta alpha", 1), (1L, "", 0), (2L, null, 1), (3L, "   ", 0),
+      (4L, "beta gamma", 0), (5L, "gamma", 1))
+      .toDF("id", "text", "label")
+    def moments(ansi: Boolean): Set[(String, Long, Long, Long)] = {
+      val prior = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try Linear.bowMoments(docs, col("id"), col("text"), col("label"), 8)
+        .as[(String, Long, Long, Long)].collect().toSet
+      finally spark.conf.set("spark.sql.ansi.enabled", prior)
+    }
+    val on = moments(ansi = true)
+    assert(moments(ansi = false) == on)
+    // the blank rows add only to the scalar moments: 6 rows, 3 labels of
+    // 1, and the 6 tokens of the other three
+    assert(on.contains(("n", -1L, -1L, 6L)) && on.contains(("y", -1L, -1L, 3L)), on)
+    assert(on.filter(_._1 == "x").toSeq.map(_._4).sum == 6L, on)
+  }
 }
