@@ -8,100 +8,97 @@ import org.apache.spark.sql.graft.FloatVectorBinaryExpression
 /** Base for element-wise float-vector distance/similarity expressions.
   *
   * Semantics follow the reference engine's SQL top-k path
-  * (`/root/reference/src/df_vector/exec.rs:494-550`): a null vector, a
-  * null element, or a length mismatch between the two vectors yields NULL
-  * (the row is "skipped" — under `ORDER BY dist ASC NULLS LAST LIMIT k` this
-  * reproduces the reference's skip-don't-error behavior).
+  * (`src/df_vector/exec.rs:494-550`): a null vector, a null element, or a
+  * length mismatch between the two vectors yields NULL (the row is
+  * "skipped" — under `ORDER BY dist ASC NULLS LAST LIMIT k` this reproduces
+  * the reference's skip-don't-error behavior).
   *
   * Inputs are implicitly cast to `array<float>` (the reference coerces f64
-  * embeddings to f32: `/root/reference/src/ivf/parquet.rs:287-291`).
-  * Whole-stage codegen is supported via [[doGenCode]] — the loop stays inside
-  * the generated code, no boxing, no UDF call overhead.
+  * embeddings to f32: `src/ivf/parquet.rs:287-291`). Both the interpreted
+  * and the generated path call the same [[VectorKernels]] method, so the
+  * value never depends on whether codegen ran, and equals what the index
+  * paths compute. A foldable side (the query literal) is converted once.
   */
 abstract class BinaryFloatVectorExpression extends FloatVectorBinaryExpression {
+  import BinaryFloatVectorExpression.floats
 
-  /** Kernel on two same-length null-free float arrays. */
+  /** The metric on two same-length null-free vectors. */
   protected def kernel(a: Array[Float], b: Array[Float]): Float
 
-  /** Java source for the combine step; `sumVar` accumulates, `dVar`/`aVar`/`bVar`
-    * hold the current elements. Must assign into `sumVar`.
+  /** Name of [[kernel]]'s [[VectorKernels]] method, for the generated code. */
+  protected def kernelName: String
+
+  @transient private lazy val leftConst = constant(left)
+  @transient private lazy val rightConst = constant(right)
+
+  /** A foldable side's vector (null inside when it is null or holds a null
+    * element); None for a side that varies per row.
     */
-  protected def genAccumulate(sumVar: String, aElem: String, bElem: String): String
-
-  /** Java source finalizing `sumVar` into the result. */
-  protected def genFinish(sumVar: String): String
-
-  protected def finish(sum: Float): Float
+  private def constant(e: Expression): Option[Array[Float]] =
+    if (e.foldable) Some(floats(e.eval().asInstanceOf[ArrayData])) else None
 
   override def nullSafeEval(leftVal: Any, rightVal: Any): Any = {
-    val a = leftVal.asInstanceOf[ArrayData]
-    val b = rightVal.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      i += 1
-    }
-    kernel(a.toFloatArray(), b.toFloatArray())
+    val a = leftConst.getOrElse(floats(leftVal.asInstanceOf[ArrayData]))
+    val b = rightConst.getOrElse(floats(rightVal.asInstanceOf[ArrayData]))
+    if (a == null || b == null || a.length != b.length) null else kernel(a, b)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      val ae = ctx.freshName("ae")
-      val be = ctx.freshName("be")
+    def side(const: Option[Array[Float]], value: String): String = const match {
+      case Some(vec) => ctx.addReferenceObj("vec", vec, "float[]")
+      case None => s"graft.functions.BinaryFloatVectorExpression.floats($value)"
+    }
+    nullSafeCodeGen(ctx, ev, (l, r) => {
+      val a = ctx.freshName("a")
+      val b = ctx.freshName("b")
       s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
+         |final float[] $a = ${side(leftConst, l)};
+         |final float[] $b = ${side(rightConst, r)};
+         |if ($a == null || $b == null || $a.length != $b.length) {
          |  ${ev.isNull} = true;
          |} else {
-         |  float $sum = 0.0f;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    final float $ae = $a.getFloat($i);
-         |    final float $be = $b.getFloat($i);
-         |    ${genAccumulate(sum, ae, be)}
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = ${genFinish(sum)}; }
+         |  ${ev.value} = graft.functions.VectorKernels.$kernelName($a, $b);
          |}
        """.stripMargin
     })
   }
 }
 
+object BinaryFloatVectorExpression {
+  /** The vector's floats, or null when it is null or holds a null element. */
+  def floats(v: ArrayData): Array[Float] = {
+    if (v == null) return null
+    var i = 0
+    while (i < v.numElements()) {
+      if (v.isNullAt(i)) return null
+      i += 1
+    }
+    v.toFloatArray()
+  }
+}
+
 /** Euclidean (L2) distance — `array_distance(a, b)`. Matches the semantics
   * of the `array_distance` scalar function the reference's optimizer rule
-  * pattern-matches on (`/root/reference/src/df_vector/physical.rs:198-243`);
+  * pattern-matches on (`src/df_vector/physical.rs:198-243`);
   * ordering-equivalent to the squared-L2 the reference uses internally.
   */
 case class ArrayDistance(left: Expression, right: Expression)
     extends BinaryFloatVectorExpression {
   override def prettyName: String = "array_distance"
-  protected def kernel(a: Array[Float], b: Array[Float]): Float =
-    finish(VectorKernels.squaredL2(a, b))
-  protected def finish(sum: Float): Float = math.sqrt(sum.toDouble).toFloat
-  protected def genAccumulate(s: String, a: String, b: String): String =
-    s"final float d_$s = $a - $b; $s += d_$s * d_$s;"
-  protected def genFinish(s: String): String = s"(float) java.lang.Math.sqrt((double) $s)"
+  protected def kernel(a: Array[Float], b: Array[Float]): Float = VectorKernels.l2Distance(a, b)
+  protected def kernelName: String = "l2Distance"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** Squared L2 distance — `array_squared_l2(a, b)`; the reference's internal
-  * ranking key (`/root/reference/src/ivf/index.rs:459-480`).
+  * ranking key (`src/ivf/index.rs:459-480`).
   */
 case class ArraySquaredL2(left: Expression, right: Expression)
     extends BinaryFloatVectorExpression {
   override def prettyName: String = "array_squared_l2"
-  protected def kernel(a: Array[Float], b: Array[Float]): Float =
-    VectorKernels.squaredL2(a, b)
-  protected def finish(sum: Float): Float = sum
-  protected def genAccumulate(s: String, a: String, b: String): String =
-    s"final float d_$s = $a - $b; $s += d_$s * d_$s;"
-  protected def genFinish(s: String): String = s
+  protected def kernel(a: Array[Float], b: Array[Float]): Float = VectorKernels.squaredL2(a, b)
+  protected def kernelName: String = "squaredL2"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -110,80 +107,20 @@ case class ArraySquaredL2(left: Expression, right: Expression)
 case class ArrayDot(left: Expression, right: Expression)
     extends BinaryFloatVectorExpression {
   override def prettyName: String = "array_dot"
-  protected def kernel(a: Array[Float], b: Array[Float]): Float =
-    VectorKernels.dot(a, b)
-  protected def finish(sum: Float): Float = sum
-  protected def genAccumulate(s: String, a: String, b: String): String =
-    s"$s += $a * $b;"
-  protected def genFinish(s: String): String = s
+  protected def kernel(a: Array[Float], b: Array[Float]): Float = VectorKernels.dot(a, b)
+  protected def kernelName: String = "dot"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** Cosine similarity — `array_cosine_similarity(a, b)`; 0.0 when either side
-  * has zero norm. Needs three accumulators, so it overrides codegen wholesale.
+  * has zero norm.
   */
 case class ArrayCosineSimilarity(left: Expression, right: Expression)
     extends BinaryFloatVectorExpression {
   override def prettyName: String = "array_cosine_similarity"
-  protected def kernel(a: Array[Float], b: Array[Float]): Float =
-    VectorKernels.cosine(a, b)
-  protected def finish(sum: Float): Float = sum
-  protected def genAccumulate(s: String, a: String, b: String): String = ""
-  protected def genFinish(s: String): String = s
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val ae = ctx.freshName("ae")
-      val be = ctx.freshName("be")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  float $dot = 0.0f; float $na = 0.0f; float $nb = 0.0f;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    final float $ae = $a.getFloat($i);
-         |    final float $be = $b.getFloat($i);
-         |    $dot += $ae * $be; $na += $ae * $ae; $nb += $be * $be;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = ($na == 0.0f || $nb == 0.0f) ? 0.0f
-         |      : (float) ($dot / (java.lang.Math.sqrt((double) $na) * java.lang.Math.sqrt((double) $nb)));
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override def nullSafeEval(leftVal: Any, rightVal: Any): Any = {
-    val a = leftVal.asInstanceOf[ArrayData]
-    val b = rightVal.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      i += 1
-    }
-    val af = a.toFloatArray(); val bf = b.toFloatArray()
-    // same arithmetic as the generated code (float squared-norm sums,
-    // UNROUNDED double sqrt product, one final float rounding) — the
-    // previous `dot / (norm(a) * norm(b))` rounded each norm to float
-    // first and could differ from the codegen path in the last ulp,
-    // making the same expression value depend on whether codegen ran
-    val dotv = VectorKernels.dot(af, bf)
-    val naSq = VectorKernels.dot(af, af); val nbSq = VectorKernels.dot(bf, bf)
-    if (naSq == 0.0f || nbSq == 0.0f) 0.0f
-    else (dotv / (math.sqrt(naSq.toDouble) * math.sqrt(nbSq.toDouble))).toFloat
-  }
-
+  protected def kernel(a: Array[Float], b: Array[Float]): Float = VectorKernels.cosine(a, b)
+  protected def kernelName: String = "cosine"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

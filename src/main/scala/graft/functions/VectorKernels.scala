@@ -1,60 +1,32 @@
 package graft.functions
 
-/** Scalar vector kernels shared by the Catalyst expressions, the IVF index
-  * build, and the search paths.
+/** The one definition of graft's vector metrics: the SQL expressions
+  * (`array_distance`, `array_squared_l2`, `array_dot`,
+  * `array_cosine_similarity`), the index build's radius bound, the probes,
+  * the top-k and range feeds and MMR all call these methods, so a distance
+  * has the same bits whichever path computes it.
   *
-  * Distance semantics follow the reference engine
-  * (`/root/reference/src/ivf/index.rs:459-480`): squared L2 accumulated in
-  * Float32 with a 4-way unrolled loop. `l2Distance` (= sqrt of squared L2)
-  * matches the `array_distance` SQL function semantics the reference relies
-  * on from its SQL layer.
+  * Arithmetic: f32 sums, element by element (the reference's squared L2,
+  * its `src/ivf/index.rs:459-480`); cosine divides the f32 dot
+  * by the unrounded double product of the two norms' `sqrt`s. `l2Distance`
+  * (= sqrt of squared L2, rounded once to float) is `array_distance`.
   */
 object VectorKernels {
 
   /** Squared L2 distance (reference: index.rs:461-480). */
-  def squaredL2(a: Array[Float], b: Array[Float]): Float = {
-    val len = a.length
-    var sum = 0.0f
-    var i = 0
-    while (i + 4 <= len) {
-      val d0 = a(i) - b(i)
-      val d1 = a(i + 1) - b(i + 1)
-      val d2 = a(i + 2) - b(i + 2)
-      val d3 = a(i + 3) - b(i + 3)
-      sum += d0 * d0 + d1 * d1 + d2 * d2 + d3 * d3
-      i += 4
-    }
-    while (i < len) {
-      val d = a(i) - b(i)
-      sum += d * d
-      i += 1
-    }
-    sum
-  }
+  def squaredL2(a: Array[Float], b: Array[Float]): Float = squaredL2Offset(a, b, 0)
 
-  /** Euclidean (L2) distance — SQL `array_distance` semantics. */
+  /** Euclidean (L2) distance — `array_distance`. */
   def l2Distance(a: Array[Float], b: Array[Float]): Float =
     math.sqrt(squaredL2(a, b).toDouble).toFloat
 
-  /** [[squaredL2]] of `a` against `b(bOff ... bOff + a.length)` — the SAME
-    * 4-way-unrolled accumulation order, so the result is bit-identical to
-    * `squaredL2(a, copyOfRange(b, bOff, bOff + a.length))` without the
-    * per-call allocation. Used by the index build's radius pass, whose
-    * stored bound must dominate every query-side [[squaredL2]]
-    * recomputation exactly.
+  /** [[squaredL2]] of `a` against `b(bOff ... bOff + a.length)`, without
+    * copying the slice: a row of a flat centroid matrix.
     */
   def squaredL2Offset(a: Array[Float], b: Array[Float], bOff: Int): Float = {
     val len = a.length
     var sum = 0.0f
     var i = 0
-    while (i + 4 <= len) {
-      val d0 = a(i) - b(bOff + i)
-      val d1 = a(i + 1) - b(bOff + i + 1)
-      val d2 = a(i + 2) - b(bOff + i + 2)
-      val d3 = a(i + 3) - b(bOff + i + 3)
-      sum += d0 * d0 + d1 * d1 + d2 * d2 + d3 * d3
-      i += 4
-    }
     while (i < len) {
       val d = a(i) - b(bOff + i)
       sum += d * d
@@ -71,13 +43,19 @@ object VectorKernels {
     sum
   }
 
-  def norm(a: Array[Float]): Float = math.sqrt(dot(a, a).toDouble).toFloat
-
   /** Cosine similarity in [-1, 1]; 0 when either vector has zero norm. */
   def cosine(a: Array[Float], b: Array[Float]): Float = {
-    val na = norm(a)
-    val nb = norm(b)
-    if (na == 0.0f || nb == 0.0f) 0.0f else dot(a, b) / (na * nb)
+    val len = a.length
+    var ab = 0.0f
+    var aa = 0.0f
+    var bb = 0.0f
+    var i = 0
+    while (i < len) {
+      ab += a(i) * b(i); aa += a(i) * a(i); bb += b(i) * b(i)
+      i += 1
+    }
+    if (aa == 0.0f || bb == 0.0f) 0.0f
+    else (ab / (math.sqrt(aa.toDouble) * math.sqrt(bb.toDouble))).toFloat
   }
 
   /** Indices of the `p` nearest centroids in a flat row-major matrix,

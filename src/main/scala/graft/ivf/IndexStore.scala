@@ -1,5 +1,6 @@
 package graft.ivf
 
+import java.io.FilterInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -11,6 +12,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
 
 /** Sidecar persistence for per-data-file IVF indexes and their companions,
   * and the one copy of their file IO: naming, atomic writes, positioned
@@ -692,10 +694,50 @@ object IndexStore {
     * builds a fresh `Configuration` per call, which re-parses the XML
     * resources — about 8 ms per open, more than the footer read itself.
     * Each reader still gets its own options (and codec factory, which
-    * `close` releases).
+    * `close` releases). Every byte the reader takes from the file counts
+    * into [[bytesReadOnThread]].
     */
   private[ivf] def openParquet(path: String): ParquetFileReader =
     ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), hadoopConf),
+      new CountedInputFile(HadoopInputFile.fromPath(new Path(path), hadoopConf)),
       HadoopReadOptions.builder(hadoopConf).build())
+
+  private val threadBytes = ThreadLocal.withInitial[Array[Long]](() => Array(0L))
+
+  /** Bytes the calling thread has read through [[openParquet]]'s readers:
+    * footers, page indexes and pages, as the reader asked for them. A
+    * task's input-bytes metric is this count's growth over the task.
+    * Hadoop's per-thread filesystem statistics cannot stand in for it:
+    * parquet's vectored reads (on by default) complete on other threads
+    * and are missing there, and the checksummed local stream's read-ahead
+    * is counted there.
+    */
+  def bytesReadOnThread: Long = threadBytes.get()(0)
+
+  /** A parquet file whose streams count what they return into
+    * [[bytesReadOnThread]]. Its streams offer no vectored reads, so the
+    * reader reads each range itself, on the calling thread.
+    */
+  private final class CountedInputFile(file: InputFile) extends InputFile {
+    def getLength: Long = file.getLength
+    def newStream(): SeekableInputStream = {
+      val in = file.newStream()
+      val counted = new FilterInputStream(in) {
+        override def read(): Int = {
+          val b = in.read()
+          if (b >= 0) threadBytes.get()(0) += 1
+          b
+        }
+        override def read(buf: Array[Byte], off: Int, len: Int): Int = {
+          val n = in.read(buf, off, len)
+          if (n > 0) threadBytes.get()(0) += n
+          n
+        }
+      }
+      new DelegatingSeekableInputStream(counted) {
+        def getPos: Long = in.getPos
+        def seek(pos: Long): Unit = in.seek(pos)
+      }
+    }
+  }
 }

@@ -431,10 +431,9 @@ object IvfBuilder {
       var count = 0L
       SelectiveFetch.scanFile(file, column) { (ri, vec) =>
         val cluster = VectorKernels.nearestCentroid(vec, cents, dim)
-        // distance via the SAME accumulation order as the search kernel,
-        // so the stored radius bound dominates every query-side
-        // recomputation exactly (nearestCentroid's internal sum has a
-        // different f32 order and must NOT be reused for the bound)
+        // the member's squared L2 in the search kernel's arithmetic
+        // (nearestCentroid prunes and returns no distance), so the stored
+        // radius bound dominates every query-side recomputation exactly
         val distSq = VectorKernels.squaredL2Offset(vec, cents, cluster * dim)
         lists(cluster) += ri.toInt
         if (distSq > maxDistSq(cluster)) maxDistSq(cluster) = distSq

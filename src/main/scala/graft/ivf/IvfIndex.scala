@@ -29,18 +29,10 @@ final case class IvfIndex(
     * squared L2 (reference: index.rs:130-149).
     */
   def findClosestCentroids(query: Array[Float], nprobe: Int): Array[Int] = {
-    val k = math.min(nprobe, nClusters)
-    val dists = new Array[Float](nClusters)
-    var i = 0
-    while (i < nClusters) {
-      val off = i * dim
-      var sum = 0.0f
-      var j = 0
-      while (j < dim) { val d = query(j) - centroids(off + j); sum += d * d; j += 1 }
-      dists(i) = sum
-      i += 1
-    }
-    (0 until nClusters).sortBy(dists).take(k).toArray
+    requireDim(query)
+    val dists =
+      Array.tabulate(nClusters)(i => VectorKernels.squaredL2Offset(query, centroids, i * dim))
+    dists.indices.sortBy(dists).take(nprobe).toArray
   }
 
   /** Union of the probed centroids' inverted lists (reference: index.rs:57-63). */
@@ -52,34 +44,10 @@ final case class IvfIndex(
     * machinery as [[findClosestCentroids]], different cell ranking: over an
     * index built on unit-normalized vectors this is the proper angular IVF
     * probe; over a raw build it is a norm-insensitive heuristic (and any
-    * probe order is exact at `nprobe >= nClusters`). Zero-norm centroids
-    * rank last.
+    * probe order is exact at `nprobe >= nClusters`).
     */
-  def findClosestCentroidsCosine(query: Array[Float], nprobe: Int): Array[Int] = {
-    val k = math.min(nprobe, nClusters)
-    var qn = 0.0f
-    var j = 0
-    while (j < dim) { qn += query(j) * query(j); j += 1 }
-    val negSims = new Array[Float](nClusters)
-    var i = 0
-    while (i < nClusters) {
-      val off = i * dim
-      var dot = 0.0f
-      var cn = 0.0f
-      j = 0
-      while (j < dim) {
-        val c = centroids(off + j)
-        dot += query(j) * c
-        cn += c * c
-        j += 1
-      }
-      val denom = math.sqrt(qn.toDouble) * math.sqrt(cn.toDouble)
-      negSims(i) =
-        if (denom == 0.0) Float.MaxValue else -(dot / denom.toFloat)
-      i += 1
-    }
-    (0 until nClusters).sortBy(negSims).take(k).toArray
-  }
+  def findClosestCentroidsCosine(query: Array[Float], nprobe: Int): Array[Int] =
+    IvfIndex.cosineProbe(query, centroids, dim, nprobe)
 
   /** Cells that can possibly hold a member within `radius` (true L2) of
     * `query`, by the triangle inequality: every member x of cell i satisfies
@@ -102,17 +70,14 @@ final case class IvfIndex(
         r
       case None => null
     }
+    requireDim(query)
     val out = Array.newBuilder[Int]
     var i = 0
     while (i < nClusters) {
       if (invertedLists(i).length > 0) {
         if (bounds == null) out += i
         else {
-          val off = i * dim
-          var sum = 0.0f
-          var j = 0
-          while (j < dim) { val d = query(j) - centroids(off + j); sum += d * d; j += 1 }
-          val dqc = math.sqrt(sum.toDouble)
+          val dqc = math.sqrt(VectorKernels.squaredL2Offset(query, centroids, i * dim).toDouble)
           val keep = radius.toDouble + bounds(i).toDouble
           if (dqc <= keep * (1.0 + 1e-5) + 1e-6) out += i
         }
@@ -152,6 +117,9 @@ final case class IvfIndex(
     buf.array()
   }
 
+  private def requireDim(query: Array[Float]): Unit =
+    require(query.length == dim, s"query dim ${query.length} != index dim $dim")
+
   def nearestCentroid(vec: Array[Float]): Int =
     VectorKernels.nearestCentroid(vec, centroids, dim)
 
@@ -176,6 +144,25 @@ object IvfIndex {
     */
   private[ivf] val FnvBasis = 0xcbf29ce484222325L
   private[ivf] def fnv1a(h: Long, v: Long): Long = (h ^ v) * 0x100000001b3L
+
+  /** Indices of the `probes` centroids of a flat row-major matrix most
+    * aligned with `query` by [[VectorKernels.cosine]], descending, ties by
+    * index. Zero-norm centroids rank last (and, for a zero-norm query,
+    * every centroid ranks by index), never mid-field, where a similarity
+    * of 0 would put a degenerate cell ahead of negative-similarity cells
+    * that hold the true angular neighbors.
+    */
+  def cosineProbe(
+      query: Array[Float], centroids: Array[Float], dim: Int, probes: Int): Array[Int] = {
+    require(query.length == dim, s"query dim ${query.length} != centroid dim $dim")
+    val zeroQuery = VectorKernels.dot(query, query) == 0.0f
+    val negSims = Array.tabulate(centroids.length / dim) { i =>
+      val c = java.util.Arrays.copyOfRange(centroids, i * dim, (i + 1) * dim)
+      if (zeroQuery || VectorKernels.dot(c, c) == 0.0f) Float.MaxValue
+      else -VectorKernels.cosine(query, c)
+    }
+    negSims.indices.sortBy(negSims).take(probes).toArray
+  }
 
   /** FNV-1a over the shape and the raw f32 bit patterns — stable across
     * JVMs/platforms (bit-exact centroids ⇒ equal digest; any moved centroid

@@ -317,11 +317,12 @@ object VectorTopK {
       }
     }
 
-    /** The task's page reads (`SelectiveFetch`, through Hadoop's
-      * filesystem) count into its input metrics.
+    /** The task's parquet reads (`SelectiveFetch`'s footers, page indexes
+      * and pages) count into its input metrics.
       */
     override def compute(split: Partition, context: TaskContext): Iterator[T] = {
-      org.apache.spark.sql.graft.Bridge.countTaskInputBytes(context)
+      org.apache.spark.sql.graft.Bridge
+        .countTaskInputBytes(context, () => IndexStore.bytesReadOnThread)
       split.asInstanceOf[FilesSlice[T]].items.iterator
     }
   }
@@ -617,49 +618,19 @@ object VectorTopK {
     org.apache.spark.sql.graft.Bridge.ofInternalRows(spark, rows, schema)
   }
 
-  /** Brute `(_file, _ri, _dist)` over the whole table in ONE vectorized
-    * scan pass, distances through [[graft.functions.VectorKernels]] — the
-    * kernel-identical full-scan twin of [[rangeWinners]], used when the
-    * selectivity bailout says scanning beats point reads.
-    */
-  private def bruteDistances(
-      spark: SparkSession,
-      path: String,
-      files: Seq[String],
-      column: String,
-      query: Seq[Float],
-      store: IndexStore): DataFrame = {
-    import spark.implicits._
-    val q = query.toArray
-    scan(spark, path, files, store)
-      .select(
-        col("_metadata.file_path").as("_file"),
-        col("_metadata.row_index").as("_ri"),
-        col(column).cast("array<float>").as("_vec"))
-      .as[(String, Long, Array[Float])]
-      .flatMap { case (f, ri, vec) =>
-        if (vec != null && vec.length == q.length)
-          Iterator.single(
-            (f, ri,
-              math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat))
-        else Iterator.empty
-      }
-      .toDF("_file", "_ri", "_dist")
-  }
-
   /** RANGE search feed `(_file, _ri, _dist, _vec)` over `files`, served
     * from the IVF index with EXACT per-cell pruning — cell i is read only
     * when the triangle inequality admits an in-range member
     * (`d(q, c_i) <= radius + maxMemberRadius_i`, see
     * [[IvfIndex.rangeProbeCells]]), so IO scales with the in-range
-    * neighborhood, not the table. With `strict`, only the rows with
-    * `array_distance(vec, query) < radius`: unlike top-k, range pruning is
+    * neighborhood, not the table. It keeps the rows with
+    * `array_distance(vec, query) < radius`, computed by the expression's own
+    * kernel ([[VectorKernels.l2Distance]]): unlike top-k, range pruning is
     * LOSSLESS, so the result equals the brute filter for any radius, no
-    * nprobe knob. Without it, every member of every admitted cell — the
-    * SQL rewrite's feed, whose untouched Filter applies the exact
-    * predicate. Files without a radius sidecar (reference-built indexes)
-    * degrade to probing every cell of that file — still exact; run
-    * [[IvfBuilder.ensureRadii]] to backfill.
+    * nprobe knob (the SQL rewrite's untouched Filter recomputes the same
+    * bits on these rows). Files without a radius sidecar (reference-built
+    * indexes) degrade to probing every cell of that file — still exact;
+    * run [[IvfBuilder.ensureRadii]] to backfill.
     */
   private[graft] def rangeFeed(
       spark: SparkSession,
@@ -667,8 +638,7 @@ object VectorTopK {
       column: String,
       query: Seq[Float],
       radius: Float,
-      store: IndexStore,
-      strict: Boolean): DataFrame = {
+      store: IndexStore): DataFrame = {
     require(files.nonEmpty, "no parquet files to search")
     require(radius >= 0, s"radius must be >= 0, got $radius")
     val q = query.toArray
@@ -683,8 +653,8 @@ object VectorTopK {
         val utf8 = UTF8String.fromString(file)
         SelectiveFetch.embeddings(file, colName, cands).iterator.flatMap {
           case (ri, vec) if vec.length == q.length =>
-            val d = math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            if (!strict || d < r)
+            val d = VectorKernels.l2Distance(vec, q)
+            if (d < r)
               Iterator.single(InternalRow(utf8, ri, d, UnsafeArrayData.fromPrimitiveArray(vec)))
             else Iterator.empty
           case _ => Iterator.empty
@@ -759,7 +729,8 @@ object VectorTopK {
     * radius-predicate analog of [[search]], exact at any radius. A radius
     * whose estimated candidate fraction exceeds
     * `spark.graft.ivf.rangeMaxSelectivity` is served by the vectorized
-    * full scan instead of point reads (same answer, cheaper plan).
+    * full scan with `array_distance` instead of point reads: the same rows
+    * and distances, since [[rangeFeed]] computes that expression's kernel.
     */
   def rangeSearch(
       spark: SparkSession,
@@ -770,14 +741,13 @@ object VectorTopK {
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     val files = tableFiles(spark, path)
     val winners =
-      if (rangeBails(spark, files, column, query.toArray, radius, store)) {
-        // brute twin through the SAME kernel as the pruned path so both
-        // branches agree bit-for-bit at the radius boundary
-        bruteDistances(spark, path, files, column, query, store)
+      if (rangeBails(spark, files, column, query.toArray, radius, store))
+        scan(spark, path, files, store)
+          .select(col("_metadata.row_index").as("_ri"), distanceCol(column, query).as("_dist"))
           .where(col("_dist") < lit(radius))
-      } else {
+      else {
         validate(files, column, query.toArray, store)
-        rangeFeed(spark, files, column, query, radius, store, strict = true)
+        rangeFeed(spark, files, column, query, radius, store)
       }
     winners
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
@@ -797,7 +767,9 @@ object VectorTopK {
     * `spark.graft.ivf.rangeMaxSelectivity` (default 0.05, same estimate and
     * default as the SQL rewrite), or on a table the payload refuses
     * ([[graft.plans.WinnerPayload.refusal]]), this is the vectorized full
-    * scan with the codegen'd predicate — identical rows.
+    * scan with the predicate itself. Both branches return the same rows,
+    * also at a radius equal to a row's distance: [[rangeFeed]] keeps
+    * `d < radius` with `d` from `array_distance`'s own kernel.
     */
   def rangeRows(
       spark: SparkSession,
@@ -812,12 +784,11 @@ object VectorTopK {
     val conf = spark.sessionState.conf
     if (rangeBails(spark, files, column, query.toArray, radius, store) ||
         graft.plans.WinnerPayload.refusal(schema, column, listing.partitionColumns, conf).nonEmpty)
-      return scan(spark, path, files, store)
-        .where(array_distance(col(column), float_vector(query)) < lit(radius))
+      return scan(spark, path, files, store).where(distanceCol(column, query) < lit(radius))
     validate(files, column, query.toArray, store)
     graft.Graft.installStrategy(spark)
     graft.plans.WinnerPayload.df(spark,
-      rangeFeed(spark, files, column, query, radius, store, strict = true), schema,
+      rangeFeed(spark, files, column, query, radius, store), schema,
       graft.plans.WinnerPayload.spec(path, column, listing.partitionColumns, conf))
   }
 
@@ -842,10 +813,9 @@ object VectorTopK {
     /** Probed cells' posting lists concatenated in probe order. */
     def candidates(index: IvfIndex): Array[Int] = cells(index).flatMap(index.invertedLists)
 
-    /** The exact distance kernel: true L2, or `1 − cos`. */
+    /** The exact distance, `array_distance` or `1 − array_cosine_similarity`. */
     def exact(vec: Array[Float]): Float =
-      if (cosine) 1.0f - VectorKernels.cosine(vec, q)
-      else math.sqrt(VectorKernels.squaredL2(vec, q).toDouble).toFloat
+      if (cosine) 1.0f - VectorKernels.cosine(vec, q) else VectorKernels.l2Distance(vec, q)
 
     /** Exact `(ordinal, distance, vector)` of `ordinals` in `file`, read
       * selectively, ascending ordinal; vectors of another dim are skipped.

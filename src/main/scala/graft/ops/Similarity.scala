@@ -139,10 +139,11 @@ object Similarity {
     * O(k·poolSize·dim) loop over ≤ poolSize rows (the documented
     * bounded-collect pattern, same class as the k-means sample; MMR's
     * sequential argmax is inherently iterative, and poolSize is a
-    * reranker knob — hundreds, not corpus-sized). Scores use the same
-    * f32 cosine kernel as `array_cosine_similarity`, combined in f64, so
-    * the selection is reproducible against a SQL re-derivation. Ties
-    * break on smaller id. Returns (id, rank, score), rank 1-based in
+    * reranker knob — hundreds, not corpus-sized). Scores use
+    * `array_cosine_similarity`'s own kernel
+    * ([[graft.functions.VectorKernels.cosine]]), combined in f64, so the
+    * selection is reproducible against a SQL re-derivation. Ties break on
+    * smaller id. Returns (id, rank, score), rank 1-based in
     * selection order.
     */
   def mmrTopK(
@@ -177,9 +178,9 @@ object Similarity {
     val pool: Array[(Long, Array[Float])] =
       poolRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val mu = 1.0 - lambda
-    // relevance reuses the COLLECTED in-plan similarity (bit-identical to
-    // a SQL re-derivation by construction); only the pairwise diversity
-    // term is driver-computed, via the same f32 kernel class
+    // relevance reuses the COLLECTED in-plan similarity; the pairwise
+    // diversity term is driver-computed by array_cosine_similarity's own
+    // kernel, so both are bit-identical to a SQL re-derivation
     val simq: Map[Long, Float] =
       poolRows.map(r => r.getLong(0) -> r.getFloat(2)).toMap
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Double)]
@@ -273,32 +274,12 @@ object Similarity {
   }
 
   /** The `probes` cells nearest to `q` by centroid COSINE similarity,
-    * descending (ties by cell id): the same RANKING RULE as
-    * [[graft.ivf.IvfIndex.findClosestCentroidsCosine]] — zero-norm cells
-    * (and a zero-norm query, which zeroes every denominator) rank LAST,
-    * never mid-field (scoring them 0 used to probe a degenerate empty
-    * cell ahead of negative-similarity cells that hold the true angular
-    * neighbors — review r11); computed locally in f64 for one query.
+    * descending (ties by cell id; zero-norm cells last): the IVF index's
+    * own angular probe, [[graft.ivf.IvfIndex.cosineProbe]].
     */
   private[graft] def probeCellsCosine(
-      q: Array[Float], centroids: Array[Float], dim: Int, probes: Int): Array[Int] = {
-    require(q.length == dim,
-      s"query dim ${q.length} != centroid dim $dim")
-    val k = centroids.length / dim
-    val qn = math.sqrt(q.map(x => x.toDouble * x).sum)
-    val scored = Array.tabulate(k) { c =>
-      var dot = 0.0; var cn = 0.0
-      var j = 0
-      while (j < dim) {
-        val cv = centroids(c * dim + j).toDouble
-        dot += q(j) * cv; cn += cv * cv
-        j += 1
-      }
-      val denom = qn * math.sqrt(cn)
-      (if (denom == 0) Double.NegativeInfinity else dot / denom, c)
-    }
-    scored.sortBy { case (sc, c) => (-sc, c) }.take(probes).map(_._2)
-  }
+      q: Array[Float], centroids: Array[Float], dim: Int, probes: Int): Array[Int] =
+    graft.ivf.IvfIndex.cosineProbe(q, centroids, dim, probes)
 
   /** One scored neighbor candidate; ranked by (dist, id) ascending. */
   final case class Neighbor(neighbor_id: Long, dist: Float)

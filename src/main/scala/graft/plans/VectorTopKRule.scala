@@ -409,16 +409,17 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }.headOption
   }
 
-  /** The range predicate's payload in place of `leaf`: every member of
-    * every cell the triangle-inequality bound admits
+  /** The range predicate's payload in place of `leaf`: the in-range rows
+    * of the cells the triangle-inequality bound admits
     * ([[graft.ivf.IvfIndex.rangeProbeCells]]), each vector read by
-    * `SelectiveFetch.embeddings`; the untouched Filter above recomputes the
-    * exact predicate on the fetched rows via the codegen'd distance
-    * expression. None when the selectivity bailout keeps the scan: when
-    * the radius bound keeps most cells, the vectorized full scan beats the
-    * point-read fetch (index-vs-scan crossover; measured at sf0.1: a
-    * ~10%-selective radius runs 0.2 s brute vs 0.3-0.4 s pruned when
-    * pruning keeps most cells, BENCHNOTES round-5).
+    * `SelectiveFetch.embeddings` and kept when its `array_distance` is
+    * below the probe radius; the untouched Filter above recomputes the
+    * exact predicate on those rows, with the same kernel. None when the
+    * selectivity bailout keeps the scan: when the radius bound keeps most
+    * cells, the vectorized full scan beats the point-read fetch
+    * (index-vs-scan crossover; measured at sf0.1: a ~10%-selective radius
+    * runs 0.2 s brute vs 0.3-0.4 s pruned when pruning keeps most cells,
+    * BENCHNOTES round-5).
     */
   private def rangeLeaf(
       leaf: ParquetLeaf,
@@ -431,7 +432,7 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case Right(p) =>
         if (VectorTopK.rangeBails(spark, p.files, column, query, radius, p.store)) None
         else Some(Right(p.over(VectorTopK.rangeFeed(spark, p.files, column, query.toIndexedSeq,
-          radius, p.store, strict = false).queryExecution.analyzed)))
+          radius, p.store).queryExecution.analyzed)))
     }
 }
 
@@ -495,9 +496,10 @@ object VectorTopKRule {
   val FilteredTierKey = "spark.graft.ivf.filteredTier"
 
   /** Bail out of the range rewrite when the estimated candidate fraction
-    * exceeds this (first-file estimate): a barely-pruning radius makes the
-    * vectorized full scan cheaper than point-read fetch — the classic
-    * index-vs-scan selectivity crossover.
+    * exceeds this (estimated from up to 4 evenly spaced files, scaled to
+    * the table): a barely-pruning radius makes the vectorized full scan
+    * cheaper than point-read fetch — the classic index-vs-scan selectivity
+    * crossover.
     */
   val RangeMaxSelectivityKey = "spark.graft.ivf.rangeMaxSelectivity"
 

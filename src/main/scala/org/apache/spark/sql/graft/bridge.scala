@@ -20,20 +20,18 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** Add what `bytesRead` (a count of the task thread's reads) grows by
+    * from now to the task's completion into the task's input metrics, so
+    * reads that bypass Spark's scans show in its task metrics.
+    */
+  def countTaskInputBytes(context: org.apache.spark.TaskContext, bytesRead: () => Long): Unit = {
+    val metrics = context.taskMetrics().inputMetrics
+    val start = bytesRead()
+    context.addTaskCompletionListener[Unit](_ => metrics.incBytesRead(bytesRead() - start))
+  }
   /** A DataFrame over rows already in Catalyst's form: no encoder to derive
     * or resolve.
     */
-  /** Count the Hadoop filesystem bytes this task's thread reads from now
-    * on into the task's input metrics when it completes (the pattern of
-    * Spark's `FileScanRDD`), so reads that bypass Spark's scans show in
-    * its task metrics.
-    */
-  def countTaskInputBytes(context: org.apache.spark.TaskContext): Unit = {
-    val metrics = context.taskMetrics().inputMetrics
-    val before = metrics.bytesRead
-    val bytesRead = org.apache.spark.deploy.SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
-    context.addTaskCompletionListener[Unit](_ => metrics.setBytesRead(before + bytesRead()))
-  }
   def ofInternalRows(
       spark: org.apache.spark.sql.SparkSession,
       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],

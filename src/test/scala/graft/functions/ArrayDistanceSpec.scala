@@ -56,14 +56,49 @@ class ArrayDistanceSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    // force interpreted path via a filter on a literal expression tree
-    val expr = ArrayDistance(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq(1f, 2f, 3f), ArrayType(FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq(4f, 5f, 6f), ArrayType(FloatType)))
-    val v = expr.eval(null).asInstanceOf[Float]
-    assert(math.abs(v - math.sqrt(27.0)) < 1e-5)
+    // every expression, interpreted and generated, bit-equal to its
+    // VectorKernels method: a literal on either side (converted once) or
+    // two row values, at dims around the old 4-way grouping and 128
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    type Make = (Expression, Expression) => Expression
+    val kernels: Seq[(Make, (Array[Float], Array[Float]) => Float)] =
+      Seq(
+        (ArrayDistance(_, _), VectorKernels.l2Distance),
+        (ArraySquaredL2(_, _), VectorKernels.squaredL2),
+        (ArrayDot(_, _), VectorKernels.dot),
+        (ArrayCosineSimilarity(_, _), VectorKernels.cosine))
+    val arrType = ArrayType(FloatType, containsNull = false)
+    def lit(v: Array[Float]) = Literal.create(v.toSeq, arrType)
+    def col(i: Int) = BoundReference(i, arrType, nullable = true)
+    def bits(f: Float) = java.lang.Float.floatToRawIntBits(f)
+    val rnd = new scala.util.Random(5)
+    for (dim <- Seq(1, 3, 4, 5, 127, 128, 129); _ <- 0 until 20) {
+      val a = Array.fill(dim)(rnd.nextGaussian().toFloat)
+      val b = Array.fill(dim)(rnd.nextGaussian().toFloat)
+      val row = InternalRow(new GenericArrayData(a.map(x => x: Any)),
+        new GenericArrayData(b.map(x => x: Any)))
+      kernels.foreach { case (make, kernel) =>
+        val want = kernel(a, b)
+        Seq(make(lit(a), col(1)), make(col(0), lit(b)), make(col(0), col(1))).foreach { e =>
+          val interp = e.eval(row).asInstanceOf[Float]
+          val gen = GenerateUnsafeProjection.generate(Seq(e)).apply(row).getFloat(0)
+          assert(bits(interp) == bits(want) && bits(gen) == bits(want),
+            s"$e at dim $dim: eval $interp, codegen $gen, kernel $want")
+        }
+      }
+    }
+    // a literal that is null, holds a null element or has another length
+    // makes every row NULL on both paths
+    val row = InternalRow(new GenericArrayData(Array[Any](1f, 2f)))
+    val nullElem = Literal.create(Seq(1f, null), ArrayType(FloatType, containsNull = true))
+    for ((make, _) <- kernels; l <- Seq(Literal.create(null, arrType), nullElem, lit(Array(1f)));
+         e <- Seq(make(l, col(0)), make(col(0), l))) {
+      assert(e.eval(row) == null, e)
+      assert(GenerateUnsafeProjection.generate(Seq(e)).apply(row).isNullAt(0), e)
+    }
   }
 
   test("cosine: interpreted eval is bit-equal to the codegen arithmetic") {

@@ -174,4 +174,30 @@ class RangeSearchSpec extends SparkSpec {
     assert(res.forall(_.distance < 1.5f))
     assert(res.map(_.distance).toSeq == res.map(_.distance).sorted.toSeq)
   }
+
+  test("rangeRows equals the brute filter at radii equal to rows' distances, scanned or pruned") {
+    val rnd = new scala.util.Random(9)
+    val d = 64
+    val dir = Files.createTempDirectory("graft-range-boundary").toString
+    (0 until 600).map(i => (i.toLong, Seq.fill(d)(rnd.nextGaussian().toFloat)))
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .repartition(2).write.mode("overwrite").parquet(dir)
+    val store = new IndexStore(Files.createTempDirectory("graft-range-boundary-idx").toString)
+    IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    val q = Seq.fill(d)(rnd.nextGaussian().toFloat)
+    val dists = spark.read.parquet(dir)
+      .select(array_distance(col("vec"), float_vector(q))).as[Float].collect().sorted
+    val key = graft.plans.VectorTopKRule.RangeMaxSelectivityKey
+    try {
+      (0 until 20).map(i => dists(i * 5)).foreach { r =>
+        val expected = brute(dir, q, r)
+        for (selectivity <- Seq("0", "1")) {
+          spark.conf.set(key, selectivity) // 0: always the scan, 1: always pruned
+          assert(ranged(dir, store, q, r) == expected,
+            s"radius $r, rangeMaxSelectivity $selectivity")
+        }
+      }
+    } finally spark.conf.unset(key)
+  }
 }

@@ -974,4 +974,121 @@ class VectorTopKSpec extends SparkSpec {
           e.getMessage)
       }
   }
+
+  test("search's distance is SQL array_distance, or 1 - array_cosine_similarity, bit for bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(15)
+    val dim = 128
+    val dir = Files.createTempDirectory("graft-one-arithmetic").toString
+    (0 until 400).map(i => (i.toLong, Seq.fill(dim)(rnd.nextGaussian().toFloat)))
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val store = tmpStore
+    val build = IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(4)), store)
+    val q = Seq.fill(dim)(rnd.nextGaussian().toFloat)
+    val qv = graft.functions.float_vector(q)
+    // one file written in id order: row_idx is the id
+    val sql = spark.read.parquet(dir)
+      .select(col("id"), graft.functions.array_distance(col("vec"), qv),
+        graft.functions.array_cosine_similarity(col("vec"), qv))
+      .as[(Long, Float, Float)].collect()
+      .map { case (id, d, c) =>
+        id -> Map(VectorTopK.Metric.L2 -> d, VectorTopK.Metric.Cosine -> (1.0f - c))
+      }
+      .toMap
+    def bits(f: Float) = java.lang.Float.floatToRawIntBits(f)
+    for (metric <- Seq(VectorTopK.Metric.L2, VectorTopK.Metric.Cosine)) {
+      val got = VectorTopK.search(spark, dir, "vec", q, 100,
+        VectorTopK.Options(nprobe = build.nClusters, metric = metric), store).collect()
+      assert(got.length == 100)
+      got.foreach { r =>
+        val want = sql(r.row_idx)(metric)
+        assert(bits(r.distance) == bits(want), s"$metric row ${r.row_idx}: ${r.distance} != $want")
+      }
+    }
+  }
+
+  /** The input bytes of the tasks that collecting `df` runs. */
+  private def taskInputBytes(df: org.apache.spark.sql.DataFrame): Long = {
+    val sc = spark.sparkContext
+    val group = s"graft-input-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = String.valueOf(e.properties.getProperty("spark.jobGroup.id"))
+        if (g == group) e.stageInfos.foreach(s => stages.add(s.stageId))
+        if (g == group + "-fence") fenced.set(true)
+      }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.merge(e.stageId, e.taskMetrics.inputMetrics.bytesRead, (a: Long, b: Long) => a + b)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try df.collect() finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!fenced.get && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced.get, "fence job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    stages.asScala.toSeq.map(s => bytes.getOrDefault(s, 0L)).sum
+  }
+
+  test("a search's input bytes are the vector pages it reads plus its files' footer reads") {
+    import spark.implicits._
+    val dim = 32
+    val dir = Files.createTempDirectory("graft-input-pages").toString
+    (0 until 3000).map(i => (i.toLong, Seq.tabulate(dim)(j => ((i * 7 + j) % 101) * 0.37f)))
+      .toDF("id", "vec")
+      .select(col("id"), col("vec").cast("array<float>").as("vec"))
+      .repartition(2).write.mode("overwrite")
+      .option("parquet.enable.dictionary", "false").option("parquet.page.size", "4096")
+      .parquet(dir)
+    val store = tmpStore
+    val build = IvfBuilder.build(spark, dir, IvfBuilder.Config("vec", nClusters = Some(8)), store)
+    val files = IndexManager.listFiles(spark, dir)
+    val q = Seq.fill(dim)(5f)
+    for (nprobe <- Seq(1, build.nClusters)) {
+      val read = taskInputBytes(VectorTopK.search(spark, dir, "vec", q, 10,
+        VectorTopK.Options(nprobe = nprobe), store).toDF())
+      // the compressed pages holding a candidate, and every byte of each
+      // file outside its column chunks (footer and page indexes)
+      var pages = 0L
+      var tail = 0L
+      files.foreach { f =>
+        val cands = IndexManager.loadIndex(store, f, "vec").candidateRows(q.toArray, nprobe)
+        val local = IndexStore.localPath(f)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(local), new org.apache.hadoop.conf.Configuration()))
+        try {
+          val blocks = reader.getFooter.getBlocks.asScala
+          var start = 0L
+          blocks.foreach { block =>
+            val chunk = block.getColumns.asScala.find(_.getPath.toDotString.startsWith("vec.")).get
+            val index = reader.readOffsetIndex(chunk)
+            (0 until index.getPageCount).foreach { p =>
+              val lo = start + index.getFirstRowIndex(p)
+              val next = p + 1
+              val hi = start +
+                (if (next < index.getPageCount) index.getFirstRowIndex(next) else block.getRowCount)
+              if (cands.exists(c => c >= lo && c < hi)) pages += index.getCompressedPageSize(p)
+            }
+            start += block.getRowCount
+          }
+          tail += new java.io.File(local).length -
+            blocks.flatMap(_.getColumns.asScala).map(_.getTotalSize).sum
+        } finally reader.close()
+      }
+      assert(pages > 0)
+      // page indexes may be read twice: to pick the pages, then to read them
+      assert(read >= pages && read - pages <= 2 * tail,
+        s"nprobe $nprobe: $read input bytes for $pages page bytes and $tail bytes outside chunks")
+    }
+  }
 }

@@ -715,6 +715,19 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
+  test("a SQL range query's payload reads only its in-range rows") {
+    register()
+    withRule(nprobe = 8) {
+      val df = sqlRange(s"array_distance(vec, $vecLit) < 0.55")
+      assert(fired(df), df.queryExecution.optimizedPlan.toString)
+      val rows = df.collect().length
+      val candidates = df.queryExecution.executedPlan.collect {
+        case p: WinnerPayloadExec => p.metrics("candidateRows").value
+      }.sum
+      assert(rows > 0 && candidates == rows, s"$candidates candidate rows for $rows in range")
+    }
+  }
+
   test("range rewrite fires for flipped, <=, squared, and conjunct forms") {
     register()
     withRule(nprobe = 8) {
